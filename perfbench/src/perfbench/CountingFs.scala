@@ -1,0 +1,39 @@
+package perfbench
+
+import java.util.concurrent.atomic.AtomicLong
+import org.apache.hadoop.fs.{FSDataInputStream, FSDataOutputStream, FileStatus, LocalFileSystem, Path}
+import org.apache.hadoop.fs.permission.FsPermission
+import org.apache.hadoop.util.Progressable
+
+/** The local file system with metadata and open/create calls counted; the
+  * traced run installs it as `fs.file.impl`. Hadoop's own statistics count
+  * bytes for the `file` scheme but not these operations. */
+class CountingFs extends LocalFileSystem {
+  import CountingFs._
+  override def getFileStatus(f: Path): FileStatus = {
+    reads.incrementAndGet(); super.getFileStatus(f)
+  }
+  override def listStatus(f: Path): Array[FileStatus] = { reads.incrementAndGet(); super.listStatus(f) }
+  override def open(f: Path, bufferSize: Int): FSDataInputStream = {
+    reads.incrementAndGet(); super.open(f, bufferSize)
+  }
+  override def create(f: Path, permission: FsPermission, overwrite: Boolean, bufferSize: Int,
+      replication: Short, blockSize: Long, progress: Progressable): FSDataOutputStream = {
+    writes.incrementAndGet()
+    super.create(f, permission, overwrite, bufferSize, replication, blockSize, progress)
+  }
+  override def mkdirs(f: Path, permission: FsPermission): Boolean = {
+    writes.incrementAndGet(); super.mkdirs(f, permission)
+  }
+  override def rename(src: Path, dst: Path): Boolean = {
+    writes.incrementAndGet(); super.rename(src, dst)
+  }
+  override def delete(f: Path, recursive: Boolean): Boolean = {
+    writes.incrementAndGet(); super.delete(f, recursive)
+  }
+}
+
+object CountingFs {
+  val reads = new AtomicLong
+  val writes = new AtomicLong
+}
