@@ -92,8 +92,7 @@ object Pipelines {
       lit(childChannel).as("channel"))
     store.overwrite("sb_dim_customers", sb)
 
-    store.overwriteIfAbsentElse("gold_dim_customers", sb)(target =>
-      Upsert.merge(target, sb, Seq("customer_code")))
+    Upsert.mergeInto(store, "gold_dim_customers", sb, Seq("customer_code"))
   }
 
   /** Products: dedup, category initcap, Protien→Protein regex fix, variant
@@ -129,8 +128,7 @@ object Pipelines {
       regexp_extract(col("product_name"), "\\((.*?)\\)", 1).as("variant"))
     store.overwrite("sb_dim_products", sb)
 
-    store.overwriteIfAbsentElse("gold_dim_products", sb)(target =>
-      Upsert.merge(target, sb, Seq("product_code")))
+    Upsert.mergeInto(store, "gold_dim_products", sb, Seq("product_code"))
   }
 
   /** Pricing: multi-format month parse, price sanitation (abs/non-numeric→0),
@@ -161,8 +159,7 @@ object Pipelines {
       .select(col("product_code"), col("gross_price").as("price_usd"), col("year"))
     store.overwrite("sb_dim_gross_price", latest)
 
-    store.overwriteIfAbsentElse("gold_dim_gross_price", latest)(target =>
-      Upsert.merge(target, latest, Seq("product_code", "year")))
+    Upsert.mergeInto(store, "gold_dim_gross_price", latest, Seq("product_code", "year"))
   }
 
   /** Shared order cleaning: null-qty filter, invalid-customer fallback,
@@ -198,17 +195,17 @@ object Pipelines {
         col("product_code"),
         col("customer_id").as("customer_code"),
         col("order_qty").as("sold_quantity"))
-    store.overwriteIfAbsentElse("sb_fact_orders", sbFact)(target =>
-      Upsert.merge(target, sbFact,
-        Seq("date", "order_id", "product_code", "customer_code"),
-        update = false, onDuplicate = Upsert.DuplicatePolicy.DedupDeterministic))
+    Upsert.mergeInto(store, "sb_fact_orders", sbFact,
+      Seq("date", "order_id", "product_code", "customer_code"),
+      update = false, onDuplicate = Upsert.DuplicatePolicy.DedupDeterministic)
 
     mergeMonthlyRollup(store, store.read("sb_fact_orders"))
   }
 
   /** Fact incremental load: staging snapshot of just-landed files, keyed
-    * upsert into silver + sb_fact (late/re-delivered rows update in place),
-    * then affected-months-only recompute of the consolidated rollup
+    * upsert into silver + sb_fact (late/re-delivered rows update in place;
+    * a day of new keys is an append), then affected-months-only recompute of
+    * the consolidated rollup, then staging teardown
     * (2_incremental_load_fact.py; SURVEY §2.7).
     */
   def runFactIncremental(spark: SparkSession, store: TableStore, landingDir: String): Unit = {
@@ -221,10 +218,9 @@ object Pipelines {
     store.overwrite("silver_staging_orders", staged)
 
     val silverInc = store.read("silver_staging_orders")
-    store.overwriteIfAbsentElse("silver_orders", silverInc)(target =>
-      Upsert.merge(target, silverInc,
-        Seq("order_placement_date", "order_id", "product_id", "customer_id"),
-        onDuplicate = Upsert.DuplicatePolicy.DedupDeterministic))
+    Upsert.mergeInto(store, "silver_orders", silverInc,
+      Seq("order_placement_date", "order_id", "product_id", "customer_id"),
+      onDuplicate = Upsert.DuplicatePolicy.DedupDeterministic)
 
     val products = broadcast(store.read("silver_products").select("product_id", "product_code"))
     val sbInc = silverInc
@@ -235,19 +231,24 @@ object Pipelines {
         col("product_code"),
         col("customer_id").as("customer_code"),
         col("order_qty").as("sold_quantity"))
-    store.overwriteIfAbsentElse("sb_fact_orders", sbInc)(target =>
-      Upsert.merge(target, sbInc,
-        Seq("date", "order_id", "product_code", "customer_code"),
-        onDuplicate = Upsert.DuplicatePolicy.DedupDeterministic))
+    Upsert.mergeInto(store, "sb_fact_orders", sbInc,
+      Seq("date", "order_id", "product_code", "customer_code"),
+      onDuplicate = Upsert.DuplicatePolicy.DedupDeterministic)
 
     // Affected-month restriction: recompute rollups only for months touched
     // by this increment (2_incremental:246-263). At scale this is the
-    // difference between rewriting 1 month and rewriting 10 years.
+    // difference between rewriting 1 month and rewriting 10 years. The
+    // months come from the staged increment, so the rollup's own partition
+    // values never need a separate pass.
     val touched = sbInc.filter(col("date").isNotNull)
-      .select(Dates.monthStart(col("date")).as("month")).distinct()
+      .select(Dates.monthStart(col("date"))).distinct().collect().map(_.get(0)).toSeq
     val affected = store.read("sb_fact_orders")
-      .join(broadcast(touched), Dates.monthStart(col("date")) === col("month"), "left_semi")
-    mergeMonthlyRollup(store, affected)
+      .filter(Dates.monthStart(col("date")).isin(touched: _*))
+    mergeMonthlyRollup(store, affected, Some(touched))
+
+    // staging teardown (2_incremental:300-306)
+    store.drop("staging_orders")
+    store.drop("silver_staging_orders")
   }
 
   /** Daily→monthly rollup of gold-shaped child orders, upserted into the
@@ -259,7 +260,8 @@ object Pipelines {
     * (SURVEY §2.7 step 4 made partition-local — the difference between
     * moving 2 directories and rewriting 10 years at 100 TB).
     */
-  private def mergeMonthlyRollup(store: TableStore, sbFact: DataFrame): Unit = {
+  private def mergeMonthlyRollup(
+      store: TableStore, sbFact: DataFrame, months: Option[Seq[Any]] = None): Unit = {
     val rollup = sbFact
       .filter(col("date").isNotNull)
       .groupBy(
@@ -267,7 +269,8 @@ object Pipelines {
         col("product_code"), col("customer_code"))
       .agg(sum(col("sold_quantity")).as("sold_quantity"))
     Upsert.mergePartitioned(store, "gold_fact_orders", rollup,
-      Seq("date", "product_code", "customer_code"), partitionCol = "date")
+      Seq("date", "product_code", "customer_code"), partitionCol = "date",
+      partitions = months)
   }
 
   /** Seed the consolidated gold layer from the parent company's already

@@ -17,10 +17,12 @@ import org.apache.spark.sql.functions._
   * target key is an error in Delta — policy configurable via
   * [[Upsert.DuplicatePolicy]] (SURVEY §7.5: dedup-first or document).
   *
-  * Scale notes: single shuffled full-outer join on the merge keys (no
-  * repeated semi/anti passes over the target); with AQE on, skewed keys
-  * split automatically. For a small source vs huge target, Catalyst
-  * broadcasts the source side of the join.
+  * Scale notes: [[merge]] is a single full-outer join on the merge keys
+  * (no repeated semi/anti passes over the target); with AQE on, skewed keys
+  * split automatically. Spark cannot broadcast either side of a full-outer
+  * equi-join, so both sides shuffle on the keys. [[mergeInto]] avoids that
+  * join, and the full target rewrite behind it, whenever the source matches
+  * no target row.
   */
 object Upsert {
 
@@ -38,26 +40,20 @@ object Upsert {
     final case class KeepLatest(orderCol: String) extends DuplicatePolicy
   }
 
-  /** MERGE INTO target USING source ON keys
-    * WHEN MATCHED THEN UPDATE SET updateCols (when `update`)
-    * WHEN NOT MATCHED THEN INSERT * (when `insert`)
+  /** The source as [[merge]] consumes it: projected to the target's column
+    * order, with `onDuplicate` applied per merge key.
     */
-  def merge(
-      target: DataFrame,
+  private def prepareSource(
       source: DataFrame,
+      tCols: Seq[String],
       keys: Seq[String],
-      updateCols: Option[Seq[String]] = None,
-      update: Boolean = true,
-      insert: Boolean = true,
-      onDuplicate: DuplicatePolicy = DuplicatePolicy.Error): DataFrame = {
+      onDuplicate: DuplicatePolicy): DataFrame = {
     require(keys.nonEmpty, "merge keys must be non-empty")
-    val tCols = target.columns.toSeq
     require(source.columns.toSet == tCols.toSet,
       s"source/target column mismatch: ${source.columns.toSeq} vs $tCols")
-
     val keyW = Window.partitionBy(keys.map(col): _*)
     val src0 = source.select(tCols.map(col): _*)
-    val src = onDuplicate match {
+    onDuplicate match {
       case DuplicatePolicy.Error =>
         // Distributed lazy check — no extra driver action; the count window
         // rides the same shuffle as the merge join key.
@@ -93,6 +89,22 @@ object Upsert {
         src0.withColumn("_gm_rn", row_number().over(w))
           .filter(col("_gm_rn") === 1).drop("_gm_rn")
     }
+  }
+
+  /** MERGE INTO target USING source ON keys
+    * WHEN MATCHED THEN UPDATE SET updateCols (when `update`)
+    * WHEN NOT MATCHED THEN INSERT * (when `insert`)
+    */
+  def merge(
+      target: DataFrame,
+      source: DataFrame,
+      keys: Seq[String],
+      updateCols: Option[Seq[String]] = None,
+      update: Boolean = true,
+      insert: Boolean = true,
+      onDuplicate: DuplicatePolicy = DuplicatePolicy.Error): DataFrame = {
+    val tCols = target.columns.toSeq
+    val src = prepareSource(source, tCols, keys, onDuplicate)
 
     // Presence markers — key nullability cannot signal side presence (a
     // null-key row exists on one side without matching anything).
@@ -124,12 +136,70 @@ object Upsert {
     else joined.filter(tMatched).select(out: _*)
   }
 
+  /** [[merge]] applied to a stored, unpartitioned table, in Delta's two
+    * phases: first find whether any target row matches, then rewrite only
+    * if one does.
+    *
+    *  - Table absent: create it from `source` as given.
+    *  - Probe ([[matchProbe]]): the source's raw keys, broadcast, against
+    *    the target's key columns. Duplicate handling never changes the key
+    *    set and NULL keys never match, so the raw keys answer the question
+    *    without preparing the source first.
+    *  - No match: every source row is an insert, so the prepared source
+    *    (same `onDuplicate` handling as [[merge]]) is appended under
+    *    [[TableStore.append]]'s schema rules, or nothing is written when
+    *    `insert = false`. The existing data files stay as they are. The
+    *    commit is Spark's job commit, as for any append: a failed job, a
+    *    `DuplicatePolicy.Error` raise included, leaves no new data file.
+    *  - Any match: the full-outer [[merge]] rewrites the table through
+    *    [[TableStore.overwrite]]'s atomic swap.
+    *
+    * An existing table ends up holding exactly the rows of
+    * `overwrite(table, merge(read(table), source, ...))` on either path.
+    * Partitioned tables go through [[mergePartitioned]].
+    */
+  def mergeInto(
+      store: TableStore,
+      table: String,
+      source: DataFrame,
+      keys: Seq[String],
+      update: Boolean = true,
+      insert: Boolean = true,
+      onDuplicate: DuplicatePolicy = DuplicatePolicy.Error): Unit = {
+    if (!store.exists(table)) {
+      store.overwrite(table, source)
+      return
+    }
+    val target = store.read(table)
+    if (!matchProbe(target, source, keys).isEmpty)
+      store.overwrite(table, merge(target, source, keys, None, update, insert, onDuplicate))
+    else if (insert)
+      store.append(table, prepareSource(source, target.columns.toSeq, keys, onDuplicate))
+  }
+
+  /** Target key rows that some source row matches: a left-semi join of the
+    * target's key columns (the only columns its scan reads) against the
+    * broadcast source keys, so the target is scanned once and never
+    * shuffled. The source is an increment, small beside the target; its
+    * raw keys need none of the window shuffle that duplicate handling costs.
+    */
+  private[graft] def matchProbe(
+      target: DataFrame, source: DataFrame, keys: Seq[String]): DataFrame =
+    target.select(keys.map(col): _*)
+      .join(broadcast(source.select(keys.map(col): _*)), keys, "left_semi")
+
   /** Partition-scoped MERGE into a partitioned table: only the partitions
     * the source touches are read (static partition pruning via a collected
     * value list — partition counts are small by construction) and only
     * those directories are rewritten. The 100 TB incremental path: an
     * increment touching 2 months costs 2 partition scans + 2 directory
     * swaps, independent of table history length.
+    *
+    * `partitions` lists the partition values the source carries when the
+    * caller already knows them (it must cover every value in `source`);
+    * otherwise they are collected from the source, which runs it once more.
+    * A NULL partition value never matches, so the NULL partition is read
+    * whole and its existing rows pass through the rewrite.
     */
   def mergePartitioned(
       store: TableStore,
@@ -139,7 +209,8 @@ object Upsert {
       partitionCol: String,
       update: Boolean = true,
       insert: Boolean = true,
-      onDuplicate: DuplicatePolicy = DuplicatePolicy.Error): Unit = {
+      onDuplicate: DuplicatePolicy = DuplicatePolicy.Error,
+      partitions: Option[Seq[Any]] = None): Unit = {
     require(keys.contains(partitionCol),
       s"partition column $partitionCol must be part of the merge keys " +
         "(otherwise a matched row could move across partitions)")
@@ -147,10 +218,12 @@ object Upsert {
       store.overwrite(table, source, Seq(partitionCol))
       return
     }
-    val touched = source.select(col(partitionCol)).distinct().collect().map(_.get(0))
+    val touched = partitions.getOrElse(
+      source.select(col(partitionCol)).distinct().collect().map(_.get(0)).toSeq)
     if (touched.isEmpty) return
+    val inTouched = col(partitionCol).isin(touched.filter(_ != null): _*)
     val slice = store.read(table)
-      .filter(col(partitionCol).isin(touched.toIndexedSeq: _*))
+      .filter(if (touched.contains(null)) inTouched || col(partitionCol).isNull else inTouched)
     val merged = merge(slice, source, keys, None, update, insert, onDuplicate)
     store.overwritePartitions(table, merged, Seq(partitionCol))
   }

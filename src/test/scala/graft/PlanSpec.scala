@@ -227,6 +227,39 @@ class PlanSpec extends SparkSpec {
     assert(exchanges === 2, s"expected 2 exchanges (one per side), found $exchanges:\n$p")
   }
 
+  test("mergeInto probe: broadcast left-semi over a key-only target scan, no target exchange") {
+    import org.apache.spark.sql.catalyst.plans.LeftSemi
+    import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    import org.apache.spark.sql.execution.joins.BroadcastHashJoinExec
+    import org.apache.spark.sql.functions.col
+    val store = new graft.tables.TableStore(spark,
+      java.nio.file.Files.createTempDirectory("graft_probe").toString)
+    val cust = Td(spark, sf, "customer").select("c_custkey", "c_name", "c_acctbal")
+    store.overwrite("probe_target", cust)
+    val source = cust.filter(col("c_custkey") < 5).withColumn("c_acctbal", col("c_acctbal") * 2)
+    val probe = graft.tables.Upsert.matchProbe(store.read("probe_target"), source, Seq("c_custkey"))
+    assert(!probe.isEmpty)
+    probe.collect() // AQE finalizes the plan only on execution
+    def nodes(p: SparkPlan): Seq[SparkPlan] = p match {
+      case a: AdaptiveSparkPlanExec => nodes(a.executedPlan)
+      case q: QueryStageExec => nodes(q.plan)
+      case other => other +: other.children.flatMap(nodes)
+    }
+    val all = nodes(probe.queryExecution.executedPlan)
+    val shown = probe.queryExecution.executedPlan.toString
+    assert(all.collect { case j: BroadcastHashJoinExec if j.joinType == LeftSemi => j }.size === 1,
+      s"expected one broadcast left-semi join:\n$shown")
+    val targetScan = all.collect { case f: FileSourceScanExec => f }
+      .find(_.metadata.get("Location").exists(_.contains("probe_target")))
+      .getOrElse(fail(s"no target scan in:\n$shown"))
+    assert(targetScan.requiredSchema.fieldNames.toSeq === Seq("c_custkey"),
+      s"target scan reads more than the merge key: ${targetScan.requiredSchema}")
+    assert(all.collect { case e: ShuffleExchangeExec => e }.isEmpty,
+      s"the probe must not shuffle:\n$shown")
+  }
+
   test("range join is an equi-join on (key, bin) — never a nested loop (J8)") {
     val p = JoinQueries.j8RangeJoin.fn(spark, sf)
       .queryExecution.explainString(ExplainMode.fromString("simple"))

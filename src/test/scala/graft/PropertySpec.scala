@@ -48,6 +48,52 @@ class PropertySpec extends SparkSpec {
     }
   }
 
+  test("mergeInto leaves exactly the rows of overwrite(t, merge(read(t), s))") {
+    import Upsert.DuplicatePolicy._
+    val store = new graft.tables.TableStore(spark,
+      java.nio.file.Files.createTempDirectory("graft_prop_merge").toString)
+    def keyGen(lo: Int): Gen[Option[Int]] =
+      Gen.frequency(1 -> Gen.const(None), 5 -> Gen.choose(lo, lo + 15).map(Some(_)))
+    // v is unique within a side, so KeepLatest("v") has no ties to break
+    def sideGen(lo: Int, dups: Boolean): Gen[List[(Option[Int], Double)]] = for {
+      n <- Gen.choose(0, 12)
+      ks <- Gen.listOfN(n, keyGen(lo))
+      again <- Gen.someOf(ks)
+    } yield {
+      val all = if (dups) ks ++ again.filter(_.isDefined) else ks.distinct
+      all.zipWithIndex.map { case (k, i) => (k, i + 0.5) }
+    }
+    def rows(table: String) = store.read(table).as[(Option[Int], Double)].collect()
+      .toSeq.sortBy(r => (r._1.getOrElse(Int.MinValue), r._2))
+    val policies = Seq(Error, DedupDeterministic, KeepLatest("v"))
+    val flags = Seq((true, true), (false, true), (true, false)) // (update, insert)
+    val cases = for {
+      p <- policies; overlap <- Seq(true, false); dups <- Seq(false, true)
+    } yield (p, overlap, dups)
+    var matched, appended = 0
+    cases.zipWithIndex.foreach { case ((policy, overlap, dups), i) =>
+      val (update, insert) = flags(i % flags.size)
+      val gen = Gen.zip(sideGen(0, dups = true), sideGen(if (overlap) 0 else 100, dups))
+      val (t, s) = gen.apply(Gen.Parameters.default, Seed(7L + i)).get
+      val source = s.toDF("k", "v")
+      // a failed write leaves the table as it was, on either side
+      store.overwrite("ref", t.toDF("k", "v"))
+      val refOk = scala.util.Try(store.overwrite("ref", Upsert.merge(store.read("ref"),
+        source, Seq("k"), None, update, insert, policy))).isSuccess
+      store.overwrite("t", t.toDF("k", "v"))
+      val ok = scala.util.Try(
+        Upsert.mergeInto(store, "t", source, Seq("k"), update, insert, policy)).isSuccess
+      val ctx = s"policy=$policy update=$update insert=$insert t=$t s=$s"
+      assert(ok || !refOk, ctx)
+      assert(rows("t") === rows("ref"), ctx)
+      if (refOk) {
+        if (t.flatMap(_._1).toSet.intersect(s.flatMap(_._1).toSet).nonEmpty) matched += 1
+        else appended += 1
+      }
+    }
+    assert(matched > 0 && appended > 0, s"matched=$matched appended=$appended")
+  }
+
   test("monthly rollup conserves the total of parsed-date rows") {
     val rowsGen = Gen.nonEmptyListOf(Gen.zip(Gen.choose(1, 365), Gen.choose(1.0, 50.0)))
     samples(rowsGen, 6).foreach { rows =>

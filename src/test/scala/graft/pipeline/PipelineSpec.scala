@@ -3,6 +3,7 @@ package graft.pipeline
 import graft.SparkSpec
 import graft.serve.EnrichedView
 import graft.tables.TableStore
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import java.nio.file.Files
 
@@ -115,12 +116,31 @@ class PipelineSpec extends SparkSpec {
     // November untouched by December increment (affected-month restriction)
     assert(fact.filter(col("date") === "2025-11-01").count() === 7)
 
-    // re-running the same increment is idempotent (keyed upsert, not append)
-    val before = fact.orderBy("date", "product_code", "customer_code").collect()
+    // the staging snapshot is torn down once the load finishes (2_incremental:300-306)
+    assert(!store.exists("staging_orders") && !store.exists("silver_staging_orders"))
+
+    // re-running the same increment is idempotent (keyed upsert, not append).
+    // NULL keys never match (SQL equality, as in Delta), so the one order whose
+    // date does not parse (ORD110) is inserted again into silver and sb_fact;
+    // every keyed row, and gold (whose rollup skips NULL dates), is unchanged.
+    def rows(df: DataFrame) = df.collect().map(_.toSeq.mkString("|")).sorted.toSeq
+    def byDate(table: String, dateCol: String) = {
+      val all = store.read(table)
+      (rows(all.filter(col(dateCol).isNotNull)), rows(all.filter(col(dateCol).isNull)))
+    }
+    val layers = Seq("silver_orders" -> "order_placement_date", "sb_fact_orders" -> "date")
+    val goldBefore = rows(store.read("gold_fact_orders"))
+    val layersBefore = layers.map { case (t, d) => byDate(t, d) }
     Pipelines.runFactIncremental(spark, store, s"$fx/child/orders_incremental")
-    val after = store.read("gold_fact_orders")
-      .orderBy("date", "product_code", "customer_code").collect()
-    assert(before.toSeq === after.toSeq)
+    assert(!store.exists("staging_orders") && !store.exists("silver_staging_orders"))
+    assert(rows(store.read("gold_fact_orders")) === goldBefore)
+    layers.zip(layersBefore).foreach { case ((t, d), (keyed, nullDated)) =>
+      val (keyedNow, nullDatedNow) = byDate(t, d)
+      assert(keyedNow === keyed, t)
+      val added = nullDatedNow.diff(nullDated)
+      assert(nullDated.diff(nullDatedNow).isEmpty && added.size === 1 &&
+        added.head.split('|').contains("ORD110"), s"$t: $added")
+    }
 
     // parent COPY INTO: first run loads 2 rows, second run loads 0 files
     val n1 = Pipelines.copyParentIncrement(spark, store, s"$fx/parent/incremental_load")

@@ -85,4 +85,20 @@ class SkewAndPartitionSpec extends SparkSpec {
       Upsert.mergePartitioned(store, "fact", inc, Seq("k"), "month")
     }
   }
+
+  test("mergePartitioned keeps existing NULL-partition rows (NULL never matches)") {
+    val store = new TableStore(spark, Files.createTempDirectory("graft_mp_null").toString)
+    val base = Seq[(Option[String], String, Int)](
+      (Some("2024-01"), "a", 1), (None, "b", 2), (None, "c", 3)).toDF("month", "k", "v")
+    val inc = Seq[(Option[String], String, Int)](
+      (Some("2024-01"), "a", 9), (None, "d", 4)).toDF("month", "k", "v")
+    store.overwrite("fact", base, partitionBy = Seq("month"))
+    Upsert.mergePartitioned(store, "fact", inc, Seq("month", "k"), "month")
+
+    def rows(df: org.apache.spark.sql.DataFrame) = df.select("month", "k", "v")
+      .as[(Option[String], String, Int)].collect().sortBy(_._2).toSeq
+    val want = Seq((Some("2024-01"), "a", 9), (None, "b", 2), (None, "c", 3), (None, "d", 4))
+    assert(rows(store.read("fact")) === want)
+    assert(rows(Upsert.merge(base, inc, Seq("month", "k"))) === want)
+  }
 }

@@ -3,6 +3,8 @@ package graft.tables
 import graft.SparkSpec
 import org.apache.spark.SparkException
 import org.apache.spark.sql.DataFrame
+import java.io.File
+import java.nio.file.Files
 
 /** MERGE INTO semantics per SURVEY.md §2.6. */
 class UpsertSpec extends SparkSpec {
@@ -73,5 +75,51 @@ class UpsertSpec extends SparkSpec {
     val s2 = Seq((Option.empty[String], 9, "s")).toDF("k", "v", "src")
     val out = Upsert.merge(t2, s2, Seq("k")).as[(Option[String], Int, String)].collect()
     assert(out.length === 2) // both null-key rows survive, no match
+  }
+
+  private def freshStore(): TableStore =
+    new TableStore(spark, Files.createTempDirectory("graft_upsert").toString)
+
+  /** Every file under the table dir, relative path -> size. */
+  private def listing(store: TableStore, table: String): Map[String, Long] = {
+    val root = new File(store.path(table))
+    def walk(f: File): Seq[File] =
+      if (f.isDirectory) f.listFiles().toSeq.flatMap(walk) else Seq(f)
+    walk(root).map(f => root.toURI.relativize(f.toURI).getPath -> f.length).toMap
+  }
+
+  private def dataFiles(store: TableStore, table: String): Map[String, Long] =
+    listing(store, table).filter(_._1.endsWith(".parquet"))
+
+  test("mergeInto: a disjoint source keeps every existing data file and adds only new ones") {
+    val store = freshStore()
+    store.overwrite("t", t)
+    val before = dataFiles(store, "t")
+    Upsert.mergeInto(store, "t", Seq(("k8", 80, "s"), ("k9", 90, "s")).toDF("k", "v", "src"),
+      Seq("k"))
+    val after = dataFiles(store, "t")
+    assert(before.forall { case (f, n) => after.get(f).contains(n) }, s"$before vs $after")
+    assert(after.size > before.size)
+    assert(sorted(store.read("t")) ===
+      Seq(("k1", 1, "t"), ("k2", 2, "t"), ("k3", 3, "t"), ("k8", 80, "s"), ("k9", 90, "s")))
+
+    // any match takes the full rewrite: no old data file survives
+    Upsert.mergeInto(store, "t", Seq(("k2", 20, "s")).toDF("k", "v", "src"), Seq("k"))
+    assert(dataFiles(store, "t").keySet.intersect(after.keySet).isEmpty)
+    assert(sorted(store.read("t")).find(_._1 == "k2").get === (("k2", 20, "s")))
+  }
+
+  test("mergeInto: DuplicatePolicy.Error on the append path throws and writes nothing") {
+    val store = freshStore()
+    store.overwrite("t", t)
+    val before = listing(store, "t")
+    val dup = Seq(("k8", 80, "s"), ("k8", 81, "s")).toDF("k", "v", "src")
+    val e = intercept[Exception](Upsert.mergeInto(store, "t", dup, Seq("k")))
+    assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .exists(c => Option(c.getMessage).exists(_.contains("multiple source rows"))), e)
+    // the schema sidecar may record widened nullability; no file comes or goes
+    assert(listing(store, "t").keySet === before.keySet)
+    assert(dataFiles(store, "t") === before.filter(_._1.endsWith(".parquet")))
+    assert(sorted(store.read("t")) === sorted(t))
   }
 }
