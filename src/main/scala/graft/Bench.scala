@@ -1,88 +1,96 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
-/** Benchmark main: times the headline queries (Registry.benchMap) on
-  * SPARK_GRAFT_SF_DIR and prints ONE JSON line for the driver.
+import java.nio.file.{Files, Paths}
+
+import org.apache.spark.sql.{DataFrame, SparkSession}
+
+import scala.util.{Failure, Success, Try}
+
+/** Benchmark main, on the [[Harness]] session over the SPARK_GRAFT_SF_DIR
+  * testdata at `local[SPARK_GRAFT_CPUS]` (default 4).
+  *
+  * `runMain graft.Bench` times the headline queries (Registry.benchMap),
+  * writes `BENCH_FULL.json` and prints ONE compact JSON line last. A query
+  * that fails contributes no time: it is printed on stderr and recorded under
+  * the file's `"errors"` key.
+  *
+  * `runMain graft.Bench <query> [<query> ...]` is the single-query
+  * optimization loop: it dumps each named declared query's
+  * `explain("formatted")` (the plans/rNN/_before|_after evidence files) and
+  * times it with the bench's methodology (same session, same `.count()`
+  * action, min over passes), printing one `PLANDUMP` line per query. A
+  * failing query fails the run.
+  *   - SPARK_GRAFT_PLAN_DIR where to write `<query>_<tag>.txt` (default
+  *                          plans/dev; set plans/r21 + tag before/after for
+  *                          the committed artifacts)
+  *   - SPARK_GRAFT_PLAN_TAG suffix tag (default "plan")
+  *   - SPARK_GRAFT_TIME     timing passes (default 2; 0 = plan only)
   */
 object Bench {
+  type Query = (SparkSession, String) => DataFrame
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      // parallelism-first AQE coalescing (Spark's default, restated for the
-      // record): r21 re-measured the r-earlier "size-first" choice with an
-      // interleaved A/B on the final tree and size-first LOST — 86.2 s vs
-      // 75.8 s min-merged, median per-query ratio 0.93 — because size-first
-      // coalesces bench-scale shuffles (< 64 MB advisory) down to ONE
-      // post-shuffle partition, serializing every heavy reduce (verify
-      // joins, hash aggs) on one core. Parallelism-first is also the right
-      // production posture: at real scale partitions exceed the advisory
-      // size and the two settings plan identically.
-      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst", "true")
-      // the r21 flip above fixed the heavy reduces but taxed every
-      // tiny-shuffle query on the driver box (k4 0.41x, k3, j4, j10 — all
-      // anti-scaling): at the default 1 MB floor, parallelism-first keeps
-      // up to cpus-many near-empty post-shuffle partitions per stage.
-      // 8 MB is the floor that serves both: a 3 MB serve aggregation
-      // collapses to one task (what size-first did right) while a 60 MB
-      // shingle join still fans 8 ways (what parallelism-first does
-      // right). r22 adjudication: NEUTRAL on an idle 32-core box (55.36
-      // vs 55.53 s min-merged interleaved A/B) and 1.11x total / 1.085
-      // geomean with the bench pinned to 8 cores at local[32] — the
-      // contended regime where the driver's r21 regressions live, with
-      // the wins exactly on its regression family (k4 1.22x, j10 1.41x,
-      // j4 1.33x, f9 1.53x) and the heavy dedup reduces flat. Production-
-      // sane: post-shuffle partitions at real scale exceed 8 MB, so this
-      // plans identically to the default there — it is a floor against
-      // pathological tiny-partition scheduling, not a local[32] tune.
-      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize", "8m")
-      // let AQE rewrite sort-merge joins to shuffled-hash AT RUNTIME when
-      // every post-shuffle partition of the build side fits under 64 MB
-      // (guide §3.1 — the knob ships disabled, 0). Runtime partition sizes,
-      // not estimates, make it scale-safe: at 100 TB partitions exceed the
-      // threshold and the join stays sort-merge; at or below it the
-      // per-partition sort is pure overhead a hash build avoids, and the
-      // build map is bounded at 64 MB per task. r22 interleaved A/B at 32
-      // cores: total 55.98 -> 50.21 s (1.115x), geomean 1.104 — the shingle
-      // self-joins and verify semi-joins (d8 1.32x, d13 1.23x, d3 1.22x,
-      // d11 1.51x) and the whole j-family (1.2-1.5x) win; no regression
-      // beyond sub-0.3 s scheduling noise.
-      .config("spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold", "64m")
-      // the generated-class cache defaults to 100 entries — a 69-query
-      // bench (several codegen units each) thrashes it, recompiling
-      // whole-stage code on every pass. Interleaved A/B at r21: 79.2 s
-      // (default) vs 60.8 s (2000), median per-query ratio 0.77, no
-      // regression beyond noise. Production-sane too: any driver running a
-      // diverse query mix wants its codegen cached; cost is metaspace for
-      // ≤2000 small classes.
-      .config("spark.sql.codegen.cache.maxEntries", "2000")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // untimed warmup: JIT/codegen compile + parquet footer & page cache for
-    // every table, so the first timed query doesn't absorb session startup
-    graft.Td.tables.foreach { t =>
-      try graft.Td(spark, sfDir, t).count() catch { case _: Throwable => () }
+    val qmap = graft.queries.Registry.queryMap
+    val named = args.toSeq.map(name => name -> qmap.getOrElse(name,
+      throw new IllegalArgumentException(s"no declared query named $name")))
+    val spark = Harness.session("4")
+    Harness.warm(spark, sfDir)
+    val lines =
+      if (named.isEmpty) bench(spark, sfDir)
+      else { planDump(spark, sfDir, named); Nil }
+    graft.tables.Scratch.cleanup(spark) // drop stage tables (all actions done)
+    spark.stop()
+    lines.foreach(println)
+  }
+
+  /** Per-query MIN of `passes` in-session passes over the whole suite: a
+    * single loaded-box shot (the r8/r10 artifact noise) can inflate one
+    * pass, but rarely the same query twice — the min is the reproducible
+    * number. Each later pass runs after the full suite so its cache state
+    * matches pass 1's (each query's tables are already warm), keeping the
+    * samples comparable. A query that throws in any pass yields its error,
+    * never a time. */
+  def measure(spark: SparkSession, sfDir: String, queries: Seq[(String, Query)],
+      passes: Int = 2): Seq[(String, Try[Double])] = {
+    val runs = Seq.fill(passes)(queries.map { case (_, fn) =>
+      Harness.time(1)(fn(spark, sfDir).count()) })
+    queries.map(_._1).zip(runs.transpose).map { case (name, rs) =>
+      name -> Try(rs.map(_.get.sec).min)
     }
-    // per-query MIN of two in-session passes: a single loaded-box shot (the
-    // r8/r10 artifact noise) can inflate one pass, but rarely the same query
-    // twice — the min is the reproducible number. Pass 2 runs after the full
-    // suite so its cache state matches pass 1's (each query's tables are
-    // already warm), keeping the two samples comparable.
-    def onePass() = graft.queries.Registry.benchMap.toSeq.sortBy(_._1).map {
-      case (name, fn) =>
-        val t0 = System.nanoTime()
-        try { fn(spark, sfDir).count() } catch { case _: Throwable => -1L }
-        name -> (System.nanoTime() - t0) / 1e9
-    }
-    val (pass1, pass2) = (onePass(), onePass())
-    val results = pass1.zip(pass2).map { case ((n, a), (_, b)) => n -> math.min(a, b) }
-    // 4 decimals (0.1 ms) for the durable on-disk artifact
-    def f4(v: Double) = "%.4f".formatLocal(java.util.Locale.ROOT, v)
+  }
+
+  /** `{"metric":"total",…,"queries":{…},"sf":…}` over the timed queries
+    * only, with `tail` spliced in before the closing brace. */
+  def jsonLine(times: Seq[(String, Double)], f: Double => String, sf: String,
+      tail: String = ""): String = {
+    val qs = times.map { case (k, v) => "\"" + k + "\":" + f(v) }
+      .mkString("{", ",", "}")
+    s"""{"metric":"total","value":${f(times.map(_._2).sum)},"unit":"sec","queries":$qs,"sf":"$sf"$tail}"""
+  }
+
+  private def timesOf(results: Seq[(String, Try[Double])]) =
+    results.collect { case (n, Success(s)) => n -> s }
+
+  private def message(e: Throwable) =
+    Option(e.getMessage).getOrElse(e.getClass.getName).take(500)
+
+  /** The durable record: 4 decimals (0.1 ms) per query plus every failed
+    * query's message under `"errors"`. */
+  def fullRecord(results: Seq[(String, Try[Double])], sf: String): String = {
+    val errors = results.collect { case (n, Failure(e)) => n -> message(e) }
+    jsonLine(timesOf(results), v => "%.4f".formatLocal(java.util.Locale.ROOT, v),
+      sf, s""","errors":${Harness.jsonObject(errors)}""")
+  }
+
+  /** Runs the suite and writes `BENCH_FULL.json`; returns the stdout lines,
+    * printed after the session stops so they follow every Spark/log line. */
+  private def bench(spark: SparkSession, sfDir: String): Seq[String] = {
+    val results = measure(spark, sfDir,
+      graft.queries.Registry.benchMap.toSeq.sortBy(_._1))
+    for ((n, Failure(e)) <- results)
+      System.err.println(s"bench: $n failed: ${message(e)}")
+    val times = timesOf(results)
     // compact form for the stdout driver line: 2 decimals, trailing zeros
     // (and a bare trailing dot) stripped — "1.25", "0.2", "66.33". The
     // driver records only the LAST 2000 chars of stdout and sbt appends its
@@ -95,29 +103,15 @@ object Bench {
       val t = s.reverse.dropWhile(_ == '0').reverse
       if (t.endsWith(".")) t.dropRight(1) else t
     }
-    def jsonLine(f: Double => String, sf: String) = {
-      val qs = results.map { case (k, v) => "\"" + k + "\":" + f(v) }
-        .mkString("{", ",", "}")
-      val total = if (results.nonEmpty) results.map(_._2).sum else 0.0
-      s"""{"metric":"total","value":${f(total)},"unit":"sec","queries":$qs,"sf":"$sf"}"""
-    }
-    val full = jsonLine(f4, sfDir)
+    val full = fullRecord(results, sfDir)
     // the self-sufficient artifact: full-precision JSON, durable on disk
     // next to the round records, so a truncated driver tail can't lose the
     // total/anchor. Best-effort: an unwritable path must not discard the
-    // whole run's timings (the stdout line below is the primary contract)
+    // whole run's timings (the stdout line is the primary contract)
     val out = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "BENCH_FULL.json")
-    try java.nio.file.Files.write(java.nio.file.Paths.get(out),
-      (full + "\n").getBytes("UTF-8"))
+    try Files.write(Paths.get(out), (full + "\n").getBytes("UTF-8"))
     catch { case e: Exception =>
       System.err.println(s"bench: could not write $out: $e") }
-    graft.tables.Scratch.cleanup(spark) // drop stage tables (all actions done)
-    spark.stop()
-    // printed LAST, after every Spark/log line: full-precision line first
-    // (log readers), then a sentinel, then the compact line the driver's
-    // bounded tail is guaranteed to contain in full
-    println(full)
-    println("GRAFT_BENCH_JSON")
     // adaptive precision: if the 2-decimal rendering outgrows the budget
     // (the driver's 2000-char tail minus sbt's ~50-byte success trailer),
     // re-render values >= 1 s at 1 decimal — sub-second queries keep 10 ms
@@ -139,12 +133,41 @@ object Bench {
     // 100 ms for the multi-second queries only, then 100 ms everywhere,
     // then whole seconds
     val compact = Seq[Double => String](f2, f2a, f1, f0).iterator
-      .map(jsonLine(_, sfName)).find(_.length <= 1870)
-      .getOrElse(jsonLine(f0, sfName))
+      .map(jsonLine(times, _, sfName)).find(_.length <= 1870)
+      .getOrElse(jsonLine(times, f0, sfName))
     if (compact.length > 1900) // each new bench query adds ~25 bytes; warn
       // BEFORE the silent head-clip regresses `parsed` to null again
       System.err.println(s"bench: compact line ${compact.length} B is near " +
         "the driver's 2000-char stdout tail — trim the benched set or keys")
-    println(compact)
+    // full-precision line first (log readers), then a sentinel, then the
+    // compact line a bounded stdout tail is guaranteed to contain in full
+    Seq(full, "GRAFT_BENCH_JSON", compact)
+  }
+
+  private def planDump(spark: SparkSession, sfDir: String,
+      named: Seq[(String, Query)]): Unit = {
+    val planDir = sys.env.getOrElse("SPARK_GRAFT_PLAN_DIR", "plans/dev")
+    val tag = sys.env.getOrElse("SPARK_GRAFT_PLAN_TAG", "plan")
+    val passes = sys.env.getOrElse("SPARK_GRAFT_TIME", "2").toInt
+    Files.createDirectories(Paths.get(planDir))
+    named.foreach { case (name, fn) =>
+      spark.sparkContext.setJobDescription(s"plandump: $name")
+      // NOTE: for queries that mutate scratch/store state, building the
+      // frame already ran the side-effecting part; the explain below is the
+      // returned frame's plan (the same frame the bench counts)
+      val plan = fn(spark, sfDir).queryExecution.explainString(
+        org.apache.spark.sql.execution.FormattedMode)
+      Files.write(Paths.get(planDir, s"${name}_$tag.txt"), plan.getBytes("UTF-8"))
+      if (passes > 0) {
+        // a failing query must fail LOUDLY (this mode produces the
+        // committed plans/rNN evidence); the exception propagates with the
+        // query named
+        val t = Harness.time(passes)(fn(spark, sfDir).count()) match {
+          case Success(t) => t
+          case Failure(e) => throw new RuntimeException(s"PLANDUMP $name FAILED", e)
+        }
+        println(f"PLANDUMP $name%-32s min=${t.sec}%.3f  passes=${t.runs.map(s => f"$s%.3f").mkString(",")}")
+      } else println(s"PLANDUMP $name plan-only")
+    }
   }
 }

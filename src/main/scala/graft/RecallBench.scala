@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.ext.Similarity
@@ -20,30 +20,32 @@ import graft.ext.Similarity
   * queries (500 rows — bounded by construction); wall time covers
   * train+encode+search end-to-end, min of `reps` passes.
   *
-  * Usage: `runMain graft.RecallBench [sfDir] [workDir] [factor] [reps]`
+  * Runs as ScaleStress's `recall` mode:
+  * `runMain graft.ScaleStress <sfDir> <workDir> [factor] [reps] recall
+  * [driftonly|nprobeonly|m32only]`.
   */
 object RecallBench {
 
-  def main(args: Array[String]): Unit = {
-    val sfDir = args.lift(0).getOrElse("/root/testdata/sf0.1")
-    val workDir = args.lift(1).getOrElse("/tmp/graft_recall")
-    val factor = args.lift(2).map(_.toInt).getOrElse(10)
-    val reps = args.lift(3).map(_.toInt).getOrElse(2)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+  /** Flags that narrow the battery to one block. */
+  val subModes: Set[String] = Set(
+    "driftonly", // re-run just the §drift block
+    "nprobeonly", // just the auto-geometry nprobe sweep
+    "m32only") // just the codebook-capacity m-sweep
 
-    val expDir = s"$workDir/x$factor"
-    ScaleStress.expand(spark, sfDir, expDir, factor)
-    val driftOnly = args.contains("driftonly") // re-run just the §drift block
-    val npOnly = args.contains("nprobeonly") // just the auto-geometry nprobe sweep
-    val m32Only = args.contains("m32only") // just the codebook-capacity m-sweep
+  /** `(query_id, neighbor_id, rnk)` of a search result, collected. */
+  private def ranked(df: DataFrame): Array[(Long, Long, Int)] =
+    df.select(col("query_id"), col("neighbor_id"), col("rnk"))
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2)))
+
+  /** The battery over the original corpus in `sfDir` and its `factor`×
+    * expansion in `expDir` ([[ScaleStress.expand]]); the drift index lives
+    * in `workDir`. */
+  def run(spark: SparkSession, sfDir: String, expDir: String, factor: Int,
+      workDir: String, reps: Int, flags: Set[String]): Unit = {
+    val driftOnly = flags("driftonly")
+    val npOnly = flags("nprobeonly")
+    val m32Only = flags("m32only")
+    def timed(body: => Array[(Long, Long, Int)]) = Harness.time(reps)(body).get
 
     // third leg: the x1 corpus per-dimension STANDARDIZED (x31's transform)
     // — measures whether whitening-lite moves retrieval quality on this
@@ -84,8 +86,8 @@ object RecallBench {
       val structuredWithin = structured.filter(_._2 < 100000000L)
 
       def report(variant: String, m: Int, k: Int,
-          approx: Array[(Long, Long, Int)], best: Double,
-          bytes: Long = -1L): Unit = {
+          t: Harness.Timed[Array[(Long, Long, Int)]], bytes: Long = -1L): Unit = {
+        val (approx, best) = (t.value, t.sec)
         val approxTop10 = approx.groupBy(_._1).map { case (q, rs) =>
           q -> rs.map(_._2).toSet
         }
@@ -109,18 +111,11 @@ object RecallBench {
       // structure at scale is a RESOLUTION knob (log2(k) bits/subspace) or
       // an implementation defect
       if (!npOnly && !m32Only) for ((m, k) <- Seq((8, 16), (16, 16), (16, 64))) {
-        var best = Double.MaxValue
-        var approx: Array[(Long, Long, Int)] = Array.empty
-        for (_ <- 1 to reps) {
-          val t0 = System.nanoTime()
+        report("unit", m, k, timed {
           val books = Similarity.pqTrain(emb, "vec_id", "embedding",
             dim = 64, m = m, k = k, iters = 2, sampleMod = Some(4))
-          approx = Similarity.pqSearch(queries, emb, "vec_id", "embedding", books, k = 10)
-            .select(col("query_id"), col("neighbor_id"), col("rnk"))
-            .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2)))
-          best = math.min(best, (System.nanoTime() - t0) / 1e9)
-        }
-        report("unit", m, k, approx, best)
+          ranked(Similarity.pqSearch(queries, emb, "vec_id", "embedding", books, k = 10))
+        })
       }
 
       // residual variant at the registered (16,16) point — same
@@ -129,10 +124,7 @@ object RecallBench {
       // (no IVF recall loss in either column)
       if (!npOnly && !m32Only) {
         val (m, k) = (16, 16)
-        var best = Double.MaxValue
-        var approx: Array[(Long, Long, Int)] = Array.empty
-        for (_ <- 1 to reps) {
-          val t0 = System.nanoTime()
+        report("residual", m, k, timed {
           val centroids = Similarity.kmeansTrain(emb, "vec_id", "embedding",
               k = 8, iters = 2)
             .select(col("centroid_id").cast("long").as("vec_id"), col("embedding"))
@@ -142,13 +134,9 @@ object RecallBench {
             centroids, centers, dim = 64, m = m, k = k, iters = 2, sampleMod = Some(4))
           val index = Similarity.pqEncodeResidual(emb, centroids, centers,
             "vec_id", "embedding", books)
-          approx = Similarity.ivfPqResidualSearch(queries, index, centroids,
-              centers, "vec_id", "embedding", books, k = 10, nprobe = 8)
-            .select(col("query_id"), col("neighbor_id"), col("rnk"))
-            .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2)))
-          best = math.min(best, (System.nanoTime() - t0) / 1e9)
-        }
-        report("residual", m, k, approx, best)
+          ranked(Similarity.ivfPqResidualSearch(queries, index, centroids,
+            centers, "vec_id", "embedding", books, k = 10, nprobe = 8))
+        })
       }
 
       // refined variant (IVFADC+R): the SAME residual pipeline, but the
@@ -161,10 +149,7 @@ object RecallBench {
       // to the residual row).
       if (!npOnly && !m32Only) {
         val (m, k) = (16, 16)
-        var best = Double.MaxValue
-        var approx: Array[(Long, Long, Int)] = Array.empty
-        for (_ <- 1 to reps) {
-          val t0 = System.nanoTime()
+        report("refined", m, k, timed {
           val centroids = Similarity.kmeansTrain(emb, "vec_id", "embedding",
               k = 8, iters = 2)
             .select(col("centroid_id").cast("long").as("vec_id"), col("embedding"))
@@ -176,13 +161,9 @@ object RecallBench {
             "vec_id", "embedding", books)
           val shortlist = Similarity.ivfPqResidualSearch(queries, index, centroids,
             centers, "vec_id", "embedding", books, k = 50, nprobe = 8)
-          approx = Similarity.refineExact(shortlist, queries, emb,
-              "vec_id", "embedding", k = 10)
-            .select(col("query_id"), col("neighbor_id"), col("rnk"))
-            .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2)))
-          best = math.min(best, (System.nanoTime() - t0) / 1e9)
-        }
-        report("refined", m, k, approx, best)
+          ranked(Similarity.refineExact(shortlist, queries, emb,
+            "vec_id", "embedding", k = 10))
+        })
       }
 
       // kShort sweep (r14 verdict item 3): the refined searcher's recall
@@ -204,20 +185,13 @@ object RecallBench {
           Similarity.pqEncodeResidual(emb, centroids, centers,
             "vec_id", "embedding", books), s"rb_idx_$tag")
         for (kShort <- Seq(25, 50, 100, 200)) {
-          var best = Double.MaxValue
-          var approx: Array[(Long, Long, Int)] = Array.empty
-          for (_ <- 1 to reps) {
-            val t0 = System.nanoTime()
+          report(s"refined_k$kShort", m, k, timed {
             val shortlist = Similarity.ivfPqResidualSearch(queries, index,
               centroids, centers, "vec_id", "embedding", books,
               k = kShort, nprobe = 8)
-            approx = Similarity.refineExact(shortlist, queries, emb,
-                "vec_id", "embedding", k = 10)
-              .select(col("query_id"), col("neighbor_id"), col("rnk"))
-              .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2)))
-            best = math.min(best, (System.nanoTime() - t0) / 1e9)
-          }
-          report(s"refined_k$kShort", m, k, approx, best)
+            ranked(Similarity.refineExact(shortlist, queries, emb,
+              "vec_id", "embedding", k = 10))
+          })
         }
       }
 
@@ -246,20 +220,13 @@ object RecallBench {
               "vec_id", "embedding", books), s"rb_m${m}_$tag")
           val bytes = n * m * 4 / 8 // log2(16) = 4 bits per code
           for (kShort <- Seq(100, 200)) {
-            var best = Double.MaxValue
-            var approx: Array[(Long, Long, Int)] = Array.empty
-            for (_ <- 1 to reps) {
-              val t0 = System.nanoTime()
+            report(s"m${m}_k$kShort", m, k, timed {
               val shortlist = Similarity.ivfPqResidualSearch(queries, index,
                 centroids, centers, "vec_id", "embedding", books,
                 k = kShort, nprobe = 8)
-              approx = Similarity.refineExact(shortlist, queries, emb,
-                  "vec_id", "embedding", k = 10)
-                .select(col("query_id"), col("neighbor_id"), col("rnk"))
-                .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2)))
-              best = math.min(best, (System.nanoTime() - t0) / 1e9)
-            }
-            report(s"m${m}_k$kShort", m, k, approx, best, bytes)
+              ranked(Similarity.refineExact(shortlist, queries, emb,
+                "vec_id", "embedding", k = 10))
+            }, bytes)
           }
         }
       }
@@ -290,22 +257,15 @@ object RecallBench {
           Similarity.pqEncodeResidual(emb, centroids, centers,
             "vec_id", "embedding", books), s"rb_anp_m${m}_$tag")
         for (nprobe <- (Seq(2, 4, 8, 16, 32).filter(_ < nlist) :+ nlist)) {
-          var best = Double.MaxValue
-          var approx: Array[(Long, Long, Int)] = Array.empty
-          for (_ <- 1 to reps) {
-            val t0 = System.nanoTime()
+          val label = if (m == 16) s"auto_nl${nlist}_np$nprobe"
+            else s"auto_m32_nl${nlist}_np$nprobe"
+          report(label, m, k, timed {
             val shortlist = Similarity.ivfPqResidualSearch(queries, index,
               centroids, centers, "vec_id", "embedding", books,
               k = 100, nprobe = nprobe)
-            approx = Similarity.refineExact(shortlist, queries, emb,
-                "vec_id", "embedding", k = 10)
-              .select(col("query_id"), col("neighbor_id"), col("rnk"))
-              .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2)))
-            best = math.min(best, (System.nanoTime() - t0) / 1e9)
-          }
-          val label = if (m == 16) s"auto_nl${nlist}_np$nprobe"
-            else s"auto_m32_nl${nlist}_np$nprobe"
-          report(label, m, k, approx, best)
+            ranked(Similarity.refineExact(shortlist, queries, emb,
+              "vec_id", "embedding", k = 10))
+          })
         }
       }
     }
@@ -388,7 +348,5 @@ object RecallBench {
       calOn(x1.select(col("vec_id"), col("embedding")), "in_dist")
       calOn(union, "drifted")
     }
-    graft.tables.Scratch.cleanup(spark)
-    spark.stop()
   }
 }

@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.graft.Bus
 import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -13,7 +14,9 @@ import graft.ext.{Dedup, Similarity}
   * evidence that the claimed sub-quadratic designs actually scale like the
   * data (time ratio ≈ data ratio), not like its square.
   *
-  * Usage: `runMain graft.ScaleStress <sfDir> <workDir> [factor] [reps]`
+  * Usage: `runMain graft.ScaleStress <sfDir> <workDir> [factor] [reps]
+  * [mode] [only=q1,q2] [noinc]` — no mode runs the stress battery below;
+  * a mode (see `modes`) runs one battery instead.
   *
   * == Expansion construction (why it is a fair scale-up) ==
   * Each replica `r ∈ [1, factor)` re-emits every row with its id offset by
@@ -484,11 +487,9 @@ object ScaleStress {
     try (0 until nBatches).foreach { i =>
       stream.filter(col("bat") === i).drop("bat")
         .coalesce(1).write.mode("append").parquet(landing)
-      // JobEnd arrives on the async listener bus: quiesce before each
-      // snapshot so a previous batch's in-flight tail doesn't smear into
-      // this row (the public API has no waitUntilEmpty; ±1-2 residual
-      // jobs of imprecision are inside the Δ≈30 signal this measures)
-      Thread.sleep(300)
+      // JobEnd arrives on the async listener bus: drain it before each
+      // snapshot so the landing write's jobs don't smear into this row
+      Bus.drain(spark.sparkContext)
       val j0 = jobs.get()
       val t0 = System.nanoTime()
       graft.streaming.Streams.retrievalIngestSink(
@@ -503,7 +504,7 @@ object ScaleStress {
         semanticGatePairsTable = if (semantic) Some("ing_sgate_pairs") else None)
         .awaitTermination()
       val sec = (System.nanoTime() - t0) / 1e9
-      Thread.sleep(300) // drain the last batch's JobEnd tail before reading
+      Bus.drain(spark.sparkContext) // the last batch's JobEnd tail
       val gateF =
         if (gated) s""","gate_bands_files":${files("ing_gate_bands")}"""
         else if (semantic) s""","corpus_files":${files("ing_corpus")}"""
@@ -739,13 +740,9 @@ object ScaleStress {
       // includes the hot cluster); f=0 keeps the same query COUNT so the
       // row is the balanced baseline
       val qs = (if (fPct == 0) skewed else skewed.filter(isHot)).limit(200)
-      var best = Double.MaxValue
-      for (_ <- 1 to 2) {
-        val t0 = System.nanoTime()
+      val best = Harness.time(2)(
         AnnIndex.search(store, "sk_ann", qs, "doc_id", "embedding", k = 10)
-          .count()
-        best = math.min(best, (System.nanoTime() - t0) / 1e9)
-      }
+          .count()).get.sec
       println(f"""{"healthskew":$fPct,"n":${h.nCodes},"nlist":${h.nClusters},"max_cluster_frac":${h.maxClusterFrac}%.3f,"cost_multiple":${h.maxClusterFrac * h.nClusters}%.1f,"search_sec":$best%.2f}""")
     }
   }
@@ -875,15 +872,9 @@ object ScaleStress {
     // comparison silently skews. termDfCap = Long.MaxValue is the
     // never-prune plan (plain), 0 resolves the stored policy.
     def timedSearch(store: TableStore, cap: Long): (Double, Long) = {
-      var best = Double.MaxValue
-      var n = 0L
-      for (_ <- 1 to 2) {
-        val t0 = System.nanoTime()
-        n = Bm25.searchIndex(store, "bm", "doc_id",
-          Seq("zzcommon", "spark"), topK = 10, termDfCap = cap).count()
-        best = math.min(best, (System.nanoTime() - t0) / 1e9)
-      }
-      (best, n)
+      val t = Harness.time(2)(Bm25.searchIndex(store, "bm", "doc_id",
+        Seq("zzcommon", "spark"), topK = 10, termDfCap = cap).count()).get
+      (t.sec, t.value)
     }
     for (fPct <- Seq(0, 10, 40, 80)) {
       val isHot = pmod(Similarity.sampleBucket(col("doc_id") + 11), lit(100)) < fPct
@@ -977,16 +968,9 @@ object ScaleStress {
       // retire leg below) — a future warmup/rep change applies to all
       // rows or the comparison silently skews
       def timedProbe(store: TableStore, cap: Int): (Double, Long) = {
-        var best = Double.MaxValue
-        var pairs = 0L
-        for (_ <- 1 to 2) {
-          val t0 = System.nanoTime()
-          val (p, _) = DedupIndex.probeIncrement(store, "dx", batch,
-            "doc_id", "text", threshold = 0.8, bucketCap = cap)
-          pairs = p.count()
-          best = math.min(best, (System.nanoTime() - t0) / 1e9)
-        }
-        (best, pairs)
+        val t = Harness.time(2)(DedupIndex.probeIncrement(store, "dx", batch,
+          "doc_id", "text", threshold = 0.8, bucketCap = cap)._1.count()).get
+        (t.sec, t.value)
       }
       for ((mode, cap) <- modes) {
         val store = new TableStore(spark, s"$workDir/lexskew_${fPct}_$mode")
@@ -1040,16 +1024,9 @@ object ScaleStress {
     DedupIndex.capIfUnhealthy(store, "lp", hotBucketBudget = budget) // lazy build
     DedupIndex.dedupIncrement(store, "lp",
       docs.filter(b === 0).limit(200), "doc_id", "text").collect()
-    def timed(prep: => Unit)(f: => Unit): Double = {
-      var best = Double.MaxValue
-      for (_ <- 1 to 2) {
-        prep
-        val t0 = System.nanoTime()
-        f
-        best = math.min(best, (System.nanoTime() - t0) / 1e9)
-      }
-      best
-    }
+    // `prep` runs untimed before each of the two timed runs
+    def timed(prep: => Unit)(f: => Unit): Double =
+      Seq.fill(2) { prep; Harness.time(1)(f).get.sec }.min
     val sketchSec = timed(()) {
       DedupIndex.capIfUnhealthy(store, "lp", hotBucketBudget = budget) }
     // the exact control drops the HEALTH CACHE too: rep 1's exact pass
@@ -1216,15 +1193,6 @@ object ScaleStress {
       expDir: String, factor: Int, workDir: String): Unit = {
     import spark.implicits._
     import graft.ext.Multimodal
-    def timed2(f: => Unit): Double = {
-      var best = Double.MaxValue
-      for (_ <- 1 to 2) {
-        val t0 = System.nanoTime()
-        f
-        best = math.min(best, (System.nanoTime() - t0) / 1e9)
-      }
-      best
-    }
     def stage(dir: String, scale: Int, mjpeg: Boolean): (String, Long) = {
       val kind = if (mjpeg) "mjpg" else "dib"
       val path = s"$workDir/media_${kind}_x$scale"
@@ -1246,10 +1214,10 @@ object ScaleStress {
       // JIT/codegen warmup while the x2 leg reads warm
       Multimodal.decodeVideoFrames(media, nFrames = 3).toDF()
         .write.format("noop").mode("overwrite").save()
-      val sec = timed2 {
+      val sec = Harness.time(2) {
         Multimodal.decodeVideoFrames(media, nFrames = 3).toDF()
           .write.format("noop").mode("overwrite").save()
-      }
+      }.get.sec
       val codec = if (mjpeg) "mjpg" else "dib"
       println(f"""{"videodecode":1,"codec":"$codec","scale":$scale,"n_videos":$nDocs,"n_frames":${nDocs * 3},"sec":$sec%.2f,"videos_per_sec":${nDocs / sec}%.0f,"frames_per_sec":${nDocs * 3 / sec}%.0f}""")
     }
@@ -1266,46 +1234,103 @@ object ScaleStress {
     // count() IS the timed action (full pairing executes either way), so
     // the reported pair counts ride the timed runs instead of paying each
     // expensive pairing job a third time
-    var nPos = 0L
-    val posSec = timed2 {
-      nPos = Multimodal.videoNearDupPairs(fr, maxHamming = 3,
-        minShared = 2, floodCap = 8).count()
-    }
-    var nUn = 0L
-    val unSec = timed2 {
-      nUn = Multimodal.videoNearDupPairsUnordered(fr, maxHamming = 3,
-        minContainment = 0.9, floodCap = 8, bucketCap = 4096).count()
-    }
-    println(f"""{"videopair":1,"scale":$factor,"n_videos":$nVideos,"positional_sec":$posSec%.2f,"unordered_sec":$unSec%.2f,"positional_pairs":$nPos,"unordered_pairs":$nUn}""")
+    val pos = Harness.time(2)(Multimodal.videoNearDupPairs(fr, maxHamming = 3,
+      minShared = 2, floodCap = 8).count()).get
+    val un = Harness.time(2)(Multimodal.videoNearDupPairsUnordered(fr,
+      maxHamming = 3, minContainment = 0.9, floodCap = 8, bucketCap = 4096)
+      .count()).get
+    println(f"""{"videopair":1,"scale":$factor,"n_videos":$nVideos,"positional_sec":${pos.sec}%.2f,"unordered_sec":${un.sec}%.2f,"positional_pairs":${pos.value},"unordered_pairs":${un.value}""")
   }
+
+  /** The parsed command line: `<sfDir> <workDir> [factor] [reps]`, then
+    * flags — at most one mode name, `only=q1,q2` (restricts the stress
+    * battery's queries) and `noinc`. Anything else, and any unknown `only=`
+    * query, is rejected HERE, before the factor× expansion pays for a
+    * typo. */
+  private final case class Args(sfDir: String, workDir: String, factor: Int,
+      reps: Int, flags: Seq[String]) {
+    val expDir = s"$workDir/x$factor"
+    val only: Option[Set[String]] = flags.find(_.startsWith("only="))
+      .map(_.stripPrefix("only=").split(',').toSet)
+    val mode: Option[String] = flags.find(modes.contains)
+    private val bad = flags.filterNot(f => modes.contains(f) || f == "noinc" ||
+      f.startsWith("only=") || RecallBench.subModes(f))
+    require(bad.isEmpty, s"unknown ScaleStress arguments: ${bad.mkString(",")}; " +
+      s"modes: ${modes.keys.toSeq.sorted.mkString(",")}; also only=, noinc and " +
+      s"recall's ${RecallBench.subModes.toSeq.sorted.mkString(",")}")
+    require(flags.count(modes.contains) <= 1,
+      s"one mode per run, got ${flags.filter(modes.contains).mkString(",")}")
+    private val known = stressQueries(f => 8 * f).map(_._1).toSet
+    only.foreach { o =>
+      val unknown = o -- known
+      require(unknown.isEmpty,
+        s"unknown only= queries: ${unknown.mkString(",")}; known: ${known.mkString(",")}")
+    }
+  }
+
+  /** A battery; `expanded` ones read the factor× corpus, so [[expand]] runs
+    * first. */
+  private final case class Mode(expanded: Boolean, run: (SparkSession, Args) => Unit)
+
+  private val modes: Map[String, Mode] = Map(
+    // streaming retrieval-ingest throughput
+    "ingestonly" -> Mode(false, (s, a) => ingestTracking(s, a.sfDir, a.workDir)),
+    // same battery with the near-dup gate in front
+    "ingestgated" -> Mode(false, (s, a) =>
+      ingestTracking(s, a.sfDir, s"${a.workDir}/gated", gated = true)),
+    // embedding-dup gate + corpus leg
+    "ingestsemantic" -> Mode(false, (s, a) =>
+      ingestTracking(s, a.sfDir, s"${a.workDir}/sgated", semantic = true)),
+    // drift clapper sawtooth mid-stream
+    "ingestrebuild" -> Mode(false, (s, a) =>
+      ingestRebuild(s, a.sfDir, s"${a.workDir}/rebuild")),
+    // one-batch backfill through the semantic gate
+    "ingestbackfill" -> Mode(true, (s, a) =>
+      ingestBackfill(s, a.expDir, s"${a.workDir}/backfill")),
+    // probe latency vs cluster-skew fraction
+    "healthskew" -> Mode(true, (s, a) =>
+      healthSkew(s, a.expDir, s"${a.workDir}/healthskew")),
+    // recall price of the scanned-codes budget
+    "budgetrecall" -> Mode(true, (s, a) =>
+      budgetRecall(s, a.expDir, s"${a.workDir}/budgetrecall")),
+    // search latency vs stopword-scale term
+    "bm25skew" -> Mode(true, (s, a) => bm25Skew(s, a.expDir, s"${a.workDir}/bm25skew")),
+    // routine clapper ask vs corpus size
+    "lexpoll" -> Mode(true, (s, a) => lexPoll(s, a.expDir, s"${a.workDir}/lexpoll")),
+    // frame-decode throughput + pairing
+    "videodecode" -> Mode(true, (s, a) =>
+      videoDecode(s, a.sfDir, a.expDir, a.factor, s"${a.workDir}/videodecode")),
+    // probe latency vs verbatim-flood bucket
+    "lexskew" -> Mode(true, (s, a) => lexSkew(s, a.expDir, s"${a.workDir}/lexskew")),
+    // the durable-index trackers of the stress battery, one at a time
+    "inconly" -> Mode(true, (s, a) => incTracking(s, a.sfDir, a.expDir, a.factor, a.workDir)),
+    "delonly" -> Mode(true, (s, a) => delTracking(s, a.sfDir, a.expDir, a.factor, a.workDir)),
+    "annonly" -> Mode(true, (s, a) => annTracking(s, a.sfDir, a.expDir, a.factor, a.workDir)),
+    "decononly" -> Mode(true, (s, a) =>
+      deconTracking(s, a.sfDir, a.expDir, a.factor, a.workDir)),
+    // ANN recall/latency battery ([[RecallBench]])
+    "recall" -> Mode(true, (s, a) => RecallBench.run(s, a.sfDir, a.expDir, a.factor,
+      s"${a.workDir}/recall", a.reps, a.flags.toSet)))
 
   def main(args: Array[String]): Unit = {
     val sfDir = args.lift(0).getOrElse("/root/testdata/sf0.1")
     val workDir = args.lift(1).getOrElse("/tmp/graft_scale_stress")
     val factor = args.lift(2).map(_.toInt).getOrElse(10)
     val nReps = args.lift(3).map(_.toInt).getOrElse(2)
-    // only=q1,q2 restricts the stressed set — how the 30-100× datapoints on
-    // the durable paths run without paying the whole suite at that factor.
-    // Validated HERE, before the factor× expansion pays for a typo.
-    val only = args.find(_.startsWith("only="))
-      .map(_.stripPrefix("only=").split(',').toSet)
-    val known = stressQueries(f => 8 * f).map(_._1).toSet
-    only.foreach { o =>
-      val bad = o -- known
-      require(bad.isEmpty,
-        s"unknown only= queries: ${bad.mkString(",")}; known: ${known.mkString(",")}")
-    }
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val a = Args(sfDir, workDir, factor, nReps, args.toSeq.drop(4))
+    val mode = a.mode.map(modes).getOrElse(Mode(true, stress))
+    val spark = Harness.session("32")
+    if (mode.expanded) expand(spark, a.sfDir, a.expDir, a.factor)
+    mode.run(spark, a)
+    graft.tables.Scratch.cleanup(spark)
+    spark.stop()
+  }
 
+  /** The stress battery: every stressed query at 1× and factor× (time and
+    * shuffle-write ratios), then — unless `noinc` — the durable-index
+    * trackers. */
+  private def stress(spark: SparkSession, a: Args): Unit = {
+    import a.{factor, sfDir, expDir, workDir}
     val shuffleBytes = new java.util.concurrent.atomic.AtomicLong
     spark.sparkContext.addSparkListener(new SparkListener {
       override def onTaskEnd(t: SparkListenerTaskEnd): Unit = {
@@ -1313,125 +1338,25 @@ object ScaleStress {
         if (m != null) shuffleBytes.addAndGet(m.shuffleWriteMetrics.bytesWritten)
       }
     })
-
-    if (args.contains("ingestonly")) { // streaming retrieval-ingest throughput (no expansion needed)
-      ingestTracking(spark, sfDir, workDir)
-      graft.tables.Scratch.cleanup(spark)
-      spark.stop()
-      return
-    }
-    if (args.contains("ingestgated")) { // same battery with the near-dup gate in front
-      ingestTracking(spark, sfDir, s"$workDir/gated", gated = true)
-      graft.tables.Scratch.cleanup(spark)
-      spark.stop()
-      return
-    }
-    if (args.contains("ingestsemantic")) { // embedding-dup gate + corpus leg
-      ingestTracking(spark, sfDir, s"$workDir/sgated", semantic = true)
-      graft.tables.Scratch.cleanup(spark)
-      spark.stop()
-      return
-    }
-    if (args.contains("ingestrebuild")) { // drift clapper sawtooth mid-stream
-      ingestRebuild(spark, sfDir, s"$workDir/rebuild")
-      graft.tables.Scratch.cleanup(spark)
-      spark.stop()
-      return
-    }
-
-    val expDir = s"$workDir/x$factor"
-    expand(spark, sfDir, expDir, factor)
-
-    if (args.contains("ingestbackfill")) { // one-batch backfill through the semantic gate
-      ingestBackfill(spark, expDir, s"$workDir/backfill")
-      graft.tables.Scratch.cleanup(spark)
-      spark.stop()
-      return
-    }
-    if (args.contains("healthskew")) { // probe latency vs cluster-skew fraction
-      healthSkew(spark, expDir, s"$workDir/healthskew")
-      graft.tables.Scratch.cleanup(spark)
-      spark.stop()
-      return
-    }
-    if (args.contains("budgetrecall")) { // recall price of the scanned-codes budget
-      budgetRecall(spark, expDir, s"$workDir/budgetrecall")
-      graft.tables.Scratch.cleanup(spark)
-      spark.stop()
-      return
-    }
-    if (args.contains("bm25skew")) { // search latency vs stopword-scale term
-      bm25Skew(spark, expDir, s"$workDir/bm25skew")
-      graft.tables.Scratch.cleanup(spark)
-      spark.stop()
-      return
-    }
-    if (args.contains("lexpoll")) { // routine clapper ask vs corpus size
-      lexPoll(spark, expDir, s"$workDir/lexpoll")
-      graft.tables.Scratch.cleanup(spark)
-      spark.stop()
-      return
-    }
-    if (args.contains("videodecode")) { // frame-decode throughput + pairing
-      videoDecode(spark, sfDir, expDir, factor, s"$workDir/videodecode")
-      graft.tables.Scratch.cleanup(spark)
-      spark.stop()
-      return
-    }
-    if (args.contains("lexskew")) { // probe latency vs verbatim-flood bucket
-      lexSkew(spark, expDir, s"$workDir/lexskew")
-      graft.tables.Scratch.cleanup(spark)
-      spark.stop()
-      return
-    }
-    if (args.contains("inconly")) { // incremental-index tracking alone
-      incTracking(spark, sfDir, expDir, factor, workDir)
-      graft.tables.Scratch.cleanup(spark)
-      spark.stop()
-      return
-    }
-    if (args.contains("delonly")) { // takedown-cascade tracking alone
-      delTracking(spark, sfDir, expDir, factor, workDir)
-      graft.tables.Scratch.cleanup(spark)
-      spark.stop()
-      return
-    }
-    if (args.contains("annonly")) { // durable-ANN build/search tracking alone
-      annTracking(spark, sfDir, expDir, factor, workDir)
-      graft.tables.Scratch.cleanup(spark)
-      spark.stop()
-      return
-    }
-    if (args.contains("decononly")) { // semantic-decontamination prune tracking alone
-      deconTracking(spark, sfDir, expDir, factor, workDir)
-      graft.tables.Scratch.cleanup(spark)
-      spark.stop()
-      return
-    }
-
     val scales = Seq(1 -> sfDir, factor -> expDir)
     // warmup: parquet footers + codegen for both scales
     scales.foreach { case (_, dir) =>
-      Seq("documents", "embeddings").foreach(t => Td(spark, dir, t).count())
-    }
+      Harness.warm(spark, dir, Seq("documents", "embeddings")) }
 
     val selected = stressQueries(f => 8 * f)
-      .filter { case (name, _) => only.forall(_.contains(name)) }
+      .filter { case (name, _) => a.only.forall(_.contains(name)) }
 
     // avg cluster size held constant: k grows with the data
     val results = selected.flatMap { case (name, fn) =>
       scales.map { case (f, dir) =>
-        val runs = (1 to nReps).map { _ =>
+        val t = Harness.time(a.reps) {
           val b0 = shuffleBytes.get()
-          val t0 = System.nanoTime()
           fn(spark, dir).write.format("noop").mode("overwrite").save()
-          val sec = (System.nanoTime() - t0) / 1e9
-          Thread.sleep(300) // let the listener bus drain task-end events
-          (sec, shuffleBytes.get() - b0)
-        }
-        val (sec, bytes) = runs.minBy(_._1)
-        println(f"""{"query":"$name","scale":$f,"sec":$sec%.2f,"shuffle_mb":${bytes / 1e6}%.1f}""")
-        (name, f, sec, bytes)
+          Bus.drain(spark.sparkContext) // count every task-end of this run
+          shuffleBytes.get() - b0
+        }.get
+        println(f"""{"query":"$name","scale":$f,"sec":${t.sec}%.2f,"shuffle_mb":${t.value / 1e6}%.1f}""")
+        (name, f, t.sec, t.value)
       }
     }
     results.groupBy(_._1).toSeq.sortBy(_._1).foreach { case (name, rs) =>
@@ -1441,13 +1366,11 @@ object ScaleStress {
     }
     // `noinc` skips the durable-index tracking battery — targeted `only=`
     // datapoint runs shouldn't pay its ~10 min unless they're about it
-    if (!args.contains("noinc")) {
+    if (!a.flags.contains("noinc")) {
       incTracking(spark, sfDir, expDir, factor, workDir)
       delTracking(spark, sfDir, expDir, factor, workDir)
       annTracking(spark, sfDir, expDir, factor, workDir)
       deconTracking(spark, sfDir, expDir, factor, workDir)
     }
-    graft.tables.Scratch.cleanup(spark)
-    spark.stop()
   }
 }

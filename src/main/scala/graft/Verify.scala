@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -10,14 +9,7 @@ object Verify {
     val Array(sfDir, outDir) = args.take(2)
     val only: Option[Set[String]] =
       if (args.length > 2) Some(args(2).split(",").map(_.trim).toSet) else None
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session("4")
     new java.io.File(outDir).mkdirs()
     // failures must surface as DATA, not silent absence: a query that throws
     // writes no parquet, and the driver's checker would otherwise read the
@@ -82,23 +74,12 @@ object Verify {
         errors("c8_retention_guard") =
           s"guard itself failed: ${Option(e.getMessage).getOrElse(e.getClass.getName).take(400)}"
       }
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
-    val json = SparkEntry.oracleSql
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
-    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
+    // escaped JSON: a tab or CR in an oracle's SQL would otherwise make a
+    // reader's json.load fail and silently drop every query's check
+    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"),
+      Harness.jsonObject(SparkEntry.oracleSql))
     Files.writeString(Paths.get(s"$outDir/_errors.json"),
-      errors.map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}"))
+      Harness.jsonObject(errors))
     // Attribution line + sidecar: the repo DECLARES its query count at dump
     // time, so a zero-entry driver artifact (r18's empty {}) is attributable
     // on sight — if _declared.json says 177 and the round record says 0, the

@@ -307,6 +307,9 @@ object DedupIndex {
     * docs' stored shingle rows using the stored sizes. No WordShingles, no
     * signature agg, and no text read ever touches the base corpus —
     * DedupIndexSpec pins that at the executed-plan level.
+    *
+    * `broadcastCandBytes` is [[probeIncrement]]'s broadcast gate: it bounds
+    * the staged `cands` pair file, about 2× the candidate-doc ids.
     */
   def dedupIncrement(store: TableStore, name: String, inc: DataFrame,
       idCol: String, textCol: String, n: Int = 3, k: Int = 12, bands: Int = 3,
@@ -346,6 +349,13 @@ object DedupIndex {
     * more than keepLast further probes of the SAME index name, or the
     * commit fails loudly with FileNotFoundException. Probe-then-commit
     * per batch (the streaming sink's shape) never approaches the bound.
+    *
+    * `broadcastCandBytes` bounds the on-disk size of the staged `cands`
+    * pair file (two id columns per candidate pair), not of the candidate-doc
+    * id list derived from it: the candidate docs are broadcast into the
+    * stored-index scans only while that pair file is at most this size. The
+    * pair file is about 2× the candidate-doc ids, so the default 8 MB stops
+    * broadcasting at roughly 4 MB of candidate-doc ids.
     */
   def probeIncrement(store: TableStore, name: String, inc: DataFrame,
       idCol: String, textCol: String, n: Int = 3, k: Int = 12, bands: Int = 3,
@@ -424,7 +434,7 @@ object DedupIndex {
     // semi-join restricts the stored-index scans without shuffling them —
     // but a huge increment probed against a dirty history can exceed the
     // driver/broadcast limit, so above `broadcastCandBytes` of staged
-    // candidate parquet the hint is dropped and the semi-join shuffles
+    // cands pair parquet the hint is dropped and the semi-join shuffles
     // (AQE still promotes it back if runtime stats allow). The gate reads
     // the CANDS stage's FILE-SIZE metadata (cands was just written by
     // Scratch.stage, so its leaf-relation stats are the listed file

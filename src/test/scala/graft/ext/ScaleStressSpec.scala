@@ -17,6 +17,8 @@ import org.apache.spark.sql.functions._
   *    word stream, so a doc's cross-replica twin shares only the
   *    token-free word-3-gram shingles — Jaccard far below the 0.8 dedup
   *    threshold, so replicas don't pair with each other.
+  *
+  * Also: the command line rejects an unknown mode before any expansion.
   */
 class ScaleStressSpec extends SparkSpec {
   private val sf = "/root/testdata/sf0.001"
@@ -73,5 +75,14 @@ class ScaleStressSpec extends SparkSpec {
     assert(twins.count() === 25L) // every twin shares ≥1 token-free shingle
     val maxJ = twins.agg(max(col("jaccard"))).head.getDouble(0)
     assert(maxJ < 0.8, s"twin jaccard $maxJ reached the dedup threshold")
+  }
+
+  test("an unknown mode is rejected before any expansion, naming the modes") {
+    val dir = java.nio.file.Files.createTempDirectory("scale_stress_mode").toString
+    val e = intercept[IllegalArgumentException](
+      ScaleStress.main(Array(sf, dir, "2", "1", "lexpol")))
+    assert(e.getMessage.contains("lexpol") && e.getMessage.contains("lexpoll"),
+      e.getMessage)
+    assert(new java.io.File(dir).list().isEmpty, "nothing was expanded")
   }
 }
