@@ -156,14 +156,14 @@ object AnnIndex {
     import spark.implicits._
     val (centroids, centers, books) = artifacts(store, name, idCol, vecCol)
     // csizes-fold bookkeeping (see the fold below): the pre-append
-    // freshness probe + file listing are driver-side metadata, paid only
+    // freshness read + file listing are driver-side metadata, paid only
     // to decide whether an exact O(batch) fold can keep the cache fresh
-    val fpBefore = codesFingerprint(store, name)
-    val foldable = sizesFresh(store, name, fpBefore)
+    val sizes = IndexState.read(store, csizesT(name),
+      IndexState.key(store, codesT(name)))(identity)
     val codesPath = new org.apache.hadoop.fs.Path(store.path(codesT(name)))
     val fs = codesPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val filesBefore: Set[String] =
-      if (foldable)
+      if (sizes.nonEmpty)
         graft.tables.Compact.dataFiles(fs, codesPath).map(_._1.toString).toSet
       else Set.empty
     store.append(codesT(name),
@@ -172,38 +172,30 @@ object AnnIndex {
     // EXACT per-cluster size fold — the ANN twin of the r19 sketch work,
     // except no sketch is needed: csizes is O(nlist) rows by design, so
     // the increment's exact cluster counts merge in O(batch + nlist)
-    // where the fingerprint-keyed recount pays a full codes-table pass
+    // where the key-checked recount pays a full codes-table pass
     // (the measured 0.33-0.49 s/batch silent-clapper cadence, O(corpus
     // codes rows) at scale). The increment's rows are read back from
     // exactly the part files this append created (listing diff +
     // basePath, reconstructing the hive `cluster` column) — never from a
     // re-evaluation of the caller's frame, which need not be
     // deterministic (the Bm25.append staging lesson). Crash-safe by the
-    // same fingerprint contract as the recount: a fold that never ran,
-    // failed, or raced leaves a stale fp the next ask detects and
-    // recounts — a lost fold costs one recount, never a wrong count.
-    // deleteIds stays recount-only (its rewrite moves the fp).
-    if (foldable)
-      try {
+    // same memo contract as the recount: a fold that never ran, failed,
+    // or raced leaves a stale stamp the next ask detects and recounts —
+    // a lost fold costs one recount, never a wrong count. An empty
+    // increment (no new part file) just re-stamps. deleteIds stays
+    // recount-only (its rewrite moves the key).
+    sizes.foreach { cur =>
+      IndexState.write(store, csizesT(name), IndexState.key(store, codesT(name))) {
         val newFiles = graft.tables.Compact.dataFiles(fs, codesPath)
           .map(_._1.toString).filterNot(filesBefore)
-        val fpAfter = codesFingerprint(store, name)
-        if (newFiles.nonEmpty) {
-          val incCounts = spark.read
+        if (newFiles.isEmpty) cur
+        else cur.unionByName(spark.read
             .option("basePath", codesPath.toString)
             .parquet(newFiles: _*)
-            .groupBy(col("cluster")).agg(count(lit(1)).as("csize"))
-          store.overwrite(csizesT(name),
-            store.read(csizesT(name)).select(col("cluster"), col("csize"))
-              .unionByName(incCounts)
-              .groupBy(col("cluster")).agg(sum(col("csize")).as("csize"))
-              .withColumn("fp", lit(fpAfter)))
-        } else if (fpAfter != fpBefore)
-          // content-neutral listing move (an empty increment still
-          // writes a marker file): re-stamp, the compaction idiom
-          store.overwrite(csizesT(name),
-            store.read(csizesT(name)).withColumn("fp", lit(fpAfter)))
-      } catch { case scala.util.control.NonFatal(_) => () }
+            .groupBy(col("cluster")).agg(count(lit(1)).as("csize")))
+          .groupBy(col("cluster")).agg(sum(col("csize")).as("csize"))
+      }
+    }
     // drift signal: this increment's mean quantization error under the
     // FROZEN quantizers, appended next to the build baseline — the
     // measurement that turns "retrain is an explicit new build" from a
@@ -310,107 +302,41 @@ object AnnIndex {
         centroids, centers, idCol, vecCol, books, k, np)
   }
 
-  /** The codes table's data-file fingerprint — what the cluster-size
-    * cache is keyed on. Parquet writers name every part file with a
-    * task UUID, so ANY build/append/takedown/compaction changes the
-    * (path, length) set — no mtime needed; one driver-side directory
-    * listing, the [[maintainIfNeeded]] cost class.
-    */
-  private def codesListing(store: TableStore, name: String): (String, Int) =
-    graft.tables.Compact.listingFingerprint(store, codesT(name))
-  private def codesFingerprint(store: TableStore, name: String): String =
-    codesListing(store, name)._1
-
   /** Bring the per-cluster size table `{name}_csizes` up to date with the
-    * codes table, returning whether a recompute ran. The cache is keyed
-    * on the codes table's data-file fingerprint, so it is crash-safe by
+    * codes table, returning whether a recompute ran. The cache is an
+    * [[IndexState]] memo of the codes table, so it is crash-safe by
     * construction — any mutation path that died between the codes write
-    * and this refresh just leaves a stale fingerprint that the next
-    * caller detects and recomputes (one narrow map-side-combined count;
-    * never eager bookkeeping that a replay could double-apply). [[build]]
+    * and this refresh just leaves a stale stamp that the next caller
+    * detects and recomputes (one narrow map-side-combined count; never
+    * eager bookkeeping that a replay could double-apply). [[build]]
     * warms it (the build already pays full-corpus passes); [[health]] and
     * [[searchBudgeted]] validate it, so after an append the FIRST health
     * check of the sink's per-batch cadence pays the recount and every
     * budgeted search after that reads nlist rows.
     */
   def refreshClusterSizes(store: TableStore, name: String): Boolean =
-    refreshClusterSizes0(store, name, codesFingerprint(store, name))
+    clusterSizes(store, name, IndexState.key(store, codesT(name)))._2
 
-  /** Is the cached size table keyed at exactly `fp`? Shared by the
-    * refresh path and [[maintainIfNeeded]]'s content-neutral re-stamp —
-    * one copy of the subtle empty-table case.
+  /** The per-cluster sizes at `key` as a frame, and whether a recount
+    * ran. Cache-backed but ALWAYS correct: the cached rows come back
+    * collected (nlist rows, a broadcastable local relation, so the lazily
+    * consumed plan can never race a concurrent refresh's swap); if the
+    * cache is stale even after the recount's best-effort write (a
+    * concurrent poller won the write race, or the write was lost), the
+    * direct map-side-combined count is served instead — a lazy plan over
+    * the codes table, which only the single mutator moves.
     */
-  private def sizesFresh(store: TableStore, name: String, fp: String): Boolean =
-    // NonFatal → stale: a concurrent refresh can swap the cache files
-    // between exists() and the collect (the poll-safety contract covers
-    // READS too, not just the best-effort write) — a read-only poller
-    // must degrade to "recompute", never throw
-    try store.exists(csizesT(name)) && {
-      val head = store.read(csizesT(name)).select(col("fp")).limit(1).collect()
-      // an EMPTY cached table carries no fp row: it is fresh exactly when
-      // the codes table is empty too (empty-listing fingerprints match)
-      if (head.isEmpty) codesFingerprint0Empty == fp else head(0).getString(0) == fp
+  private def clusterSizes(store: TableStore, name: String,
+      key: IndexState.Key): (DataFrame, Boolean) =
+    IndexState.read(store, csizesT(name), key)(identity) match {
+      case Some(cached) => (cached, false)
+      case None =>
+        val counted = store.read(codesT(name))
+          .groupBy(col("cluster")).agg(count(lit(1)).as("csize"))
+        IndexState.write(store, csizesT(name), key)(counted)
+        (IndexState.read(store, csizesT(name), key)(identity).getOrElse(counted),
+          true)
     }
-    catch { case scala.util.control.NonFatal(_) => false }
-
-  private def refreshClusterSizes0(store: TableStore, name: String,
-      fp: String): Boolean = {
-    val fresh = sizesFresh(store, name, fp)
-    if (!fresh)
-      // best-effort: the cache is a memo, and health() must stay safe to
-      // POLL concurrently with the single mutator's own cadence — two
-      // racing refreshes can sweep each other's staging dir, and the
-      // loser's exception must not take down a read-only monitor (the
-      // winner's cache is correct; a fully lost write just recomputes
-      // next call). Consumers that cannot tolerate a lost write read
-      // through clusterSizesFrame, which falls back to the direct plan.
-      try store.overwrite(csizesT(name), store.read(codesT(name))
-        .groupBy(col("cluster")).agg(count(lit(1)).as("csize"))
-        .withColumn("fp", lit(fp)))
-      catch { case scala.util.control.NonFatal(_) => () }
-    !fresh
-  }
-
-  /** The per-cluster sizes as a frame — cache-backed, but ALWAYS correct:
-    * if the cache is stale even after a refresh attempt (a concurrent
-    * poller won the write race, or the write was lost), serves the
-    * direct map-side-combined count instead.
-    */
-  private def clusterSizesFrame(store: TableStore, name: String): DataFrame =
-    clusterSizesFrameAt(store, name, codesFingerprint(store, name))
-
-  private def clusterSizesFrameAt(store: TableStore, name: String,
-      fp: String): DataFrame = {
-    refreshClusterSizes0(store, name, fp)
-    // The cached rows are COLLECTED inside the freshness window and
-    // re-served as a local relation: the returned frame is consumed lazily
-    // (health's collect, searchBudgeted's plan can execute after a
-    // concurrent refresh swaps the cache files), so the CACHE-table read
-    // must not leave this method as a file-backed plan — the cache is the
-    // one table concurrent POLLERS rewrite, so its swap races happen even
-    // under the single-mutator model. The stale-cache fallback below
-    // stays a lazy plan over the codes table deliberately: only the
-    // single mutator moves that table, the same exposure every
-    // probe/search plan already has. nlist rows — driver-trivial, and
-    // downstream joins see a broadcastable local relation instead of a
-    // parquet scan.
-    val local: Option[DataFrame] =
-      try {
-        if (!sizesFresh(store, name, fp)) None
-        else {
-          val df = store.read(csizesT(name)).select(col("cluster"), col("csize"))
-          Some(org.apache.spark.sql.SparkSession.active.createDataFrame(
-            java.util.Arrays.asList(df.collect(): _*), df.schema))
-        }
-      } catch { case scala.util.control.NonFatal(_) => None }
-    local.getOrElse(
-      store.read(codesT(name))
-        .groupBy(col("cluster")).agg(count(lit(1)).as("csize")))
-  }
-  // md5 of zero files — the fingerprint an emptied codes table hashes to
-  private val codesFingerprint0Empty: String =
-    java.security.MessageDigest.getInstance("MD5")
-      .digest().map("%02x".format(_)).mkString
 
   /** [[search]] with a SCANNED-CODES BUDGET instead of a probe count —
     * [[Similarity.ivfPqResidualSearchBudgeted]] against the stored
@@ -451,7 +377,8 @@ object AnnIndex {
     require(codesBudget >= 0,
       s"codesBudget must be >= 0 (0 = auto n/sqrt(nlist)), got $codesBudget")
     val (centroids, centers, books) = artifacts(store, name, idCol, vecCol)
-    val sizes = clusterSizesFrame(store, name)
+    val sizes = clusterSizes(store, name,
+      IndexState.key(store, codesT(name)))._1
     val budget =
       if (codesBudget > 0) codesBudget
       else {
@@ -571,23 +498,10 @@ object AnnIndex {
     * usual).
     */
   def maintainIfNeeded(store: TableStore, name: String, maxFiles: Int = 64,
-      targetBytes: Long = 128L << 20): Option[graft.tables.Compact.Stats] = {
-    require(maxFiles >= 1, s"maxFiles must be >= 1, got $maxFiles")
-    val conf = org.apache.spark.sql.SparkSession.active
-      .sparkContext.hadoopConfiguration
-    val p = new org.apache.hadoop.fs.Path(store.path(codesT(name)))
-    val n = graft.tables.Compact.dataFiles(p.getFileSystem(conf), p).size
-    if (n > maxFiles) {
-      val sizesWereFresh =
-        sizesFresh(store, name, codesFingerprint(store, name))
-      val stats = graft.tables.Compact.compact(store, codesT(name), targetBytes,
-        partitionBy = Seq("cluster"))
-      if (sizesWereFresh)
-        store.overwrite(csizesT(name), store.read(csizesT(name))
-          .withColumn("fp", lit(codesFingerprint(store, name))))
-      Some(stats)
-    } else None
-  }
+      targetBytes: Long = 128L << 20): Option[graft.tables.Compact.Stats] =
+    IndexState.compactIfFragmented(store, Seq(codesT(name)),
+      Seq(IndexState.Memo(csizesT(name), Seq(codesT(name)))), maxFiles,
+      targetBytes, _ => Seq("cluster")).map(_(codesT(name)))
 
   /** Two-stage search (IVFADC+R): [[search]] proposes a `kShort`
     * shortlist from the stored codes, [[Similarity.refineExact]] re-ranks
@@ -702,8 +616,8 @@ object AnnIndex {
     // one listing serves both the cache validation and codesFiles — two
     // recursive LIST sweeps per health call would double the object-store
     // round trips of the sink's per-batch cadence
-    val (fp, nFiles) = codesListing(store, name)
-    val byCluster = clusterSizesFrameAt(store, name, fp)
+    val key = IndexState.key(store, codesT(name))
+    val byCluster = clusterSizes(store, name, key)._1
       .agg(sum(col("csize")).as("total"), max(col("csize")).as("hot"),
         count(lit(1)).as("k"))
       .collect()(0)
@@ -724,7 +638,7 @@ object AnnIndex {
         else (d.getDouble(0), d.getDouble(1))
       }
     Health(total, k.toInt, if (total == 0) 0.0 else hot.toDouble / total,
-      nFiles, baseline, last,
+      key.files(0), baseline, last,
       // max(1, ...): what build(nlist = 0) would actually pick, empty
       // corpus included — the field IS that comparison
       autoNlist = math.max(1, math.ceil(math.sqrt(total.toDouble)).toInt))

@@ -127,9 +127,10 @@ object Bm25 {
     */
   def append(store: TableStore, name: String, docs: DataFrame,
       idCol: String, textCol: String): Unit = {
-    val needFold =
-      store.exists(dfSketchT(name)) || store.exists(dfWitnessT(name))
-    val fpBefore = if (needFold) postingsFp(store, name) else ""
+    // opened BEFORE the appends: probes the hot-term sketch and witness
+    // once each, and lists the postings only when one of them exists
+    val fold = HotKeySketch.open(store, dfSketchT(name), dfWitnessT(name),
+      postingsT(name))
     val toks = TextAnalysis.wsTokens(col(textCol))
     // ONE evaluation of the caller's frame, snapshotted (the
     // [[DedupIndex.probeIncrement]] idiom): the postings half, the
@@ -154,21 +155,18 @@ object Bm25 {
     // the explode+aggregate a second time; both stages are immutable
     // snapshots, so every leg still sees the same pick
     val newPostings =
-      if (needFold) Scratch.stage(grouped, s"${name}_app_postings")
+      if (fold.nonEmpty) Scratch.stage(grouped, s"${name}_app_postings")
       else grouped
-    store.append(s"${name}_postings", newPostings)
+    store.append(postingsT(name), newPostings)
     store.append(s"${name}_doclen",
       staged.select(col(idCol), size(col("_toks")).cast("long").as("dlen")))
     writeStats(store, name)
-    if (needFold) {
-      // O(batch) hot-term sketch + witness fold in ONE pass
-      // ([[HotKeySketch.foldAll]]) — `newPostings` is a deterministic
-      // plan over the immutable snapshot, so the fold sees exactly the
-      // appended rows; crash-safe through the fingerprint, not ordering.
-      val fpAfter = postingsFp(store, name)
-      HotKeySketch.foldAll(store, dfSketchT(name), dfWitnessT(name),
-        newPostings.select(col("term").as("k")), fpBefore, fpAfter)
-    }
+    // O(batch) hot-term sketch + witness fold in ONE pass
+    // ([[HotKeySketch.foldAll]]) — `newPostings` is a deterministic plan
+    // over the immutable snapshot, so the fold sees exactly the appended
+    // rows; crash-safe through the memo key, not ordering.
+    fold.foreach(HotKeySketch.foldAll(store, _,
+      newPostings.select(col("term").as("k"))))
   }
 
   /** Ids currently indexed — narrow scan of the doclen table (one row per
@@ -182,8 +180,8 @@ object Bm25 {
     * DROP TABLE.
     */
   def dropIndex(store: TableStore, name: String): Unit =
-    Seq(s"${name}_postings", s"${name}_doclen", s"${name}_stats",
-      s"${name}_health_cache", capPolicyT(name), stopTermsT(name),
+    Seq(postingsT(name), doclenT(name), s"${name}_stats",
+      healthCacheT(name), capPolicyT(name), stopTermsT(name),
       dfSketchT(name), dfWitnessT(name))
       .foreach(t => if (store.exists(t)) store.drop(t))
 
@@ -191,52 +189,16 @@ object Bm25 {
     * the postings and doclen tables once a long-lived append stream has
     * fragmented either past `maxFiles` data files (the stats cache is one
     * row — never fragments). Both tables are unpartitioned, so the sweep
-    * is the no-shuffle coalesce path; content is untouched, and the
+    * is the no-shuffle coalesce path; content is untouched (memos that
+    * were fresh going in are re-stamped, [[IndexState.compact]]), and the
     * driver-side listing makes the health check free enough to run after
     * every batch.
     */
   def maintainIfNeeded(store: TableStore, name: String, maxFiles: Int = 64,
       targetBytes: Long = 128L << 20)
-      : Option[Map[String, graft.tables.Compact.Stats]] = {
-    require(maxFiles >= 1, s"maxFiles must be >= 1, got $maxFiles")
-    val conf = org.apache.spark.sql.SparkSession.active
-      .sparkContext.hadoopConfiguration
-    def nFiles(t: String): Int = {
-      val p = new org.apache.hadoop.fs.Path(store.path(t))
-      graft.tables.Compact.dataFiles(p.getFileSystem(conf), p).size
-    }
-    val ts = Seq(s"${name}_postings", s"${name}_doclen")
-    if (ts.exists(nFiles(_) > maxFiles)) {
-      // Compaction is content-neutral, so a health cache that was FRESH
-      // going in is re-stamped to the post-compaction fingerprint without
-      // re-aggregating the postings table (the [[AnnIndex
-      // .maintainIfNeeded]] csizes idea); a stale one is left stale —
-      // re-stamping it would freeze wrong aggregates
-      val cacheT = s"${name}_health_cache"
-      val wasFresh =
-        try store.exists(cacheT) &&
-          store.read(cacheT).select(col("fp")).collect()
-            .headOption.exists(_.getString(0) == healthKey(store, name)._1)
-        catch { case scala.util.control.NonFatal(_) => false }
-      // the hot-term sketch and its witness get the same content-neutral
-      // treatment (their key is the postings listing alone)
-      val skWasFresh =
-        HotKeySketch.isFresh(store, dfSketchT(name), postingsFp(store, name))
-      val wWasFresh =
-        HotKeySketch.isFresh(store, dfWitnessT(name), postingsFp(store, name))
-      val stats =
-        ts.map(t => t -> graft.tables.Compact.compact(store, t, targetBytes)).toMap
-      if (wasFresh)
-        try store.overwrite(cacheT, store.read(cacheT)
-          .withColumn("fp", lit(healthKey(store, name)._1)))
-        catch { case scala.util.control.NonFatal(_) => () }
-      if (skWasFresh)
-        HotKeySketch.restamp(store, dfSketchT(name), postingsFp(store, name))
-      if (wWasFresh)
-        HotKeySketch.restamp(store, dfWitnessT(name), postingsFp(store, name))
-      Some(stats)
-    } else None
-  }
+      : Option[Map[String, graft.tables.Compact.Stats]] =
+    IndexState.compactIfFragmented(store, dataTables(name), memos(name),
+      maxFiles, targetBytes)
 
   /** [[AnnIndex.Health]]'s lexical twin. `maxTermFrac` is the hot-term
     * skew signal: the term-filtered postings scan assumes df ≪ N, and a
@@ -271,84 +233,68 @@ object Bm25 {
       // is an equally exact witness
       hotTermKey: String = "")
 
-  /** Compute [[Health]]: one term-grouped count over postings (map-side
-    * combined), one doclen count, two file listings, one stats-row read.
-    * Safe after every append batch — and free to POLL: the aggregates
-    * are cached in a 1-row `{name}_health_cache` keyed on the two
-    * tables' data-file fingerprint (the [[AnnIndex.refreshClusterSizes]]
-    * idea), so a monitoring loop between appends reads one row instead
-    * of re-aggregating the postings table; the worst case (first call
-    * after a mutation) is exactly the old cost.
-    */
-  /** The two data tables' combined listing fingerprint + file counts —
-    * the ONE definition of the health-cache key, shared by [[health]] and
-    * [[maintainIfNeeded]]'s content-neutral re-stamp.
-    */
-  private def healthKey(store: TableStore, name: String): (String, Int, Int) = {
-    val (fpP, nfP) = graft.tables.Compact
-      .listingFingerprint(store, s"${name}_postings")
-    val (fpD, nfD) = graft.tables.Compact
-      .listingFingerprint(store, s"${name}_doclen")
-    (s"$fpP:$fpD", nfP, nfD)
-  }
-
-  def health(store: TableStore, name: String): Health = {
-    val spark = org.apache.spark.sql.SparkSession.active
-    import spark.implicits._
-    val (fp, nfP, nfD) = healthKey(store, name)
-    val cacheT = s"${name}_health_cache"
-    // NonFatal → recompute: a concurrent refresh can swap the cache files
-    // between exists() and the collect — poll-safety covers the READ too
-    val cached: Option[(Long, Long, Long, Long, String)] =
-      try {
-        if (!store.exists(cacheT)) None
-        else store.read(cacheT).collect().headOption.flatMap { r =>
-          // a pre-hot_key cache row throws on fieldIndex → caught below
-          // as a miss, so legacy caches migrate on their next recompute
-          if (r.getString(r.fieldIndex("fp")) != fp) None
-          else Some((r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3),
-            r.getString(r.fieldIndex("hot_key"))))
-        }
-      } catch { case scala.util.control.NonFatal(_) => None }
-    val (nDocs, total, hot, vocab, hotKey) = cached.getOrElse {
-      val byTerm = store.read(s"${name}_postings")
-        .groupBy(col("term")).agg(count(lit(1)).as("df"))
-        .agg(sum(col("df")).as("total"), max(col("df")).as("hot"),
-          count(lit(1)).as("vocab"), max_by(col("term"), col("df")).as("hotk"))
-        .collect()(0)
-      val nd = store.read(s"${name}_doclen").count()
-      val t = if (byTerm.isNullAt(0)) 0L else byTerm.getLong(0)
-      val h = if (byTerm.isNullAt(1)) 0L else byTerm.getLong(1)
-      val hk = if (byTerm.isNullAt(3)) "" else byTerm.getString(3)
-      // best-effort memo: a concurrent poll racing the mutator's own
-      // cadence can lose the staging swap — the values returned here are
-      // computed locally either way, and a lost write just recomputes
-      try store.overwrite(cacheT, Seq((nd, t, h, byTerm.getLong(2), hk, fp))
-        .toDF("n_docs", "n_postings", "hot_df", "vocab", "hot_key", "fp"))
-      catch { case scala.util.control.NonFatal(_) => () }
-      (nd, t, h, byTerm.getLong(2), hk)
-    }
-    val statsN = store.read(s"${name}_stats")
-      .select(col("n_docs")).collect()(0).getLong(0)
-    Health(nDocs, total, vocab,
-      if (nDocs == 0) 0.0 else hot.toDouble / nDocs,
-      nfP, nfD, staleStats = statsN != nDocs, hotTermRows = hot,
-      hotTermKey = hotKey)
-  }
-
+  private def postingsT(name: String) = s"${name}_postings"
+  private def doclenT(name: String) = s"${name}_doclen"
+  private def healthCacheT(name: String) = s"${name}_health_cache"
   private def capPolicyT(name: String) = s"${name}_cap_policy"
   private def stopTermsT(name: String) = s"${name}_cap_stopterms"
   private def dfSketchT(name: String) = s"${name}_df_sketch"
   private def dfWitnessT(name: String) = s"${name}_df_witness"
+  private def dataTables(name: String) = Seq(postingsT(name), doclenT(name))
 
-  /** The sketch-fold freshness key: the postings listing fingerprint. */
-  private def postingsFp(store: TableStore, name: String): String =
-    graft.tables.Compact.listingFingerprint(store, s"${name}_postings")._1
+  /** The index's memos ([[IndexState]]): the health cache over the two
+    * data tables, the hot-term sketch and witness over the postings. */
+  private def memos(name: String) = Seq(
+    IndexState.Memo(healthCacheT(name), dataTables(name)),
+    IndexState.Memo(dfSketchT(name), Seq(postingsT(name))),
+    IndexState.Memo(dfWitnessT(name), Seq(postingsT(name))))
+
+  /** Compute [[Health]]: one term-grouped count over postings (map-side
+    * combined), one doclen count, two file listings, one stats-row read.
+    * Safe after every append batch — and free to POLL: the aggregates
+    * are cached in a 1-row `{name}_health_cache` memo of the two tables
+    * ([[IndexState]]), so a monitoring loop between appends reads one
+    * row instead of re-aggregating the postings table; the worst case
+    * (first call after a mutation) is exactly the old cost.
+    */
+  def health(store: TableStore, name: String): Health = {
+    val spark = org.apache.spark.sql.SparkSession.active
+    import spark.implicits._
+    val key = IndexState.key(store, dataTables(name): _*)
+    // a pre-hot_key cache row throws on fieldIndex: a miss, so legacy
+    // caches migrate on their next recompute
+    val (nDocs, total, hot, vocab, hotKey) =
+      IndexState.read(store, healthCacheT(name), key) { c =>
+        val r = c.collect()(0)
+        (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3),
+          r.getString(r.fieldIndex("hot_key")))
+      }.getOrElse {
+        val byTerm = store.read(postingsT(name))
+          .groupBy(col("term")).agg(count(lit(1)).as("df"))
+          .agg(sum(col("df")).as("total"), max(col("df")).as("hot"),
+            count(lit(1)).as("vocab"), max_by(col("term"), col("df")).as("hotk"))
+          .collect()(0)
+        val nd = store.read(doclenT(name)).count()
+        val t = if (byTerm.isNullAt(0)) 0L else byTerm.getLong(0)
+        val h = if (byTerm.isNullAt(1)) 0L else byTerm.getLong(1)
+        val hk = if (byTerm.isNullAt(3)) "" else byTerm.getString(3)
+        IndexState.write(store, healthCacheT(name), key)(
+          Seq((nd, t, h, byTerm.getLong(2), hk))
+            .toDF("n_docs", "n_postings", "hot_df", "vocab", "hot_key"))
+        (nd, t, h, byTerm.getLong(2), hk)
+      }
+    val statsN = store.read(s"${name}_stats")
+      .select(col("n_docs")).collect()(0).getLong(0)
+    Health(nDocs, total, vocab,
+      if (nDocs == 0) 0.0 else hot.toDouble / nDocs,
+      key.files(0), key.files(1), staleStats = statsN != nDocs,
+      hotTermRows = hot, hotTermKey = hotKey)
+  }
 
   /** The hot-term sketch bounding [[capIfUnhealthy]]'s routine poll —
     * [[HotKeySketch]] over the postings table's term occurrences (one
     * per (doc, term) row, so the hottest key's count IS the hottest df),
-    * fingerprinted on the postings listing. Counting note: the whole
+    * a memo of the postings table. Counting note: the whole
     * clapper system — [[health]]'s metric, this sketch, and the witness
     * — counts ROWS, deliberately, even though [[searchIndex]] scores
     * with DISTINCT-doc df: crash residue (see [[append]]) can duplicate
@@ -364,43 +310,33 @@ object Bm25 {
     * (undercount impossible), exact asks re-baseline it, an index
     * nobody polls never carries one.
     */
-  private def writeDfSketch(store: TableStore, name: String): Unit =
-    HotKeySketch.rebuild(store, dfSketchT(name),
-      store.read(s"${name}_postings").select(col("term").as("k")),
-      postingsFp(store, name))
-
   private[ext] def dfUpperBound(store: TableStore, name: String): Option[Long] =
-    HotKeySketch.upperBound(store, dfSketchT(name), postingsFp(store, name))
+    HotKeySketch.upperBound(store, dfSketchT(name),
+      IndexState.key(store, postingsT(name)))
 
-  /** The ONE reader of the `{name}_cap_policy` row — (df_cap, hot_df),
-    * poll-safe (NonFatal → None, the health-cache read contract). Shared
-    * by [[storedDfCap]] (search side) and [[capIfUnhealthy]] (the rearm
-    * baseline) so the two can never drift in read semantics.
-    */
+  /** The `{name}_cap_policy` row — (df_cap, hot_df), read through
+    * [[Clapper.readPolicy]]: absent is no policy, unreadable throws. */
   private def readCapPolicy(store: TableStore, name: String): Option[(Long, Long)] =
-    try {
-      if (!store.exists(capPolicyT(name))) None
-      else store.read(capPolicyT(name)).collect().headOption
-        .map(r => (r.getLong(r.fieldIndex("df_cap")),
-          r.getLong(r.fieldIndex("hot_df"))))
-    } catch { case scala.util.control.NonFatal(_) => None }
+    Clapper.readPolicy(store, capPolicyT(name))(_.collect().headOption
+      .map(r => (r.getLong(r.fieldIndex("df_cap")),
+        r.getLong(r.fieldIndex("hot_df"))))).flatten
 
   /** The df-cap [[capIfUnhealthy]] last derived and persisted for this
     * index, if any — what `termDfCap = 0` on [[searchIndex]] resolves to.
-    * ONE retry on an absent/failed read, the [[DedupIndex
-    * .storedBucketCap]] rationale verbatim: the writer's overwrite swap
-    * has a two-rename window where the table is briefly absent, and a
-    * search that misread it as "no policy" would pay one full hot-term
-    * postings scan on a flooded index; a doubly-unlucky read still
-    * degrades to unpruned for that one query, never an error.
+    * An absent policy is read twice, the [[DedupIndex.storedBucketCap]]
+    * rationale verbatim: the writer's overwrite swap has a two-rename
+    * window where the table is briefly absent, and a search that misread
+    * it as "no policy" would pay one full hot-term postings scan on a
+    * flooded index. A policy table that exists but cannot be read
+    * throws, naming the table.
     */
   def storedDfCap(store: TableStore, name: String): Option[Long] =
-    readCapPolicy(store, name).orElse(readCapPolicy(store, name)).map(_._1)
+    readCapPolicy(store, name).map(_._1)
 
   /** The query terms the stored policy would PRUNE — the intersection of
-    * `queryTerms` with the persisted stop-term list, resolved with the
-    * same one-retry read as [[storedDfCap]] (both tables swap in the same
-    * clapper call). GATED ON THE POLICY ROW, not on the stop table's
+    * `queryTerms` with the persisted stop-term list, read like the policy
+    * row ([[Clapper.readPolicy]]: both tables swap in the same clapper
+    * call). GATED ON THE POLICY ROW, not on the stop table's
     * existence: [[capIfUnhealthy]] writes the stop list first and the
     * policy row last, so a crash between the two leaves an orphaned stop
     * list that must stay inert — no policy in force means no pruning,
@@ -410,37 +346,27 @@ object Bm25 {
     * lets the search prune BEFORE paying the hot term's postings scan.
     */
   private def storedStopTerms(store: TableStore, name: String,
-      queryTerms: Seq[String]): Set[String] = {
-    if (storedDfCap(store, name).isEmpty) return Set.empty
-    def once(): Option[Set[String]] =
-      try {
-        if (!store.exists(stopTermsT(name))) None
-        else Some(store.read(stopTermsT(name))
-          .filter(col("term").isInCollection(queryTerms))
-          .select(col("term")).collect().map(_.getString(0)).toSet)
-      } catch { case scala.util.control.NonFatal(_) => None }
-    once().orElse(once()).getOrElse(Set.empty)
-  }
+      queryTerms: Seq[String]): Set[String] =
+    if (storedDfCap(store, name).isEmpty) Set.empty
+    else Clapper.readPolicy(store, stopTermsT(name))(
+      _.filter(col("term").isInCollection(queryTerms))
+        .select(col("term")).collect().map(_.getString(0)).toSet)
+      .getOrElse(Set.empty)
 
   /** Retire the stored df-cap policy — the clapper's un-ring, for after
     * the flood source is fixed upstream (takedown of the boilerplate
     * docs whose shared vocabulary rang the bell). Searches go back to
     * scoring every query term; the bell re-arms fresh (no stale rearm
-    * baseline). Natural-language stopwords never go away, so on an
-    * organic corpus a derived policy normally stays in force — retire is
-    * for floods, not for "the". Returns whether a policy existed.
-    * [[capIfUnhealthy]]'s `retireFraction` is this call on an automatic
-    * hysteresis trigger.
+    * baseline); the witness goes with the policy
+    * ([[Clapper.clearPolicy]]). Natural-language stopwords never go
+    * away, so on an organic corpus a derived policy normally stays in
+    * force — retire is for floods, not for "the". Returns whether a
+    * policy existed. [[capIfUnhealthy]]'s `retireFraction` is this call
+    * on an automatic hysteresis trigger.
     */
-  def clearCapPolicy(store: TableStore, name: String): Boolean = {
-    val had = store.exists(capPolicyT(name))
-    Seq(capPolicyT(name), stopTermsT(name))
-      .foreach(t => if (store.exists(t)) store.drop(t))
-    // no policy → no witness: nothing would consult it, and a leaked one
-    // would tax every subsequent append with a dead fold
-    HotKeySketch.dropWitness(store, dfWitnessT(name))
-    had
-  }
+  def clearCapPolicy(store: TableStore, name: String): Boolean =
+    Clapper.clearPolicy(store, Seq(capPolicyT(name), stopTermsT(name)),
+      dfWitnessT(name))
 
   /** What [[capIfUnhealthy]] decided: whether the hot-term bell rang, the
     * numbers it was judged against (the hottest term's df vs the scan
@@ -512,7 +438,7 @@ object Bm25 {
     * Steady-state cost: one fixed-width sketch read plus one 1-row
     * policy read — FLAT in corpus size, the [[DedupIndex.capIfUnhealthy]]
     * sketch contract verbatim (lazy first build, per-append fold,
-    * exact-pay re-baseline, fingerprint-enforced no-undercount),
+    * exact-pay re-baseline, memo-key-enforced no-undercount),
     * INCLUDING the standing-policy state: with a policy in force and
     * `retireFraction > 0` the poll consults the hot WITNESS (the last
     * exact pass's hottest term with its exact df, per-append folded),
@@ -528,90 +454,49 @@ object Bm25 {
     val spark = org.apache.spark.sql.SparkSession.active
     import spark.implicits._
     val prev = readCapPolicy(store, name)
-    // SKETCH FAST PATH — [[Clapper.sketchGated]] over the hot-term
-    // sketch's upper bound instead of the O(corpus postings rows) term
-    // aggregate (the ONE arbitration statement, shared with the
-    // DedupIndex twin; see its scaladoc for the one-sided-error rules
-    // and the honest cost of retireFraction > 0 under a standing
-    // policy); anything the bound cannot prove pays exact and
+    // [[Clapper.ask]] — the one sketch-gated ask, shared with the
+    // DedupIndex twin: anything the bound cannot prove pays exact and
     // re-baselines. Decisions identical; `hotTermRows` coarsens to the
     // bound on short-circuited asks.
-    Clapper.sketchGated(dfUpperBound(store, name), hotTermBudget,
+    Clapper.ask(store, dfSketchT(name), dfWitnessT(name), postingsT(name),
+      store.read(postingsT(name)).select(col("term").as("k")), hotTermBudget,
       prev.map(_._2), rearmFactor, retireFraction,
-      hasPolicy = prev.nonEmpty,
-      witnessHot = HotKeySketch.readWitness(store, dfWitnessT(name),
-        postingsFp(store, name))) { u =>
-      clearCapPolicy(store, name) // drops the witness with the policy
-      CapDecision(triggered = false, u, hotTermBudget, None, 0L,
-        retired = true)
-    } { u =>
-      CapDecision(triggered = false, u, hotTermBudget,
-        prev.map(_._1), 0L)
+      clearCapPolicy(store, name)) { (hot, retired) =>
+      CapDecision(triggered = false, hot, hotTermBudget,
+        if (retired) None else prev.map(_._1), 0L, retired)
     } {
       val h = health(store, name)
-      val hot = h.hotTermRows
-      val ring = Clapper.rings(hot.toDouble, hotTermBudget.toDouble,
-        prev.map(_._2.toDouble), rearmFactor, live = h.nDocs > 0)
-      val dec =
-        if (!ring) {
-          if (Clapper.retires(hot.toDouble, hotTermBudget.toDouble,
-              retireFraction, hasPolicy = prev.nonEmpty)) {
-            clearCapPolicy(store, name)
-            CapDecision(triggered = false, hot, hotTermBudget, None, 0L,
-              retired = true)
-          } else
-            CapDecision(triggered = false, hot, hotTermBudget,
-              prev.map(_._1), 0L)
-        } else {
-          val posts = store.read(s"${name}_postings")
-          // the id column is whatever the caller named it at build time;
-          // the stored schema is exactly [idCol, term, tcnt], and any
-          // drift (a mergeSchema append widening the table) must fail
-          // HERE, loudly — not silently countDistinct the wrong column
-          val rest = posts.columns.filterNot(Set("term", "tcnt"))
-          require(rest.length == 1,
-            s"postings schema drifted — expected [id, term, tcnt], " +
-              s"found non-standard columns: ${posts.columns.toSeq}")
-          val idc = rest.head
-          // the LIST prunes by DISTINCT-doc df — the quantity its
-          // consumer scores and explicitly caps on ([[searchIndex]]) —
-          // so the stored≡explicit equivalence holds even over crash
-          // residue rows, which a row count would double. The RING
-          // above stays row-counted (with the sketch and witness — see
-          // the counting note on [[writeDfSketch]]); a residue-only
-          // ring just materializes a shorter (possibly empty) list.
-          val stop = posts.groupBy(col("term"))
-            .agg(countDistinct(col(idc)).as("df"))
-            .filter(col("df") >= hotTermBudget)
-          // stop list FIRST, policy row LAST: a crash between the two
-          // leaves an orphaned stop list that [[storedStopTerms]]'s
-          // policy gate keeps inert — searches stay unpruned
-          store.overwrite(stopTermsT(name), stop)
-          val n = store.read(stopTermsT(name)).count()
-          store.overwrite(capPolicyT(name),
-            Seq((hotTermBudget, hot)).toDF("df_cap", "hot_df"))
-          CapDecision(triggered = true, hot, hotTermBudget,
-            Some(hotTermBudget), n)
-        }
-      // re-baseline at the already-paying moment (also the lazy first
-      // build)
-      try writeDfSketch(store, name)
-      catch { case scala.util.control.NonFatal(_) => () }
-      // witness maintenance, same moment (the [[DedupIndex
-      // .capIfUnhealthy]] shape): while a policy stays in force AND the
-      // caller opted into automatic retire, the hottest term's EXACT df
-      // persists (key + count from the SAME health aggregate — no
-      // second postings scan) so the next standing-policy ask can
-      // DISPROVE a retire without the vocabulary aggregate. With
-      // retireFraction = 0 nothing would ever consult it, so none is
-      // kept — no dead per-append fold for the default config
-      try {
-        if (retireFraction > 0 && dec.cap.nonEmpty && h.hotTermKey.nonEmpty)
-          HotKeySketch.writeWitness(store, dfWitnessT(name),
-            h.hotTermKey, h.hotTermRows, postingsFp(store, name))
-        else HotKeySketch.dropWitness(store, dfWitnessT(name))
-      } catch { case scala.util.control.NonFatal(_) => () }
-      dec
+      Clapper.Exact(h.hotTermRows, h.nDocs > 0, h.hotTermKey, () => {
+        val posts = store.read(postingsT(name))
+        // the id column is whatever the caller named it at build time;
+        // the stored schema is exactly [idCol, term, tcnt], and any
+        // drift (a mergeSchema append widening the table) must fail
+        // HERE, loudly — not silently countDistinct the wrong column
+        val rest = posts.columns.filterNot(Set("term", "tcnt"))
+        require(rest.length == 1,
+          s"postings schema drifted — expected [id, term, tcnt], " +
+            s"found non-standard columns: ${posts.columns.toSeq}")
+        val idc = rest.head
+        // the LIST prunes by DISTINCT-doc df — the quantity its
+        // consumer scores and explicitly caps on ([[searchIndex]]) —
+        // so the stored≡explicit equivalence holds even over crash
+        // residue rows, which a row count would double. The RING
+        // above stays row-counted (with the sketch and witness — see
+        // the counting note on [[dfUpperBound]]); a residue-only
+        // ring just materializes a shorter (possibly empty) list.
+        val stop = posts.groupBy(col("term"))
+          .agg(countDistinct(col(idc)).as("df"))
+          .filter(col("df") >= hotTermBudget)
+        // stop list FIRST, policy row LAST: a crash between the two
+        // leaves an orphaned stop list that [[storedStopTerms]]'s
+        // policy gate keeps inert — searches stay unpruned
+        store.overwrite(stopTermsT(name), stop)
+        val n = store.read(stopTermsT(name)).count()
+        store.overwrite(capPolicyT(name),
+          Seq((hotTermBudget, h.hotTermRows)).toDF("df_cap", "hot_df"))
+        CapDecision(triggered = true, h.hotTermRows, hotTermBudget,
+          Some(hotTermBudget), n)
+      })
     }
   }
 

@@ -77,11 +77,8 @@ private[graft] object Clapper {
     *     any branch that could change the policy.
     *   - no sketch at all (None) pays `exact`.
     *
-    * Callers re-baseline the sketch (and, when a policy stays in force
-    * with `retireFraction > 0` — the only state that consults one, so
-    * rf = 0 configs keep no witness and pay no fold) inside `exact`
-    * (the already-paying moment), which keeps every branch's next ask
-    * cheap.
+    * [[ask]] re-baselines the sketch and the witness inside `exact` (the
+    * already-paying moment), which keeps every branch's next ask cheap.
     */
   def sketchGated[D](ub: Option[Long], bar: Long, baselineHot: Option[Long],
       rearmFactor: Double, retireFraction: Double, hasPolicy: Boolean,
@@ -102,6 +99,84 @@ private[graft] object Clapper {
         } else onSketchDecline(u)
       case None => exact
     }
+
+  /** What an exact pass measured: the hottest key's count, whether the
+    * index holds anything (an empty index has no signal to judge), the
+    * hottest key itself ("" on an empty index), and the caller's ring
+    * action. */
+  final case class Exact[D](hot: Long, live: Boolean, hotKey: String,
+      ring: () => D)
+
+  /** The ONE clapper ask of the lexical indexes ([[DedupIndex
+    * .capIfUnhealthy]], [[Bm25.capIfUnhealthy]]): the sketch bound, then
+    * — when it proves nothing — the exact pass, the re-baseline of the
+    * sketch at that already-paying moment (also its lazy FIRST build — an
+    * index nobody polls never carries one), and the witness kept or
+    * dropped. `source` is the table the sketch and witness are memos of;
+    * `keys` its full hot-key stream (column `k`); `baseline` the ringing
+    * metric persisted with the policy in force (None = no policy).
+    * `decided(metric, retired)` is the caller's non-ring decision; a
+    * retire runs `clear` first. The witness is kept only while a policy
+    * stays in force AND `retireFraction > 0` — the only state that
+    * consults one, so rf = 0 configs keep no witness and pay no fold.
+    */
+  def ask[D](store: graft.tables.TableStore, sketchT: String,
+      witnessT: String, source: String, keys: => org.apache.spark.sql.DataFrame,
+      bar: Long, baseline: Option[Long], rearmFactor: Double,
+      retireFraction: Double, clear: => Unit)(
+      decided: (Long, Boolean) => D)(exact: => Exact[D]): D = {
+    val key = IndexState.key(store, source)
+    val hasPolicy = baseline.nonEmpty
+    def retired(hot: Long): D = { clear; decided(hot, true) }
+    sketchGated(HotKeySketch.upperBound(store, sketchT, key), bar, baseline,
+      rearmFactor, retireFraction, hasPolicy,
+      witnessHot = HotKeySketch.readWitness(store, witnessT, key).map(_._2))(
+      retired)(decided(_, false)) {
+      val e = exact
+      val rang = rings(e.hot.toDouble, bar.toDouble, baseline.map(_.toDouble),
+        rearmFactor, e.live)
+      val retire = !rang &&
+        retires(e.hot.toDouble, bar.toDouble, retireFraction, hasPolicy)
+      val dec =
+        if (rang) e.ring() else if (retire) retired(e.hot) else decided(e.hot, false)
+      HotKeySketch.rebuild(store, sketchT, keys, key)
+      if (retireFraction > 0 && (rang || (hasPolicy && !retire)) && e.hotKey.nonEmpty)
+        HotKeySketch.writeWitness(store, witnessT, e.hotKey, e.hot, key)
+      else IndexState.drop(store, witnessT)
+      dec
+    }
+  }
+
+  /** The ONE reader of a clapper's persisted policy tables: `decode` of
+    * `table`, or None when it is absent. One retry covers the writer's
+    * two-rename overwrite swap, where the table is briefly absent — a
+    * reader that took that window for "no policy" would run one batch
+    * uncapped on a flooded index. A table that exists but cannot be read
+    * or decoded (corrupt, schema-drifted) throws, naming it: an
+    * unreadable policy must never silently read as "no policy".
+    */
+  def readPolicy[P](store: graft.tables.TableStore, table: String)(
+      decode: org.apache.spark.sql.DataFrame => P): Option[P] = {
+    def once(): Option[P] =
+      if (!store.exists(table)) None
+      else try Some(decode(store.read(table)))
+      catch { case e: Exception =>
+        throw new IllegalStateException(s"policy table '$table' is unreadable", e)
+      }
+    once().orElse(once())
+  }
+
+  /** Drop a clapper's policy tables (the first is the policy row, whose
+    * presence is the returned "a policy existed") and its witness: no
+    * policy → no witness, since nothing would consult it and a leaked
+    * one would tax every commit with a dead fold. */
+  def clearPolicy(store: graft.tables.TableStore, tables: Seq[String],
+      witnessT: String): Boolean = {
+    val had = store.exists(tables.head)
+    tables.foreach(t => if (store.exists(t)) store.drop(t))
+    IndexState.drop(store, witnessT)
+    had
+  }
 
   /** The shared parameter bounds every clapper states through its own
     * `require*Params` mirror (which sink policies call at CONSTRUCTION).

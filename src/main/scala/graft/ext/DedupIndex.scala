@@ -218,9 +218,8 @@ object DedupIndex {
     * .cascade]] leg; this is the index-wide DROP TABLE.
     */
   def dropIndex(store: TableStore, name: String): Unit =
-    Seq(bandsT(name), shinglesT(name), sizesT(name),
-      s"${name}_health_cache", s"${name}_cap_policy", s"${name}_hh_sketch",
-      s"${name}_hh_witness", s"${name}_conf")
+    (dataTables(name) ++ Seq(healthCacheT(name), capPolicyT(name),
+      hhSketchT(name), hhWitnessT(name), s"${name}_conf"))
       .foreach(t => if (store.exists(t)) store.drop(t))
 
   // ---- audit accessors: the index's physical content in logical form ----
@@ -490,13 +489,11 @@ object DedupIndex {
     * so there is no idle tail worth back-filling.
     */
   def commitIncrement(store: TableStore, name: String, stage: IncrementStage): Unit = {
-    // the sketch-fold freshness key: the bands listing THIS commit
-    // extends — captured before the append so a fold over a sketch that
-    // missed any other mutation is detected and dropped, never extended
-    val fpBefore =
-      if (store.exists(hhSketchT(name)) || store.exists(hhWitnessT(name)))
-        bandsFp(store, name)
-      else ""
+    // opened BEFORE the appends: probes the hot-bucket sketch and witness
+    // once each, and lists the bands table only when one of them exists
+    // (a clapper built it) — an index nobody polls pays neither
+    val fold = HotKeySketch.open(store, hhSketchT(name), hhWitnessT(name),
+      bandsT(name))
     store.append(bandsT(name), stage.bands)
     // bucketed layout: the increment's rows land in their hive
     // partitions (same id→bucket formula as build — see idBucket)
@@ -507,34 +504,15 @@ object DedupIndex {
         partitionBy = Seq(bktCol(stage.idBuckets)))
     else store.append(shinglesT(name), stage.shStored)
     store.append(sizesT(name), stage.sizes)
-    // O(batch) hot-bucket sketch fold, only when a clapper built one —
-    // what keeps [[capIfUnhealthy]]'s routine poll off the corpus
-    // tables. Crash-safe through the fingerprint, not through ordering:
-    // a commit that dies before this fold leaves the sketch stamped
-    // with a listing the bands table no longer has, so the next poll
-    // treats it as absent and re-baselines exactly
-    val fpAfter = bandsFp(store, name)
-    // sketch + witness (exact count of the last exact pass's hottest
-    // bucket) fold in ONE pass over the staged bands
-    // ([[HotKeySketch.foldAll]]) — O(batch), and only when a clapper /
-    // standing policy built them
-    HotKeySketch.foldAll(store, hhSketchT(name), hhWitnessT(name),
-      stage.bands.select(hhKey.as("k")), fpBefore, fpAfter)
+    // O(batch) fold of the staged bands into sketch + witness in one pass
+    // — what keeps [[capIfUnhealthy]]'s routine poll off the corpus
+    // tables. Crash-safe through the memo key, not through ordering: a
+    // commit that dies before this fold leaves them stamped with a bands
+    // key that has moved on, so the next poll reads them as absent and
+    // re-baselines exactly
+    fold.foreach(HotKeySketch.foldAll(store, _, stage.bands.select(hhKey.as("k"))))
   }
 
-  /** Periodic index maintenance: compact the three append-only tables.
-    *
-    * Every [[dedupIncrement]] run appends a few small parquet parts to
-    * `_bands`/`_shingles`/`_sizes`; a year of daily crawls leaves each
-    * table thousands of KB-sized files and every probe bounded by
-    * file-open and footer latency instead of bytes — the classic
-    * operational killer of an append-only index. This rewrites each table
-    * into `targetBytes`-sized files through [[graft.tables.Compact]]'s
-    * staging + atomic-rename swap (readers see old or new generation,
-    * never a mix; content is bit-identical, so the next increment's pairs
-    * are unchanged — DedupIndexSpec pins both). Run it on the cadence the
-    * append rate dictates, e.g. weekly for daily increments.
-    */
   /** [[AnnIndex.Health]]'s MinHash twin. `maxBucketFrac` is the
     * hot-bucket skew signal: probe cost assumes band buckets hold a
     * handful of docs, and a bucket holding a large fraction of the
@@ -565,126 +543,90 @@ object DedupIndex {
       // resolve arbitrarily: any argmax key is an equally exact witness
       hotBucketKey: String = "")
 
-  /** Compute [[Health]]: a (band, bucket)-grouped count over the bands
-    * table (map-side combined), two narrow counts, three file listings.
-    * Safe after every increment — and free to POLL: the aggregates are
-    * cached in a 1-row `{name}_health_cache` keyed on the three tables'
-    * data-file fingerprint (the [[AnnIndex.refreshClusterSizes]] idea —
-    * parquet part names are task UUIDs, so any increment/compaction/
-    * takedown moves the key), so a monitoring loop between increments
-    * reads one row instead of re-aggregating the bands table, and the
-    * worst case (first call after a mutation) is exactly the old cost.
-    */
-  /** The three index tables' combined listing fingerprint + file counts —
-    * the ONE definition of the health-cache key, shared by [[health]] and
-    * [[maintain]]'s content-neutral re-stamp.
-    */
-  private def healthKey(store: TableStore, name: String): (String, Int, Int, Int) = {
-    val (fpB, nfB) = graft.tables.Compact.listingFingerprint(store, bandsT(name))
-    val (fpS, nfS) = graft.tables.Compact.listingFingerprint(store, shinglesT(name))
-    val (fpZ, nfZ) = graft.tables.Compact.listingFingerprint(store, sizesT(name))
-    (s"$fpB:$fpS:$fpZ", nfB, nfS, nfZ)
-  }
-
-  def health(store: TableStore, name: String): Health = {
-    val spark = org.apache.spark.sql.SparkSession.active
-    import spark.implicits._
-    val (fp, nfB, nfS, nfZ) = healthKey(store, name)
-    val cacheT = s"${name}_health_cache"
-    // NonFatal → recompute: a concurrent refresh can swap the cache files
-    // between exists() and the collect — poll-safety covers the READ too
-    val cached: Option[(Long, Long, Long, Long, String)] =
-      try {
-        if (!store.exists(cacheT)) None
-        else store.read(cacheT).collect().headOption.flatMap { r =>
-          // a pre-hot_key cache row throws on fieldIndex → caught below
-          // as a miss, so legacy caches migrate on their next recompute
-          if (r.getString(r.fieldIndex("fp")) != fp) None
-          else Some((r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3),
-            r.getString(r.fieldIndex("hot_key"))))
-        }
-      } catch { case scala.util.control.NonFatal(_) => None }
-    val (nDocs, nShingles, total, hot, hotKey) = cached.getOrElse {
-      val nd = store.read(sizesT(name)).count()
-      val ns = store.read(shinglesT(name)).count()
-      val byBucket = store.read(bandsT(name))
-        .groupBy(col("band"), col("bucket")).agg(count(lit(1)).as("n"))
-        .agg(sum(col("n")).as("total"), max(col("n")).as("hot"),
-          max_by(hhKey, col("n")).as("hotk"))
-        .collect()(0)
-      val t = if (byBucket.isNullAt(0)) 0L else byBucket.getLong(0)
-      val h = if (byBucket.isNullAt(1)) 0L else byBucket.getLong(1)
-      val hk = if (byBucket.isNullAt(2)) "" else byBucket.getString(2)
-      // best-effort memo: a concurrent poll racing the mutator's own
-      // cadence can lose the staging swap — values are computed locally
-      // either way, a lost write just recomputes next call
-      try store.overwrite(cacheT, Seq((nd, ns, t, h, hk, fp))
-        .toDF("n_docs", "n_shingles", "n_band_rows", "hot_bucket",
-          "hot_key", "fp"))
-      catch { case scala.util.control.NonFatal(_) => () }
-      (nd, ns, t, h, hk)
-    }
-    Health(nDocs, nShingles, total,
-      if (nDocs == 0) 0.0 else hot.toDouble / nDocs,
-      hot, nfB, nfS, nfZ, hotBucketKey = hotKey)
-  }
-
+  private def healthCacheT(name: String) = s"${name}_health_cache"
   private def capPolicyT(name: String) = s"${name}_cap_policy"
   private def hhSketchT(name: String) = s"${name}_hh_sketch"
   private def hhWitnessT(name: String) = s"${name}_hh_witness"
   private def hhKey =
     concat(col("band").cast("string"), lit(":"), col("bucket").cast("string"))
+  private def dataTables(name: String) = Seq(bandsT(name), shinglesT(name), sizesT(name))
 
-  /** The hot-bucket sketch bounding the clapper's routine poll — the
-    * shared [[HotKeySketch]] over `band:bucket` keys, fingerprinted on
-    * the bands table's listing (see HotKeySketch's invariant: a sketch
-    * that missed ANY mutation reads as absent, so undercounting — the
-    * one unsafe direction — is structurally impossible; at the default
+  /** The index's memos ([[IndexState]]): the health cache over the three
+    * data tables, the hot-bucket sketch and witness over the bands. */
+  private def memos(name: String) = Seq(
+    IndexState.Memo(healthCacheT(name), dataTables(name)),
+    IndexState.Memo(hhSketchT(name), Seq(bandsT(name))),
+    IndexState.Memo(hhWitnessT(name), Seq(bandsT(name))))
+
+  /** Compute [[Health]]: a (band, bucket)-grouped count over the bands
+    * table (map-side combined), two narrow counts, three file listings.
+    * Safe after every increment — and free to POLL: the aggregates are
+    * cached in a 1-row `{name}_health_cache` memo of the three tables
+    * ([[IndexState]]), so a monitoring loop between increments reads one
+    * row instead of re-aggregating the bands table, and the worst case
+    * (first call after a mutation) is exactly the old cost.
+    */
+  def health(store: TableStore, name: String): Health = {
+    val spark = org.apache.spark.sql.SparkSession.active
+    import spark.implicits._
+    val key = IndexState.key(store, dataTables(name): _*)
+    // a pre-hot_key cache row throws on fieldIndex: a miss, so legacy
+    // caches migrate on their next recompute
+    val (nDocs, nShingles, total, hot, hotKey) =
+      IndexState.read(store, healthCacheT(name), key) { c =>
+        val r = c.collect()(0)
+        (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3),
+          r.getString(r.fieldIndex("hot_key")))
+      }.getOrElse {
+        val nd = store.read(sizesT(name)).count()
+        val ns = store.read(shinglesT(name)).count()
+        val byBucket = store.read(bandsT(name))
+          .groupBy(col("band"), col("bucket")).agg(count(lit(1)).as("n"))
+          .agg(sum(col("n")).as("total"), max(col("n")).as("hot"),
+            max_by(hhKey, col("n")).as("hotk"))
+          .collect()(0)
+        val t = if (byBucket.isNullAt(0)) 0L else byBucket.getLong(0)
+        val h = if (byBucket.isNullAt(1)) 0L else byBucket.getLong(1)
+        val hk = if (byBucket.isNullAt(2)) "" else byBucket.getString(2)
+        IndexState.write(store, healthCacheT(name), key)(Seq((nd, ns, t, h, hk))
+          .toDF("n_docs", "n_shingles", "n_band_rows", "hot_bucket", "hot_key"))
+        (nd, ns, t, h, hk)
+      }
+    Health(nDocs, nShingles, total,
+      if (nDocs == 0) 0.0 else hot.toDouble / nDocs,
+      hot, key.files(0), key.files(1), key.files(2), hotBucketKey = hotKey)
+  }
+
+  /** The hot-bucket sketch's upper bound — the shared [[HotKeySketch]]
+    * over `band:bucket` keys, a memo of the bands table (a sketch that
+    * missed ANY mutation reads as absent, so undercounting — the one
+    * unsafe direction — is structurally impossible; at the default
     * geometry routine polls stay short-circuited to ≈ 4M docs per index
     * at the default budget, then degrade to exact, never to wrong).
     */
-  private def bandsFp(store: TableStore, name: String): String =
-    graft.tables.Compact.listingFingerprint(store, bandsT(name))._1
-
-  private def writeHhSketch(store: TableStore, name: String): Unit =
-    HotKeySketch.rebuild(store, hhSketchT(name),
-      store.read(bandsT(name)).select(hhKey.as("k")),
-      bandsFp(store, name))
-
   private[ext] def hhUpperBound(store: TableStore, name: String): Option[Long] =
-    HotKeySketch.upperBound(store, hhSketchT(name), bandsFp(store, name))
+    HotKeySketch.upperBound(store, hhSketchT(name),
+      IndexState.key(store, bandsT(name)))
 
-  /** The ONE reader of the `{name}_cap_policy` row — (bucket_cap,
-    * hot_rows), poll-safe (NonFatal → None, the health-cache read
-    * contract). Shared by [[storedBucketCap]] (probe side) and
-    * [[capIfUnhealthy]] (the rearm baseline) so the two can never
-    * drift in read semantics.
-    */
+  /** The `{name}_cap_policy` row — (bucket_cap, hot_rows), read through
+    * [[Clapper.readPolicy]]: absent is no policy, unreadable throws. */
   private def readCapPolicy(store: TableStore, name: String): Option[(Int, Long)] =
-    try {
-      if (!store.exists(capPolicyT(name))) None
-      else store.read(capPolicyT(name)).collect().headOption
-        .map(r => (r.getInt(r.fieldIndex("bucket_cap")),
-          r.getLong(r.fieldIndex("hot_rows"))))
-    } catch { case scala.util.control.NonFatal(_) => None }
+    Clapper.readPolicy(store, capPolicyT(name))(_.collect().headOption
+      .map(r => (r.getInt(r.fieldIndex("bucket_cap")),
+        r.getLong(r.fieldIndex("hot_rows"))))).flatten
 
   /** The probe-side bucket cap [[capIfUnhealthy]] last derived and
     * persisted for this index, if any — what `bucketCap = 0` on
-    * [[probeIncrement]]/[[dedupIncrement]] resolves to. ONE retry on an
-    * absent/failed read: [[capIfUnhealthy]]'s overwrite swap has a
-    * two-rename window where the table is briefly absent, and a probe
-    * that misread it as "no policy" would run one batch uncapped on a
-    * flooded index (a one-off quadratic AND a different kept set). The
-    * retry costs one extra driver-side exists listing per probe in the
-    * no-policy steady state — noise next to the probe job it guards —
-    * and lands after the microsecond-scale window in practice; a
-    * doubly-unlucky read still degrades to uncapped for that one probe
-    * and the next batch re-resolves, never an error. The writer itself
-    * ([[capIfUnhealthy]]) reads without the retry: it cannot race its
-    * own swap, and a lost read there just re-derives, idempotently.
+    * [[probeIncrement]]/[[dedupIncrement]] resolves to. An absent policy
+    * is read twice ([[Clapper.readPolicy]]): [[capIfUnhealthy]]'s
+    * overwrite swap has a two-rename window where the table is briefly
+    * absent, and a probe that misread it as "no policy" would run one
+    * batch uncapped on a flooded index (a one-off quadratic AND a
+    * different kept set). A policy table that exists but cannot be read
+    * throws, naming the table — it never reads as "no policy".
     */
   def storedBucketCap(store: TableStore, name: String): Option[Int] =
-    readCapPolicy(store, name).orElse(readCapPolicy(store, name)).map(_._1)
+    readCapPolicy(store, name).map(_._1)
 
   /** What [[capIfUnhealthy]] decided: whether the hot-bucket bell rang,
     * the numbers it was judged against (rows in the hottest band bucket
@@ -713,17 +655,12 @@ object DedupIndex {
     * rearm baseline persisted with the policy keeps the bell from
     * re-deriving until the NEXT flood is `rearmFactor ×` the OLD one.
     * Clearing restores the uncapped probe plan and fully re-arms the
-    * bell. Returns whether a policy existed. [[capIfUnhealthy]]'s
+    * bell; the witness goes with the policy ([[Clapper.clearPolicy]]).
+    * Returns whether a policy existed. [[capIfUnhealthy]]'s
     * `retireFraction` is this call on an automatic hysteresis trigger.
     */
-  def clearCapPolicy(store: TableStore, name: String): Boolean = {
-    val had = store.exists(capPolicyT(name))
-    if (had) store.drop(capPolicyT(name))
-    // no policy → no witness: nothing would consult it, and a leaked one
-    // would tax every subsequent commit with a dead fold
-    HotKeySketch.dropWitness(store, hhWitnessT(name))
-    had
-  }
+  def clearCapPolicy(store: TableStore, name: String): Boolean =
+    Clapper.clearPolicy(store, Seq(capPolicyT(name)), hhWitnessT(name))
 
   /** The ONE statement of [[capIfUnhealthy]]'s parameter bounds — the
     * function validates through this, and [[graft.streaming.Streams
@@ -786,17 +723,20 @@ object DedupIndex {
     * Steady-state cost (r19): one fixed-width sketch read plus one
     * 1-row policy read — FLAT in corpus size, because the first ask
     * builds a hot-bucket CMS that [[commitIncrement]] folds per batch
-    * and subsequent asks arbitrate from its upper bound (see the fast
-    * path's comment for the exact one-sided-error rules). With a policy
-    * IN FORCE and `retireFraction > 0`, the poll consults the hot
+    * and subsequent asks arbitrate from its upper bound ([[Clapper.ask]]
+    * — the one sketch-gated ask, shared with the BM25 twin). With a
+    * policy IN FORCE and `retireFraction > 0`, the poll consults the hot
     * WITNESS too — the last exact pass's hottest bucket with its EXACT
-    * count, folded per commit under the same fingerprint — whose lower
+    * count, folded per commit under the same memo key — whose lower
     * bound disproves a retire in O(1), so the standing-policy state
     * (the organic flood the cap exists for) also polls flat. The
     * corpus-sized aggregate is paid only when neither bound proves the
     * decision (transitions: a possible ring, or the witness bucket
     * itself declined); the trigger path additionally pays the bucket
-    * count the cap derivation needs.
+    * count the cap derivation needs. Decisions are IDENTICAL to the
+    * exact path (DedupIndexSpec pins sketch-vs-exact agreement); only
+    * `hotBucketRows` coarsens to the upper bound on short-circuited
+    * declines/retires.
     */
   def capIfUnhealthy(store: TableStore, name: String,
       hotBucketBudget: Long = 4096, capFactor: Long = 8,
@@ -805,113 +745,55 @@ object DedupIndex {
     val spark = org.apache.spark.sql.SparkSession.active
     import spark.implicits._
     val prev = readCapPolicy(store, name)
-    // SKETCH FAST PATH (r18 verdict: the lexical health aggregate was
-    // O(corpus shingle rows) per ask, re-paid every commit because the
-    // gate's append moves the fingerprint): the per-commit-maintained
-    // CMS bounds the hottest bucket from ABOVE in O(sketch) — one
-    // fixed-width read, flat in corpus size — so the routine no-flood
-    // poll never touches the corpus tables. The one-sided-error
-    // arbitration is [[Clapper.sketchGated]] (the ONE statement, shared
-    // with the BM25 twin — see its scaladoc for the rules and the
-    // honest cost of retireFraction > 0 under a standing policy);
-    // anything the bound cannot prove pays the exact aggregate exactly
-    // as before and then REBUILDS the sketch at the already-paying
-    // moment. Decisions are IDENTICAL to the exact path (DedupIndexSpec
-    // pins sketch-vs-exact agreement); only `hotBucketRows` coarsens to
-    // the upper bound on short-circuited declines/retires.
-    Clapper.sketchGated(hhUpperBound(store, name), hotBucketBudget,
+    Clapper.ask(store, hhSketchT(name), hhWitnessT(name), bandsT(name),
+      store.read(bandsT(name)).select(hhKey.as("k")), hotBucketBudget,
       prev.map(_._2), rearmFactor, retireFraction,
-      hasPolicy = prev.nonEmpty,
-      witnessHot = HotKeySketch.readWitness(store, hhWitnessT(name),
-        bandsFp(store, name))) { u =>
-      clearCapPolicy(store, name) // drops the witness with the policy
-      CapDecision(triggered = false, u, hotBucketBudget, 0.0, None,
-        retired = true)
-    } { u =>
-      CapDecision(triggered = false, u, hotBucketBudget, 0.0,
-        prev.map(_._1))
+      clearCapPolicy(store, name)) { (hot, retired) =>
+      CapDecision(triggered = false, hot, hotBucketBudget, 0.0,
+        if (retired) None else prev.map(_._1), retired)
     } {
       val h = health(store, name)
-      val hot = h.hotBucketRows
-      val ring = Clapper.rings(hot.toDouble, hotBucketBudget.toDouble,
-        prev.map(_._2.toDouble), rearmFactor, live = h.nDocs > 0)
-      val dec =
-        if (!ring) {
-          if (Clapper.retires(hot.toDouble, hotBucketBudget.toDouble,
-              retireFraction, hasPolicy = prev.nonEmpty)) {
-            clearCapPolicy(store, name)
-            CapDecision(triggered = false, hot, hotBucketBudget, 0.0, None,
-              retired = true)
-          } else
-            CapDecision(triggered = false, hot, hotBucketBudget, 0.0,
-              prev.map(_._1))
-        } else {
-          val nBuckets = store.read(bandsT(name))
-            .select(col("band"), col("bucket")).distinct().count()
-          val mean = if (nBuckets == 0) 0.0 else h.nBandRows.toDouble / nBuckets
-          val cap = math.min(Int.MaxValue.toLong,
-            math.max(64L, capFactor * math.ceil(mean).toLong)).toInt
-          store.overwrite(capPolicyT(name),
-            Seq((cap, hot)).toDF("bucket_cap", "hot_rows"))
-          CapDecision(triggered = true, hot, hotBucketBudget, mean, Some(cap))
-        }
-      // re-baseline at the already-paying moment (also the lazy FIRST
-      // build — an index nobody polls never carries a sketch)
-      try writeHhSketch(store, name)
-      catch { case scala.util.control.NonFatal(_) => () }
-      // witness maintenance, same moment: while a policy stays in force
-      // AND the caller opted into automatic retire, the hottest bucket's
-      // EXACT count persists (key + count from the SAME health aggregate
-      // — no second bands scan) so the next standing-policy ask can
-      // DISPROVE a retire without the corpus aggregate. With
-      // retireFraction = 0 nothing would ever consult it, so none is
-      // kept — no dead per-commit fold for the default config
-      try {
-        if (retireFraction > 0 && dec.cap.nonEmpty && h.hotBucketKey.nonEmpty)
-          HotKeySketch.writeWitness(store, hhWitnessT(name),
-            h.hotBucketKey, h.hotBucketRows, bandsFp(store, name))
-        else HotKeySketch.dropWitness(store, hhWitnessT(name))
-      } catch { case scala.util.control.NonFatal(_) => () }
-      dec
+      Clapper.Exact(h.hotBucketRows, h.nDocs > 0, h.hotBucketKey, () => {
+        val nBuckets = store.read(bandsT(name))
+          .select(col("band"), col("bucket")).distinct().count()
+        val mean = if (nBuckets == 0) 0.0 else h.nBandRows.toDouble / nBuckets
+        val cap = math.min(Int.MaxValue.toLong,
+          math.max(64L, capFactor * math.ceil(mean).toLong)).toInt
+        store.overwrite(capPolicyT(name),
+          Seq((cap, h.hotBucketRows)).toDF("bucket_cap", "hot_rows"))
+        CapDecision(triggered = true, h.hotBucketRows, hotBucketBudget, mean,
+          Some(cap))
+      })
     }
   }
 
+  /** Periodic index maintenance: compact the three append-only tables.
+    *
+    * Every [[dedupIncrement]] run appends a few small parquet parts to
+    * `_bands`/`_shingles`/`_sizes`; a year of daily crawls leaves each
+    * table thousands of KB-sized files and every probe bounded by
+    * file-open and footer latency instead of bytes — the classic
+    * operational killer of an append-only index. This rewrites each table
+    * into `targetBytes`-sized files through [[graft.tables.Compact]]'s
+    * staging + atomic-rename swap (readers see old or new generation,
+    * never a mix; content is bit-identical, so the next increment's pairs
+    * are unchanged — DedupIndexSpec pins both), and re-stamps every memo
+    * that was fresh going in ([[IndexState.compact]]). Run it on the
+    * cadence the append rate dictates, e.g. weekly for daily increments.
+    */
   def maintain(store: TableStore, name: String,
-      targetBytes: Long = 128L << 20): Map[String, graft.tables.Compact.Stats] = {
-    // the bucketed shingle table must restate its hive layout or the
-    // rewrite would collapse the partition dirs pruning depends on
-    val nBkt = idBucketsOf(store.read(shinglesT(name)).schema)
-    val shPb = if (nBkt > 0) Seq(bktCol(nBkt)) else Nil
-    // Compaction is content-neutral, so a health cache that was FRESH
-    // going in is re-stamped to the post-compaction fingerprint without
-    // re-aggregating the bands table (the [[AnnIndex.maintainIfNeeded]]
-    // csizes idea); a stale one is left stale
-    val cacheT = s"${name}_health_cache"
-    val wasFresh =
-      try store.exists(cacheT) &&
-        store.read(cacheT).select(col("fp")).collect()
-          .headOption.exists(_.getString(0) == healthKey(store, name)._1)
-      catch { case scala.util.control.NonFatal(_) => false }
-    // the hot-bucket sketch and its witness get the same treatment
-    // (their key is the bands listing alone)
-    val skWasFresh =
-      HotKeySketch.isFresh(store, hhSketchT(name), bandsFp(store, name))
-    val wWasFresh =
-      HotKeySketch.isFresh(store, hhWitnessT(name), bandsFp(store, name))
-    val stats = Seq(bandsT(name) -> Nil, shinglesT(name) -> shPb, sizesT(name) -> Nil)
-      .map { case (t, pb) =>
-        t -> graft.tables.Compact.compact(store, t, targetBytes, partitionBy = pb)
-      }.toMap
-    if (wasFresh)
-      try store.overwrite(cacheT, store.read(cacheT)
-        .withColumn("fp", lit(healthKey(store, name)._1)))
-      catch { case scala.util.control.NonFatal(_) => () }
-    if (skWasFresh)
-      HotKeySketch.restamp(store, hhSketchT(name), bandsFp(store, name))
-    if (wWasFresh)
-      HotKeySketch.restamp(store, hhWitnessT(name), bandsFp(store, name))
-    stats
-  }
+      targetBytes: Long = 128L << 20): Map[String, graft.tables.Compact.Stats] =
+    IndexState.compact(store, dataTables(name), memos(name), targetBytes,
+      shingleLayout(store, name))
+
+  /** The bucketed shingle table must restate its hive layout or the
+    * rewrite would collapse the partition dirs pruning depends on. */
+  private def shingleLayout(store: TableStore, name: String)(t: String): Seq[String] =
+    if (t != shinglesT(name)) Nil
+    else {
+      val nBkt = idBucketsOf(store.read(shinglesT(name)).schema)
+      if (nBkt > 0) Seq(bktCol(nBkt)) else Nil
+    }
 
   /** [[maintain]] behind an operational TRIGGER: compact only when one of
     * the three index tables has fragmented past `maxFiles` data files.
@@ -919,23 +801,10 @@ object DedupIndex {
     * metadata, no Spark job — so callers run it after EVERY increment
     * instead of inventing an external cadence; for daily ~few-file appends
     * the default 64 fires roughly monthly. Returns the compaction stats
-    * when it fired, None when the index was healthy.
+    * when it fired, None when the index was healthy (or never built).
     */
   def maintainIfNeeded(store: TableStore, name: String, maxFiles: Int = 64,
-      targetBytes: Long = 128L << 20): Option[Map[String, graft.tables.Compact.Stats]] = {
-    require(maxFiles >= 1, s"maxFiles must be >= 1, got $maxFiles")
-    // conf from the active session, NOT via store.read: reading a table to
-    // reach hadoopConfiguration would pay a full read construction per
-    // health check and throw on a missing/never-built index, where this
-    // trigger must cheaply report "nothing to do" (dataFiles → empty)
-    val conf = org.apache.spark.sql.SparkSession.active
-      .sparkContext.hadoopConfiguration
-    def nFiles(t: String): Int = {
-      val p = new org.apache.hadoop.fs.Path(store.path(t))
-      graft.tables.Compact.dataFiles(p.getFileSystem(conf), p).size
-    }
-    val fragmented = Seq(bandsT(name), shinglesT(name), sizesT(name))
-      .exists(t => nFiles(t) > maxFiles)
-    if (fragmented) Some(maintain(store, name, targetBytes)) else None
-  }
+      targetBytes: Long = 128L << 20): Option[Map[String, graft.tables.Compact.Stats]] =
+    IndexState.compactIfFragmented(store, dataTables(name), memos(name),
+      maxFiles, targetBytes, shingleLayout(store, name))
 }

@@ -4,30 +4,29 @@ import graft.tables.TableStore
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-/** The ONE implementation of the fingerprint-keyed hot-key CMS that bounds
-  * a clapper's routine poll by the batch instead of the corpus — shared by
+/** The ONE implementation of the hot-key CMS that bounds a clapper's
+  * routine poll by the batch instead of the corpus — shared by
   * [[DedupIndex.capIfUnhealthy]] (hot band buckets) and
-  * [[Bm25.capIfUnhealthy]] (hot terms), the same drift-risk rationale as
-  * [[Clapper]]: two hand-kept mirrors of upper-bound arbitration state
-  * WILL diverge, and this state has a correctness-critical invariant.
+  * [[Bm25.capIfUnhealthy]] (hot terms) through [[Clapper.ask]], the same
+  * drift-risk rationale as [[Clapper]]: two hand-kept mirrors of upper-bound
+  * arbitration state WILL diverge, and this state has a
+  * correctness-critical invariant.
   *
   * Mechanics: a fixed-geometry [[graft.functions.CountMin]] sketch of the
-  * index's hot-key occurrences (d = 4 × w = 8192), persisted as a table
-  * with a constant `fp` column stamping the SOURCE table's listing
-  * fingerprint at write time. [[upperBound]] reads min over hash rows of
-  * the row max — for the true-max key every row holds a cell ≥ its count,
-  * so each row's max dominates the true hot count. One-sided by
-  * construction: collisions only ADD, so the bound never underestimates
+  * index's hot-key occurrences (d = 4 × w = 8192), persisted as an
+  * [[IndexState]] memo of the SOURCE table. [[upperBound]] reads min over
+  * hash rows of the row max — for the true-max key every row holds a cell
+  * ≥ its count, so each row's max dominates the true hot count. One-sided
+  * by construction: collisions only ADD, so the bound never underestimates
   * the counts it saw.
   *
-  * The INVARIANT the fingerprint enforces: the sketch must never reflect
+  * The INVARIANT the memo key enforces: the sketch must never reflect
   * FEWER occurrences than the source table holds (an undercount could
   * prove a decline that isn't true). Any mutation the fold did not see —
   * a crash between a source append and its fold, an external delete, a
-  * rebuild — moves the source listing away from the stamped fp, and the
-  * sketch reads as absent; the caller then pays the exact aggregate and
-  * [[rebuild]]s. Deletes folded nowhere leave the sketch OVER-counting
-  * only via a full rebuild's absence — and a stale fp forces that rebuild.
+  * rebuild — moves the source key away from the stamp, and the sketch
+  * reads as absent; the caller then pays the exact aggregate and
+  * [[rebuild]]s.
   *
   * Single-writer contract (the same one every index mutation here already
   * has): folds and rebuilds are read-merge-overwrite.
@@ -37,6 +36,17 @@ import org.apache.spark.sql.functions._
   * while source rows ≲ width × the caller's budget; past that the poll
   * degrades to the exact aggregate it replaces — never to a wrong
   * decision. Shard the index at that boundary.
+  *
+  * The hot WITNESS is the LOWER bound beside the CMS's upper bound. The
+  * sketch can prove a metric SMALL (declines, retires) but never LARGE —
+  * an upper bound over the retire band is inconclusive. The witness is a
+  * 1-row memo (k, cnt) holding the EXACT occurrence count of ONE
+  * designated key — the hottest at the last exact pass — under the same
+  * key contract as the sketch. Since the true hottest count is ≥ ANY
+  * single key's count, a fresh witness over the retire band DISPROVES the
+  * retire in O(1). It may only UNDERSTATE the metric, so using it only to
+  * DISPROVE retires (never to prove one, never to ring) keeps every
+  * decision identical to the exact path's.
   */
 private[graft] object HotKeySketch {
 
@@ -46,228 +56,109 @@ private[graft] object HotKeySketch {
   /** Rebuild the sketch from the full key stream (one occurrence per
     * row of `keys`, single column `k`) — the re-baseline every
     * exact-pay moment performs, shedding delete inflation and collision
-    * drift. `fp` is the source listing captured by the caller.
+    * drift. `key` is the source key captured by the caller.
     */
   def rebuild(store: TableStore, sketchT: String, keys: DataFrame,
-      fp: String): Unit =
-    store.overwrite(sketchT,
-      graft.functions.CountMin.build(keys, "k", d = Depth, w = Width)
-        .withColumn("fp", lit(fp)))
-
-  /** Fold a committed increment's keys into an existing sketch. The
-    * caller captures `fpBefore` (the source listing its append extends)
-    * BEFORE mutating and `fpAfter` after: a sketch stamped with anything
-    * but `fpBefore` missed a mutation and is dropped rather than
-    * extended; a failed fold also drops — an absent sketch costs one
-    * exact poll, a wrong one costs correctness. No-op when no sketch
-    * exists (it is built lazily by the clapper — an index nobody polls
-    * never pays the fold).
-    */
-  def fold(store: TableStore, sketchT: String, newKeys: DataFrame,
-      fpBefore: String, fpAfter: String): Unit =
-    if (store.exists(sketchT))
-      try {
-        val cur = store.read(sketchT)
-        val fresh = cur.select(col("fp")).limit(1).collect()
-          .headOption.exists(_.getString(0) == fpBefore)
-        if (!fresh) store.drop(sketchT)
-        else store.overwrite(sketchT,
-          graft.functions.CountMin.merge(
-            cur.select(col("row"), col("bucket"), col("cnt")),
-            graft.functions.CountMin.build(newKeys, "k",
-              d = Depth, w = Width))
-            .withColumn("fp", lit(fpAfter)))
-      } catch { case scala.util.control.NonFatal(_) =>
-        try store.drop(sketchT)
-        catch { case scala.util.control.NonFatal(_) => () }
-      }
+      key: IndexState.Key): Unit =
+    IndexState.write(store, sketchT, key)(
+      graft.functions.CountMin.build(keys, "k", d = Depth, w = Width))
 
   /** The sketch's upper bound on the hottest key's occurrence count, or
-    * None when no sketch exists, its fp mismatches `fp` (the live source
-    * listing), or the read raced a swap — the caller falls back to the
-    * exact aggregate.
+    * None when no fresh sketch exists at `key` (the live source key) —
+    * the caller falls back to the exact aggregate.
     */
   def upperBound(store: TableStore, sketchT: String,
-      fp: String): Option[Long] =
-    try {
-      if (!store.exists(sketchT)) None
-      else {
-        val cur = store.read(sketchT)
-        val fresh = cur.select(col("fp")).limit(1).collect()
-          .headOption.exists(_.getString(0) == fp)
-        if (!fresh) None
-        else cur.groupBy(col("row")).agg(max(col("cnt")).as("m"))
-          .agg(min(col("m"))).collect()
-          .headOption.map(row => if (row.isNullAt(0)) 0L else row.getLong(0))
-      }
-    } catch { case scala.util.control.NonFatal(_) => None }
+      key: IndexState.Key): Option[Long] =
+    IndexState.read(store, sketchT, key) { cells =>
+      cells.collect().groupBy(_.getInt(0)).values
+        .map(_.map(_.getLong(2)).max).minOption.getOrElse(0L)
+    }
 
-  // ---- hot witness: the LOWER bound beside the CMS's upper bound ----
-  //
-  // The sketch can prove a metric SMALL (declines, retires) but never
-  // LARGE — an upper bound over the retire band is inconclusive, which
-  // is why a standing policy with retireFraction > 0 paid the exact
-  // aggregate every ask through r19's first half (the honest-cost note
-  // on [[Clapper.sketchGated]]). The witness closes that direction: a
-  // 1-row table (k, cnt, fp) holding the EXACT occurrence count of ONE
-  // designated key — the hottest at the last exact pass — maintained
-  // under the same fingerprint contract as the sketch. Since the true
-  // hottest count is ≥ ANY single key's count, a fresh witness over the
-  // retire band DISPROVES the retire in O(1), and the standing-policy
-  // poll goes back to flat. The fold is O(batch): count the batch's
-  // occurrences of the one witness key. Same one-sided safety story,
-  // mirrored: the witness may only UNDERSTATE the metric (its key may
-  // no longer be the hottest — some other key can be hotter, never
-  // colder than 0 extra), so using it only to DISPROVE retires (never
-  // to prove one, never to ring) keeps every decision identical to the
-  // exact path's. A witness whose fp missed any mutation reads absent,
-  // exactly like the sketch.
-
-  /** Write the witness at the exact-pass moment: `key`'s exact count as
-    * the caller's aggregate just measured it, stamped with the source
-    * listing. */
-  def writeWitness(store: TableStore, witnessT: String, key: String,
-      cnt: Long, fp: String): Unit = {
+  /** Write the witness at the exact-pass moment: `hotKey`'s exact count
+    * as the caller's aggregate just measured it, stamped `key`. */
+  def writeWitness(store: TableStore, witnessT: String, hotKey: String,
+      cnt: Long, key: IndexState.Key): Unit = {
     val spark = org.apache.spark.sql.SparkSession.active
     import spark.implicits._
-    store.overwrite(witnessT, Seq((key, cnt, fp)).toDF("k", "cnt", "fp"))
+    IndexState.write(store, witnessT, key)(Seq((hotKey, cnt)).toDF("k", "cnt"))
   }
 
-  /** Drop the witness (policy retired / no policy in force) — absent is
-    * the correct state when nothing would consult it. */
-  def dropWitness(store: TableStore, witnessT: String): Unit =
-    try { if (store.exists(witnessT)) store.drop(witnessT) }
-    catch { case scala.util.control.NonFatal(_) => () }
-
-  /** Fold a committed increment into the witness: cnt += the batch's
-    * occurrences of the witness key (exact — the batch is fully scanned
-    * for the ONE key). The [[fold]] freshness contract verbatim: a
-    * witness stamped with anything but `fpBefore` missed a mutation and
-    * drops; a failed fold drops too. No-op when no witness exists.
-    */
-  def foldWitness(store: TableStore, witnessT: String, newKeys: DataFrame,
-      fpBefore: String, fpAfter: String): Unit =
-    if (store.exists(witnessT))
-      try {
-        store.read(witnessT).collect().headOption match {
-          case Some(r) if r.getString(r.fieldIndex("fp")) == fpBefore =>
-            val k = r.getString(r.fieldIndex("k"))
-            val add = newKeys.filter(col("k") === k).count()
-            writeWitness(store, witnessT, k,
-              r.getLong(r.fieldIndex("cnt")) + add, fpAfter)
-          case _ => store.drop(witnessT)
-        }
-      } catch { case scala.util.control.NonFatal(_) =>
-        try store.drop(witnessT)
-        catch { case scala.util.control.NonFatal(_) => () }
-      }
-
-  /** The witness count when one exists and is stamped exactly `fp` (the
-    * live source listing); None otherwise — the caller falls back to the
-    * exact aggregate. */
+  /** The witness (key, count) when one exists and is fresh at `key`. */
   def readWitness(store: TableStore, witnessT: String,
-      fp: String): Option[Long] =
-    try {
-      if (!store.exists(witnessT)) None
-      else store.read(witnessT).collect().headOption.collect {
-        case r if r.getString(r.fieldIndex("fp")) == fp =>
-          r.getLong(r.fieldIndex("cnt"))
-      }
-    } catch { case scala.util.control.NonFatal(_) => None }
+      key: IndexState.Key): Option[(String, Long)] =
+    IndexState.read(store, witnessT, key) { w =>
+      val r = w.collect()(0)
+      (r.getString(0), r.getLong(1))
+    }
 
-  /** One-pass fold of a committed increment into BOTH the sketch and the
-    * witness — [[fold]] ⊕ [[foldWitness]] with the batch scanned ONCE.
-    * When only one of the two exists, delegates to its single fold; when
-    * both do, each occurrence explodes to its d CMS row-buckets PLUS —
-    * when it is the witness key — one synthetic `(-1, 0)` cell, so the
-    * witness increment is literally a cell of the same aggregate. The
-    * aggregate's output is bounded by geometry (≤ d×w + 1 cells,
-    * 32 769 at the fixed 4×8192), so the driver read is
-    * contract-bounded, never corpus- or batch-proportional.
+  /** A fold a commit opens BEFORE it mutates `source`: the sketch and
+    * witness tables that exist (each probed once) and the source key
+    * they must be fresh at to be extended. */
+  final case class Fold(sketchT: Option[String], witnessT: Option[String],
+      source: String, before: IndexState.Key)
+
+  /** None when neither the sketch nor the witness exists — the commit then
+    * pays no listing and no fold (both are built lazily by the clapper,
+    * so an index nobody polls never pays either). */
+  def open(store: TableStore, sketchT: String, witnessT: String,
+      source: String): Option[Fold] = {
+    val sk = Some(sketchT).filter(store.exists)
+    val wt = Some(witnessT).filter(store.exists)
+    if (sk.isEmpty && wt.isEmpty) None
+    else Some(Fold(sk, wt, source, IndexState.key(store, source)))
+  }
+
+  /** Fold a committed increment's keys (column `k`) into the sketch, the
+    * witness, or both, scanning the batch ONCE: each occurrence explodes
+    * to its d CMS row-buckets when the sketch folds, plus — when it is the
+    * witness key — one synthetic `(-1, 0)` cell, so the witness increment
+    * is a cell of the same aggregate. The aggregate is bounded by geometry
+    * (≤ d×w + 1 cells), never by the batch. By CMS linearity the folded
+    * sketch equals a [[rebuild]] over base ∪ increment, cell for cell.
     *
-    * Freshness/decision semantics are EXACTLY the two folds': a side
-    * stamped with anything but `fpBefore` drops while the fresh side
-    * still folds (alone, via its own path); any failure drops both —
-    * absent costs one exact poll, a wrong sketch costs correctness.
+    * A side that is not fresh at `fold.before` missed a mutation and
+    * drops while the fresh side still folds; any failure drops both —
+    * an absent side costs one exact poll, a wrong one costs correctness.
     */
-  def foldAll(store: TableStore, sketchT: String, witnessT: String,
-      newKeys: DataFrame, fpBefore: String, fpAfter: String): Unit = {
-    val hasSk = store.exists(sketchT)
-    val hasW = store.exists(witnessT)
-    if (!(hasSk && hasW)) {
-      if (hasSk) fold(store, sketchT, newKeys, fpBefore, fpAfter)
-      if (hasW) foldWitness(store, witnessT, newKeys, fpBefore, fpAfter)
-    } else try {
-      val cur = store.read(sketchT)
-      val skFresh = cur.select(col("fp")).limit(1).collect()
-        .headOption.exists(_.getString(0) == fpBefore)
-      val wRow = store.read(witnessT).collect().headOption
-      val wFresh = wRow.exists(r => r.getString(r.fieldIndex("fp")) == fpBefore)
-      if (!skFresh || !wFresh) {
-        if (!skFresh) store.drop(sketchT)
-        if (!wFresh) store.drop(witnessT)
-        if (skFresh) fold(store, sketchT, newKeys, fpBefore, fpAfter)
-        if (wFresh) foldWitness(store, witnessT, newKeys, fpBefore, fpAfter)
-      } else {
-        val wk = wRow.get.getString(wRow.get.fieldIndex("k"))
+  def foldAll(store: TableStore, fold: Fold, newKeys: DataFrame): Unit =
+    try {
+      val cur = fold.sketchT.flatMap(IndexState.read(store, _, fold.before)(identity))
+      val wit = fold.witnessT.flatMap(readWitness(store, _, fold.before))
+      if (cur.isEmpty) fold.sketchT.foreach(store.drop)
+      if (wit.isEmpty) fold.witnessT.foreach(store.drop)
+      if (cur.nonEmpty || wit.nonEmpty) {
+        val after = IndexState.key(store, fold.source)
+        val rows = (if (cur.nonEmpty) (0 until Depth).map(i => lit(i)) else Nil) ++
+          wit.map(_ => lit(-1))
         val cells = newKeys
-          .select(explode(array(
-            (0 until Depth).map(i => lit(i)) :+ lit(-1): _*)).as("row"),
-            col("k"))
-          .filter(col("row") >= 0 || col("k") === wk)
+          .select(explode(array(rows: _*)).as("row"), col("k"))
+          .filter(col("row") >= 0 || wit.fold(lit(false))(w => col("k") === w._1))
           .select(col("row"),
             when(col("row") >= 0,
               graft.functions.CountMin.bucket(col("row"), col("k"), Width))
               .otherwise(lit(0L)).as("bucket"))
           .groupBy("row", "bucket").agg(count(lit(1)).as("cnt"))
           .collect()
-        val wAdd = cells.find(_.getInt(0) == -1)
-          .map(_.getLong(2)).getOrElse(0L)
         val spark = org.apache.spark.sql.SparkSession.active
         import spark.implicits._
-        // null-safe bucket decode (ADVICE r20): a null key in the batch
-        // yields a null CMS bucket — [[graft.functions.CountMin.build]]
-        // keeps that as a null-bucket cell, so the combined path must
-        // too. The former primitive getLong NPE'd into the catch-all and
-        // silently dropped BOTH sketch and witness, an asymmetric
-        // degradation vs the fold/foldWitness paths this method claims
-        // exact equivalence with.
-        val inc = cells.filter(_.getInt(0) >= 0)
-          .map(r => (r.getInt(0),
-            if (r.isNullAt(1)) null
-            else java.lang.Long.valueOf(r.getLong(1)), r.getLong(2))).toSeq
-          .toDF("row", "bucket", "cnt")
-        store.overwrite(sketchT,
-          graft.functions.CountMin.merge(
-            cur.select(col("row"), col("bucket"), col("cnt")), inc)
-            .withColumn("fp", lit(fpAfter)))
-        writeWitness(store, witnessT, wk,
-          wRow.get.getLong(wRow.get.fieldIndex("cnt")) + wAdd, fpAfter)
+        for (c <- cur; t <- fold.sketchT) {
+          // a null key yields a null CMS bucket, which CountMin.build keeps
+          // as a null-bucket cell — decode it null-safely, or the fold
+          // would throw and drop both sides
+          val inc = cells.filter(_.getInt(0) >= 0)
+            .map(r => (r.getInt(0),
+              if (r.isNullAt(1)) null
+              else java.lang.Long.valueOf(r.getLong(1)), r.getLong(2))).toSeq
+            .toDF("row", "bucket", "cnt")
+          IndexState.write(store, t, after)(graft.functions.CountMin.merge(c, inc))
+        }
+        for ((k, n) <- wit; t <- fold.witnessT) {
+          val add = cells.find(_.getInt(0) == -1).map(_.getLong(2)).getOrElse(0L)
+          writeWitness(store, t, k, n + add, after)
+        }
       }
     } catch { case scala.util.control.NonFatal(_) =>
-      try store.drop(sketchT)
-      catch { case scala.util.control.NonFatal(_) => () }
-      try store.drop(witnessT)
-      catch { case scala.util.control.NonFatal(_) => () }
+      // a failed fold: absent costs one exact poll, a wrong side costs correctness
+      (fold.sketchT ++ fold.witnessT).foreach(IndexState.drop(store, _))
     }
-  }
-
-  /** Re-stamp a FRESH sketch (or witness — the schema only needs `fp`)
-    * to a new fingerprint after a content-neutral rewrite (compaction) —
-    * the health-cache re-stamp idea. The caller checks freshness against
-    * the PRE-rewrite listing and passes the post-rewrite one; a stale
-    * sketch is left stale.
-    */
-  def restamp(store: TableStore, sketchT: String, fp: String): Unit =
-    try store.overwrite(sketchT,
-      store.read(sketchT).withColumn("fp", lit(fp)))
-    catch { case scala.util.control.NonFatal(_) => () }
-
-  /** Is the stored sketch stamped exactly `fp`? (The pre-compaction
-    * freshness probe for [[restamp]].) */
-  def isFresh(store: TableStore, sketchT: String, fp: String): Boolean =
-    try store.exists(sketchT) &&
-      store.read(sketchT).select(col("fp")).limit(1).collect()
-        .headOption.exists(_.getString(0) == fp)
-    catch { case scala.util.control.NonFatal(_) => false }
 }

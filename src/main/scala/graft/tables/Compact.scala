@@ -39,9 +39,9 @@ object Compact {
 
   /** Recursive data-file listing under `dir` (skips `_`/`.` sidecars;
     * missing dir → empty). The ONE definition of "what counts as a data
-    * file" — [[graft.ext.DedupIndex.maintainIfNeeded]]'s fragmentation
-    * trigger counts this same listing, so a future sidecar-convention
-    * change cannot desynchronize the two.
+    * file" — [[graft.ext.IndexState]]'s memo keys and fragmentation
+    * trigger read this same listing, so a future sidecar-convention
+    * change cannot desynchronize them.
     */
   private[graft] def dataFiles(fs: FileSystem, dir: Path): Seq[(Path, Long)] = {
     if (!fs.exists(dir)) return Nil
@@ -51,24 +51,6 @@ object Compact {
       else if (st.isDirectory) dataFiles(fs, st.getPath)
       else Seq(st.getPath -> st.getLen)
     }
-  }
-
-  /** A table's data-file listing as a cache key: md5 over the sorted
-    * (path, length) pairs plus the file count. Parquet writers name every
-    * part file with a task UUID, so ANY rewrite/append/compaction moves
-    * the fingerprint — the shared primitive behind the durable indexes'
-    * fingerprint-keyed caches (one copy, so a keying change cannot
-    * desynchronize the indexes).
-    */
-  private[graft] def listingFingerprint(store: TableStore, table: String): (String, Int) = {
-    val conf = org.apache.spark.sql.SparkSession.active
-      .sparkContext.hadoopConfiguration
-    val p = new Path(store.path(table))
-    val files = dataFiles(p.getFileSystem(conf), p)
-      .map { case (path, len) => s"${path.toUri.getPath}:$len" }.sorted
-    val md = java.security.MessageDigest.getInstance("MD5")
-    files.foreach(f => md.update(f.getBytes("UTF-8")))
-    (md.digest().map("%02x".format(_)).mkString, files.size)
   }
 
   /** Morton key: bit j of lane i lands at position j*n + i, so the sort
@@ -138,7 +120,7 @@ object Compact {
 
   /** Run [[compact]] only when the table's data-file count exceeds
     * `maxFiles` — the per-batch health-check trigger the durable indexes
-    * already use (`AnnIndex`/`Bm25`/`DedupIndex.maintainIfNeeded`),
+    * already use ([[graft.ext.IndexState.compactIfFragmented]]),
     * generalized to any plain table a streaming sink appends to (the
     * corpus leg of [[graft.streaming.Streams.retrievalIngestSink]]). One
     * driver-side directory listing per call; `None` = healthy, no work.

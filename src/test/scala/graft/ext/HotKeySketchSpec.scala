@@ -3,15 +3,15 @@ package graft.ext
 import graft.SparkSpec
 import graft.tables.TableStore
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.functions._
 
-/** [[HotKeySketch.foldAll]]'s contract: the combined fold is
-  * decision-identical to [[HotKeySketch.fold]] + [[HotKeySketch
-  * .foldWitness]] run separately, while scanning the increment's keys
-  * exactly ONCE (the r19 verdict's two-jobs-over-one-staged-batch cost
-  * note). The scan count is pinned with a partition-visit accumulator on
-  * the keys frame itself — any second job over the batch shows up as a
-  * second visit.
+/** [[HotKeySketch.foldAll]] against ground truth. Each case keeps a real
+  * source table `src` (column `k`): the sketch and witness are memos of it,
+  * a commit appends the increment to it between [[HotKeySketch.open]] and
+  * the fold. A folded sketch must equal [[HotKeySketch.rebuild]] over
+  * base ∪ increment cell for cell (CMS linearity), and a folded witness
+  * must hold the exact count of its key. The batch scan count is pinned
+  * with a partition-visit accumulator on the keys frame itself — any
+  * second job over the batch shows up as a second visit.
   */
 class HotKeySketchSpec extends SparkSpec {
   import spark.implicits._
@@ -29,118 +29,111 @@ class HotKeySketchSpec extends SparkSpec {
 
   private val base = Seq("a", "a", "a", "b", "b", "c", "w", "w")
   private val inc = Seq("a", "w", "w", "w", "d", "d")
+  private val stale = IndexState.Key("stale", Seq(1))
 
-  test("foldAll == fold + foldWitness on the same increment, with ONE scan of the batch") {
-    val s1 = freshStore("one")
-    val s2 = freshStore("two")
-    for (s <- Seq(s1, s2)) {
-      HotKeySketch.rebuild(s, "sk", keysDf(base), "f0")
-      HotKeySketch.writeWitness(s, "wt", "w", 2L, "f0")
-    }
-    // reference path: two independent folds
-    HotKeySketch.fold(s1, "sk", keysDf(inc), "f0", "f1")
-    HotKeySketch.foldWitness(s1, "wt", keysDf(inc), "f0", "f1")
-    // combined path, scan-counted
-    val acc = spark.sparkContext.longAccumulator("hks_scans")
-    HotKeySketch.foldAll(s2, "sk", "wt", countedKeys(inc, acc), "f0", "f1")
-    assert(acc.value == 1L,
-      s"foldAll must scan the increment exactly once, saw ${acc.value}")
-    // identical post-fold reads: the poll bound and the witness count
-    assert(HotKeySketch.upperBound(s2, "sk", "f1") ===
-      HotKeySketch.upperBound(s1, "sk", "f1"))
-    assert(HotKeySketch.upperBound(s2, "sk", "f1").exists(_ >= 4L),
-      "bound must dominate a's true count (3 base + 1 inc)")
-    assert(HotKeySketch.readWitness(s2, "wt", "f1") === Some(5L),
-      "witness must gain exactly the batch's 3 occurrences of w")
-    assert(HotKeySketch.readWitness(s1, "wt", "f1") ===
-      HotKeySketch.readWitness(s2, "wt", "f1"))
-    // full-table equality, not just the bound: every CMS cell matches
-    val cells1 = s1.read("sk").collect()
-      .map(r => (r.getInt(0), r.getLong(1), r.getLong(2))).toSet
-    val cells2 = s2.read("sk").collect()
-      .map(r => (r.getInt(0), r.getLong(1), r.getLong(2))).toSet
-    assert(cells1 === cells2)
+  private def srcKey(s: TableStore) = IndexState.key(s, "src")
+
+  /** A store whose `src` holds `base`, with a sketch and/or a witness
+    * (key "w", exact count 2) stamped fresh — or stamped `stale`. */
+  private def seeded(tag: String, sketch: Option[Boolean],
+      witness: Option[Boolean]): TableStore = {
+    val s = freshStore(tag)
+    s.overwrite("src", keysDf(base))
+    def stamp(fresh: Boolean) = if (fresh) srcKey(s) else stale
+    sketch.foreach(f => HotKeySketch.rebuild(s, "sk", keysDf(base), stamp(f)))
+    witness.foreach(f => HotKeySketch.writeWitness(s, "wt", "w", 2L, stamp(f)))
+    s
   }
 
-  test("foldAll delegates when only one side exists, and no-ops when neither does") {
-    // sketch only
-    val sSk = freshStore("skonly")
-    HotKeySketch.rebuild(sSk, "sk", keysDf(base), "f0")
-    HotKeySketch.foldAll(sSk, "sk", "wt", keysDf(inc), "f0", "f1")
-    assert(HotKeySketch.upperBound(sSk, "sk", "f1").isDefined)
+  /** The commit protocol: open, append `batch` to `src`, fold `keys`. */
+  private def commit(s: TableStore, batch: Seq[String],
+      keys: DataFrame): Unit = {
+    val fold = HotKeySketch.open(s, "sk", "wt", "src")
+    s.append("src", keysDf(batch))
+    fold.foreach(HotKeySketch.foldAll(s, _, keys))
+  }
+
+  private def cells(s: TableStore, t: String): Set[(Int, Long, Long)] =
+    s.read(t).collect().map(r => (r.getInt(0),
+      if (r.isNullAt(1)) -1L else r.getLong(1), r.getLong(2))).toSet
+
+  /** The folded sketch equals a rebuild over everything `src` holds. */
+  private def assertSketchIsRebuild(s: TableStore): Unit = {
+    val all = s.read("src").collect().map(_.getString(0)).toSeq
+    HotKeySketch.rebuild(s, "ref", keysDf(all), srcKey(s))
+    assert(cells(s, "sk") === cells(s, "ref"),
+      "a folded sketch must equal the rebuild over base ∪ increment")
+    assert(HotKeySketch.upperBound(s, "sk", srcKey(s)) ===
+      HotKeySketch.upperBound(s, "ref", srcKey(s)))
+  }
+
+  private def witness(s: TableStore): Option[(String, Long)] =
+    HotKeySketch.readWitness(s, "wt", srcKey(s))
+
+  test("foldAll folds both sides to ground truth with ONE scan of the batch") {
+    val s = seeded("both", Some(true), Some(true))
+    val acc = spark.sparkContext.longAccumulator("hks_scans")
+    commit(s, inc, countedKeys(inc, acc))
+    assert(acc.value == 1L,
+      s"foldAll must scan the increment exactly once, saw ${acc.value}")
+    assertSketchIsRebuild(s)
+    assert(HotKeySketch.upperBound(s, "sk", srcKey(s)).exists(_ >= 4L),
+      "bound must dominate a's true count (3 base + 1 inc)")
+    assert(witness(s) === Some(("w", 5L)),
+      "witness must gain exactly the batch's 3 occurrences of w")
+  }
+
+  test("foldAll folds the one side that exists, and a commit with neither opens no fold") {
+    val sSk = seeded("skonly", Some(true), None)
+    commit(sSk, inc, keysDf(inc))
+    assertSketchIsRebuild(sSk)
     assert(!sSk.exists("wt"), "no witness must be conjured")
-    // witness only
-    val sWt = freshStore("wtonly")
-    HotKeySketch.writeWitness(sWt, "wt", "w", 2L, "f0")
-    HotKeySketch.foldAll(sWt, "sk", "wt", keysDf(inc), "f0", "f1")
-    assert(HotKeySketch.readWitness(sWt, "wt", "f1") === Some(5L))
+    val sWt = seeded("wtonly", None, Some(true))
+    commit(sWt, inc, keysDf(inc))
+    assert(witness(sWt) === Some(("w", 5L)))
     assert(!sWt.exists("sk"), "no sketch must be conjured")
-    // neither: nothing written, nothing thrown
-    val sNo = freshStore("none")
-    HotKeySketch.foldAll(sNo, "sk", "wt", keysDf(inc), "f0", "f1")
+    val sNo = seeded("none", None, None)
+    assert(HotKeySketch.open(sNo, "sk", "wt", "src").isEmpty,
+      "with neither side the commit pays no listing and no fold")
+    commit(sNo, inc, keysDf(inc))
     assert(!sNo.exists("sk") && !sNo.exists("wt"))
   }
 
   test("foldAll freshness: a stale side drops while the fresh side still folds") {
-    // stale witness (stamped f_old), fresh sketch
-    val s = freshStore("stalew")
-    HotKeySketch.rebuild(s, "sk", keysDf(base), "f0")
-    HotKeySketch.writeWitness(s, "wt", "w", 2L, "f_old")
-    HotKeySketch.foldAll(s, "sk", "wt", keysDf(inc), "f0", "f1")
+    val s = seeded("stalew", Some(true), Some(false))
+    commit(s, inc, keysDf(inc))
     assert(!s.exists("wt"), "a witness that missed a mutation must drop")
-    assert(HotKeySketch.upperBound(s, "sk", "f1").exists(_ >= 4L),
-      "the fresh sketch must still fold")
-    // stale sketch, fresh witness
-    val s2 = freshStore("stalesk")
-    HotKeySketch.rebuild(s2, "sk", keysDf(base), "f_old")
-    HotKeySketch.writeWitness(s2, "wt", "w", 2L, "f0")
-    HotKeySketch.foldAll(s2, "sk", "wt", keysDf(inc), "f0", "f1")
+    assertSketchIsRebuild(s)
+    val s2 = seeded("stalesk", Some(false), Some(true))
+    commit(s2, inc, keysDf(inc))
     assert(!s2.exists("sk"), "a sketch that missed a mutation must drop")
-    assert(HotKeySketch.readWitness(s2, "wt", "f1") === Some(5L),
-      "the fresh witness must still fold")
-    // both stale: both drop, no fold
-    val s3 = freshStore("staleboth")
-    HotKeySketch.rebuild(s3, "sk", keysDf(base), "f_old")
-    HotKeySketch.writeWitness(s3, "wt", "w", 2L, "f_old")
-    HotKeySketch.foldAll(s3, "sk", "wt", keysDf(inc), "f0", "f1")
+    assert(witness(s2) === Some(("w", 5L)), "the fresh witness must still fold")
+    val s3 = seeded("staleboth", Some(false), Some(false))
+    commit(s3, inc, keysDf(inc))
     assert(!s3.exists("sk") && !s3.exists("wt"))
   }
 
-  test("foldAll tolerates null keys exactly like fold + foldWitness (ADVICE r20: no silent drop of both sides)") {
+  test("foldAll keeps null keys as null-bucket cells and folds the rest (no silent drop of both sides)") {
     // a null key yields a null CMS bucket; CountMin.build keeps it as a
-    // null-bucket cell and the witness filter skips it — the combined
-    // path must degrade IDENTICALLY, not NPE into its catch-all (which
-    // dropped both sketch and witness before the fix)
+    // null-bucket cell and the witness filter skips it — the fold must
+    // agree, not throw into its catch-all (which drops both sides)
     val incNull = Seq("a", null, "w", null)
-    val s1 = freshStore("nullref")
-    val s2 = freshStore("nullall")
-    for (s <- Seq(s1, s2)) {
-      HotKeySketch.rebuild(s, "sk", keysDf(base), "f0")
-      HotKeySketch.writeWitness(s, "wt", "w", 2L, "f0")
-    }
-    HotKeySketch.fold(s1, "sk", keysDf(incNull), "f0", "f1")
-    HotKeySketch.foldWitness(s1, "wt", keysDf(incNull), "f0", "f1")
-    HotKeySketch.foldAll(s2, "sk", "wt", keysDf(incNull), "f0", "f1")
-    assert(s2.exists("sk") && s2.exists("wt"),
+    val s = seeded("null", Some(true), Some(true))
+    commit(s, incNull, keysDf(incNull))
+    assert(s.exists("sk") && s.exists("wt"),
       "a null key must not silently drop the sketch or the witness")
-    assert(HotKeySketch.readWitness(s2, "wt", "f1") === Some(3L))
-    assert(HotKeySketch.readWitness(s1, "wt", "f1") ===
-      HotKeySketch.readWitness(s2, "wt", "f1"))
-    def cells(s: TableStore) = s.read("sk").collect()
-      .map(r => (r.getInt(0),
-        if (r.isNullAt(1)) -1L else r.getLong(1), r.getLong(2))).toSet
-    assert(cells(s1) === cells(s2),
-      "combined path must produce fold's exact cell set, null buckets included")
+    assertSketchIsRebuild(s)
+    assert(witness(s) === Some(("w", 3L)))
   }
 
   test("foldAll with a batch holding zero witness occurrences adds zero, and an empty batch is a stamped no-op") {
-    val s = freshStore("zero")
-    HotKeySketch.rebuild(s, "sk", keysDf(base), "f0")
-    HotKeySketch.writeWitness(s, "wt", "w", 2L, "f0")
-    HotKeySketch.foldAll(s, "sk", "wt", keysDf(Seq("x", "y")), "f0", "f1")
-    assert(HotKeySketch.readWitness(s, "wt", "f1") === Some(2L))
-    HotKeySketch.foldAll(s, "sk", "wt", keysDf(Seq.empty[String]), "f1", "f2")
-    assert(HotKeySketch.readWitness(s, "wt", "f2") === Some(2L))
-    assert(HotKeySketch.upperBound(s, "sk", "f2").exists(_ >= 3L))
+    val s = seeded("zero", Some(true), Some(true))
+    commit(s, Seq("x", "y"), keysDf(Seq("x", "y")))
+    assert(witness(s) === Some(("w", 2L)))
+    assertSketchIsRebuild(s)
+    commit(s, Nil, keysDf(Seq.empty[String]))
+    assert(witness(s) === Some(("w", 2L)))
+    assertSketchIsRebuild(s)
+    assert(HotKeySketch.upperBound(s, "sk", srcKey(s)).exists(_ >= 3L))
   }
 }
