@@ -169,7 +169,7 @@ object Dedup {
     */
   /** The k per-band MinHash aggregate columns — the ONE definition of the
     * hash family, shared by [[minhashSignature]] and
-    * [[minhashSignatureWithSize]] so the two can never drift.
+    * [[bandSignatureWithSize]] so the two can never drift.
     */
   private def sigAggCols(k: Int): Seq[Column] =
     (0 until k).map(i =>
@@ -187,14 +187,20 @@ object Dedup {
       .agg(sigAggCols(k).head, sigAggCols(k).tail: _*)
 
   /** [[minhashSignature]] PLUS the per-doc distinct-shingle count, from the
-    * SAME aggregation: (id, n_sh, h0..h{k-1}). A durable-index build/probe
-    * needs both the size table and the signature — computing them as two
-    * aggregations scans the shingle rows twice and runs two shuffle jobs
-    * for what one hash-agg produces in one pass (guide §2.4: two
-    * operations keyed the same way share one exchange).
+    * SAME aggregation, narrowed to what a durable index keeps: (id, n_sh,
+    * bucket_0..bucket_{bands-1}), each band's k/bands minima folded into
+    * its bucket md5 inside the aggregation's output projection. A
+    * durable-index build/probe needs both the size table and the band rows
+    * — computing them as two aggregations scans the shingle rows twice and
+    * runs two shuffle jobs for what one hash-agg produces in one pass
+    * (guide §2.4: two operations keyed the same way share one exchange) —
+    * and neither reads the minima themselves, so a stage of this frame is
+    * a third of the full signature's width at 12 hashes in 3 bands. The
+    * band and size rows are projections of it ([[bandRows]], `select(id,
+    * n_sh)`).
     */
-  private[ext] def minhashSignatureWithSize(shingles: DataFrame, idCol: String,
-      k: Int): DataFrame =
+  private[ext] def bandSignatureWithSize(shingles: DataFrame, idCol: String,
+      k: Int, bands: Int): DataFrame =
     // no Fan here: both callers ([[DedupIndex.build]]/[[DedupIndex
     // .probeIncrement]]) fan their shingle PLAN's input by the same id, and
     // that partitioning flows through the explode to satisfy this groupBy —
@@ -203,6 +209,13 @@ object Dedup {
     // into a loss)
     shingles.groupBy(col(idCol))
       .agg(count(lit(1)).as("n_sh"), sigAggCols(k): _*)
+      .select(col(idCol) +: col("n_sh") +: (0 until bands).map(b =>
+        bucketOf(b, k / bands).as(s"bucket_$b")): _*)
+
+  /** The (id, band, bucket) rows of a [[bandSignatureWithSize]] frame —
+    * exactly [[bandBuckets]] of the full signature. */
+  private[ext] def bandRows(bandSig: DataFrame, idCol: String, bands: Int): DataFrame =
+    explodeBands(bandSig, idCol, (0 until bands).map(b => col(s"bucket_$b")))
 
   /** LSH candidate pairs: signatures split into `bands` bands of `rows`
     * hashes; docs sharing any band bucket become candidates (a<b, distinct).
@@ -221,12 +234,20 @@ object Dedup {
   /** Explode a signature table into (id, band, bucket): bucket = md5 of the
     * band's concatenated hash slots.
     */
-  private[ext] def bandBuckets(sig: DataFrame, idCol: String, bands: Int, rows: Int): DataFrame = {
-    val bandCols = (0 until bands).map { b =>
-      struct(lit(b).as("band"),
-        md5(concat_ws("|", (0 until rows).map(r => col(s"h${b * rows + r}")): _*)).as("bucket"))
+  private[ext] def bandBuckets(sig: DataFrame, idCol: String, bands: Int, rows: Int): DataFrame =
+    explodeBands(sig, idCol, (0 until bands).map(b => bucketOf(b, rows)))
+
+  /** Band `b`'s bucket: md5 of its `rows` concatenated hash slots. */
+  private def bucketOf(b: Int, rows: Int): Column =
+    md5(concat_ws("|", (0 until rows).map(r => col(s"h${b * rows + r}")): _*))
+
+  /** One (id, band, bucket) row per band of each doc, bucket `b` being
+    * `buckets(b)`. */
+  private def explodeBands(df: DataFrame, idCol: String, buckets: Seq[Column]): DataFrame = {
+    val bandCols = buckets.zipWithIndex.map { case (bk, b) =>
+      struct(lit(b).as("band"), bk.as("bucket"))
     }
-    sig.select(col(idCol), explode(array(bandCols: _*)).as("bb"))
+    df.select(col(idCol), explode(array(bandCols: _*)).as("bb"))
       .select(col(idCol), col("bb.band"), col("bb.bucket"))
   }
 

@@ -11,7 +11,9 @@ import org.apache.spark.sql.functions._
   * base ∪ increment every run — correct, but at the 100 TB design point a
   * daily crawl re-pays the full-corpus shingling daily, the exact cost an
   * incremental pipeline exists to avoid. This object persists the index as
-  * three narrow [[TableStore]] tables, append-only across runs:
+  * three narrow [[TableStore]] tables that increments only ever add to —
+  * band and size rows by append, shingle files by [[TableStore.publish]]
+  * of the files the probe already wrote, never a rewrite:
   *
   *   - `{name}_bands`    (id, band, bucket) — the LSH probe index
   *   - `{name}_shingles` (id, shingle)      — distinct shingles per doc, for
@@ -102,6 +104,15 @@ object DedupIndex {
   private def dropBkt(df: DataFrame): DataFrame =
     df.drop(df.schema.fieldNames.filter(BktPattern.findFirstIn(_).isDefined): _*)
 
+  /** Stored shingle rows in the table's layout: with `idBuckets > 0`, the
+    * `_bkt` column and the hive partitioning on it. Build and probe both
+    * write through this, so a probe's staged files publish straight into
+    * the table's partition dirs. */
+  private def inLayout(sh: DataFrame, idCol: String, idBuckets: Int): (DataFrame, Seq[String]) =
+    if (idBuckets > 0)
+      (sh.withColumn(bktCol(idBuckets), idBucket(idCol, idBuckets)), Seq(bktCol(idBuckets)))
+    else (sh, Nil)
+
   /** The stored shingle rows restricted (at the SCAN, not after it) to the
     * buckets holding candidate docs — the id-bucketed layout's payoff.
     * With `idBuckets > 0` the shingle table is hive-partitioned on `_bkt`,
@@ -177,28 +188,25 @@ object DedupIndex {
     // posture that is right at 100 TB (one corpus pass) AND restores the
     // structural guarantee that sizes/bands derive from the same rows the
     // index stores (no determinism assumption on the input plan).
-    if (idBuckets > 0)
-      store.overwrite(shinglesT(name),
-        shStored.withColumn(bktCol(idBuckets), idBucket(idCol, idBuckets)),
-        partitionBy = Seq(bktCol(idBuckets)))
-    else store.overwrite(shinglesT(name), shStored)
+    val (shLaid, layout) = inLayout(shStored, idCol, idBuckets)
+    store.overwrite(shinglesT(name), shLaid, partitionBy = layout)
     // a rebuild sweeps away the interim layout's conf table — stale
     // metadata beside a schema-described index would only mislead
     if (store.exists(s"${name}_conf")) store.drop(s"${name}_conf")
-    // ONE aggregation over the stored shingles produces sizes AND
-    // signatures (they share the groupBy-id exchange — two jobs scanned
-    // the shingles twice for it before r21); staged so the two table
-    // writes below read tiny parquet instead of each re-running the k-md5
-    // agg. The stored table's file count carries the Fan'd write
-    // parallelism, so the read-back scan is not a one-task stage.
+    // ONE aggregation over the stored shingles produces sizes AND band
+    // buckets (they share the groupBy-id exchange — two jobs scanned the
+    // shingles twice for it before r21); staged in its narrow form (id,
+    // n_sh, one bucket per band — the k minima are folded in the agg) so
+    // the two table writes below read tiny parquet instead of each
+    // re-running the k-md5 agg. The stored table's file count carries the
+    // Fan'd write parallelism, so the read-back scan is not a one-task stage.
     val sig = Scratch.stage(
-      Dedup.minhashSignatureWithSize(
+      Dedup.bandSignatureWithSize(
         toLogical(dropBkt(store.read(shinglesT(name))), idCol, digest),
-        idCol, k),
+        idCol, k, bands),
       s"${name}_bsig")
     store.overwrite(sizesT(name), sig.select(col(idCol), col("n_sh")))
-    store.overwrite(bandsT(name),
-      Dedup.bandBuckets(sig, idCol, bands, k / bands))
+    store.overwrite(bandsT(name), Dedup.bandRows(sig, idCol, bands))
   }
 
   /** Ids already present in index `name` — a narrow scan of the sizes
@@ -299,7 +307,7 @@ object DedupIndex {
     * band buckets are only comparable under identical hashing).
     *
     * Plan shape (the point): the increment's text is scanned once, into a
-    * scratch-staged shingle table; every other input is a narrow parquet
+    * staged shingle table; every other input is a narrow parquet
     * scan of the stored index. Candidate generation joins the increment's
     * band rows (probe side, |inc| × bands rows) against the stored band
     * table on (band, bucket); verification exact-Jaccards only candidate
@@ -320,15 +328,16 @@ object DedupIndex {
     pairs
   }
 
-  /** A staged-but-uncommitted increment: the scratch-parquet deltas
-    * [[probeIncrement]] produced, in storage form, ready for
-    * [[commitIncrement]]'s appends. */
+  /** A staged-but-uncommitted increment: the deltas [[probeIncrement]]
+    * produced, in storage form, ready for [[commitIncrement]]. The band and
+    * size deltas are projections of one scratch stage; the shingle rows
+    * are `shStage`'s files, written beside the shingle table in its layout
+    * for [[TableStore.publish]]. */
   final case class IncrementStage private[ext] (
-      shStored: DataFrame, sizes: DataFrame, bands: DataFrame, idBuckets: Int,
-      idCol: String)
+      sizes: DataFrame, bands: DataFrame, shStage: TableStore.Staged)
 
   /** [[dedupIncrement]]'s probe HALF, with NO index mutation: stages the
-    * increment's shingle/band/size deltas in scratch and probes the stored
+    * increment's shingle/band/size deltas and probes the stored
     * index UNIONED with the staged deltas — the identical candidate space
     * the post-append probe would see (inc-inc pairs included) — returning
     * the lazy verified-pairs frame plus the stage handle.
@@ -342,12 +351,21 @@ object DedupIndex {
     * invert that into at-most-once: the re-delivery guard sees the docs as
     * indexed and their pairs are never computed again.
     *
-    * Stage lifetime: the returned handle reads scratch generations that
+    * Stage lifetime: the band/size deltas read a scratch generation that
     * [[graft.tables.Scratch]] GCs `graft.scratch.keepLast` (default 16)
-    * same-family generations later — commit each stage before starting
-    * more than keepLast further probes of the SAME index name, or the
-    * commit fails loudly with FileNotFoundException. Probe-then-commit
-    * per batch (the streaming sink's shape) never approaches the bound.
+    * same-family generations later. The shingle rows are staged under the
+    * STORE's root, at `.publish/{name}_shingles/<application id>_g<n>`
+    * ([[TableStore.stage]]), so the commit publishes them by rename on one
+    * file system; no table read, data-file listing, freshness key or
+    * compaction trigger sees them there. The next shingle stage of the
+    * same index sweeps generations more than keepLast behind, and any
+    * stage left by another application (a crashed writer's). So commit
+    * each stage before starting more than keepLast further probes of the
+    * SAME index name, or the commit fails loudly with
+    * FileNotFoundException — always before the sizes append, so the
+    * batch's docs stay out of [[knownIds]] and a replay recomputes them.
+    * Probe-then-commit per batch (the streaming sink's shape) never
+    * approaches the bound.
     *
     * `broadcastCandBytes` bounds the on-disk size of the staged `cands`
     * pair file (two id columns per candidate pair), not of the candidate-doc
@@ -383,31 +401,36 @@ object DedupIndex {
       s"index '$name' was built with digest=$storedDigest; call dedupIncrement " +
         s"with digest=$storedDigest (band buckets are only comparable under " +
         "the hashing mode the index was built with)")
-    // staged IN STORAGE FORM so the appends and every verify-side
-    // consumer scan cheap scratch parquet, not re-shingle (and, in digest
-    // mode, carry 16-byte digests, not text). Input fanned by id —
-    // explode/digest/write parallelism, see build().
-    val shIncStored = Scratch.stage(
+    // written ONCE, in storage form and in the table's layout, beside the
+    // shingle table: every verify-side consumer scans it (no re-shingling;
+    // in digest mode 16-byte digests, not text), and the commit publishes
+    // these very files by rename instead of reading them back into an
+    // append. Input fanned by id — explode/digest/write parallelism, see
+    // build().
+    val idBuckets = idBucketsOf(shSchema)
+    val (shLaid, layout) = inLayout(
       toStored(Dedup.shingleIndex(Fan.out(inc, col(idCol)), idCol, textCol, n),
         idCol, digest),
-      s"${name}_inc_sh")
-    val shInc = toLogical(shIncStored, idCol, digest)
+      idCol, idBuckets)
+    val shStage = store.stage(shinglesT(name), shLaid, layout)
+    val shInc = toLogical(dropBkt(shStage.rows), idCol, digest)
     // ONE aggregation over the STAGED shingles produces both the size delta
-    // and the signature (previously two separate agg jobs over the same
-    // rows); the band explode and the size projection are cheap maps over
-    // this one staged table, so neither needs its own stage write. The agg
-    // reads the staged parquet back — the increment text is shingled
-    // exactly once, and the staged rows are by construction the rows every
-    // downstream consumer (probe, commit) sees, with no determinism
-    // assumption on the input plan. (r21 instead overlapped the stage write
-    // with an agg that re-evaluated the shingle plan; the concurrent fanned
-    // jobs collapsed the driver's local[32] bench — see build().)
+    // and the band buckets, staged narrow: (id, n_sh, one bucket per band)
+    // — the k minima are folded into the buckets in the agg, because
+    // nothing downstream reads them. The band explode and the size
+    // projection are cheap maps over this one staged table, so neither
+    // needs its own stage write. The agg reads the staged parquet back —
+    // the increment text is shingled exactly once, and the staged rows are
+    // by construction the rows every downstream consumer (probe, commit)
+    // sees, with no determinism assumption on the input plan. (r21 instead
+    // overlapped the stage write with an agg that re-evaluated the shingle
+    // plan; the concurrent fanned jobs collapsed the local[32] bench — see
+    // build().)
     val sigInc = Scratch.stage(
-      Dedup.minhashSignatureWithSize(shInc, idCol, k),
+      Dedup.bandSignatureWithSize(shInc, idCol, k, bands),
       s"${name}_inc_sig")
-    val ebInc = Dedup.bandBuckets(sigInc, idCol, bands, k / bands)
+    val ebInc = Dedup.bandRows(sigInc, idCol, bands)
     val sizesInc = sigInc.select(col(idCol), col("n_sh"))
-    val idBuckets = idBucketsOf(shSchema)
     // probe: increment band rows vs stored ∪ staged bands (the stored index
     // does NOT yet contain the increment; the union reproduces the
     // post-append candidate space, so inc-inc pairs surface too —
@@ -449,11 +472,12 @@ object DedupIndex {
         broadcast(candDocs)
       else candDocs
     // verification shingles: stored candidates ∪ the staged increment's
-    // rows (an inc doc's shingles exist ONLY in scratch until commit). The
+    // rows (an inc doc's shingles exist ONLY in its stage until commit). The
     // distinct() is crash-residue hygiene, not normal-path dedup: a commit
-    // that died between its shingle and size appends leaves orphan shingle
-    // rows that a replayed batch re-appends, and without the distinct a
-    // later probe would double-count n_inter for that doc (jaccard > 1).
+    // that died between its shingle publish and size append leaves orphan
+    // shingle rows that a replayed batch re-publishes, and without the
+    // distinct a later probe would double-count n_inter for that doc
+    // (jaccard > 1).
     // Cost is bounded — shCand is the capped candidate set, not the corpus.
     val shCand = Scratch.stage(
       candidateShingles(store, name, candDocs, idCol, digest, idBuckets)
@@ -470,39 +494,37 @@ object DedupIndex {
     val pairs = Dedup.jaccardPairsWithSizes(shCand, sizesCand, idCol)
       .join(cands, Seq("id_a", "id_b"), "left_semi")
       .filter(col("jaccard") >= threshold)
-    (pairs, IncrementStage(shIncStored, sizesInc, ebInc, idBuckets, idCol))
+    (pairs, IncrementStage(sizesInc, ebInc, shStage))
   }
 
-  /** [[dedupIncrement]]'s commit HALF: append the staged deltas to the
-    * three index tables. The crash-safety contract is SIZES LAST: sizes is
-    * the membership table [[knownIds]] and every re-delivery guard key on,
-    * so a doc is "in the index" only once ALL its rows are. The bands and
-    * shingles appends carry no ordering constraint BETWEEN them — a crash
-    * leaving any subset of band/shingle residue for docs absent from sizes
-    * is the same recovery case either way (the replayed batch passes the
+  /** [[dedupIncrement]]'s commit HALF: add the staged deltas to the three
+    * index tables — publish the shingle stage's files
+    * ([[TableStore.publish]]: renames, no Spark job, no second write of
+    * the rows), append the band rows, append the size rows. Two Spark jobs.
+    *
+    * The crash-safety contract is SIZES LAST: sizes is the membership
+    * table [[knownIds]] and every re-delivery guard key on, so a doc is
+    * "in the index" only once ALL its rows are. The shingle and band steps
+    * carry no ordering constraint BETWEEN them for recovery — a crash
+    * leaving any subset of shingle-file/band residue for docs absent from
+    * sizes is the same case either way (the replayed batch passes the
     * guard, re-probes — probe-side distinct neutralizes the residue — and
-    * re-appends, at-least-once, never a silently unmatchable doc); the
-    * sizes append starts only after both have durably finished. All three
-    * run sequentially: r21 overlapped the first two and the extra
-    * concurrent job was part of what collapsed the driver's local[32]
-    * bench (d8 3.06 → 8.65 s) — both appends read cheap staged parquet,
-    * so there is no idle tail worth back-filling.
+    * re-commits, at-least-once, never a silently unmatchable doc); the
+    * sizes append starts only after both have durably finished. The
+    * publish goes FIRST because it is the step that checks the stage is
+    * whole: a stage already committed (or swept) throws there, before any
+    * table moves, instead of after a duplicate band append. All steps run
+    * sequentially: r21 overlapped two appends and the extra concurrent job
+    * was part of what collapsed the local[32] bench (d8 3.06 → 8.65 s).
     */
   def commitIncrement(store: TableStore, name: String, stage: IncrementStage): Unit = {
-    // opened BEFORE the appends: probes the hot-bucket sketch and witness
-    // once each, and lists the bands table only when one of them exists
-    // (a clapper built it) — an index nobody polls pays neither
+    // opened BEFORE the commit steps: probes the hot-bucket sketch and
+    // witness once each, and lists the bands table only when one of them
+    // exists (a clapper built it) — an index nobody polls pays neither
     val fold = HotKeySketch.open(store, hhSketchT(name), hhWitnessT(name),
       bandsT(name))
+    store.publish(stage.shStage)
     store.append(bandsT(name), stage.bands)
-    // bucketed layout: the increment's rows land in their hive
-    // partitions (same id→bucket formula as build — see idBucket)
-    if (stage.idBuckets > 0)
-      store.append(shinglesT(name),
-        stage.shStored.withColumn(
-          bktCol(stage.idBuckets), idBucket(stage.idCol, stage.idBuckets)),
-        partitionBy = Seq(bktCol(stage.idBuckets)))
-    else store.append(shinglesT(name), stage.shStored)
     store.append(sizesT(name), stage.sizes)
     // O(batch) fold of the staged bands into sketch + witness in one pass
     // — what keeps [[capIfUnhealthy]]'s routine poll off the corpus

@@ -40,14 +40,16 @@ object Compact {
   /** Recursive data-file listing under `dir` (skips `_`/`.` sidecars;
     * missing dir → empty). The ONE definition of "what counts as a data
     * file" — [[graft.ext.IndexState]]'s memo keys and fragmentation
-    * trigger read this same listing, so a future sidecar-convention
-    * change cannot desynchronize them.
+    * trigger and [[TableStore.publish]]'s stage listing read this same
+    * listing, so a future sidecar-convention change cannot desynchronize
+    * them. Spark's own rule: a `_` name holding `=` is a hive partition dir
+    * (`_bkt64=3`), not a sidecar.
     */
   private[graft] def dataFiles(fs: FileSystem, dir: Path): Seq[(Path, Long)] = {
     if (!fs.exists(dir)) return Nil
     fs.listStatus(dir).toSeq.flatMap { st =>
       val n = st.getPath.getName
-      if (n.startsWith("_") || n.startsWith(".")) Nil
+      if ((n.startsWith("_") && !n.contains("=")) || n.startsWith(".")) Nil
       else if (st.isDirectory) dataFiles(fs, st.getPath)
       else Seq(st.getPath -> st.getLen)
     }

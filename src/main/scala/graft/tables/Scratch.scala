@@ -107,15 +107,7 @@ object Scratch {
     * footprint.
     */
   def gc(spark: SparkSession, base: String, keepLast: Int = 16): Unit = {
-    // this conf controls DELETION — a malformed value must fail fast with
-    // the key named, not silently fall back to a smaller bound and delete
-    // generations a wide lazy fan-out still needs
-    val keep = spark.conf.getOption("graft.scratch.keepLast").map(_.trim)
-      .map(v => v.toIntOption.filter(_ >= 1).getOrElse(throw new IllegalArgumentException(
-        s"graft.scratch.keepLast must be an integer >= 1, got '$v'")))
-      .getOrElse(keepLast)
-    // keep <= 0 would delete the generation stage() just wrote (n <= current - 0)
-    require(keep >= 1, s"scratch keepLast must be >= 1, got $keep")
+    val keep = keepLastOf(spark, keepLast)
     val current = gen(base).get()
     val p = new org.apache.hadoop.fs.Path(root(spark))
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -129,6 +121,21 @@ object Scratch {
         }
       }
     }
+  }
+
+  /** The generation bound in force: `graft.scratch.keepLast`, else
+    * `default`. Shared with [[TableStore.stage]]'s sweep. */
+  private[graft] def keepLastOf(spark: SparkSession, default: Int = 16): Int = {
+    // this conf controls DELETION — a malformed value must fail fast with
+    // the key named, not silently fall back to a smaller bound and delete
+    // generations a wide lazy fan-out still needs
+    val keep = spark.conf.getOption("graft.scratch.keepLast").map(_.trim)
+      .map(v => v.toIntOption.filter(_ >= 1).getOrElse(throw new IllegalArgumentException(
+        s"graft.scratch.keepLast must be an integer >= 1, got '$v'")))
+      .getOrElse(default)
+    // keep <= 0 would delete the generation stage() just wrote (n <= current - 0)
+    require(keep >= 1, s"scratch keepLast must be >= 1, got $keep")
+    keep
   }
 
   /** Refresh this app's liveness marker (an empty `_heartbeat` file whose

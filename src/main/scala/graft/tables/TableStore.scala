@@ -103,15 +103,19 @@ final class TableStore(spark: SparkSession, root: String) {
   /** The table's recorded schema (sidecar), or footer-inferred for tables
     * predating the sidecar, or None when the table doesn't exist.
     */
-  def schemaOf(name: String): Option[StructType] = {
+  def schemaOf(name: String): Option[StructType] = recorded(name).map(_._1)
+
+  /** [[schemaOf]] plus whether it came from the sidecar — the one probe
+    * [[append]] and [[publish]] decide their sidecar write from. */
+  private def recorded(name: String): Option[(StructType, Boolean)] = {
     if (!exists(name)) None
     else {
       val sc = schemaSidecar(new Path(path(name)))
       if (fs.exists(sc)) {
         val in = fs.open(sc)
         val json = try scala.io.Source.fromInputStream(in, "UTF-8").mkString finally in.close()
-        Some(DataType.fromJson(json).asInstanceOf[StructType])
-      } else Some(spark.read.parquet(path(name)).schema)
+        Some((DataType.fromJson(json).asInstanceOf[StructType], true))
+      } else Some((spark.read.parquet(path(name)).schema, false))
     }
   }
 
@@ -227,12 +231,11 @@ final class TableStore(spark: SparkSession, root: String) {
     */
   def append(name: String, df: DataFrame, partitionBy: Seq[String] = Nil,
       mergeSchema: Boolean = true): Unit = {
-    val toWrite = schemaOf(name) match {
-      case Some(existing) if mergeSchema =>
-        val union = unionSchema(name, existing, df.schema)
-        writeSidecar(new Path(path(name)), union)
-        alignTo(df, union)
-      case Some(existing) =>
+    val prior = recorded(name)
+    val toWrite = prior match {
+      case Some((existing, fromSidecar)) if mergeSchema =>
+        alignTo(df, widen(name, existing, fromSidecar, df.schema))
+      case Some((existing, _)) =>
         require(StructType(existing.map(_.copy(nullable = true))) ==
             StructType(df.schema.map(_.copy(nullable = true))),
           s"TableStore: append schema mismatch on $name (mergeSchema=false): " +
@@ -243,8 +246,112 @@ final class TableStore(spark: SparkSession, root: String) {
     val w = toWrite.write.mode(SaveMode.Append)
     (if (partitionBy.nonEmpty) w.partitionBy(partitionBy: _*) else w)
       .parquet(path(name))
-    if (!exists(name) || !fs.exists(schemaSidecar(new Path(path(name)))))
-      writeSidecar(new Path(path(name)), toWrite.schema)
+    // the probe above already answered "does the table exist, and does it
+    // record its schema": a new table, or a sidecar-less one that widen()
+    // did not just record, gets its sidecar now
+    val recordedNow = prior.exists { case (_, fromSidecar) => fromSidecar || mergeSchema }
+    if (!recordedNow) writeSidecar(new Path(path(name)), toWrite.schema)
+  }
+
+  /** Record the union of the table's schema and `incoming` BEFORE any
+    * incoming data file lands — so a reader never meets a file carrying a
+    * column the sidecar lacks — and only when the union differs from what
+    * the sidecar already says (or there is no sidecar): an append of the
+    * table's own schema rewrites nothing. Returns the union. */
+  private def widen(name: String, existing: StructType, fromSidecar: Boolean,
+      incoming: StructType): StructType = {
+    val union = unionSchema(name, existing, incoming)
+    if (!fromSidecar || union != existing) writeSidecar(new Path(path(name)), union)
+    union
+  }
+
+  /** Write `df` as parquet beside table `table`, in `partitionBy`'s hive
+    * layout, for a later [[publish]]: under this store's root at
+    * `.publish/<table>/<application id>_g<n>`. The `.` prefix keeps it out
+    * of every table read, data-file listing and freshness key. The returned
+    * handle's `rows` read the staged files back with the written schema.
+    *
+    * Lifetime, as [[Scratch.stage]]'s: each call sweeps this table's
+    * stages more than `graft.scratch.keepLast` (default 16) generations
+    * behind, and every stage a different application wrote — a crashed or
+    * finished writer's, since a store has one writer at a time.
+    */
+  def stage(table: String, df: DataFrame, partitionBy: Seq[String] = Nil): TableStore.Staged = {
+    val f = fs
+    val base = f.makeQualified(new Path(path(s".publish/$table")))
+    val app = spark.sparkContext.applicationId
+    val g = TableStore.gens.computeIfAbsent(base.toString,
+      _ => new java.util.concurrent.atomic.AtomicLong(0)).incrementAndGet()
+    val keep = Scratch.keepLastOf(spark)
+    if (f.exists(base)) f.listStatus(base).foreach { st =>
+      st.getPath.getName match {
+        case TableStore.StageDir(a, n) if a != app || n.toLong <= g - keep =>
+          f.delete(st.getPath, true)
+        case _ => ()
+      }
+    }
+    val dir = new Path(base, s"${app}_g$g")
+    val w = df.write.mode(SaveMode.Overwrite)
+    (if (partitionBy.nonEmpty) w.partitionBy(partitionBy: _*) else w).parquet(dir.toString)
+    val prefix = dir.toUri.getPath + "/"
+    val files = Compact.dataFiles(f, dir).map(_._1.toUri.getPath.stripPrefix(prefix))
+    TableStore.Staged(table, dir.toString, files,
+      spark.read.schema(df.schema).parquet(dir.toString))
+  }
+
+  /** Add already-written parquet files to table `staged.table` by
+    * per-file rename — the commit action for rows written once, straight
+    * into storage form, by [[TableStore.stage]]'s caller, where [[append]]
+    * would read them back and write them a second time. No Spark job
+    * runs: one existence probe per staged file, the sidecar step, one
+    * rename per file, one delete of the emptied stage dir.
+    *
+    *   1. Every staged file must still be where it was written. A stage
+    *      that was already published, or swept, throws
+    *      FileNotFoundException here, before anything moves.
+    *   2. The schema sidecar records the union of the table's schema and
+    *      the stage's, by [[append]]'s union rule and before any file
+    *      lands; a new table is created with the stage's schema.
+    *   3. Each data file (`_SUCCESS` and other `_`/`.` sidecars never)
+    *      moves to the same relative path under the table, so a stage
+    *      written in the table's hive layout lands in its partition dirs;
+    *      a partition dir the table lacks is created.
+    *   4. The stage dir is deleted and the path refreshed, as [[overwrite]]
+    *      does.
+    *
+    * Crash contract: the files are whole before step 1 and every rename is
+    * atomic, so a crash leaves the table with some of the stage's files —
+    * a partial append, never a torn file — and the rest still staged. A
+    * caller needing all-or-nothing visibility orders its commit so a
+    * partial publish is recoverable (the dedup index keeps its membership
+    * table last); re-publishing the same stage throws at step 1.
+    * The stage must live under this store's root ([[TableStore.stage]]
+    * puts it there), so each rename stays on one file system.
+    */
+  def publish(staged: TableStore.Staged): Unit = {
+    val f = fs
+    val dir = new Path(staged.dir)
+    val lost = staged.files.filterNot(r => f.exists(new Path(dir, r)))
+    if (lost.nonEmpty)
+      throw new java.io.FileNotFoundException(
+        s"TableStore: stage $dir for ${staged.table} lost ${lost.size} of " +
+          s"${staged.files.size} files (already published, or swept): ${lost.head}")
+    val live = new Path(path(staged.table))
+    recorded(staged.table) match {
+      case Some((existing, fromSidecar)) =>
+        widen(staged.table, existing, fromSidecar, staged.rows.schema)
+      case None =>
+        f.mkdirs(live)
+        writeSidecar(live, staged.rows.schema)
+    }
+    val targets = staged.files.map(r => r -> new Path(live, r))
+    targets.map(_._2.getParent).distinct.filterNot(f.exists).foreach(f.mkdirs)
+    targets.foreach { case (r, dst) =>
+      if (!f.rename(new Path(dir, r), dst))
+        throw new IllegalStateException(s"TableStore: could not publish $r into $live")
+    }
+    f.delete(dir, true)
+    spark.catalog.refreshByPath(live.toString)
   }
 
   /** Replace ONLY the partitions present in `df`, leaving all other
@@ -335,4 +442,18 @@ final class TableStore(spark: SparkSession, root: String) {
   def overwriteIfAbsentElse(name: String, df: DataFrame)(merge: DataFrame => DataFrame): Unit =
     if (!exists(name)) overwrite(name, df)
     else overwrite(name, merge(read(name)))
+}
+
+object TableStore {
+
+  /** Parquet files [[TableStore.stage]] wrote beside `table`, waiting for
+    * [[TableStore.publish]]: the stage dir, its data files relative to it
+    * (hive partition dirs included), and a reader over them. */
+  final case class Staged(table: String, dir: String, files: Seq[String], rows: DataFrame)
+
+  private val StageDir = "^(.+)_g([0-9]+)$".r
+
+  // per stage-family generation counters, keyed by the family's dir
+  private val gens =
+    new java.util.concurrent.ConcurrentHashMap[String, java.util.concurrent.atomic.AtomicLong]()
 }

@@ -1,0 +1,59 @@
+package graft
+
+import java.util.concurrent.atomic.AtomicReference
+import org.apache.hadoop.fs.{Path, RawLocalFileSystem}
+import org.apache.spark.sql.SparkSession
+
+/** The local file system under the `fault:` scheme, with one armed fault:
+  * after [[FaultFs.failRename]]`(n, marker)`, the (n+1)-th rename whose
+  * source path contains `marker` throws an IOException, once — a crash at
+  * a chosen point of a commit. A store rooted at `fault:<dir>` reads and
+  * writes `<dir>` on the local disk exactly as `file:` would.
+  */
+class FaultFs extends RawLocalFileSystem {
+  override def getUri: java.net.URI = FaultFs.Uri
+  override def getScheme: String = FaultFs.Scheme
+  override def rename(src: Path, dst: Path): Boolean = {
+    FaultFs.onRename(src)
+    super.rename(src, dst)
+  }
+}
+
+object FaultFs {
+  val Scheme = "fault"
+  val Uri: java.net.URI = java.net.URI.create(s"$Scheme:///")
+
+  /** (renames still allowed, source-path marker) while armed. */
+  private val armed = new AtomicReference[Option[(Int, String)]](None)
+  private val fired = new java.util.concurrent.atomic.AtomicBoolean(false)
+
+  /** Register the scheme with the session's Hadoop configuration. */
+  def install(spark: SparkSession): Unit =
+    spark.sparkContext.hadoopConfiguration.set(s"fs.$Scheme.impl", classOf[FaultFs].getName)
+
+  /** A store root on the faulty scheme over local directory `dir`. */
+  def root(dir: String): String = s"$Scheme:$dir"
+
+  /** Let `n` more renames of sources containing `marker` through, then
+    * fail the next one; the fault disarms once it fires. */
+  def failRename(n: Int, marker: String): Unit = {
+    fired.set(false)
+    armed.set(Some((n, marker)))
+  }
+
+  /** Whether the armed fault fired since [[failRename]]; disarms it. */
+  def disarm(): Boolean = { armed.set(None); fired.get() }
+
+  private def onRename(src: Path): Unit = armed.synchronized {
+    armed.get() match {
+      case Some((n, marker)) if src.toString.contains(marker) =>
+        if (n > 0) armed.set(Some((n - 1, marker)))
+        else {
+          armed.set(None)
+          fired.set(true)
+          throw new java.io.IOException(s"injected fault: rename of $src")
+        }
+      case _ => ()
+    }
+  }
+}

@@ -310,6 +310,36 @@ class DedupIndexSpec extends SparkSpec {
     assert("PartitionFilters: \\[[^\\]]".r.findFirstIn(scan).isDefined,
       s"no partition filter in pruned scan:\n$scan")
 
+    // published rows sit in the dir of their own id's bucket: partition
+    // discovery reads the dir value back, and it matches the formula
+    val byDir = spark.read.parquet(bkt.path("idx_shingles"))
+    assert(byDir.filter(col("_bkt8") =!= pmod(xxhash64(col("doc_id")), lit(8L))).count() === 0)
+    assert(byDir.count() === full.count())
+
+    // a publish that creates the bucket dir: at 64 buckets the base leaves
+    // buckets empty that increment docs hash to
+    val bkt64 = new graft.tables.TableStore(spark, s"$tmp/bkt64")
+    DedupIndex.build(bkt64, "idx", all.filter(!isInc), "doc_id", "text", idBuckets = 64)
+    def dirs64 = new java.io.File(s"$tmp/bkt64/idx_shingles").listFiles
+      .filter(_.isDirectory).map(_.getName).toSet
+    def bucketsOf(df: org.apache.spark.sql.DataFrame) =
+      df.select(pmod(xxhash64(col("doc_id")), lit(64L))).distinct().collect()
+        .map(r => s"_bkt64=${r.getLong(0)}").toSet
+    val before64 = dirs64
+    assert(before64 === bucketsOf(all.filter(!isInc)))
+    val created = bucketsOf(all.filter(isInc)) -- before64
+    assert(created.nonEmpty, "fixture: some increment doc must hash to an empty bucket")
+    val p64 = pairSet(DedupIndex.dedupIncrement(bkt64, "idx",
+      all.filter(isInc), "doc_id", "text", threshold = 0.7))
+    assert(p64 === pPlain)
+    assert(dirs64 === before64 ++ created)
+    val incIds = all.filter(isInc).select("doc_id").as[Long].collect().toSet
+    created.foreach { d =>
+      val ids = spark.read.parquet(s"$tmp/bkt64/idx_shingles/$d")
+        .select("doc_id").as[Long].collect().toSet
+      assert(ids.nonEmpty && ids.subsetOf(incIds), s"$d holds $ids")
+    }
+
     // maintenance preserves the bucketed layout — snapshot the dirs right
     // BEFORE maintain (the increments above may have created partitions
     // the base build left empty; comparing against a pre-append snapshot
@@ -585,6 +615,42 @@ class DedupIndexSpec extends SparkSpec {
     assert(DedupIndex.clearCapPolicy(store, "rp"))
     assert(DedupIndex.storedBucketCap(store, "rp").isEmpty)
     assert(!DedupIndex.clearCapPolicy(store, "rp"))
+  }
+
+  test("commitIncrement publishes the probe's own shingle files in two Spark jobs; a spent stage throws before any table moves") {
+    val all = corpus(23, 40).toDF("doc_id", "text")
+    val isInc = col("doc_id") % 3 === 0
+    val tmp = java.nio.file.Files.createTempDirectory("graft_didx_pub").toString
+    val store = new graft.tables.TableStore(spark, s"$tmp/store")
+    DedupIndex.build(store, "idx", all.filter(!isInc), "doc_id", "text")
+    val expected = pairSet(Dedup.minhashDedupIncremental(
+      all.filter(!isInc), all.filter(isInc), "doc_id", "text", threshold = 0.7))
+    val (pairs, stage) = DedupIndex.probeIncrement(store, "idx", all.filter(isInc),
+      "doc_id", "text", threshold = 0.7)
+    assert(pairSet(pairs) === expected)
+    def dataFileNames(t: String) = graft.tables.Compact.dataFiles(
+      new org.apache.hadoop.fs.Path(store.path(t))
+        .getFileSystem(spark.sparkContext.hadoopConfiguration),
+      new org.apache.hadoop.fs.Path(store.path(t))).map(_._1.getName).toSet
+    val staged = stage.shStage.files.map(f => new org.apache.hadoop.fs.Path(f).getName).toSet
+    assert(staged.nonEmpty && (staged & dataFileNames("idx_shingles")).isEmpty)
+
+    // the band and size appends; the shingle rows move by rename
+    assert(jobsDuring(DedupIndex.commitIncrement(store, "idx", stage)) === 2)
+    assert(staged.subsetOf(dataFileNames("idx_shingles")))
+    // the committed index equals a from-scratch build over base ∪ inc
+    val ref = new graft.tables.TableStore(spark, s"$tmp/ref")
+    DedupIndex.build(ref, "idx", all, "doc_id", "text")
+    def rows(df: org.apache.spark.sql.DataFrame) = df.collect().map(_.toSeq).toSet
+    assert(rows(DedupIndex.shinglesOf(store, "idx", "doc_id")) ===
+      rows(DedupIndex.shinglesOf(ref, "idx", "doc_id")))
+    assert(rows(DedupIndex.bandsOf(store, "idx")) === rows(DedupIndex.bandsOf(ref, "idx")))
+    assert(rows(DedupIndex.sizesOf(store, "idx")) === rows(DedupIndex.sizesOf(ref, "idx")))
+
+    // committing the same stage again: nothing to publish, nothing appended
+    val counts = Seq("idx_bands", "idx_shingles", "idx_sizes").map(store.read(_).count())
+    intercept[java.io.FileNotFoundException](DedupIndex.commitIncrement(store, "idx", stage))
+    assert(Seq("idx_bands", "idx_shingles", "idx_sizes").map(store.read(_).count()) === counts)
   }
 
   test("index persists across runs: run 2's base includes run 1's increment") {

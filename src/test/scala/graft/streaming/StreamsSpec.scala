@@ -594,13 +594,26 @@ class StreamsSpec extends SparkSpec {
     val b = Seq((1L, d1), (3L, d3)).toDF("doc_id", "text")
     val fresh = b.join(
       graft.ext.DedupIndex.knownIds(store, "ix2", "doc_id"), Seq("doc_id"), "left_anti")
-    val (pairs, _) = graft.ext.DedupIndex.probeIncrement(
+    val ixTables = Seq("ix2_bands", "ix2_shingles", "ix2_sizes")
+    val keyBefore = graft.ext.IndexState.key(store, ixTables: _*)
+    val shinglesBefore = store.read("ix2_shingles").count()
+    val (pairs, abandoned) = graft.ext.DedupIndex.probeIncrement(
       store, "ix2", fresh, "doc_id", "text", threshold = 0.8)
     val out = pairs.select(col("id_a"), col("id_b"), col("jaccard"))
     store.overwriteIfAbsentElse("ix2_pairs", out)(t =>
       graft.tables.Upsert.merge(t, out, Seq("id_a", "id_b"),
         onDuplicate = graft.tables.Upsert.DuplicatePolicy.DedupDeterministic))
     assert(store.read("ix2_pairs").count() === 1)
+    // the abandoned stage's shingle files sit under the store root, yet no
+    // reader of the index sees them: membership, the shingle table, the
+    // freshness key and the compaction trigger's file count are unchanged
+    assert(abandoned.shStage.files.nonEmpty && abandoned.shStage.files.forall(f =>
+      new java.io.File(abandoned.shStage.dir.stripPrefix("file:"), f).isFile))
+    assert(graft.ext.DedupIndex.knownIds(store, "ix2", "doc_id").count() === 0)
+    assert(store.read("ix2_shingles").count() === shinglesBefore)
+    assert(graft.ext.IndexState.key(store, ixTables: _*) === keyBefore)
+    assert(graft.ext.DedupIndex.maintainIfNeeded(store, "ix2",
+      maxFiles = math.max(1, keyBefore.files.max)).isEmpty)
 
     // the stream now replays the SAME batch (its checkpoint never saw it):
     // the pairs recompute and upsert in place — one row, not two
@@ -611,6 +624,84 @@ class StreamsSpec extends SparkSpec {
       .map(r => (r.getAs[Long]("id_a"), r.getAs[Long]("id_b")))
     assert(rows.toSeq === Seq((1L, 3L)), s"replay must not duplicate pairs: ${rows.toSeq}")
     assert(graft.ext.DedupIndex.knownIds(store, "ix2", "doc_id").count() === 2)
+  }
+
+  test("indexedNearDupSink: a commit that dies after its first publish rename replays to complete pairs and a from-scratch index; a spent stage never commits twice") {
+    graft.FaultFs.install(spark)
+    val dir = Files.createTempDirectory("graft_fi_landing").toString
+    val ckpt = Files.createTempDirectory("graft_fi_ckpt").toString
+    val store = new TableStore(spark,
+      graft.FaultFs.root(Files.createTempDirectory("graft_fi_store").toString))
+    val schema = org.apache.spark.sql.types.StructType(Seq(
+      org.apache.spark.sql.types.StructField("doc_id", org.apache.spark.sql.types.LongType),
+      org.apache.spark.sql.types.StructField("text", org.apache.spark.sql.types.StringType)))
+    val words = "alpha beta gamma delta epsilon zeta eta theta iota kappa lambda mu nu xi omicron pi"
+      .split(" ")
+    def doc(i: Int) = (0 until 12).map(j => words((i * 5 + j * 3) % words.length) + (i % 7))
+      .mkString(" ")
+    val base = (1 to 12).map(i => (i.toLong, doc(i)))
+    // the batch: novel docs, near-copies of base docs (one word changed),
+    // and a near-copy of a batch doc
+    val novel = (13 to 20).map(i => (i.toLong, doc(i)))
+    val nearBase = Seq(2, 5, 9).map(i =>
+      ((100 + i).toLong, doc(i).replaceFirst(" [a-z]+[0-9]$", " zzz")))
+    val nearBatch = Seq((200L, doc(14).replaceFirst("^[a-z]+[0-9] ", "yyy ")))
+    val batch = novel ++ nearBase ++ nearBatch
+    graft.ext.DedupIndex.build(store, "fx", base.toDF("doc_id", "text"), "doc_id", "text")
+    val expected = graft.ext.Dedup.minhashDedupIncremental(base.toDF("doc_id", "text"),
+      batch.toDF("doc_id", "text"), "doc_id", "text", threshold = 0.8)
+      .select("id_a", "id_b").as[(Long, Long)].collect().toSet
+    assert(expected.size >= 3, s"fixture: expected planted pairs, got $expected")
+
+    // the batch body up to the commit, which dies after publishing ONE of
+    // the stage's shingle files
+    val (pairs, stage) = graft.ext.DedupIndex.probeIncrement(
+      store, "fx", batch.toDF("doc_id", "text"), "doc_id", "text", threshold = 0.8)
+    val out = pairs.select(col("id_a"), col("id_b"), col("jaccard"))
+    store.overwriteIfAbsentElse("fx_pairs", out)(t =>
+      graft.tables.Upsert.merge(t, out, Seq("id_a", "id_b"),
+        onDuplicate = graft.tables.Upsert.DuplicatePolicy.DedupDeterministic))
+    assert(stage.shStage.files.size >= 2, s"fixture: one stage file: ${stage.shStage.files}")
+    graft.FaultFs.failRename(1, "/.publish/")
+    intercept[java.io.IOException](
+      graft.ext.DedupIndex.commitIncrement(store, "fx", stage))
+    assert(graft.FaultFs.disarm(), "the injected rename fault never fired")
+    // the crash state: some of the batch's shingle rows live, no size row
+    assert(graft.ext.DedupIndex.knownIds(store, "fx", "doc_id").count() === base.size)
+    val batchIds = batch.map(_._1).toSet
+    assert(graft.ext.DedupIndex.shinglesOf(store, "fx", "doc_id").select("doc_id")
+      .as[Long].collect().exists(batchIds))
+
+    // the stream replays the batch (its checkpoint never saw it)
+    Files.writeString(java.nio.file.Paths.get(s"$dir/b1.json"),
+      batch.map { case (id, t) => s"""{"doc_id":$id,"text":"$t"}""" }.mkString("\n"))
+    Streams.indexedNearDupSink(
+      spark.readStream.format("json").schema(schema).load(dir),
+      store, "fx", "fx_pairs", ckpt, threshold = 0.8).awaitTermination()
+    val got = store.read("fx_pairs").select("id_a", "id_b").as[(Long, Long)].collect()
+    assert(got.toSet === expected)
+    assert(got.length === expected.size, "replay must not duplicate pairs")
+    // the index equals a from-scratch build over base ∪ batch, as sets
+    val ref = new TableStore(spark, Files.createTempDirectory("graft_fi_ref").toString)
+    graft.ext.DedupIndex.build(ref, "fx", (base ++ batch).toDF("doc_id", "text"),
+      "doc_id", "text")
+    def rows(df: org.apache.spark.sql.DataFrame) = df.collect().map(_.toSeq).toSet
+    assert(rows(graft.ext.DedupIndex.bandsOf(store, "fx")) ===
+      rows(graft.ext.DedupIndex.bandsOf(ref, "fx")))
+    assert(rows(graft.ext.DedupIndex.shinglesOf(store, "fx", "doc_id")) ===
+      rows(graft.ext.DedupIndex.shinglesOf(ref, "fx", "doc_id")))
+    assert(rows(graft.ext.DedupIndex.sizesOf(store, "fx")) ===
+      rows(graft.ext.DedupIndex.sizesOf(ref, "fx")))
+
+    // a second commit of one stage throws and adds no size row
+    val (p2, st2) = graft.ext.DedupIndex.probeIncrement(store, "fx",
+      Seq((300L, doc(30)), (301L, doc(31))).toDF("doc_id", "text"), "doc_id", "text")
+    p2.collect()
+    graft.ext.DedupIndex.commitIncrement(store, "fx", st2)
+    val nSizes = graft.ext.DedupIndex.sizesOf(store, "fx").count()
+    intercept[java.io.FileNotFoundException](
+      graft.ext.DedupIndex.commitIncrement(store, "fx", st2))
+    assert(graft.ext.DedupIndex.sizesOf(store, "fx").count() === nSizes)
   }
 
   test("scoredUpsertSink: trained-weight gate keeps only above-cut docs, replay-idempotent") {

@@ -132,6 +132,86 @@ class TableStoreSpec extends SparkSpec {
     assert(store.read("ev3").count() === 1) // table unharmed
   }
 
+  test("append writes the schema sidecar only when the schema changes, and before the data when it widens") {
+    val store = newStore()
+    val sidecar = new java.io.File(store.path("sc"), "_graft_schema.json")
+    store.append("sc", Seq((1, "a")).toDF("id", "v"))
+    val bytes = Files.readAllBytes(sidecar.toPath).toSeq
+    val mtime = sidecar.lastModified()
+    Thread.sleep(1100) // past any file-system mtime granularity
+    // same schema: the sidecar is neither rewritten nor touched
+    store.append("sc", Seq((2, "b")).toDF("id", "v"))
+    assert(Files.readAllBytes(sidecar.toPath).toSeq === bytes)
+    assert(sidecar.lastModified() === mtime)
+    assert(store.read("sc").count() === 2)
+    // a widening append whose data write fails: the union is already
+    // recorded — no data file of the append landed, so the sidecar was first
+    val boom = org.apache.spark.sql.functions.udf((i: Int) =>
+      if (i > 0) throw new IllegalStateException("boom") else i.toDouble)
+    def dataFiles = new java.io.File(store.path("sc")).list()
+      .filterNot(n => n.startsWith("_") || n.startsWith(".")).toSet
+    val filesBefore = dataFiles
+    intercept[Exception] {
+      store.append("sc", Seq((3, "c")).toDF("id", "v").withColumn("extra", boom($"id")))
+    }
+    assert(dataFiles === filesBefore)
+    assert(store.schemaOf("sc").get.fieldNames.toSeq === Seq("id", "v", "extra"))
+    assert(store.read("sc").count() === 2)
+  }
+
+  test("publish renames a stage's data files into the table: partition dirs created, no job, re-publish throws") {
+    val store = newStore()
+    def dataFiles(dir: String): Set[String] =
+      Compact.dataFiles(new org.apache.hadoop.fs.Path(dir)
+        .getFileSystem(spark.sparkContext.hadoopConfiguration),
+        new org.apache.hadoop.fs.Path(dir)).map { case (p, _) =>
+        p.toUri.getPath.stripPrefix(new java.io.File(dir).getCanonicalPath + "/")
+      }.toSet
+    store.append("pt", Seq((1, "a", 0), (2, "b", 1)).toDF("id", "v", "p"), partitionBy = Seq("p"))
+    val before = dataFiles(store.path("pt"))
+    // a stage in the table's layout, one partition value the table lacks,
+    // and a column it lacks (the sidecar takes the union)
+    val st = store.stage("pt",
+      Seq((3, "c", 1, 1.5), (4, "d", 7, 2.5)).toDF("id", "v", "p", "w"), Seq("p"))
+    assert(st.files.nonEmpty && st.files.forall(f => f.startsWith("p=") && !f.contains("_SUCCESS")))
+    assert(st.rows.count() === 2)
+    // staged files are invisible to the table until published
+    assert(store.read("pt").count() === 2)
+    assert(dataFiles(store.path("pt")) === before)
+
+    assert(jobsDuring(store.publish(st)) === 0, "publish must run no Spark job")
+
+    assert(dataFiles(store.path("pt")) === before ++ st.files)
+    assert(new java.io.File(store.path("pt"), "p=7").isDirectory)
+    assert(!new java.io.File(st.dir.stripPrefix("file:")).exists())
+    assert(store.schemaOf("pt").get.fieldNames.toSet === Set("id", "v", "p", "w"))
+    assert(store.read("pt").select("id", "p", "w").as[(Int, Int, Option[Double])]
+      .collect().sortBy(_._1).toSeq ===
+      Seq((1, 0, None), (2, 1, None), (3, 1, Some(1.5)), (4, 7, Some(2.5))))
+    // a published (or swept) stage throws before anything moves
+    intercept[java.io.FileNotFoundException](store.publish(st))
+    assert(store.read("pt").count() === 4)
+  }
+
+  test("stage sweeps its table's generations more than keepLast behind and other applications' stages") {
+    val store = newStore()
+    val base = new java.io.File(store.path(".publish/sw"))
+    val foreign = new java.io.File(base, "app-19700101000000-0000_g3")
+    assert(foreign.mkdirs())
+    spark.conf.set("graft.scratch.keepLast", "2")
+    try {
+      val s1 = store.stage("sw", Seq(1).toDF("id"))
+      assert(!foreign.exists(), "a stage another application left must be swept")
+      store.stage("sw", Seq(2).toDF("id"))
+      assert(new java.io.File(s1.dir.stripPrefix("file:")).exists())
+      store.stage("sw", Seq(3).toDF("id"))
+      assert(!new java.io.File(s1.dir.stripPrefix("file:")).exists(),
+        "a generation keepLast behind must be swept")
+      intercept[java.io.FileNotFoundException](store.publish(s1))
+      assert(base.list().length === 2)
+    } finally spark.conf.unset("graft.scratch.keepLast")
+  }
+
   test("overwrite mergeSchema=true keeps columns the new frame dropped (Delta parity)") {
     val store = newStore()
     store.overwrite("ow", Seq((1, "a", 2.0)).toDF("id", "v", "extra"))
