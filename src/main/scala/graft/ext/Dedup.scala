@@ -1,5 +1,6 @@
 package graft.ext
 
+import graft.tables.Scratch
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -258,18 +259,11 @@ object Dedup {
     // shared subtree per reference — stage the per-doc signature table
     // (one narrow row per doc) so each pass scans cheap parquet instead of
     // recomputing shingles + k MinHash aggs (the c1 stage-table pattern)
-    val sigS = if (bucketCap == Int.MaxValue) sig else staged(sig, "mh_sig_stage")
+    val sigS = if (bucketCap == Int.MaxValue) sig else Scratch.stage(sig, "mh_sig_stage")
     val exploded = bandBuckets(sigS, idCol, bands, rows)
     cappedPairs(exploded, idCol, Seq("band", "bucket"), bucketCap, Nil)
       .select("id_a", "id_b").distinct()
   }
-
-  /** Materialize a small sketch/signature table to shared-FS scratch so
-    * multi-reference consumers scan parquet instead of recomputing the
-    * aggregation pipeline behind it per reference.
-    */
-  private def staged(df: DataFrame, base: String): DataFrame =
-    graft.tables.Scratch.stage(df, base)
 
   /** Duplicate-group formation: connected components over an undirected
     * near-dup pair set (the standard consumption of [[minhashDedup]] /
@@ -291,7 +285,7 @@ object Dedup {
     * is staged once so each round scans parquet, not the dedup pipeline.
     */
   def components(pairs: DataFrame, iters: Int = 8): DataFrame = {
-    val p = staged(pairs.select(col("id_a"), col("id_b")), "cc_pairs_stage")
+    val p = Scratch.stage(pairs.select(col("id_a"), col("id_b")), "cc_pairs_stage")
     val edges = p.select(col("id_a").as("src"), col("id_b").as("dst"))
       .union(p.select(col("id_b").as("src"), col("id_a").as("dst")))
     val nodes = edges.select(col("src").as("id")).distinct()
@@ -305,7 +299,7 @@ object Dedup {
       // stage every other round: keeps the lineage (and its re-execution
       // cost under Spark's per-reference recompute) from growing
       // geometrically with the iteration count
-      if (i % 2 == 0 && i < iters) labels = staged(labels, "cc_labels_stage")
+      if (i % 2 == 0 && i < iters) labels = Scratch.stage(labels, "cc_labels_stage")
     }
     labels
   }
@@ -330,11 +324,11 @@ object Dedup {
     * this when the graph's diameter is unknown.
     */
   def componentsConverged(pairs: DataFrame, maxRounds: Int = 30): DataFrame = {
-    val p = staged(pairs.select(col("id_a"), col("id_b")), "ccs_pairs_stage")
+    val p = Scratch.stage(pairs.select(col("id_a"), col("id_b")), "ccs_pairs_stage")
     val edges = p.select(col("id_a").as("src"), col("id_b").as("dst"))
       .union(p.select(col("id_b").as("src"), col("id_a").as("dst")))
     val nodes = edges.select(col("src").as("id")).distinct()
-    var labels = staged(nodes.select(col("id"), col("id").as("label")), "ccs_labels_stage")
+    var labels = Scratch.stage(nodes.select(col("id"), col("id").as("label")), "ccs_labels_stage")
     var prevSum: Option[java.math.BigDecimal] = None
     var round = 0
     var converged = false
@@ -349,7 +343,7 @@ object Dedup {
           col("a.label") === col("_lid"), "left")
         .select(col("a.id").as("id"),
           least(col("a.label"), coalesce(col("_llabel"), col("a.label"))).as("label"))
-      labels = staged(jumped, "ccs_labels_stage")
+      labels = Scratch.stage(jumped, "ccs_labels_stage")
       val s = labels.agg(sum(col("label").cast("decimal(38,0)")).as("s")).head.getDecimal(0)
       converged = prevSum.contains(s)
       prevSum = Some(s)
@@ -495,12 +489,12 @@ object Dedup {
     // sides) — stage both: they are tiny (candidates only), so one small
     // write replaces repeated recomputes of the LSH band join and of the
     // full shingle index + semi-join
-    val cands = staged(
+    val cands = Scratch.stage(
       minhashCandidates(minhashSignature(sh, idCol, k), idCol, bands, k / bands, bucketCap),
       "mh_cands_stage")
     val candDocs = cands.select(col("id_a").as(idCol))
       .union(cands.select(col("id_b").as(idCol))).distinct()
-    val shCand = staged(sh.join(broadcast(candDocs), Seq(idCol), "left_semi"),
+    val shCand = Scratch.stage(sh.join(broadcast(candDocs), Seq(idCol), "left_semi"),
       "mh_shcand_stage")
     jaccardPairs(shCand, idCol)
       .join(cands, Seq("id_a", "id_b"), "left_semi")
@@ -530,13 +524,13 @@ object Dedup {
     val sh = shingleIndex(union, idCol, textCol, n)
     val sig = minhashSignature(sh, idCol, k)
     // the index artifact: one narrow (id, band, bucket) table
-    val eb = staged(bandBuckets(sig, idCol, bands, k / bands), "mh_inc_eb_stage")
+    val eb = Scratch.stage(bandBuckets(sig, idCol, bands, k / bands), "mh_inc_eb_stage")
     val ebInc = eb.join(inc.select(col(idCol)), Seq(idCol), "left_semi")
-    val cands = staged(probeCappedPairs(ebInc, eb, idCol, bucketCap),
+    val cands = Scratch.stage(probeCappedPairs(ebInc, eb, idCol, bucketCap),
       "mh_inc_cands_stage")
     val candDocs = cands.select(col("id_a").as(idCol))
       .union(cands.select(col("id_b").as(idCol))).distinct()
-    val shCand = staged(sh.join(broadcast(candDocs), Seq(idCol), "left_semi"),
+    val shCand = Scratch.stage(sh.join(broadcast(candDocs), Seq(idCol), "left_semi"),
       "mh_inc_shcand_stage")
     jaccardPairs(shCand, idCol)
       .join(cands, Seq("id_a", "id_b"), "left_semi")
@@ -760,8 +754,9 @@ object Dedup {
     * through [[graft.tables.Scratch]] (the flood aggregate, its
     * anti-join, the sizes aggregate, and both self-join sides must not
     * each re-run a potentially expensive upstream — a blob decode,
-    * canonically), so the returned frame inherits Scratch's lifetime:
-    * consume it before `keepLast` (default 16) further calls, or raise
+    * canonically), so the returned frame reads a stage that
+    * [[graft.tables.TableStore.stage]] sweeps `keepLast` (default 16)
+    * further calls later: consume it before then, or raise
     * `graft.scratch.keepLast`.
     */
   def sketchSetPairs(rows: DataFrame, idCol: String, maxHamming: Int = 3,
@@ -772,7 +767,7 @@ object Dedup {
     require(floodCap >= 1, s"floodCap must be >= 1, got $floodCap")
     // bucketCap >= 1 is validated by simhashMatchPairs (the ONE owner
     // of the drop-semantics rule), before any action runs in this call
-    val hs = graft.tables.Scratch.stage(
+    val hs = Scratch.stage(
       rows.select(col(idCol), col("simhash")).distinct(), "sketchset_hs")
     val kept =
       if (floodCap == Int.MaxValue) hs
@@ -822,7 +817,7 @@ object Dedup {
       s"scopeCols collide with reserved pairing column names: $bad")
     // capped path: stage the (id, simhash) table — two longs per doc — so
     // the hot/small/star passes don't re-run the 64-vote aggregation
-    val shS = if (bucketCap == Int.MaxValue) sh else staged(sh, "simhash_stage")
+    val shS = if (bucketCap == Int.MaxValue) sh else Scratch.stage(sh, "simhash_stage")
     val chunks = (0 until 4).map(i =>
       struct(lit(i).as("ci"), shiftright(col("simhash"), i * 16).bitwiseAND(0xffff).as("cv")))
     val keep = (col(idCol) +: scopeCols.map(col)) :+ col("simhash")

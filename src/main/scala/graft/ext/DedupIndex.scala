@@ -351,9 +351,10 @@ object DedupIndex {
     * invert that into at-most-once: the re-delivery guard sees the docs as
     * indexed and their pairs are never computed again.
     *
-    * Stage lifetime: the band/size deltas read a scratch generation that
-    * [[graft.tables.Scratch]] GCs `graft.scratch.keepLast` (default 16)
-    * same-family generations later. The shingle rows are staged under the
+    * Stage lifetime: every stage here is a [[TableStore.stage]]
+    * generation, swept `graft.scratch.keepLast` (default 16) same-family
+    * generations later. The band/size deltas read scratch stages
+    * ([[graft.tables.Scratch.stage]]). The shingle rows are staged under the
     * STORE's root, at `.publish/{name}_shingles/<application id>_g<n>`
     * ([[TableStore.stage]]), so the commit publishes them by rename on one
     * file system; no table read, data-file listing, freshness key or

@@ -676,9 +676,9 @@ object Multimodal {
     *
     * Materialization note: the call EAGERLY snapshots the frame hashes
     * through [[graft.tables.Scratch]] (the decode plan must not re-run
-    * per sink), so the returned frame reads that snapshot and inherits
-    * Scratch's documented lifetime: consume it before `keepLast`
-    * (default 16) further pairing calls, or raise
+    * per sink), so the returned frame reads that snapshot, a stage that
+    * [[graft.tables.TableStore.stage]] sweeps `keepLast` (default 16)
+    * further pairing calls later: consume it before then, or raise
     * `graft.scratch.keepLast` for wider lazy fan-outs.
     */
   def videoNearDupPairs(frames: Dataset[VideoFrame], maxHamming: Int = 3,
@@ -739,7 +739,7 @@ object Multimodal {
     * underneath (the match-pair counting contract — star pairs would
     * corrupt the per-pair counts, see [[Dedup.simhashMatchPairs]]).
     * Output: (id_a, id_b, n_a, n_b, n_matched_a, n_matched_b,
-    * containment). Same eager-snapshot + Scratch-lifetime note as
+    * containment). Same eager-snapshot + stage-lifetime note as
     * [[videoNearDupPairs]].
     */
   def videoNearDupPairsUnordered(frames: Dataset[VideoFrame],

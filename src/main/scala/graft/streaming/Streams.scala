@@ -367,11 +367,14 @@ object Streams {
     * write and commit replays the batch with its docs still absent from
     * [[graft.ext.DedupIndex.knownIds]] (sizes is committed LAST), so the
     * identical pairs are recomputed — and because pairs UPSERT by
-    * (id_a, id_b) rather than append, the replay rewrites them in place:
-    * the pair table is byte-identical, never duplicated, never silently
-    * short. Mutating the index first and writing pairs second would turn
-    * this into at-most-once: the guard would drop the re-delivered docs
-    * and their pairs would never be computed.
+    * (id_a, id_b) ([[Upsert.mergeInto]]) rather than blindly append, the
+    * replay finds every pair key present and merges over them: the pair
+    * table is never duplicated, never silently short. A batch whose pairs
+    * are all new (the common, crash-free case) appends them and leaves
+    * every prior file of the pair table in place. Mutating the index
+    * first and writing pairs second would turn this into at-most-once:
+    * the guard would drop the re-delivered docs and their pairs would
+    * never be computed.
     */
   def indexedNearDupSink(
       docs: DataFrame, store: TableStore, indexName: String, pairsTable: String,
@@ -390,9 +393,8 @@ object Streams {
         val (pairs, stage) = graft.ext.DedupIndex.probeIncrement(
           store, indexName, fresh, "doc_id", "text", threshold = threshold)
         val out = pairs.select(col("id_a"), col("id_b"), col("jaccard"))
-        store.overwriteIfAbsentElse(pairsTable, out)(target =>
-          Upsert.merge(target, out, Seq("id_a", "id_b"),
-            onDuplicate = Upsert.DuplicatePolicy.DedupDeterministic))
+        Upsert.mergeInto(store, pairsTable, out, Seq("id_a", "id_b"),
+          onDuplicate = Upsert.DuplicatePolicy.DedupDeterministic)
         graft.ext.DedupIndex.commitIncrement(store, indexName, stage)
         graft.ext.DedupIndex.maintainIfNeeded(store, indexName,
           maxFiles = maxIndexFiles)

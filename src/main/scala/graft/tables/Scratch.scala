@@ -18,15 +18,18 @@ import org.apache.spark.sql.SparkSession
   *      get a working default with zero configuration
   *
   * Concurrency: the root is namespaced by Spark application id (two driver
-  * processes sharing one warehouse never collide), and per-invocation stage
-  * names from [[stageName]] carry a process-wide generation counter (two
-  * interleaved runs of the same query in one session never clobber each
-  * other — no wall clock involved, so replays stay deterministic).
+  * processes sharing one warehouse never collide), and each stage is a
+  * fresh generation dir `.publish/<base>/<application id>_g<n>` from
+  * [[TableStore.stage]]'s per-family counter (two interleaved runs of the
+  * same query in one session never clobber each other — no wall clock
+  * involved, so replays stay deterministic). A stage is written once, in
+  * place.
   *
-  * Lifecycle: [[gc]] bounds the in-app leak (generations more than
-  * `graft.scratch.keepLast` behind the counter are dropped at the next
-  * invocation); the first [[stage]] call registers a SparkListener that
-  * removes this app's whole namespace at application end, so normal exits
+  * Lifecycle: [[TableStore.stage]]'s sweep bounds the in-app leak
+  * (generations of a family more than `graft.scratch.keepLast` behind its
+  * counter are dropped at the family's next stage); the first [[stage]]
+  * call registers a SparkListener that removes this app's whole
+  * namespace, `.publish/` included, at application end, so normal exits
   * leave nothing behind; [[cleanup]] additionally reclaims crashed sibling
   * apps' namespaces — but ONLY directories that look like Spark application
   * ids AND whose `_heartbeat` file (touched on every stage write) has been
@@ -46,13 +49,6 @@ object Scratch {
   // subdirectories never loses them to housekeeping.
   private val AppDirPattern = "^(local-|app-|application_|spark-).*".r
 
-  // per-base generation counters: gc's keepLast bound then counts
-  // invocations of the SAME stage family, not unrelated stage activity
-  private val gens =
-    new java.util.concurrent.ConcurrentHashMap[String, java.util.concurrent.atomic.AtomicLong]()
-  private def gen(base: String) =
-    gens.computeIfAbsent(base, _ => new java.util.concurrent.atomic.AtomicLong(0))
-
   // app ids whose end-of-application cleanup listener is already registered
   private val endHooks = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
 
@@ -62,11 +58,6 @@ object Scratch {
       "/" + spark.sparkContext.applicationId
 
   def store(spark: SparkSession): TableStore = new TableStore(spark, root(spark))
-
-  /** Unique per-invocation stage-table name: `<base>_g<n>` with a
-    * monotonically increasing in-process generation.
-    */
-  def stageName(base: String): String = s"${base}_g${gen(base).incrementAndGet()}"
 
   /** Materialize `df` as a fresh generation of stage family `base` and
     * return a reader over it: one write, then every downstream reference
@@ -82,60 +73,14 @@ object Scratch {
   def stage(df: org.apache.spark.sql.DataFrame, base: String,
       partitionBy: Seq[String] = Nil): org.apache.spark.sql.DataFrame = {
     val spark = df.sparkSession
-    val s = store(spark)
-    val name = stageName(base)
     // heartbeat BEFORE the write too: the namespace must never exist
     // without a liveness marker (a sibling's cleanup() during a long first
     // write would otherwise see an unmarked directory)
     touchHeartbeat(spark)
     registerEndHook(spark)
-    s.overwrite(name, df, partitionBy)
+    val rows = store(spark).stage(base, df, partitionBy).rows
     touchHeartbeat(spark)
-    gc(spark, base)
-    s.read(name)
-  }
-
-  /** Drop stale generations of `base`: anything more than `keepLast`
-    * behind the current counter. `keepLast` is the concurrency bound — a
-    * stage is safe to read as long as fewer than `keepLast` newer
-    * invocations of the SAME family started since it was written; the
-    * `keepLast+1`-th invocation deletes the files under a still-unexecuted
-    * DataFrame, which then fails at action time with FileNotFoundException.
-    * The default 16 accommodates wide fan-outs of lazily-consumed results
-    * (e.g. building many dedup DataFrames before executing any); raise
-    * `graft.scratch.keepLast` for wider fan-outs, at the cost of on-disk
-    * footprint.
-    */
-  def gc(spark: SparkSession, base: String, keepLast: Int = 16): Unit = {
-    val keep = keepLastOf(spark, keepLast)
-    val current = gen(base).get()
-    val p = new org.apache.hadoop.fs.Path(root(spark))
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(p)) {
-      val pat = s"${java.util.regex.Pattern.quote(base)}_g(\\d+)".r
-      fs.listStatus(p).foreach { st =>
-        st.getPath.getName match {
-          case pat(n) if n.toLong <= current - keep =>
-            fs.delete(st.getPath, true); ()
-          case _ => ()
-        }
-      }
-    }
-  }
-
-  /** The generation bound in force: `graft.scratch.keepLast`, else
-    * `default`. Shared with [[TableStore.stage]]'s sweep. */
-  private[graft] def keepLastOf(spark: SparkSession, default: Int = 16): Int = {
-    // this conf controls DELETION — a malformed value must fail fast with
-    // the key named, not silently fall back to a smaller bound and delete
-    // generations a wide lazy fan-out still needs
-    val keep = spark.conf.getOption("graft.scratch.keepLast").map(_.trim)
-      .map(v => v.toIntOption.filter(_ >= 1).getOrElse(throw new IllegalArgumentException(
-        s"graft.scratch.keepLast must be an integer >= 1, got '$v'")))
-      .getOrElse(default)
-    // keep <= 0 would delete the generation stage() just wrote (n <= current - 0)
-    require(keep >= 1, s"scratch keepLast must be >= 1, got $keep")
-    keep
+    rows
   }
 
   /** Refresh this app's liveness marker (an empty `_heartbeat` file whose
@@ -164,7 +109,10 @@ object Scratch {
         override def onApplicationEnd(
             e: org.apache.spark.scheduler.SparkListenerApplicationEnd): Unit =
           try rootPath.getFileSystem(hconf).delete(rootPath, true)
-          catch { case scala.util.control.NonFatal(_) => () } // best-effort
+          catch { // best-effort: the app is ending, so say what was left
+            case scala.util.control.NonFatal(ex) =>
+              System.err.println(s"graft: could not remove scratch root $rootPath: $ex")
+          }
       })
     }
   }

@@ -266,15 +266,22 @@ final class TableStore(spark: SparkSession, root: String) {
   }
 
   /** Write `df` as parquet beside table `table`, in `partitionBy`'s hive
-    * layout, for a later [[publish]]: under this store's root at
-    * `.publish/<table>/<application id>_g<n>`. The `.` prefix keeps it out
-    * of every table read, data-file listing and freshness key. The returned
-    * handle's `rows` read the staged files back with the written schema.
+    * layout, once and in place: under this store's root at
+    * `.publish/<table>/<application id>_g<n>`, a fresh generation dir of a
+    * per-family counter. The `.` prefix keeps it out of every table read,
+    * data-file listing and freshness key. The returned handle's `rows` read
+    * the staged files back with the written schema (partition columns
+    * last, as a partitioned table reads).
     *
-    * Lifetime, as [[Scratch.stage]]'s: each call sweeps this table's
-    * stages more than `graft.scratch.keepLast` (default 16) generations
-    * behind, and every stage a different application wrote — a crashed or
-    * finished writer's, since a store has one writer at a time.
+    * The one stage primitive: [[publish]] commits a stage into its table
+    * (the dedup index's shingle increments), and [[Scratch.stage]] stages
+    * every scratch intermediate here, under the scratch root, and never
+    * publishes it.
+    *
+    * Lifetime: each call sweeps this family's stages more than
+    * `graft.scratch.keepLast` generations behind ([[TableStore.keepLast]]),
+    * and every stage a different application wrote — a crashed or finished
+    * writer's, since a store has one writer at a time.
     */
   def stage(table: String, df: DataFrame, partitionBy: Seq[String] = Nil): TableStore.Staged = {
     val f = fs
@@ -282,7 +289,7 @@ final class TableStore(spark: SparkSession, root: String) {
     val app = spark.sparkContext.applicationId
     val g = TableStore.gens.computeIfAbsent(base.toString,
       _ => new java.util.concurrent.atomic.AtomicLong(0)).incrementAndGet()
-    val keep = Scratch.keepLastOf(spark)
+    val keep = TableStore.keepLast(spark)
     if (f.exists(base)) f.listStatus(base).foreach { st =>
       st.getPath.getName match {
         case TableStore.StageDir(a, n) if a != app || n.toLong <= g - keep =>
@@ -456,4 +463,23 @@ object TableStore {
   // per stage-family generation counters, keyed by the family's dir
   private val gens =
     new java.util.concurrent.ConcurrentHashMap[String, java.util.concurrent.atomic.AtomicLong]()
+
+  /** The generation bound [[TableStore.stage]] sweeps by:
+    * `graft.scratch.keepLast`, default 16. It is the concurrency bound — a
+    * stage is safe to read as long as fewer than `keepLast` newer stages of
+    * the SAME family started since it was written; the `keepLast+1`-th
+    * deletes the files under a still-unexecuted DataFrame, which then fails
+    * at action time with FileNotFoundException. The default accommodates
+    * wide fan-outs of lazily-consumed results (e.g. building many dedup
+    * DataFrames before executing any); raise it for wider fan-outs, at the
+    * cost of on-disk footprint.
+    */
+  private def keepLast(spark: SparkSession): Int =
+    // this conf controls DELETION — a malformed or non-positive value must
+    // fail fast with the key named, not silently fall back to a smaller
+    // bound (keep <= 0 would delete the generation just written)
+    spark.conf.getOption("graft.scratch.keepLast").map(_.trim)
+      .map(v => v.toIntOption.filter(_ >= 1).getOrElse(throw new IllegalArgumentException(
+        s"graft.scratch.keepLast must be an integer >= 1, got '$v'")))
+      .getOrElse(16)
 }

@@ -179,11 +179,11 @@ class Bm25Spec extends SparkSpec {
   test("append snapshots the tokenized increment exactly ONCE — the caller's frame is evaluated a single time, and the fold adds no second stage") {
     val store = new graft.tables.TableStore(spark,
       java.nio.file.Files.createTempDirectory("graft_bmns").toString)
-    def gens(prefix: String): Int = {
-      val p = new org.apache.hadoop.fs.Path(graft.tables.Scratch.root(spark))
+    def gens(base: String): Int = {
+      val p = new org.apache.hadoop.fs.Path(graft.tables.Scratch.root(spark), s".publish/$base")
       val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
       if (!fs.exists(p)) 0
-      else fs.listStatus(p).count(_.getPath.getName.startsWith(prefix))
+      else fs.listStatus(p).count(_.getPath.getName.matches(".*_g[0-9]+"))
     }
     Bm25.buildIndex(store, "nsc",
       Seq((1L, "alpha beta"), (2L, "beta gamma")).toDF("doc_id", "text"),
@@ -195,12 +195,12 @@ class Bm25Spec extends SparkSpec {
     val acc = spark.sparkContext.longAccumulator("bm25_append_evals")
     val counted = spark.createDataset(Seq((3L, "delta beta"))).coalesce(1)
       .mapPartitions { it => acc.add(1L); it }.toDF("doc_id", "text")
-    val t0 = gens("nsc_app_toks_g")
+    val t0 = gens("nsc_app_toks")
     Bm25.append(store, "nsc", counted, "doc_id", "text")
     assert(acc.value === 1L,
       s"append must evaluate the caller's frame exactly once, saw ${acc.value}")
-    assert(gens("nsc_app_toks_g") === t0 + 1, "one snapshot per append")
-    assert(gens("nsc_app_postings_g") === 0,
+    assert(gens("nsc_app_toks") === t0 + 1, "one snapshot per append")
+    assert(gens("nsc_app_postings") === 0,
       "the fold's old grouped-postings stage is gone")
     // the first poll lazily builds the sketch; a folding append rides
     // the SAME token snapshot and additionally stages the small grouped
@@ -209,9 +209,9 @@ class Bm25Spec extends SparkSpec {
     assert(!calm.triggered)
     Bm25.append(store, "nsc",
       Seq((4L, "eps beta")).toDF("doc_id", "text"), "doc_id", "text")
-    assert(gens("nsc_app_toks_g") === t0 + 2,
+    assert(gens("nsc_app_toks") === t0 + 2,
       "a folding append snapshots the tokens exactly once too")
-    assert(gens("nsc_app_postings_g") === 1,
+    assert(gens("nsc_app_postings") === 1,
       "only the folding append stages the grouped rows")
     assert(Bm25.dfUpperBound(store, "nsc").exists(_ >= 4L),
       "the fold must have seen the snapshotted rows (sketch stays fresh)")

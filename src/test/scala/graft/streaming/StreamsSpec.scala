@@ -702,6 +702,28 @@ class StreamsSpec extends SparkSpec {
     intercept[java.io.FileNotFoundException](
       graft.ext.DedupIndex.commitIncrement(store, "fx", st2))
     assert(graft.ext.DedupIndex.sizesOf(store, "fx").count() === nSizes)
+
+    // a batch whose pairs are all new appends them: every prior data file
+    // of the pair table stays in place
+    def pairFiles = {
+      val p = new org.apache.hadoop.fs.Path(store.path("fx_pairs"))
+      p.getFileSystem(spark.sparkContext.hadoopConfiguration).listStatus(p)
+        .map(_.getPath.getName).filter(_.endsWith(".parquet")).toSet
+    }
+    val filesBefore = pairFiles
+    Files.writeString(java.nio.file.Paths.get(s"$dir/b2.json"), Seq(3, 7).map { i =>
+      val t = doc(i).replaceFirst(" [a-z]+[0-9]$", " zzz")
+      s"""{"doc_id":${400 + i},"text":"$t"}"""
+    }.mkString("\n"))
+    Streams.indexedNearDupSink(
+      spark.readStream.format("json").schema(schema).load(dir),
+      store, "fx", "fx_pairs", ckpt, threshold = 0.8).awaitTermination()
+    val got2 = store.read("fx_pairs").select("id_a", "id_b").as[(Long, Long)].collect().toSet
+    assert(got.toSet.subsetOf(got2) && (got2 -- got).nonEmpty &&
+      (got2 -- got).forall { case (a, b) => a >= 400 || b >= 400 },
+      s"fixture: the second batch must add only new pairs: ${got2 -- got}")
+    assert(filesBefore.subsetOf(pairFiles),
+      "a batch of only new pairs must keep every prior pair file")
   }
 
   test("scoredUpsertSink: trained-weight gate keeps only above-cut docs, replay-idempotent") {

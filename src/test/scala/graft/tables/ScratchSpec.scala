@@ -74,11 +74,11 @@ class ScratchSpec extends SparkSpec {
       val dfs = (1 to 4).map { i =>
         Scratch.stage(Seq((i, s"v$i")).toDF("id", "v"), "keep_probe")
       }
-      val root = new Path(Scratch.root(spark))
-      val left = fs.listStatus(root).map(_.getPath.getName)
-        .filter(_.startsWith("keep_probe_g")).sorted.toSeq
+      val family = new Path(Scratch.root(spark), ".publish/keep_probe")
+      val left = fs.listStatus(family).map(_.getPath.getName)
+        .collect { case n if n.matches(".*_g[0-9]+") => n.replaceAll(".*_g", "").toInt }
       // 4 generations written, keepLast=2 → only the newest two remain
-      assert(left.map(_.stripPrefix("keep_probe_g").toInt).sorted === Seq(3, 4))
+      assert(left.sorted.toSeq === Seq(3, 4))
       // and the survivors still read back
       assert(dfs.last.collect().map(_.getInt(0)).toSeq === Seq(4))
     } finally spark.conf.unset("graft.scratch.keepLast")
@@ -94,11 +94,36 @@ class ScratchSpec extends SparkSpec {
       }
       assert(ex.getMessage.contains("graft.scratch.keepLast"))
     } finally spark.conf.unset("graft.scratch.keepLast")
-    // parameter-supplied zero and negative: same contract
-    intercept[IllegalArgumentException] { Scratch.gc(spark, "keep_zero_probe", 0) }
-    intercept[IllegalArgumentException] { Scratch.gc(spark, "keep_zero_probe", -3) }
     // and a staged frame written under a VALID bound still reads back
     val df = Scratch.stage(Seq((7, "ok")).toDF("id", "v"), "keep_zero_probe")
     assert(df.collect().map(_.getInt(0)).toSeq === Seq(7))
+  }
+
+  test("a partitioned stage reads back as overwrite + read would, written once: no swap dir, no sidecar") {
+    val tmp = java.nio.file.Files.createTempDirectory("graft_scratch_once").toString
+    spark.conf.set("graft.scratch.dir", tmp)
+    try {
+      val df = Seq((1L, "a", 7, 1.5), (2L, "b", 8, 2.5), (3L, "c", 7, 3.5), (4L, "d", 9, 4.5))
+        .toDF("id", "v", "p", "x")
+      val staged = Scratch.stage(df, "once_probe", Seq("p"))
+      val ref = new TableStore(spark,
+        java.nio.file.Files.createTempDirectory("graft_scratch_ref").toString)
+      ref.overwrite("once_probe", df, Seq("p"))
+      val want = ref.read("once_probe")
+      assert(staged.columns.toSeq === want.columns.toSeq)
+      assert(staged.columns.last === "p", "partition column comes back last")
+      def rows(d: org.apache.spark.sql.DataFrame) = d.collect().map(_.toSeq).sortBy(_.head.toString)
+      assert(rows(staged).toSeq === rows(want).toSeq)
+      val root = new Path(Scratch.root(spark))
+      val it = fs.listFiles(root, true)
+      val names = Iterator.continually(it).takeWhile(_.hasNext).map(_.next().getPath.toString).toSeq
+      assert(names.exists(_.contains("/.publish/once_probe/")), s"stage not found: $names")
+      assert(!names.exists(n => n.contains("/.staging_") || n.contains("/.trash_") ||
+        n.endsWith("/_graft_schema.json")), s"a swap dir or sidecar under the root: $names")
+    } finally {
+      spark.conf.unset("graft.scratch.dir")
+      fs.delete(new Path(tmp), true)
+      ()
+    }
   }
 }
