@@ -174,17 +174,26 @@ object Pipelines {
         Seq("order_id", "order_placement_date", "customer_id", "product_id", "order_qty"),
         Seq(col("file_name"))))
 
-  /** Fact full load: landing CSVs → bronze (append) → silver (clean) →
-    * gold-shaped via product join → sb_fact (insert-only merge) → monthly
-    * rollup MERGE into consolidated fact (1_full_load_fact.py).
+  /** The landed CSVs under `landingDir`, parsed once and staged beside
+    * `bronze_orders` ([[TableStore.stage]]): the stage's rows feed silver,
+    * and publishing the stage is the bronze append.
+    */
+  private def stageLanded(
+      spark: SparkSession, store: TableStore, landingDir: String): TableStore.Staged =
+    store.stage("bronze_orders",
+      CsvIngest.read(spark, s"$landingDir/*.csv", schema = Some(Star.rawOrders)))
+
+  /** Fact full load: landing CSVs → bronze (staged, published once silver
+    * has read it) → silver (clean) → gold-shaped via product join →
+    * sb_fact (insert-only merge) → monthly rollup MERGE into consolidated
+    * fact (1_full_load_fact.py).
     */
   def runFactFull(spark: SparkSession, store: TableStore, landingDir: String): Unit = {
-    val bronze = CsvIngest.read(spark, s"$landingDir/*.csv", schema = Some(Star.rawOrders))
-    store.append("bronze_orders", bronze)
-
-    val silver = cleanOrders(bronze)
+    val bronze = stageLanded(spark, store, landingDir)
+    val silver = cleanOrders(bronze.rows)
       .select("order_id", "order_placement_date", "customer_id", "product_id", "order_qty")
     store.overwrite("silver_orders", silver)
+    store.publish(bronze)
 
     val products = broadcast(store.read("silver_products").select("product_id", "product_code"))
     val sbFact = store.read("silver_orders")
@@ -202,22 +211,28 @@ object Pipelines {
     mergeMonthlyRollup(store, store.read("sb_fact_orders"))
   }
 
-  /** Fact incremental load: staging snapshot of just-landed files, keyed
+  /** Fact incremental load: a staging snapshot of just-landed files, keyed
     * upsert into silver + sb_fact (late/re-delivered rows update in place;
     * a day of new keys is an append), then affected-months-only recompute of
-    * the consolidated rollup, then staging teardown
-    * (2_incremental_load_fact.py; SURVEY §2.7).
+    * the consolidated rollup (2_incremental_load_fact.py; SURVEY §2.7).
+    *
+    * The staging snapshot is the bronze stage: the landed CSVs are parsed
+    * once and written once, beside `bronze_orders` ([[stageLanded]]). Its
+    * rows play the reference's `staging_orders`, their cleaning its
+    * `silver_staging_orders`; neither is a named table, so there is no
+    * staging teardown. Tables change in the order silver → sb_fact →
+    * bronze → gold: the bronze stage is published after its last reader
+    * (the touched-month collect) and before the gold merge. A crash before
+    * the bronze publish leaves the day in silver and sb_fact but not in
+    * bronze; a re-run lands it in bronze exactly once, and silver and
+    * sb_fact take [[Upsert.mergeInto]]'s merge path, as any re-run does.
+    * The abandoned stage is swept by the next stage of `bronze_orders`.
     */
   def runFactIncremental(spark: SparkSession, store: TableStore, landingDir: String): Unit = {
-    val bronze = CsvIngest.read(spark, s"$landingDir/*.csv", schema = Some(Star.rawOrders))
-    store.append("bronze_orders", bronze)
-    store.overwrite("staging_orders", bronze)
+    val bronze = stageLanded(spark, store, landingDir)
 
-    val staged = cleanOrders(store.read("staging_orders"))
+    val silverInc = cleanOrders(bronze.rows)
       .select("order_id", "order_placement_date", "customer_id", "product_id", "order_qty")
-    store.overwrite("silver_staging_orders", staged)
-
-    val silverInc = store.read("silver_staging_orders")
     Upsert.mergeInto(store, "silver_orders", silverInc,
       Seq("order_placement_date", "order_id", "product_id", "customer_id"),
       onDuplicate = Upsert.DuplicatePolicy.DedupDeterministic)
@@ -242,13 +257,10 @@ object Pipelines {
     // values never need a separate pass.
     val touched = sbInc.filter(col("date").isNotNull)
       .select(Dates.monthStart(col("date"))).distinct().collect().map(_.get(0)).toSeq
+    store.publish(bronze)
     val affected = store.read("sb_fact_orders")
       .filter(Dates.monthStart(col("date")).isin(touched: _*))
     mergeMonthlyRollup(store, affected, Some(touched))
-
-    // staging teardown (2_incremental:300-306)
-    store.drop("staging_orders")
-    store.drop("silver_staging_orders")
   }
 
   /** Daily→monthly rollup of gold-shaped child orders, upserted into the

@@ -273,10 +273,17 @@ final class TableStore(spark: SparkSession, root: String) {
     * the staged files back with the written schema (partition columns
     * last, as a partitioned table reads).
     *
-    * The one stage primitive: [[publish]] commits a stage into its table
-    * (the dedup index's shingle increments), and [[Scratch.stage]] stages
-    * every scratch intermediate here, under the scratch root, and never
-    * publishes it.
+    * The one stage primitive. Its users:
+    *  - [[Upsert.mergeInto]] stages every inserting MERGE's prepared
+    *    source, then publishes it (no key matched) or reads it into the
+    *    full rewrite and discards it;
+    *  - [[graft.pipeline.Pipelines]]' fact loads stage the landed CSVs
+    *    beside `bronze_orders`, clean the stage's rows into silver and
+    *    publish it as the bronze append;
+    *  - the dedup index stages its shingle increments and publishes them
+    *    at commit;
+    *  - [[Scratch.stage]] stages every scratch intermediate here, under
+    *    the scratch root, and never publishes it.
     *
     * Lifetime: each call sweeps this family's stages more than
     * `graft.scratch.keepLast` generations behind ([[TableStore.keepLast]]),
@@ -299,7 +306,9 @@ final class TableStore(spark: SparkSession, root: String) {
     }
     val dir = new Path(base, s"${app}_g$g")
     val w = df.write.mode(SaveMode.Overwrite)
-    (if (partitionBy.nonEmpty) w.partitionBy(partitionBy: _*) else w).parquet(dir.toString)
+    // a failed write leaves no stage dir behind
+    try (if (partitionBy.nonEmpty) w.partitionBy(partitionBy: _*) else w).parquet(dir.toString)
+    catch { case e: Throwable => f.delete(dir, true); throw e }
     val prefix = dir.toUri.getPath + "/"
     val files = Compact.dataFiles(f, dir).map(_._1.toUri.getPath.stripPrefix(prefix))
     TableStore.Staged(table, dir.toString, files,
@@ -311,7 +320,9 @@ final class TableStore(spark: SparkSession, root: String) {
     * into storage form, by [[TableStore.stage]]'s caller, where [[append]]
     * would read them back and write them a second time. No Spark job
     * runs: one existence probe per staged file, the sidecar step, one
-    * rename per file, one delete of the emptied stage dir.
+    * rename per file, one delete of the emptied stage dir. Its users: the
+    * no-match path of [[Upsert.mergeInto]], the bronze append of the fact
+    * loads, and [[graft.ext.DedupIndex.commitIncrement]]'s shingle files.
     *
     *   1. Every staged file must still be where it was written. A stage
     *      that was already published, or swept, throws
@@ -360,6 +371,10 @@ final class TableStore(spark: SparkSession, root: String) {
     f.delete(dir, true)
     spark.catalog.refreshByPath(live.toString)
   }
+
+  /** Delete a stage that will not be published (a no-op on a stage
+    * [[publish]] already moved away). */
+  def discard(staged: TableStore.Staged): Unit = fs.delete(new Path(staged.dir), true)
 
   /** Replace ONLY the partitions present in `df`, leaving all other
     * partition directories untouched (dynamic-partition-overwrite

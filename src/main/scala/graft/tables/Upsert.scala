@@ -22,7 +22,8 @@ import org.apache.spark.sql.functions._
   * split automatically. Spark cannot broadcast either side of a full-outer
   * equi-join, so both sides shuffle on the keys. [[mergeInto]] avoids that
   * join, and the full target rewrite behind it, whenever the source matches
-  * no target row.
+  * no target row: the staged source's files are then published into the
+  * table as they are.
   */
 object Upsert {
 
@@ -103,8 +104,19 @@ object Upsert {
       update: Boolean = true,
       insert: Boolean = true,
       onDuplicate: DuplicatePolicy = DuplicatePolicy.Error): DataFrame = {
+    val src = prepareSource(source, target.columns.toSeq, keys, onDuplicate)
+    mergePrepared(target, src, keys, updateCols, update, insert)
+  }
+
+  /** [[merge]] over a source [[prepareSource]] already prepared. */
+  private def mergePrepared(
+      target: DataFrame,
+      src: DataFrame,
+      keys: Seq[String],
+      updateCols: Option[Seq[String]],
+      update: Boolean,
+      insert: Boolean): DataFrame = {
     val tCols = target.columns.toSeq
-    val src = prepareSource(source, tCols, keys, onDuplicate)
 
     // Presence markers — key nullability cannot signal side presence (a
     // null-key row exists on one side without matching anything).
@@ -138,24 +150,31 @@ object Upsert {
 
   /** [[merge]] applied to a stored, unpartitioned table, in Delta's two
     * phases: first find whether any target row matches, then rewrite only
-    * if one does.
+    * if one does. With `insert = true` the source is evaluated once:
+    * stage → probe → publish, or merge + discard.
     *
     *  - Table absent: create it from `source` as given.
-    *  - Probe ([[matchProbe]]): the source's raw keys, broadcast, against
-    *    the target's key columns. Duplicate handling never changes the key
-    *    set and NULL keys never match, so the raw keys answer the question
-    *    without preparing the source first.
-    *  - No match: every source row is an insert, so the prepared source
-    *    (same `onDuplicate` handling as [[merge]]) is appended under
-    *    [[TableStore.append]]'s schema rules, or nothing is written when
-    *    `insert = false`. The existing data files stay as they are. The
-    *    commit is Spark's job commit, as for any append: a failed job, a
-    *    `DuplicatePolicy.Error` raise included, leaves no new data file.
-    *  - Any match: the full-outer [[merge]] rewrites the table through
-    *    [[TableStore.overwrite]]'s atomic swap.
+    *  - Stage: the prepared source (column order and `onDuplicate`
+    *    handling as in [[merge]]) is written once beside the table
+    *    ([[TableStore.stage]]). A failed write, a `DuplicatePolicy.Error`
+    *    raise included, leaves no stage and no new data file.
+    *  - Probe ([[matchProbe]]): the staged keys, broadcast, against the
+    *    target's key columns.
+    *  - No match: every staged row is an insert, so the stage's files are
+    *    added to the table by rename ([[TableStore.publish]]: no Spark job,
+    *    no second write, [[TableStore.append]]'s schema union). The
+    *    existing data files stay as they are.
+    *  - Any match: the full-outer [[merge]] of the target and the staged
+    *    rows rewrites the table through [[TableStore.overwrite]]'s atomic
+    *    swap. The stage is then discarded, as it is when the probe, the
+    *    rewrite or the publish fails.
+    *
+    * `insert = false` never inserts, so it writes no stage: the probe runs
+    * over the raw source keys (duplicate handling never changes the key
+    * set and NULL keys never match), and only a match rewrites the table.
     *
     * An existing table ends up holding exactly the rows of
-    * `overwrite(table, merge(read(table), source, ...))` on either path.
+    * `overwrite(table, merge(read(table), source, ...))` on every path.
     * Partitioned tables go through [[mergePartitioned]].
     */
   def mergeInto(
@@ -171,17 +190,25 @@ object Upsert {
       return
     }
     val target = store.read(table)
-    if (!matchProbe(target, source, keys).isEmpty)
-      store.overwrite(table, merge(target, source, keys, None, update, insert, onDuplicate))
-    else if (insert)
-      store.append(table, prepareSource(source, target.columns.toSeq, keys, onDuplicate))
+    if (!insert) {
+      if (!matchProbe(target, source, keys).isEmpty)
+        store.overwrite(table, merge(target, source, keys, None, update, insert, onDuplicate))
+      return
+    }
+    val staged = store.stage(table,
+      prepareSource(source, target.columns.toSeq, keys, onDuplicate))
+    try {
+      if (matchProbe(target, staged.rows, keys).isEmpty) store.publish(staged)
+      else store.overwrite(table, mergePrepared(target, staged.rows, keys, None, update, insert))
+    } finally store.discard(staged) // after a publish: nothing left to delete
   }
 
   /** Target key rows that some source row matches: a left-semi join of the
     * target's key columns (the only columns its scan reads) against the
     * broadcast source keys, so the target is scanned once and never
-    * shuffled. The source is an increment, small beside the target; its
-    * raw keys need none of the window shuffle that duplicate handling costs.
+    * shuffled. The source is an increment, small beside the target, and
+    * its keys need none of the window shuffle that duplicate handling
+    * costs (a staged source has already paid it).
     */
   private[graft] def matchProbe(
       target: DataFrame, source: DataFrame, keys: Seq[String]): DataFrame =

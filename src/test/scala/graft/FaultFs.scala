@@ -3,11 +3,13 @@ package graft
 import java.util.concurrent.atomic.AtomicReference
 import org.apache.hadoop.fs.{Path, RawLocalFileSystem}
 import org.apache.spark.sql.SparkSession
+import scala.jdk.CollectionConverters._
 
-/** The local file system under the `fault:` scheme, with one armed fault:
-  * after [[FaultFs.failRename]]`(n, marker)`, the (n+1)-th rename whose
-  * source path contains `marker` throws an IOException, once — a crash at
-  * a chosen point of a commit. A store rooted at `fault:<dir>` reads and
+/** The local file system under the `fault:` scheme, which logs its
+  * renames ([[FaultFs.renamesDuring]]) and has one armed fault: after
+  * [[FaultFs.failRename]]`(n, marker)`, the (n+1)-th rename whose source
+  * path contains `marker` throws an IOException, once — a crash at a
+  * chosen point of a commit. A store rooted at `fault:<dir>` reads and
   * writes `<dir>` on the local disk exactly as `file:` would.
   */
 class FaultFs extends RawLocalFileSystem {
@@ -15,7 +17,9 @@ class FaultFs extends RawLocalFileSystem {
   override def getScheme: String = FaultFs.Scheme
   override def rename(src: Path, dst: Path): Boolean = {
     FaultFs.onRename(src)
-    super.rename(src, dst)
+    val done = super.rename(src, dst)
+    if (done) FaultFs.renamed.add((src, dst))
+    done
   }
 }
 
@@ -26,6 +30,16 @@ object FaultFs {
   /** (renames still allowed, source-path marker) while armed. */
   private val armed = new AtomicReference[Option[(Int, String)]](None)
   private val fired = new java.util.concurrent.atomic.AtomicBoolean(false)
+
+  private val renamed = new java.util.concurrent.ConcurrentLinkedQueue[(Path, Path)]()
+
+  /** Every rename (source, destination) this scheme completed while
+    * `body` ran. */
+  def renamesDuring(body: => Unit): Seq[(Path, Path)] = {
+    renamed.clear()
+    body
+    renamed.asScala.toSeq
+  }
 
   /** Register the scheme with the session's Hadoop configuration. */
   def install(spark: SparkSession): Unit =

@@ -102,7 +102,28 @@ class PipelineSpec extends SparkSpec {
 
   test("incremental load: affected-month recompute + COPY INTO idempotence") {
     runAll()
+    def dataFiles(table: String): Set[String] = {
+      val root = new java.io.File(store.path(table))
+      def walk(f: java.io.File): Seq[java.io.File] =
+        if (f.isDirectory) f.listFiles().toSeq.flatMap(walk) else Seq(f)
+      walk(root).filter(_.getName.endsWith(".parquet"))
+        .map(f => root.toURI.relativize(f.toURI).getPath).toSet
+    }
+    def stagesLeft = Option(new java.io.File(store.path(".publish")).listFiles()).toSeq.flatten
+      .flatMap(d => Option(d.listFiles()).toSeq.flatten)
+    val landed = spark.read.option("header", "true")
+      .csv(s"$fx/child/orders_incremental/*.csv").count()
+    val bronzeBefore = store.read("bronze_orders").count()
+    val priorFiles = Seq("silver_orders", "sb_fact_orders").map(t => t -> dataFiles(t))
     Pipelines.runFactIncremental(spark, store, s"$fx/child/orders_incremental")
+    // bronze gains the landed rows exactly once; no stage is left behind
+    assert(store.read("bronze_orders").count() === bronzeBefore + landed)
+    assert(stagesLeft.isEmpty, s"stages left: $stagesLeft")
+    // a day of new keys is published into silver and sb_fact: every prior
+    // data file stays
+    priorFiles.foreach { case (t, before) =>
+      assert(before.nonEmpty && before.subsetOf(dataFiles(t)), t)
+    }
 
     val fact = store.read("gold_fact_orders")
     // Dec 2025 child rows: ORD101 qty 20 (25891101), ORD102 7 (25891102),
@@ -133,6 +154,8 @@ class PipelineSpec extends SparkSpec {
     val layersBefore = layers.map { case (t, d) => byDate(t, d) }
     Pipelines.runFactIncremental(spark, store, s"$fx/child/orders_incremental")
     assert(!store.exists("staging_orders") && !store.exists("silver_staging_orders"))
+    assert(store.read("bronze_orders").count() === bronzeBefore + 2 * landed)
+    assert(stagesLeft.isEmpty, s"stages left after the re-run: $stagesLeft")
     assert(rows(store.read("gold_fact_orders")) === goldBefore)
     layers.zip(layersBefore).foreach { case ((t, d), (keyed, nullDated)) =>
       val (keyedNow, nullDatedNow) = byDate(t, d)

@@ -726,6 +726,63 @@ class StreamsSpec extends SparkSpec {
       "a batch of only new pairs must keep every prior pair file")
   }
 
+  test("indexedNearDupSink: each batch evaluates its pairs source, the Jaccard join, once") {
+    import org.apache.spark.sql.execution.QueryExecution
+    import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
+    val dir = Files.createTempDirectory("graft_once_landing").toString
+    val ckpt = Files.createTempDirectory("graft_once_ckpt").toString
+    val store = new TableStore(spark, Files.createTempDirectory("graft_once_store").toString)
+    val schema = org.apache.spark.sql.types.StructType(Seq(
+      org.apache.spark.sql.types.StructField("doc_id", org.apache.spark.sql.types.LongType),
+      org.apache.spark.sql.types.StructField("text", org.apache.spark.sql.types.StringType)))
+    graft.ext.DedupIndex.build(store, "ix3",
+      Seq.empty[(Long, String)].toDF("doc_id", "text"), "doc_id", "text")
+    // the pair (1, 3) is already recorded, so batch 2 takes the merge path
+    store.overwrite("ix3_pairs", Seq((1L, 3L, 0.0)).toDF("id_a", "id_b", "jaccard"))
+
+    // the Jaccard join is the one query that reads the batch's staged
+    // candidate shingles: count the query executions scanning them
+    val joins = new java.util.concurrent.atomic.AtomicInteger(0)
+    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+      override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
+        if (qe.analyzed.exists {
+          case l: LogicalRelation => l.relation match {
+            case r: HadoopFsRelation =>
+              r.location.rootPaths.exists(_.toString.contains("ix3_inc_shcand"))
+            case _ => false
+          }
+          case _ => false
+        }) joins.incrementAndGet()
+      override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    def joinsDuring(body: => Unit): Int = {
+      org.apache.spark.graft.Bus.drain(spark.sparkContext)
+      joins.set(0)
+      body
+      org.apache.spark.graft.Bus.drain(spark.sparkContext)
+      joins.get()
+    }
+    def drain(): Unit = Streams.indexedNearDupSink(
+      spark.readStream.format("json").schema(schema).load(dir),
+      store, "ix3", "ix3_pairs", ckpt, threshold = 0.8).awaitTermination()
+
+    spark.listenerManager.register(listener)
+    try {
+      val d1 = "alpha beta gamma delta epsilon zeta eta theta iota kappa lambda mu"
+      Files.writeString(java.nio.file.Paths.get(s"$dir/b1.json"),
+        s"""{"doc_id":1,"text":"$d1"}
+           |{"doc_id":2,"text":"one two three four five six seven eight nine ten"}
+           |""".stripMargin)
+      assert(joinsDuring(drain()) === 1, "batch 1: no pair, publish path")
+      Files.writeString(java.nio.file.Paths.get(s"$dir/b2.json"),
+        s"""{"doc_id":3,"text":"${d1.replace(" mu", " nu")}"}
+           |""".stripMargin)
+      assert(joinsDuring(drain()) === 1, "batch 2: pair (1, 3) matches, merge path")
+    } finally spark.listenerManager.unregister(listener)
+    val pairs = store.read("ix3_pairs").as[(Long, Long, Double)].collect().toSeq
+    assert(pairs.map(p => (p._1, p._2)) === Seq((1L, 3L)) && pairs.head._3 > 0.8, pairs)
+  }
+
   test("scoredUpsertSink: trained-weight gate keeps only above-cut docs, replay-idempotent") {
     val dir = Files.createTempDirectory("graft_sc_landing").toString
     val ckpt = Files.createTempDirectory("graft_sc_ckpt").toString

@@ -122,4 +122,60 @@ class UpsertSpec extends SparkSpec {
     assert(dataFiles(store, "t") === before.filter(_._1.endsWith(".parquet")))
     assert(sorted(store.read("t")) === sorted(t))
   }
+
+  test("mergeInto, no match: the source runs once and the table gains exactly the stage's files, by rename") {
+    import org.apache.spark.sql.functions.{col, udf}
+    graft.FaultFs.install(spark)
+    val dir = Files.createTempDirectory("graft_upsert_pub").toFile
+    val store = new TableStore(spark, graft.FaultFs.root(dir.getPath))
+    store.overwrite("t", t)
+    val table = new File(dir, "t")
+    def files: Map[String, Long] = {
+      def walk(f: File): Seq[File] =
+        if (f.isDirectory) f.listFiles().toSeq.flatMap(walk) else Seq(f)
+      walk(table).filter(_.getName.endsWith(".parquet"))
+        .map(f => table.toURI.relativize(f.toURI).getPath -> f.length).toMap
+    }
+    val before = files
+    // counts every evaluation of a source row
+    val evaluated = spark.sparkContext.longAccumulator("source rows")
+    val tick = udf { (k: String) => evaluated.add(1); k }
+    val source = Seq(("k8", 80, "s"), ("k9", 90, "s")).toDF("k", "v", "src")
+      .withColumn("k", tick(col("k")))
+    val moved = graft.FaultFs.renamesDuring(Upsert.mergeInto(store, "t", source, Seq("k")))
+    assert(evaluated.value === 2L, "the source must be evaluated once")
+    val after = files
+    assert(before.forall { case (f, n) => after.get(f).contains(n) }, s"$before vs $after")
+    val stages = new File(dir, ".publish/t").toURI.getPath
+    val tablePath = table.toURI.getPath
+    val intoTable = moved.filter(_._2.toUri.getPath.startsWith(tablePath))
+    assert(intoTable.nonEmpty && intoTable.forall(_._1.toUri.getPath.startsWith(stages)),
+      s"every new file must be renamed in from the stage: $intoTable")
+    assert(intoTable.map(_._2.toUri.getPath.stripPrefix(tablePath)).toSet ===
+      after.keySet -- before.keySet)
+    assert(sorted(store.read("t")) ===
+      Seq(("k1", 1, "t"), ("k2", 2, "t"), ("k3", 3, "t"), ("k8", 80, "s"), ("k9", 90, "s")))
+  }
+
+  test("mergeInto: the match path and a failed stage write leave nothing under .publish/<table>/") {
+    val store = freshStore()
+    store.overwrite("t", t)
+    val stages = new File(store.path(".publish/t"))
+    def left = Option(stages.listFiles()).toSeq.flatten
+    Upsert.mergeInto(store, "t", Seq(("k2", 20, "s"), ("k9", 90, "s")).toDF("k", "v", "src"),
+      Seq("k"))
+    assert(stages.isDirectory, "the match path stages its source")
+    assert(left.isEmpty, s"the match path left $left")
+    assert(sorted(store.read("t")) ===
+      Seq(("k1", 1, "t"), ("k2", 20, "s"), ("k3", 3, "t"), ("k9", 90, "s")))
+    // DuplicatePolicy.Error raises inside the stage write, on a disjoint
+    // source and on a matching one
+    Seq("k8", "k1").foreach { k =>
+      val dup = Seq((k, 80, "s"), (k, 81, "s")).toDF("k", "v", "src")
+      intercept[Exception](Upsert.mergeInto(store, "t", dup, Seq("k")))
+      assert(left.isEmpty, s"a failed stage write on $k left $left")
+    }
+    assert(sorted(store.read("t")) ===
+      Seq(("k1", 1, "t"), ("k2", 20, "s"), ("k3", 3, "t"), ("k9", 90, "s")))
+  }
 }
