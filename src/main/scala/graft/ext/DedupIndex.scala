@@ -39,7 +39,8 @@ import org.apache.spark.sql.functions._
   * in any engine with md5.
   *
   * What digest mode buys — measured honestly (BENCH_LOCAL_r7 word
-  * shingles, BENCH_LOCAL_r8 char shingles): NOT size, on any shingle
+  * shingles, BENCH_LOCAL_r8 char shingles, both when the store wrote
+  * snappy; not re-measured under its zstd): NOT size, on any shingle
   * family tried. md5 bytes are incompressible, while parquet
   * dictionary+snappy compress repeated text shingles ~3×, so at sf0.1 the
   * digest table is 1.4-2.0× larger than raw for word 3/5-grams — and
@@ -465,9 +466,12 @@ object DedupIndex {
     // by construction no larger than cands' pair rows, so gating on cands
     // only errs conservative. The default is deliberately conservative
     // anyway: COMPRESSED parquet of id columns under-states the in-memory
-    // HashedRelation by roughly an order of magnitude (encoded ~8 B/row vs
-    // ~60-80 B/row hashed), so 8 MB on disk bounds the broadcast near
-    // spark.sql.autoBroadcastJoinThreshold-scale heap.
+    // HashedRelation several-fold (the store's zstd stage of string doc-id
+    // pairs measured 12.9 B/row — 20.1 under the snappy it replaced — on
+    // the crawl_dedup seed-11 corpus's 2,798 candidate pairs, vs ~60-80
+    // B/row hashed), so 8 MB on disk (~650k pairs; ~420k under snappy)
+    // bounds the broadcast near spark.sql.autoBroadcastJoinThreshold-scale
+    // heap.
     val candKeys =
       if (cands.queryExecution.optimizedPlan.stats.sizeInBytes <= broadcastCandBytes)
         broadcast(candDocs)

@@ -40,10 +40,10 @@ object Compact {
   /** Recursive data-file listing under `dir` (skips `_`/`.` sidecars;
     * missing dir → empty). The ONE definition of "what counts as a data
     * file" — [[graft.ext.IndexState]]'s memo keys and fragmentation
-    * trigger and [[TableStore.publish]]'s stage listing read this same
-    * listing, so a future sidecar-convention change cannot desynchronize
-    * them. Spark's own rule: a `_` name holding `=` is a hive partition dir
-    * (`_bkt64=3`), not a sidecar.
+    * trigger read this same listing, so a future sidecar-convention change
+    * cannot desynchronize them. It is Spark's own file-index rule, which
+    * [[TableStore.Staged.files]] reads: a `_` name holding `=` is a hive
+    * partition dir (`_bkt64=3`), not a sidecar.
     */
   private[graft] def dataFiles(fs: FileSystem, dir: Path): Seq[(Path, Long)] = {
     if (!fs.exists(dir)) return Nil

@@ -1,12 +1,15 @@
 package graft
 
 import java.util.concurrent.atomic.AtomicReference
-import org.apache.hadoop.fs.{Path, RawLocalFileSystem}
+import org.apache.hadoop.fs.{FSDataOutputStream, FileStatus, Path, RawLocalFileSystem}
+import org.apache.hadoop.fs.permission.FsPermission
+import org.apache.hadoop.util.Progressable
 import org.apache.spark.sql.SparkSession
 import scala.jdk.CollectionConverters._
 
 /** The local file system under the `fault:` scheme, which logs its
-  * renames ([[FaultFs.renamesDuring]]) and has one armed fault: after
+  * creates, renames and directory listings ([[FaultFs.opsDuring]]) and
+  * has one armed fault: after
   * [[FaultFs.failRename]]`(n, marker)`, the (n+1)-th rename whose source
   * path contains `marker` throws an IOException, once — a crash at a
   * chosen point of a commit. A store rooted at `fault:<dir>` reads and
@@ -18,8 +21,22 @@ class FaultFs extends RawLocalFileSystem {
   override def rename(src: Path, dst: Path): Boolean = {
     FaultFs.onRename(src)
     val done = super.rename(src, dst)
-    if (done) FaultFs.renamed.add((src, dst))
+    if (done) FaultFs.ops.add(FaultFs.Op("rename", src, Some(dst)))
     done
+  }
+  override def create(f: Path, overwrite: Boolean, bufferSize: Int, replication: Short,
+      blockSize: Long, progress: Progressable): FSDataOutputStream = {
+    FaultFs.ops.add(FaultFs.Op("create", f))
+    super.create(f, overwrite, bufferSize, replication, blockSize, progress)
+  }
+  override def create(f: Path, permission: FsPermission, overwrite: Boolean, bufferSize: Int,
+      replication: Short, blockSize: Long, progress: Progressable): FSDataOutputStream = {
+    FaultFs.ops.add(FaultFs.Op("create", f))
+    super.create(f, permission, overwrite, bufferSize, replication, blockSize, progress)
+  }
+  override def listStatus(f: Path): Array[FileStatus] = {
+    FaultFs.ops.add(FaultFs.Op("list", f))
+    super.listStatus(f)
   }
 }
 
@@ -31,15 +48,24 @@ object FaultFs {
   private val armed = new AtomicReference[Option[(Int, String)]](None)
   private val fired = new java.util.concurrent.atomic.AtomicBoolean(false)
 
-  private val renamed = new java.util.concurrent.ConcurrentLinkedQueue[(Path, Path)]()
+  /** One call this scheme made: `kind` is `create` (logged when asked),
+    * `rename` (logged once done, with its destination) or `list`. */
+  final case class Op(kind: String, path: Path, dst: Option[Path] = None)
+
+  private val ops = new java.util.concurrent.ConcurrentLinkedQueue[Op]()
+
+  /** Every create, rename and listing this scheme made while `body` ran,
+    * in order. */
+  def opsDuring(body: => Unit): Seq[Op] = {
+    ops.clear()
+    body
+    ops.asScala.toSeq
+  }
 
   /** Every rename (source, destination) this scheme completed while
     * `body` ran. */
-  def renamesDuring(body: => Unit): Seq[(Path, Path)] = {
-    renamed.clear()
-    body
-    renamed.asScala.toSeq
-  }
+  def renamesDuring(body: => Unit): Seq[(Path, Path)] =
+    opsDuring(body).collect { case Op("rename", src, Some(dst)) => (src, dst) }
 
   /** Register the scheme with the session's Hadoop configuration. */
   def install(spark: SparkSession): Unit =

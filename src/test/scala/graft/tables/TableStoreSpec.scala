@@ -1,13 +1,46 @@
 package graft.tables
 
-import graft.SparkSpec
+import graft.{FaultFs, SparkSpec}
 import java.nio.file.Files
+import org.apache.hadoop.fs.Path
+import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.util.HadoopInputFile
+import scala.jdk.CollectionConverters._
 
 class TableStoreSpec extends SparkSpec {
   import spark.implicits._
 
   private def newStore() =
     new TableStore(spark, Files.createTempDirectory("graft_store").toString)
+
+  /** A store on the `fault:` scheme, which logs creates, renames and
+    * listings. */
+  private def faultStore() = {
+    FaultFs.install(spark)
+    new TableStore(spark, FaultFs.root(Files.createTempDirectory("graft_store").toString))
+  }
+
+  /** The data files under `dir`, relative to it. */
+  private def dataFiles(dir: String): Set[String] = {
+    val p = new Path(dir)
+    Compact.dataFiles(p.getFileSystem(spark.sparkContext.hadoopConfiguration), p)
+      .map(_._1.toUri.getPath.stripPrefix(p.toUri.getPath + "/")).toSet
+  }
+
+  /** The column-chunk codecs in the footers of `files`. */
+  private def codecsOf(files: Seq[Path]): Set[String] = files.flatMap { p =>
+    val r = ParquetFileReader.open(
+      HadoopInputFile.fromPath(p, spark.sparkContext.hadoopConfiguration))
+    try r.getFooter.getBlocks.asScala.toSeq.flatMap(_.getColumns.asScala.map(_.getCodec.name))
+    finally r.close()
+  }.toSet
+
+  /** The column-chunk codecs of every data file under `dir`. */
+  private def codecs(dir: String): Set[String] = {
+    val p = new Path(dir)
+    codecsOf(Compact.dataFiles(
+      p.getFileSystem(spark.sparkContext.hadoopConfiguration), p).map(_._1))
+  }
 
   test("overwrite + read roundtrip, exists, drop") {
     val store = newStore()
@@ -161,12 +194,6 @@ class TableStoreSpec extends SparkSpec {
 
   test("publish renames a stage's data files into the table: partition dirs created, no job, re-publish throws") {
     val store = newStore()
-    def dataFiles(dir: String): Set[String] =
-      Compact.dataFiles(new org.apache.hadoop.fs.Path(dir)
-        .getFileSystem(spark.sparkContext.hadoopConfiguration),
-        new org.apache.hadoop.fs.Path(dir)).map { case (p, _) =>
-        p.toUri.getPath.stripPrefix(new java.io.File(dir).getCanonicalPath + "/")
-      }.toSet
     store.append("pt", Seq((1, "a", 0), (2, "b", 1)).toDF("id", "v", "p"), partitionBy = Seq("p"))
     val before = dataFiles(store.path("pt"))
     // a stage in the table's layout, one partition value the table lacks,
@@ -210,6 +237,117 @@ class TableStoreSpec extends SparkSpec {
       intercept[java.io.FileNotFoundException](store.publish(s1))
       assert(base.list().length === 2)
     } finally spark.conf.unset("graft.scratch.keepLast")
+  }
+
+
+  test("every write path lands zstd column chunks, whatever codec the session sets") {
+    spark.conf.set("spark.sql.parquet.compression.codec", "snappy")
+    try {
+      val store = newStore()
+      val rows = (1 to 200).map(i => (i, s"v$i", i % 3))
+      store.overwrite("ow", rows.toDF("id", "v", "p"))
+      assert(codecs(store.path("ow")) === Set("ZSTD"))
+
+      store.append("ap", rows.toDF("id", "v", "p"))
+      store.append("ap", rows.toDF("id", "v", "p"))
+      assert(codecs(store.path("ap")) === Set("ZSTD"))
+
+      store.overwrite("pt", rows.toDF("id", "v", "p"), Seq("p"))
+      store.overwritePartitions("pt", rows.take(50).toDF("id", "v", "p"), Seq("p"))
+      assert(codecs(store.path("pt")) === Set("ZSTD"))
+
+      val st = store.stage("pub", rows.toDF("id", "v", "p"))
+      assert(codecs(st.dir) === Set("ZSTD"))
+      store.publish(st)
+      assert(codecs(store.path("pub")) === Set("ZSTD"))
+
+      val scratch = Scratch.stage(rows.toDF("id", "v", "p"), "codec_probe")
+      assert(codecsOf(scratch.inputFiles.toSeq.map(f => new Path(java.net.URI.create(f))))
+        === Set("ZSTD"))
+
+      Compact.compact(store, "ap", numFiles = Some(1))
+      assert(codecs(store.path("ap")) === Set("ZSTD"))
+
+      // a matching key: mergeInto's full rewrite
+      Upsert.mergeInto(store, "ow", Seq((1, "new", 1)).toDF("id", "v", "p"), Seq("id"))
+      assert(store.read("ow").filter($"id" === 1).select("v").as[String].collect().toSeq
+        === Seq("new"))
+      assert(codecs(store.path("ow")) === Set("ZSTD"))
+    } finally spark.conf.unset("spark.sql.parquet.compression.codec")
+  }
+
+  test("a store holding snappy files reads every row across append, publish and mergeInto; compaction rewrites it as zstd") {
+    val store = newStore()
+    // a table an older writer left: snappy parquet straight in the table dir
+    Seq((1, "a"), (2, "b")).toDF("id", "v").write
+      .option("compression", "snappy").parquet(store.path("old"))
+    assert(codecs(store.path("old")) === Set("SNAPPY"))
+    store.append("old", Seq((3, "c")).toDF("id", "v"))
+    store.publish(store.stage("old", Seq((4, "d")).toDF("id", "v")))
+    // no key matches: the stage is published, the old files stay as they are
+    Upsert.mergeInto(store, "old", Seq((5, "e")).toDF("id", "v"), Seq("id"))
+    val all = Seq((1, "a"), (2, "b"), (3, "c"), (4, "d"), (5, "e"))
+    assert(codecs(store.path("old")) === Set("SNAPPY", "ZSTD"))
+    assert(store.read("old").as[(Int, String)].collect().sortBy(_._1).toSeq === all)
+    Compact.compact(store, "old", numFiles = Some(1))
+    assert(codecs(store.path("old")) === Set("ZSTD"))
+    assert(store.read("old").as[(Int, String)].collect().sortBy(_._1).toSeq === all)
+  }
+
+  test("overwritePartitions writes the schema sidecar only when the schema changes, and before any partition lands") {
+    val store = faultStore()
+    store.overwrite("f", Seq((1, "a", 0), (2, "b", 1)).toDF("id", "v", "p"), Seq("p"))
+    def isSidecar(op: FaultFs.Op) =
+      op.kind == "create" && op.path.getName == "_graft_schema.json"
+    val same = FaultFs.opsDuring(
+      store.overwritePartitions("f", Seq((3, "c", 1)).toDF("id", "v", "p"), Seq("p")))
+    assert(!same.exists(isSidecar), "an unchanged schema must not rewrite the sidecar")
+    assert(same.exists(_.kind == "rename"))
+
+    val wider = FaultFs.opsDuring(store.overwritePartitions("f",
+      Seq((4, "d", 2, 9.5)).toDF("id", "v", "p", "w"), Seq("p")))
+    val sidecarAt = wider.indexWhere(isSidecar)
+    val firstRename = wider.indexWhere(_.kind == "rename")
+    assert(sidecarAt >= 0 && firstRename >= 0)
+    assert(sidecarAt < firstRename, "the union must be recorded before a partition lands")
+    assert(wider.count(isSidecar) === 1)
+    assert(store.schemaOf("f").get.fieldNames.toSeq === Seq("id", "v", "p", "w"))
+    assert(store.read("f").select("id", "w").as[(Int, Option[Double])]
+      .collect().sortBy(_._1).toSeq === Seq((1, None), (3, None), (4, Some(9.5))))
+  }
+
+  test("stage lists its dir once: the read-back's listing fills Staged.files") {
+    val store = faultStore()
+    def listingsOf(ops: Seq[FaultFs.Op], dir: String): Int = {
+      val at = new Path(dir).toUri.getPath
+      ops.count(op => op.kind == "list" && op.path.toUri.getPath == at)
+    }
+    var st: TableStore.Staged = null
+    val ops = FaultFs.opsDuring {
+      st = store.stage("l", Seq((1, "a", 0), (2, "b", 1)).toDF("id", "v", "p"), Seq("p"))
+      st.files
+    }
+    assert(listingsOf(ops, st.dir) === 1)
+    assert(Seq("p=0", "p=1").forall(d => listingsOf(ops, s"${st.dir}/$d") === 1))
+    assert(st.files.toSet === dataFiles(st.dir))
+    assert(st.files.forall(_.startsWith("p=")))
+
+    val flat = FaultFs.opsDuring { st = store.stage("l2", Seq(1, 2, 3).toDF("id")); st.files }
+    assert(listingsOf(flat, st.dir) === 1)
+    assert(st.files.nonEmpty && st.files.toSet === dataFiles(st.dir))
+
+    // Scratch.stage is the same primitive under the scratch root
+    val scratchRoot = FaultFs.root(Files.createTempDirectory("graft_scratch").toString)
+    spark.conf.set("graft.scratch.dir", scratchRoot)
+    try {
+      var rows: org.apache.spark.sql.DataFrame = null
+      val sops = FaultFs.opsDuring { rows = Scratch.stage(Seq(1, 2).toDF("id"), "lst") }
+      val stageDirs = sops.filter(op => op.kind == "list" &&
+        op.path.toUri.getPath.contains("/.publish/lst/") &&
+        op.path.getName.matches(".+_g[0-9]+")).map(_.path.toUri.getPath)
+      assert(stageDirs.size === 1, s"one listing of the scratch stage dir, got $stageDirs")
+      assert(rows.count() === 2)
+    } finally spark.conf.unset("graft.scratch.dir")
   }
 
   test("overwrite mergeSchema=true keeps columns the new frame dropped (Delta parity)") {
