@@ -1,6 +1,6 @@
 package graft.streaming
 
-import graft.tables.{TableStore, Upsert}
+import graft.tables.{Compact, Scratch, TableStore, Upsert}
 import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery, Trigger}
@@ -17,9 +17,11 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   * watermark-discard; watermarks bound state for the windowed aggregations.
   *
   * Scale notes: stateful ops shuffle by grouping key; state lives in the
-  * executor state store (RocksDB at scale — config, not code). The upsert
-  * sink rewrites only affected months per micro-batch, mirroring the batch
-  * pipeline's affected-month restriction.
+  * executor state store (RocksDB at scale — config, not code). The keyed
+  * sinks commit each micro-batch through [[Upsert.mergeInto]]: a batch of
+  * new keys appends, and only a batch that matches a stored key rewrites
+  * its target. Per-batch intermediates are [[Scratch.stage]]s, never
+  * store tables.
   */
 object Streams {
 
@@ -76,9 +78,18 @@ object Streams {
   }
 
   /** foreachBatch keyed-upsert sink: each micro-batch merges into `table`
-    * by `keys` — late data updates in place, exactly the reference's
-    * incremental semantics. Returns the started query (AvailableNow: drains
-    * what exists, then stops — the reference's "process what landed" run).
+    * by `keys` ([[Upsert.mergeInto]]) — late data updates in place, exactly
+    * the reference's incremental semantics. A batch of all-new keys appends
+    * its files and leaves the table's existing files in place; a batch with
+    * a known key (late data, or a replay after a crash) merges and rewrites
+    * the table, so a replayed batch never duplicates a key. NULL keys never
+    * match, so a redelivered NULL-key row inserts again, as it always has.
+    * The probe broadcasts the batch's keys: that presumes a batch is an
+    * increment, small beside the table, which [[landingStream]]'s 64-file
+    * trigger cap keeps true. Appends fragment, so the table is compacted
+    * once it passes the default file bound ([[Compact.compactIfFragmented]]).
+    * Returns the started query (AvailableNow: drains what exists, then
+    * stops — the reference's "process what landed" run).
     */
   def upsertSink(
       df: DataFrame, store: TableStore, table: String, keys: Seq[String],
@@ -90,11 +101,18 @@ object Streams {
       .foreachBatch { (batch: DataFrame, _: Long) =>
         val deduped = graft.clean.Normalize.dedupKeep(
           batch, keys, batch.columns.filterNot(keys.contains).map(col).toSeq)
-        store.overwriteIfAbsentElse(table, deduped)(target =>
-          Upsert.merge(target, deduped, keys,
-            onDuplicate = Upsert.DuplicatePolicy.DedupDeterministic))
+        mergeAndBound(store, table, deduped, keys)
       }
       .start()
+
+  /** The sinks' one keyed commit: [[Upsert.mergeInto]] (create, append
+    * when no key matches, merge otherwise), then the file-count bound. */
+  private def mergeAndBound(store: TableStore, table: String, rows: DataFrame,
+      keys: Seq[String]): Unit = {
+    Upsert.mergeInto(store, table, rows, keys,
+      onDuplicate = Upsert.DuplicatePolicy.DedupDeterministic)
+    Compact.compactIfFragmented(store, table)
+  }
 
   /** Watermarked tumbling-window aggregation per event type — the streaming
     * form of the e1_event_hourly batch query. Watermark bounds state: windows
@@ -301,12 +319,13 @@ object Streams {
     * documents is deduped against the accumulated history via the
     * incremental MinHash path (the batch probes the band index; history is
     * never re-paired against itself), verified pairs UPSERT into
-    * `pairsTable` keyed (id_a, id_b) — a crashed-and-replayed micro-batch
-    * recomputes identical pairs and the merge rewrites them in place, so
-    * the pair table is byte-identical under replay (effectively-once,
-    * where an append sink would duplicate rows; the merge rewrite cost
-    * follows the pair table, the small near-dup-only side, not the
-    * corpus) — and the batch then joins the history so later batches
+    * `pairsTable` keyed (id_a, id_b) ([[Upsert.mergeInto]]) — a batch of
+    * all-new pairs appends and keeps every prior pair file; a
+    * crashed-and-replayed micro-batch recomputes identical pairs, finds
+    * their keys and merges over them (effectively-once, where a blind
+    * append would duplicate rows); a NULL key re-inserts as it always
+    * has; the table is compacted past the default file bound — and the
+    * batch then joins the history so later batches
     * dedup against it. The first batch self-dedups (empty base degrades
     * incremental to the plain path). Near-dup state is the HISTORY TABLE,
     * not executor state-store memory — at 100 TB the corpus can't live in
@@ -333,9 +352,7 @@ object Streams {
         val pairs = graft.ext.Dedup.minhashDedupIncremental(
             base, fresh, "doc_id", "text", threshold = threshold)
           .select(col("id_a"), col("id_b"), col("jaccard"))
-        store.overwriteIfAbsentElse(pairsTable, pairs)(target =>
-          Upsert.merge(target, pairs, Seq("id_a", "id_b"),
-            onDuplicate = Upsert.DuplicatePolicy.DedupDeterministic))
+        mergeAndBound(store, pairsTable, pairs, Seq("id_a", "id_b"))
         if (store.exists(historyTable)) store.append(historyTable, fresh)
         else store.overwrite(historyTable, fresh)
       }
@@ -357,7 +374,8 @@ object Streams {
     * ([[graft.ext.DedupIndex.knownIds]] anti-join) are dropped before the
     * increment. Verified pairs append to `pairsTable`;
     * [[graft.ext.DedupIndex.maintainIfNeeded]] runs after each batch so a
-    * long-lived stream cannot fragment its own index past `maxIndexFiles`.
+    * long-lived stream cannot fragment its own index past `maxIndexFiles`,
+    * and the pair table is compacted past the default file bound.
     *
     * Crash semantics (effectively-once): the batch's PAIRS are computed
     * by the non-mutating [[graft.ext.DedupIndex.probeIncrement]] and
@@ -392,9 +410,8 @@ object Streams {
           Seq("doc_id"), "left_anti")
         val (pairs, stage) = graft.ext.DedupIndex.probeIncrement(
           store, indexName, fresh, "doc_id", "text", threshold = threshold)
-        val out = pairs.select(col("id_a"), col("id_b"), col("jaccard"))
-        Upsert.mergeInto(store, pairsTable, out, Seq("id_a", "id_b"),
-          onDuplicate = Upsert.DuplicatePolicy.DedupDeterministic)
+        mergeAndBound(store, pairsTable,
+          pairs.select(col("id_a"), col("id_b"), col("jaccard")), Seq("id_a", "id_b"))
         graft.ext.DedupIndex.commitIncrement(store, indexName, stage)
         graft.ext.DedupIndex.maintainIfNeeded(store, indexName,
           maxFiles = maxIndexFiles)
@@ -415,9 +432,9 @@ object Streams {
     * Effectively-once per artifact, without per-batch index scans: the
     * hot path is guard → append only (each leg anti-joins its OWN
     * `knownIds` — an id can be present in one artifact and not the other
-    * inside a crash window — then appends). The guard join is STAGED to
-    * a scratch table evaluated exactly once per leg and dropped once the
-    * leg consumed it, so the leg's cost is O(batch + one narrow
+    * inside a crash window — then appends). The guard join is STAGED
+    * ([[Scratch.stage]], family `{leg}_ingest_stage`) and evaluated
+    * exactly once per leg, so the leg's cost is O(batch + one narrow
     * id-column scan) regardless of how many actions consume the fresh
     * set (the BM25 leg runs three), never O(index). Crash repair is gated behind an INTENT
     * MARKER (1-row `<intentTable>`: started/done batch ids, started
@@ -462,9 +479,21 @@ object Streams {
     * into an empty fresh set over fully-completed legs; a crash inside
     * commit leaves residue the next probe's distinct hygiene neutralizes
     * (the [[graft.ext.DedupIndex.commitIncrement]] at-least-once
-    * contract). Gate scratch tables (`{gate}_gate_fresh/_gate_kept`) are
-    * dropped once consumed; a crash leaves at most a batch-sized orphan
-    * the replay overwrites and then drops.
+    * contract).
+    *
+    * Per-batch intermediates — the gates' `{gate}_gate_fresh`,
+    * `{gate}_gate_pairs`, `{gate}_gate_kept`, `{ann}_sgate_cand`,
+    * `{ann}_sgate_pairs`, `{ann}_sgate_kept` and the legs'
+    * `{leg}_ingest_stage` — are [[Scratch.stage]] families in the scratch
+    * root, never store tables, so no store name a user picks collides with
+    * them and a crash leaves nothing in the store root. Scratch owns their
+    * lifetime: each family keeps its last `graft.scratch.keepLast`
+    * generations (one per batch) and sweeps older ones, the app-end hook
+    * removes the app's whole namespace, and [[Scratch.cleanup]] reaps a
+    * crashed app's namespace once its heartbeat is stale. The pair audit
+    * tables are keyed [[Upsert.mergeInto]] commits (an all-new batch
+    * appends, a replay merges) and are compacted after the done marker
+    * under `maxIndexFiles`, like the decision tables.
     *
     * `corpusTable` (optional) makes the sink land the CORPUS itself —
     * kept documents append to a plain row table (create it before the
@@ -697,32 +726,6 @@ object Streams {
       retireFraction)
   }
 
-  /** Tear down the SCRATCH tables a retired retrieval stack can leave
-    * behind: the semantic gate's `{ann}_sgate_cand`/`{ann}_sgate_kept`,
-    * the lexical gate's `{gate}_gate_fresh`/`{gate}_gate_kept`, and the
-    * legs' `{table}_ingest_stage` staging (one per ann/bm25/corpus leg)
-    * are store-persistent batch staging, dropped at the end of every
-    * healthy batch (or leg) but orphaned by a crash — and deliberately
-    * NOT removed by [[graft.ext.AnnIndex.dropIndex]] /
-    * [[graft.ext.DedupIndex.dropIndex]], which are scoped to the tables
-    * build/maintenance own. The SINK owns these names, so retiring a
-    * gated stack is dropIndex (each index) + this, with the same names
-    * the sink was configured with. The intent/done marker table is
-    * durable sink state, not scratch — drop it with the checkpoint
-    * directory when retiring the stream itself.
-    */
-  def dropGateScratch(store: TableStore, annIndex: Option[String] = None,
-      dedupGate: Option[String] = None, bm25Index: Option[String] = None,
-      corpusTable: Option[String] = None): Unit = {
-    val ts =
-      annIndex.toSeq.flatMap(a => Seq(s"${a}_sgate_cand", s"${a}_sgate_kept",
-        s"${a}_ingest_stage")) ++
-      dedupGate.toSeq.flatMap(g => Seq(s"${g}_gate_fresh", s"${g}_gate_kept")) ++
-      bm25Index.toSeq.map(b => s"${b}_ingest_stage") ++
-      corpusTable.toSeq.map(c => s"${c}_ingest_stage")
-    ts.foreach(t => if (store.exists(t)) store.drop(t))
-  }
-
   def retrievalIngestSink(docs: DataFrame, store: TableStore, idCol: String,
       checkpoint: String,
       annIndex: Option[String] = None, vecCol: String = "embedding",
@@ -794,12 +797,9 @@ object Streams {
         val (input, gateCommit): (DataFrame, () => Unit) = dedupGate match {
           case None => (b, () => ())
           case Some(g) =>
-            val freshT = s"${g}_gate_fresh"
-            val keptT = s"${g}_gate_kept"
-            store.overwrite(freshT, b.join(
+            val freshG = Scratch.stage(b.join(
               graft.ext.DedupIndex.knownIds(store, g, idCol),
-              Seq(idCol), "left_anti"))
-            val freshG = store.read(freshT)
+              Seq(idCol), "left_anti"), s"${g}_gate_fresh")
             // with a cap POLICY the probe cap composes BOTH bounds: the
             // stored policy (tightens once the bell rings) and
             // gateBucketCap as a STATIC pre-ring safety bound (0 /
@@ -822,14 +822,11 @@ object Streams {
             // staged once: the audit upsert and the drop resolution are
             // separate actions, and the verified-pairs plan (jaccard join
             // over the candidate set) must not run per consumer
-            val pairs = graft.tables.Scratch.stage(
+            val pairs = Scratch.stage(
               pairs0.select(col("id_a"), col("id_b"), col("jaccard")),
               s"${g}_gate_pairs")
-            gatePairsTable.foreach { pt =>
-              store.overwriteIfAbsentElse(pt, pairs)(target =>
-                Upsert.merge(target, pairs, Seq("id_a", "id_b"),
-                  onDuplicate = Upsert.DuplicatePolicy.DedupDeterministic))
-            }
+            gatePairsTable.foreach(pt => Upsert.mergeInto(store, pt, pairs,
+              Seq("id_a", "id_b"), onDuplicate = Upsert.DuplicatePolicy.DedupDeterministic))
             // greedy arrival-order resolution: drop x when it pairs with
             // an already-indexed partner (any id) or an earlier-id fresh
             // partner — exactly the outcome of the docs arriving one at a
@@ -841,26 +838,21 @@ object Streams {
                 Seq("y"), "left")
               .filter(col("_yfresh").isNull || col("y") < col("x"))
               .select(col("x").as(idCol)).distinct()
-            store.overwrite(keptT, freshG.join(dropIds, Seq(idCol), "left_anti"))
-            store.drop(freshT)
-            (store.read(keptT), () => {
-              graft.ext.DedupIndex.commitIncrement(store, g, incStage)
-              store.drop(keptT)
-            })
+            (Scratch.stage(freshG.join(dropIds, Seq(idCol), "left_anti"),
+              s"${g}_gate_kept"),
+              () => graft.ext.DedupIndex.commitIncrement(store, g, incStage))
         }
         // semantic gate: ADC shortlist from the durable ANN index, exact
         // cosine confirm against the ADMITTED corpus, greedy earlier-id
         // resolution within the batch (see scaladoc); reads only — every
         // mutation happens in the legs below
-        val (input2, sgateCleanup): (DataFrame, () => Unit) =
+        val input2 =
           semanticGateThreshold match {
-            case None => (input, () => ())
+            case None => input
             case Some(tau) =>
               import graft.ext.{AnnIndex, Similarity}
               val ann = annIndex.get
               val corpus = store.read(corpusTable.get)
-              val candT = s"${ann}_sgate_cand"
-              val keptT = s"${ann}_sgate_kept"
               // already-admitted docs skip the gate (they were kept once;
               // the legs' own guards handle their re-delivery) — but
               // admitted docs REAPPEARING IN THIS BATCH ride along
@@ -870,13 +862,13 @@ object Streams {
               // replayed batch-mates even before the ANN leg has indexed
               // it (candidate proposal alone would miss a corpus row
               // absent from the ANN index)
-              store.overwrite(candT,
+              val side = Scratch.stage(
                 input.join(corpus.select(col(idCol)), Seq(idCol), "left_anti")
                   .select(col(idCol), col(vecCol), lit(false).as("_adm"))
                   .unionByName(
                     corpus.join(b.select(col(idCol)), Seq(idCol), "left_semi")
-                      .select(col(idCol), col(vecCol), lit(true).as("_adm"))))
-              val side = store.read(candT)
+                      .select(col(idCol), col(vecCol), lit(true).as("_adm"))),
+                s"${ann}_sgate_cand")
               val cand = side.filter(!col("_adm")).drop("_adm")
               val st = side.agg(count(lit(1)),
                 max(size(col(vecCol)))).collect()(0)
@@ -997,18 +989,13 @@ object Streams {
                 }
               // staged once: the audit upsert and the drop resolution must
               // not each re-run the shortlist+confirm pipeline
-              val pairs = graft.tables.Scratch.stage(
+              val pairs = Scratch.stage(
                 corpusPairs.unionByName(batchPairs), s"${ann}_sgate_pairs")
-              semanticGatePairsTable.foreach { pt =>
-                store.overwriteIfAbsentElse(pt, pairs)(target =>
-                  Upsert.merge(target, pairs, Seq("id_a", "id_b"),
-                    onDuplicate = Upsert.DuplicatePolicy.DedupDeterministic))
-              }
-              store.overwrite(keptT, input.join(
+              semanticGatePairsTable.foreach(pt => Upsert.mergeInto(store, pt, pairs,
+                Seq("id_a", "id_b"), onDuplicate = Upsert.DuplicatePolicy.DedupDeterministic))
+              Scratch.stage(input.join(
                 pairs.select(col("id_b").as(idCol)).distinct(),
-                Seq(idCol), "left_anti"))
-              store.drop(candT)
-              (store.read(keptT), () => store.drop(keptT))
+                Seq(idCol), "left_anti"), s"${ann}_sgate_kept")
           }
         // corpus leg FIRST: the semantic gate's next-batch memory is the
         // admitted corpus, and exact confirm must find a kept doc's
@@ -1025,19 +1012,14 @@ object Streams {
           }
         }
         // stage the guard's anti-join ONCE per leg (batch-sized,
-        // disk-backed) and hand consumers the read-back: the empty probe
-        // plus one or two appends would otherwise re-run the dedup window
-        // and knownIds anti-join per action, and the repair path must
-        // never read a table it is about to mutate. The stage table is
-        // scratch — dropped as soon as the leg consumed it (a crash
-        // before the drop leaves a batch-sized orphan that the replay
-        // overwrites and then drops)
-        def withFresh(fresh0: DataFrame, n: String)(use: DataFrame => Unit): Unit = {
-          val stageT = s"${n}_ingest_stage"
-          store.overwrite(stageT, fresh0)
-          try use(store.read(stageT))
-          finally store.drop(stageT)
-        }
+        // disk-backed, a Scratch stage) and hand consumers the
+        // read-back: the empty probe plus one or two appends would
+        // otherwise re-run the dedup window and knownIds anti-join per
+        // action, and the repair path must never read a table it is about
+        // to mutate. The stage lives in the scratch root, never in the
+        // store, and Scratch reclaims it (see the scaladoc)
+        def withFresh(fresh0: DataFrame, n: String)(use: DataFrame => Unit): Unit =
+          use(Scratch.stage(fresh0, s"${n}_ingest_stage"))
         annIndex.foreach { n =>
           withFresh(input2.join(graft.ext.AnnIndex.knownIds(store, n, idCol),
               Seq(idCol), "left_anti"), n) { fresh =>
@@ -1065,7 +1047,6 @@ object Streams {
         // gate commit BEFORE the done marker: a crash in between replays
         // into an empty fresh set over fully-completed legs (see scaladoc)
         gateCommit()
-        sgateCleanup()
         store.overwrite(intentT,
           Seq((bid, bid)).toDF("started_batch", "done_batch"))
         // retrain policy runs AFTER the done marker for the same reason
@@ -1152,23 +1133,19 @@ object Streams {
           graft.ext.Bm25.maintainIfNeeded(store, n, maxFiles = maxIndexFiles))
         dedupGate.foreach(g =>
           graft.ext.DedupIndex.maintainIfNeeded(store, g, maxFiles = maxIndexFiles))
-        corpusTable.foreach(ct =>
-          graft.tables.Compact.compactIfFragmented(store, ct,
-            maxFiles = maxIndexFiles))
-        // the policy audit tables append ONE ROW PER CADENCE-BATCH forever
-        // — months of per-minute micro-batches make them the classic
-        // small-files trap on exactly the table an operator reads when
-        // paged. Same trigger, same bound, same post-marker safety as the
-        // index tables (compaction is content-neutral)
-        rebuildPolicy.flatMap(_.decisionTable).foreach(dt =>
-          graft.tables.Compact.compactIfFragmented(store, dt,
-            maxFiles = maxIndexFiles))
-        gateCapPolicy.flatMap(_.decisionTable).foreach(dt =>
-          graft.tables.Compact.compactIfFragmented(store, dt,
-            maxFiles = maxIndexFiles))
-        bm25CapPolicy.flatMap(_.decisionTable).foreach(dt =>
-          graft.tables.Compact.compactIfFragmented(store, dt,
-            maxFiles = maxIndexFiles))
+        // the corpus, the two pair audit tables (an all-new batch's pairs
+        // append, and an empty pair set still lands a footer-only file)
+        // and the policy audit tables, which append ONE ROW PER
+        // CADENCE-BATCH forever — months of per-minute micro-batches make
+        // them the classic small-files trap on exactly the table an
+        // operator reads when paged. Same trigger, same bound, same
+        // post-marker safety as the index tables (compaction is
+        // content-neutral)
+        (corpusTable ++ gatePairsTable ++ semanticGatePairsTable ++
+          rebuildPolicy.flatMap(_.decisionTable) ++
+          gateCapPolicy.flatMap(_.decisionTable) ++
+          bm25CapPolicy.flatMap(_.decisionTable)).foreach(t =>
+          Compact.compactIfFragmented(store, t, maxFiles = maxIndexFiles))
         ()
       }
       .start()
@@ -1179,10 +1156,13 @@ object Streams {
     * (term, weight) table via [[graft.ext.TextAnalysis.linearScore]]
     * (broadcast join + decimal mean pool — batch semantics inside
     * foreachBatch, so the exact same arithmetic as the batch gate), keeps
-    * documents with score > `cut`, and UPSERTS them by `idCol` — replay-
-    * idempotent like the other sinks. The weight table is a plain
-    * DataFrame: re-deploying a retrained model is swapping the table, not
-    * the stream.
+    * documents with score > `cut`, and UPSERTS them by `idCol`
+    * ([[Upsert.mergeInto]], replay-idempotent like the other sinks): a
+    * batch of all-new ids appends and keeps every prior file, a replayed
+    * batch finds its ids and merges, and a NULL id re-inserts as it always
+    * has. The table is compacted past the default file bound. The weight
+    * table is a plain DataFrame: re-deploying a retrained model is
+    * swapping the table, not the stream.
     */
   def scoredUpsertSink(
       docs: DataFrame, store: TableStore, table: String, idCol: String,
@@ -1199,9 +1179,7 @@ object Streams {
           .linearScore(b, idCol, textCol, weights, bias = bias)
           .filter(col("score") > cut)
           .join(b, Seq(idCol))
-        store.overwriteIfAbsentElse(table, kept)(target =>
-          Upsert.merge(target, kept, Seq(idCol),
-            onDuplicate = Upsert.DuplicatePolicy.DedupDeterministic))
+        mergeAndBound(store, table, kept, Seq(idCol))
       }
       .start()
 
@@ -1210,8 +1188,13 @@ object Streams {
     * [[graft.tables.Expectations]] rules (strict NULL-is-violation
     * semantics, one pass); clean rows UPSERT into `table` and violating
     * rows — carrying their `_violations` reasons — UPSERT into
-    * `quarantineTable`, both keyed by `keys`, so micro-batch replay is
-    * idempotent. The quarantine is an AUDIT of violations seen per key: a
+    * `quarantineTable`, both keyed by `keys` ([[Upsert.mergeInto]]): a
+    * batch of all-new keys appends to each table and keeps its prior
+    * files, a replayed batch finds its keys and merges, so micro-batch
+    * replay is idempotent, and NULL keys re-insert as they always have.
+    * Both tables are compacted past the default file bound (an empty
+    * clean or quarantine set still appends a footer-only file). The
+    * quarantine is an AUDIT of violations seen per key: a
     * later redelivery of a FIXED row upserts into the clean table but
     * does not retract its quarantine row (triage owns that), which is the
     * DLT quarantine convention — quality history must not silently
@@ -1229,12 +1212,8 @@ object Streams {
         val b = graft.clean.Normalize.dedupKeep(
           batch, keys, batch.columns.filterNot(keys.contains).map(col).toSeq)
         val (clean, bad) = graft.tables.Expectations.split(b, rules)
-        store.overwriteIfAbsentElse(table, clean)(t =>
-          Upsert.merge(t, clean, keys,
-            onDuplicate = Upsert.DuplicatePolicy.DedupDeterministic))
-        store.overwriteIfAbsentElse(quarantineTable, bad)(t =>
-          Upsert.merge(t, bad, keys,
-            onDuplicate = Upsert.DuplicatePolicy.DedupDeterministic))
+        mergeAndBound(store, table, clean, keys)
+        mergeAndBound(store, quarantineTable, bad, keys)
       }
       .start()
 

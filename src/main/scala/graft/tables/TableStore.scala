@@ -482,7 +482,12 @@ final class TableStore(spark: SparkSession, root: String) {
   def drop(name: String): Unit = fs.delete(new Path(path(name)), true)
 
   /** Create-or-merge decision support (reference S18:
-    * `spark.catalog.tableExists`, 1_full_load_fact:155).
+    * `spark.catalog.tableExists`, 1_full_load_fact:155): create `name`
+    * from `df`, or overwrite it with `merge` of its current rows — a full
+    * rewrite every call. No program sink uses it: keyed sinks call
+    * [[Upsert.mergeInto]], which appends when no key matches. It stays
+    * for the benchmark's `crawl_dedup` op (perfbench), which upserts its
+    * pairs through it.
     */
   def overwriteIfAbsentElse(name: String, df: DataFrame)(merge: DataFrame => DataFrame): Unit =
     if (!exists(name)) overwrite(name, df)

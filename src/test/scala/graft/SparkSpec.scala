@@ -25,6 +25,14 @@ trait SparkSpec extends AnyFunSuite {
       jobs.get()
     } finally spark.sparkContext.removeSparkListener(listener)
   }
+
+  /** The table dirs a reader of `store` can see: every directory in its
+    * root except the `.`-prefixed stage and swap dirs. */
+  def storeTables(store: graft.tables.TableStore): Set[String] = {
+    val root = new org.apache.hadoop.fs.Path(store.path(""))
+    root.getFileSystem(spark.sparkContext.hadoopConfiguration).listStatus(root)
+      .filter(_.isDirectory).map(_.getPath.getName).filterNot(_.startsWith(".")).toSet
+  }
 }
 
 object SparkSpec {

@@ -17,6 +17,26 @@ class StreamsSpec extends SparkSpec {
 
   private def ts(s: String) = Timestamp.valueOf(s)
 
+  /** The parquet data files of `table`, by name. */
+  private def dataFiles(store: TableStore, table: String): Set[String] = {
+    val p = new org.apache.hadoop.fs.Path(store.path(table))
+    p.getFileSystem(spark.sparkContext.hadoopConfiguration).listStatus(p)
+      .map(_.getPath.getName).filter(_.endsWith(".parquet")).toSet
+  }
+
+  /** The tables of an index that a sink has appended to, by kind. */
+  private def annTables(n: String) =
+    Set("centroids", "centers", "books", "codes", "drift", "csizes").map(t => s"${n}_$t")
+  private def bm25Tables(n: String) = Set("postings", "doclen", "stats").map(t => s"${n}_$t")
+  private def gateTables(n: String) = Set("bands", "shingles", "sizes").map(t => s"${n}_$t")
+
+  /** The marker of the renames that publish `table`'s first stage in a
+    * fresh store: each staged file moves from directly under its
+    * generation dir, where the stage write's own commit renames come from
+    * its `_temporary` dir. */
+  private def firstPublish(table: String): String =
+    s"/.publish/$table/${spark.sparkContext.applicationId}_g1/part-"
+
   test("eventWindowAgg: tumbling windows with watermark (memory sink)") {
     implicit val sc = spark.sqlContext
     val in = MemoryStream[Streams.Event]
@@ -497,6 +517,40 @@ class StreamsSpec extends SparkSpec {
       .head().getAs[Double]("order_qty") === 12.0)
   }
 
+  test("upsertSink: a batch that dies inside mergeInto's publish replays from its checkpoint to a clean delivery's rows") {
+    graft.FaultFs.install(spark)
+    val dir = Files.createTempDirectory("graft_usf_landing").toString
+    val ckpt = Files.createTempDirectory("graft_usf_ckpt").toString
+    val store = new TableStore(spark,
+      graft.FaultFs.root(Files.createTempDirectory("graft_usf_store").toString))
+    val keys = Seq("order_id", "product_id")
+    def drain(st: TableStore, ck: String): Unit = Streams.upsertSink(
+      Streams.landingStream(spark, dir, Star.rawOrders), st, "orders_live", keys, ck)
+      .awaitTermination()
+    val header = "order_id,order_placement_date,customer_id,product_id,order_qty\n"
+    Files.writeString(java.nio.file.Paths.get(s"$dir/orders_1.csv"), header +
+      "ORD001,01-12-2025,789401,25891101,10\nORD002,01-12-2025,789402,25891102,5\n")
+    drain(store, ckpt)
+    // batch 2 holds only new keys, so mergeInto publishes its stage, and
+    // the publish dies at its first rename
+    Files.writeString(java.nio.file.Paths.get(s"$dir/orders_2.csv"), header +
+      "ORD003,02-12-2025,789403,25891103,3\nORD004,02-12-2025,789404,25891104,7\n")
+    graft.FaultFs.failRename(0, firstPublish("orders_live"))
+    intercept[org.apache.spark.sql.streaming.StreamingQueryException](drain(store, ckpt))
+    assert(graft.FaultFs.disarm(), "the injected rename fault never fired")
+    assert(store.read("orders_live").count() === 2)
+
+    // the restart replays batch 2 from the same checkpoint
+    drain(store, ckpt)
+    val clean = new TableStore(spark, Files.createTempDirectory("graft_usf_ref").toString)
+    drain(clean, Files.createTempDirectory("graft_usf_ref_ckpt").toString)
+    def rows(st: TableStore) = st.read("orders_live").collect().map(_.toString).sorted.toSeq
+    assert(rows(store) === rows(clean))
+    assert(rows(store).size === 4)
+    assert(store.read("orders_live").groupBy(keys.map(col): _*).count()
+      .filter(col("count") > 1).isEmpty, "the replay duplicated a key")
+  }
+
   test("nearDupSink: micro-batches near-dup against accumulated history, re-deliveries ignored") {
     val dir = Files.createTempDirectory("graft_nd_landing").toString
     val ckpt = Files.createTempDirectory("graft_nd_ckpt").toString
@@ -529,6 +583,19 @@ class StreamsSpec extends SparkSpec {
       .map(r => (r.getAs[Long]("id_a"), r.getAs[Long]("id_b")))
     assert(pairs.toSeq === Seq((1L, 3L)))
     assert(store.read("nd_history").count() === 4) // re-delivered doc 1 not duplicated
+
+    // batch 3: a verbatim copy of doc 4, so its one pair is new — it
+    // appends, and every prior pair file stays in place
+    val filesBefore = dataFiles(store, "nd_pairs")
+    Files.writeString(java.nio.file.Paths.get(s"$dir/b3.json"),
+      s"""{"doc_id":5,"text":"red orange yellow green blue indigo violet pink brown black"}
+         |""".stripMargin)
+    drain()
+    val pairs3 = store.read("nd_pairs").collect()
+      .map(r => (r.getAs[Long]("id_a"), r.getAs[Long]("id_b"))).toSet
+    assert(pairs3 === Set((1L, 3L), (4L, 5L)))
+    assert(filesBefore.subsetOf(dataFiles(store, "nd_pairs")),
+      "a batch of only new pairs must keep every prior pair file")
   }
 
   test("indexedNearDupSink: durable-index streaming dedup, re-deliveries ignored, index grows per batch") {
@@ -705,12 +772,7 @@ class StreamsSpec extends SparkSpec {
 
     // a batch whose pairs are all new appends them: every prior data file
     // of the pair table stays in place
-    def pairFiles = {
-      val p = new org.apache.hadoop.fs.Path(store.path("fx_pairs"))
-      p.getFileSystem(spark.sparkContext.hadoopConfiguration).listStatus(p)
-        .map(_.getPath.getName).filter(_.endsWith(".parquet")).toSet
-    }
-    val filesBefore = pairFiles
+    val filesBefore = dataFiles(store, "fx_pairs")
     Files.writeString(java.nio.file.Paths.get(s"$dir/b2.json"), Seq(3, 7).map { i =>
       val t = doc(i).replaceFirst(" [a-z]+[0-9]$", " zzz")
       s"""{"doc_id":${400 + i},"text":"$t"}"""
@@ -722,7 +784,7 @@ class StreamsSpec extends SparkSpec {
     assert(got.toSet.subsetOf(got2) && (got2 -- got).nonEmpty &&
       (got2 -- got).forall { case (a, b) => a >= 400 || b >= 400 },
       s"fixture: the second batch must add only new pairs: ${got2 -- got}")
-    assert(filesBefore.subsetOf(pairFiles),
+    assert(filesBefore.subsetOf(dataFiles(store, "fx_pairs")),
       "a batch of only new pairs must keep every prior pair file")
   }
 
@@ -809,6 +871,17 @@ class StreamsSpec extends SparkSpec {
     // full replay under a fresh checkpoint: table unchanged (upsert by id)
     drain(Files.createTempDirectory("graft_sc_ckpt2").toString)
     assert(store.read("gated").collect().map(_.getAs[Long]("doc_id")).toSeq === Seq(1L))
+    // a batch of only new ids appends: every prior file stays in place
+    val filesBefore = dataFiles(store, "gated")
+    Files.writeString(java.nio.file.Paths.get(s"$dir/b2.json"),
+      s"""{"doc_id":4,"text":"good good good"}
+         |{"doc_id":5,"text":"bad words"}
+         |""".stripMargin)
+    drain(ckpt)
+    assert(store.read("gated").collect().map(_.getAs[Long]("doc_id")).sorted.toSeq
+      === Seq(1L, 4L))
+    assert(filesBefore.subsetOf(dataFiles(store, "gated")),
+      "a batch of only new ids must keep every prior file")
   }
 
   test("expectationsSink: per-batch quarantine with reasons; fixed redelivery upserts clean") {
@@ -843,6 +916,52 @@ class StreamsSpec extends SparkSpec {
     assert(store.read("exp_clean").collect().map(_.getAs[Long]("doc_id")).sorted.toSeq
       === Seq(1L, 2L))
     assert(store.read("exp_quar").count() === 2)
+  }
+
+  test("expectationsSink: a batch that dies inside the quarantine publish replays to a clean delivery's rows") {
+    graft.FaultFs.install(spark)
+    val dir = Files.createTempDirectory("graft_exf_landing").toString
+    val ckpt = Files.createTempDirectory("graft_exf_ckpt").toString
+    val store = new TableStore(spark,
+      graft.FaultFs.root(Files.createTempDirectory("graft_exf_store").toString))
+    val schema = org.apache.spark.sql.types.StructType(Seq(
+      org.apache.spark.sql.types.StructField("doc_id", org.apache.spark.sql.types.LongType),
+      org.apache.spark.sql.types.StructField("n", org.apache.spark.sql.types.LongType)))
+    val rules = Seq(graft.tables.Expectations.Rule("n_positive", col("n") > 0))
+    def drain(st: TableStore, ck: String): Unit = Streams.expectationsSink(
+      spark.readStream.format("json").schema(schema).load(dir),
+      st, "exp_clean", "exp_quar", Seq("doc_id"), rules, ck).awaitTermination()
+
+    Files.writeString(java.nio.file.Paths.get(s"$dir/b1.json"),
+      s"""{"doc_id":1,"n":5}
+         |{"doc_id":2,"n":-1}
+         |""".stripMargin)
+    drain(store, ckpt)
+    // batch 2: new keys on both sides, so both tables publish; the clean
+    // publish lands and the quarantine publish dies at its first rename
+    Files.writeString(java.nio.file.Paths.get(s"$dir/b2.json"),
+      s"""{"doc_id":3,"n":7}
+         |{"doc_id":4,"n":-2}
+         |{"doc_id":5}
+         |""".stripMargin)
+    graft.FaultFs.failRename(0, firstPublish("exp_quar"))
+    intercept[org.apache.spark.sql.streaming.StreamingQueryException](drain(store, ckpt))
+    assert(graft.FaultFs.disarm(), "the injected rename fault never fired")
+    assert(store.read("exp_clean").count() === 2 && store.read("exp_quar").count() === 1,
+      "the crash state: the clean publish landed, the quarantine publish did not")
+
+    // the replay finds the clean keys already there and merges over them
+    drain(store, ckpt)
+    val clean = new TableStore(spark, Files.createTempDirectory("graft_exf_ref").toString)
+    drain(clean, Files.createTempDirectory("graft_exf_ref_ckpt").toString)
+    def rows(st: TableStore, t: String) =
+      st.read(t).collect().map(_.toString).sorted.toSeq
+    Seq("exp_clean", "exp_quar").foreach { t =>
+      assert(rows(store, t) === rows(clean, t), t)
+      assert(store.read(t).groupBy(col("doc_id")).count()
+        .filter(col("count") > 1).isEmpty, s"the replay duplicated a key of $t")
+    }
+    assert(rows(store, "exp_clean").size === 2 && rows(store, "exp_quar").size === 3)
   }
 
   test("anomalyStream skips values outside the DECIMAL(18,2) domain instead of dying") {
@@ -981,10 +1100,80 @@ class StreamsSpec extends SparkSpec {
     // the marker closed: started == done == the last batch id
     val m = store.read("ri_ann_ingest_intent").collect()(0)
     assert(m.getLong(0) === m.getLong(1))
-    // scratch staging dropped once consumed — neither the repair replay
-    // (batch 1) nor the fast path (batch 2) leaves an orphan stage table
-    assert(!store.exists("ri_ann_ingest_stage"))
-    assert(!store.exists("ri_bm_ingest_stage"))
+    // neither the repair replay (batch 1) nor the fast path (batch 2)
+    // leaves a table beyond the indexes, the reference and the marker
+    assert(storeTables(store) === annTables("ri_ann") ++ bm25Tables("ri_bm") ++
+      bm25Tables("ri_bm_ref") + "ri_ann_ingest_intent")
+  }
+
+  test("retrievalIngestSink: a batch that dies inside its BM25 leg leaves only the sink's tables in the store, and the replay repairs") {
+    import graft.ext.{AnnIndex, Bm25, DedupIndex}
+    graft.FaultFs.install(spark)
+    val dir = Files.createTempDirectory("graft_lc_landing").toString
+    val ckpt = Files.createTempDirectory("graft_lc_ckpt").toString
+    val store = new TableStore(spark,
+      graft.FaultFs.root(Files.createTempDirectory("graft_lc_store").toString))
+    def vec(base: Int, i: Int): Seq[Float] =
+      (0 until 16).map { d =>
+        val on = d >= base && d < base + 4
+        if (on) 1.0f + 0.01f * ((i * 7 + d) % 5) else 0.001f * ((i * 3 + d) % 7)
+      }
+    def text(i: Long) = s"alpha$i spark beta$i table gamma$i merge delta$i"
+    def doc(i: Long, t: String) = (i, t, vec(if (i % 2 == 1) 0 else 8, i.toInt))
+    val base = (1L to 12L).map(i => doc(i, text(i)))
+    val baseDf = base.toDF("doc_id", "text", "embedding")
+    AnnIndex.build(store, "lc_ann", baseDf, "doc_id", "embedding",
+      dim = 16, nlist = 2, m = 4, k = 4)
+    Bm25.buildIndex(store, "lc_bm", baseDf, "doc_id", "text")
+    DedupIndex.build(store, "lc_gate", baseDf, "doc_id", "text")
+
+    val schema = org.apache.spark.sql.types.StructType(Seq(
+      org.apache.spark.sql.types.StructField("doc_id", org.apache.spark.sql.types.LongType),
+      org.apache.spark.sql.types.StructField("text", org.apache.spark.sql.types.StringType),
+      org.apache.spark.sql.types.StructField("embedding",
+        org.apache.spark.sql.types.ArrayType(org.apache.spark.sql.types.FloatType))))
+    def row(d: (Long, String, Seq[Float])) =
+      s"""{"doc_id":${d._1},"text":"${d._2}","embedding":[${d._3.mkString(",")}]}"""
+    def drain(): Unit = Streams.retrievalIngestSink(
+      spark.readStream.format("json").schema(schema).load(dir),
+      store, "doc_id", ckpt,
+      annIndex = Some("lc_ann"), bm25Index = Some("lc_bm"),
+      dedupGate = Some("lc_gate"), gatePairsTable = Some("lc_pairs"))
+      .awaitTermination()
+
+    // 13-16 are novel, 17 copies an indexed doc's text and is gated out.
+    // The BM25 leg dies committing its doclen append, after its postings
+    // landed: the ANN leg is done, the gate commit and the done marker
+    // never ran
+    val b1 = (13L to 16L).map(i => doc(i, text(i))) :+ doc(17L, text(1))
+    Files.writeString(java.nio.file.Paths.get(s"$dir/b1.json"),
+      b1.map(row).mkString("\n"))
+    graft.FaultFs.failRename(0, "lc_bm_doclen/")
+    intercept[org.apache.spark.sql.streaming.StreamingQueryException](drain())
+    assert(graft.FaultFs.disarm(), "the injected rename fault never fired")
+    val sinkTables = annTables("lc_ann") ++ bm25Tables("lc_bm") ++ gateTables("lc_gate") ++
+      Set("lc_ann_ingest_intent", "lc_pairs")
+    assert(storeTables(store) === sinkTables)
+    assert(store.read("lc_bm_postings").filter(col("doc_id") === 13L).count() > 0,
+      "fixture: the crash must leave the leg half done")
+
+    // the restart replays the batch down the repair path
+    drain()
+    val keptIds = (1L to 16L).toSet
+    assert(AnnIndex.knownIds(store, "lc_ann", "doc_id").as[Long].collect().toSet === keptIds)
+    assert(Bm25.knownIds(store, "lc_bm", "doc_id").as[Long].collect().toSet === keptIds)
+    assert(DedupIndex.knownIds(store, "lc_gate", "doc_id").as[Long].collect().toSet ===
+      keptIds + 17L)
+    val ref = new TableStore(spark, Files.createTempDirectory("graft_lc_ref").toString)
+    Bm25.buildIndex(ref, "lc_bm", (base ++ (13L to 16L).map(i => doc(i, text(i))))
+      .toDF("doc_id", "text", "embedding"), "doc_id", "text")
+    def bmRes(st: TableStore) = Bm25.searchIndex(st, "lc_bm", "doc_id",
+        Seq("spark", "merge"), topK = 16)
+      .collect().map(r => (r.getLong(0), r.getDouble(1), r.getInt(2))).toSeq
+    assert(bmRes(store) === bmRes(ref))
+    val m = store.read("lc_ann_ingest_intent").collect()(0)
+    assert(m.getLong(0) === m.getLong(1))
+    assert(storeTables(store) === sinkTables)
   }
 
   test("retrievalIngestSink + rebuildIfDrifted: the per-batch clapper cadence — drifted batch rings, rebuild mid-stream, next batch appends against the fresh artifacts") {
@@ -1063,31 +1252,8 @@ class StreamsSpec extends SparkSpec {
     // marker closed, no stage orphans — the rebuild composed cleanly
     val m = store.read("rb_ann_ingest_intent").collect()(0)
     assert(m.getLong(0) === m.getLong(1))
-    assert(!store.exists("rb_ann_ingest_stage"))
-  }
-
-  test("dropGateScratch: retiring a gated stack removes crash-orphaned gate scratch; absent tables are a no-op") {
-    val store = new TableStore(spark,
-      Files.createTempDirectory("graft_dgs_store").toString)
-    // a crashed batch's orphans, planted directly (the sink drops these
-    // at the end of every HEALTHY batch or leg — only a crash leaves
-    // them): gate staging AND the legs' ingest staging
-    val orphans = Seq("xann_sgate_cand", "xann_sgate_kept",
-      "xg_gate_fresh", "xg_gate_kept", "xann_ingest_stage",
-      "xbm_ingest_stage", "xcorp_ingest_stage")
-    orphans.foreach(t =>
-      store.overwrite(t, Seq((1L, "x")).toDF("doc_id", "text")))
-    // an unrelated neighbor sharing the prefix must survive
-    store.overwrite("xann_codes", Seq((1L, 2L)).toDF("doc_id", "cluster"))
-    Streams.dropGateScratch(store, annIndex = Some("xann"),
-      dedupGate = Some("xg"), bm25Index = Some("xbm"),
-      corpusTable = Some("xcorp"))
-    orphans.foreach(t => assert(!store.exists(t), s"$t survived"))
-    assert(store.exists("xann_codes"))
-    // idempotent on an already-clean store
-    Streams.dropGateScratch(store, Some("xann"), Some("xg"), Some("xbm"),
-      Some("xcorp"))
-    assert(store.exists("xann_codes"))
+    assert(storeTables(store) ===
+      annTables("rb_ann") + "rb_corpus" + "rb_ann_ingest_intent")
   }
 
   test("retrievalIngestSink rebuildPolicy: a mid-stream flood rings the collapse bell INSIDE the sink; the rearm guard holds across batches") {
@@ -1171,7 +1337,8 @@ class StreamsSpec extends SparkSpec {
     assert(AnnIndex.knownIds(store, "rbp_ann", "doc_id")
       .as[Long].collect().toSet ===
       ((1L to 56L) ++ (101L to 116L)).toSet)
-    assert(!store.exists("rbp_ann_ingest_stage"))
+    assert(storeTables(store) === annTables("rbp_ann") ++
+      Set("rbp_ann_geom_base", "rbp_corpus", "rbp_dec", "rbp_ann_ingest_intent"))
   }
 
   test("retrievalIngestSink rebuildPolicy: the DRIFT bell rings through the sink flag too — orthogonal-family batch rebuilds, in-distribution follow-up declines") {
@@ -1409,9 +1576,9 @@ class StreamsSpec extends SparkSpec {
     assert(DedupIndex.knownIds(store, "rg_gate", "doc_id")
       .as[Long].collect().toSet === (1L to 12L).toSet ++ Set(17L, 18L, 19L, 21L, 23L))
 
-    // gate scratch staging never leaks
-    assert(!store.exists("rg_gate_gate_fresh"))
-    assert(!store.exists("rg_gate_gate_kept"))
+    // gate scratch never lands in the store
+    assert(storeTables(store) === annTables("rg_ann") ++ bm25Tables("rg_bm") ++
+      bm25Tables("rg_bm_ref") ++ gateTables("rg_gate") + "rg_pairs" + "rg_ann_ingest_intent")
     // the marker closed
     val m = store.read("rg_ann_ingest_intent").collect()(0)
     assert(m.getLong(0) === m.getLong(1))
@@ -1512,11 +1679,11 @@ class StreamsSpec extends SparkSpec {
     // the novel doc landed through the legs as usual
     assert(Bm25.knownIds(store, "gcp_bm", "doc_id")
       .as[Long].collect().toSet === (1L to 6L).toSet ++ Set(101L, 120L, 300L))
-    // marker closed, no gate-scratch orphans
+    // marker closed, no gate scratch in the store
     val m = store.read("gcp_bm_ingest_intent").collect()(0)
     assert(m.getLong(0) === m.getLong(1))
-    assert(!store.exists("gcp_gate_gate_fresh"))
-    assert(!store.exists("gcp_gate_gate_kept"))
+    assert(storeTables(store) === bm25Tables("gcp_bm") ++ gateTables("gcp_gate") ++
+      Set("gcp_gate_hh_sketch", "gcp_gate_health_cache", "gcp_dec", "gcp_bm_ingest_intent"))
   }
 
   test("retrievalIngestSink bm25CapPolicy: a shared-vocabulary flood rings the hot-term bell through the sink flag, searches prune through the stored policy, takedown + retireFraction un-rings it") {
@@ -1699,9 +1866,9 @@ class StreamsSpec extends SparkSpec {
       .select(col("id_a").cast("long"), col("id_b").cast("long"))
       .as[(Long, Long)].collect().toSet
     assert(Set((3L, 17L), (19L, 21L), (19L, 23L)).subsetOf(sgPairs))
-    // gate scratch never leaks
-    assert(!store.exists("sg_ann_sgate_cand"))
-    assert(!store.exists("sg_ann_sgate_kept"))
+    // gate scratch never lands in the store
+    assert(storeTables(store) === annTables("sg_ann") ++ bm25Tables("sg_bm") ++
+      Set("sg_pairs", "sg_corpus", "sg_ann_ingest_intent"))
   }
 
   test("retrievalIngestSink semanticGate: replay condemns via corpus rows the crashed ANN leg never indexed (both orientations, exact + LSH paths)") {
@@ -1769,8 +1936,8 @@ class StreamsSpec extends SparkSpec {
       assert(!pairs.exists(_._2 == 999L), s"999 condemned ($tag)")
       val m = store.read(s"${tag}_ann_ingest_intent").collect()(0)
       assert(m.getLong(0) === m.getLong(1))
-      assert(!store.exists(s"${tag}_ann_sgate_cand"))
-      assert(!store.exists(s"${tag}_ann_sgate_kept"))
+      assert(storeTables(store) === annTables(s"${tag}_ann") ++
+        Set(s"${tag}_pairs", s"${tag}_corpus", s"${tag}_ann_ingest_intent"), tag)
     }
   }
 
