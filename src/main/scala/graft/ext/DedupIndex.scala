@@ -323,10 +323,10 @@ object DedupIndex {
       idCol: String, textCol: String, n: Int = 3, k: Int = 12, bands: Int = 3,
       threshold: Double = 0.8, bucketCap: Int = Int.MaxValue,
       digest: Boolean = false, broadcastCandBytes: Long = 8L << 20): DataFrame = {
-    val (pairs, stage) = probeIncrement(store, name, inc, idCol, textCol, n, k,
+    val (verified, stage) = probe(store, name, inc, idCol, textCol, n, k,
       bands, threshold, bucketCap, digest, broadcastCandBytes)
     commitIncrement(store, name, stage)
-    pairs
+    verified(true)
   }
 
   /** A staged-but-uncommitted increment: the deltas [[probeIncrement]]
@@ -352,11 +352,22 @@ object DedupIndex {
     * invert that into at-most-once: the re-delivery guard sees the docs as
     * indexed and their pairs are never computed again.
     *
-    * Stage lifetime: every stage here is a [[TableStore.stage]]
-    * generation, swept `graft.scratch.keepLast` (default 16) same-family
-    * generations later. The band/size deltas read scratch stages
-    * ([[graft.tables.Scratch.stage]]). The shingle rows are staged under the
-    * STORE's root, at `.publish/{name}_shingles/<application id>_g<n>`
+    * Stages: a probe writes three, each a [[TableStore.stage]]
+    * generation swept `graft.scratch.keepLast` (default 16) same-family
+    * generations later:
+    *  - the increment's shingle rows, in storage form and the table's
+    *    layout (below);
+    *  - `{name}_inc_sig`, a scratch stage ([[graft.tables.Scratch.stage]])
+    *    of (id, n_sh, one bucket per band), which the band and size deltas
+    *    project;
+    *  - `{name}_inc_cands`, a scratch stage of the capped candidate pairs.
+    * The verification shingles (stored candidates ∪ the increment) are not
+    * staged: the returned pairs plan derives them in-plan, and the two sides
+    * of its Jaccard self-join share one exchange over them. So the stored
+    * shingle table is scanned by the returned plan, once, when it runs.
+    *
+    * Stage lifetime: the shingle rows are staged under the STORE's root,
+    * at `.publish/{name}_shingles/<application id>_g<n>`
     * ([[TableStore.stage]]), so the commit publishes them by rename on one
     * file system; no table read, data-file listing, freshness key or
     * compaction trigger sees them there. The next shingle stage of the
@@ -375,12 +386,30 @@ object DedupIndex {
     * stored-index scans only while that pair file is at most this size. The
     * pair file is about 2× the candidate-doc ids, so the default 8 MB stops
     * broadcasting at roughly 4 MB of candidate-doc ids.
+    *
+    * Evaluate the returned pairs before [[commitIncrement]]: they read the
+    * increment's shingles from its stage, whose files the commit moves into
+    * the table. ([[dedupIncrement]] commits first, so its pairs verify
+    * against the committed table instead.)
     */
   def probeIncrement(store: TableStore, name: String, inc: DataFrame,
       idCol: String, textCol: String, n: Int = 3, k: Int = 12, bands: Int = 3,
       threshold: Double = 0.8, bucketCap: Int = Int.MaxValue,
       digest: Boolean = false,
       broadcastCandBytes: Long = 8L << 20): (DataFrame, IncrementStage) = {
+    val (verified, stage) = probe(store, name, inc, idCol, textCol, n, k,
+      bands, threshold, bucketCap, digest, broadcastCandBytes)
+    (verified(false), stage)
+  }
+
+  /** [[probeIncrement]]'s stages and candidates, with its verified pairs as
+    * a function of whether the increment's shingles have been committed:
+    * before the commit they are read from the stage, after it from the
+    * table (read when the function is called), which then holds them. */
+  private def probe(store: TableStore, name: String, inc: DataFrame,
+      idCol: String, textCol: String, n: Int, k: Int, bands: Int,
+      threshold: Double, bucketCap: Int, digest: Boolean,
+      broadcastCandBytes: Long): (Boolean => DataFrame, IncrementStage) = {
     require(k % bands == 0, s"k ($k) must be divisible by bands ($bands)")
     require(bucketCap >= 0,
       s"bucketCap must be >= 0 (0 = the stored [[capIfUnhealthy]] policy, " +
@@ -449,9 +478,9 @@ object DedupIndex {
       s"${name}_inc_cands")
     // NOT staged (one fewer Spark job per increment — r22): the
     // union+distinct over the just-staged cands parquet is a small shuffle
-    // each consumer (the shCand stage, the returned plan, the bucketed
-    // collect) re-derives in-job, cheaper than a dedicated stage write at
-    // any scale where cands itself is staged and capped.
+    // each consumer (the verify plan, the bucketed collect) re-derives
+    // in-job, cheaper than a dedicated stage write at any scale where cands
+    // itself is staged and capped.
     val candDocs = cands.select(col("id_a").as(idCol))
       .union(cands.select(col("id_b").as(idCol))).distinct()
     // candidate-doc sets are bucketCap-bounded in practice and a broadcast
@@ -483,23 +512,29 @@ object DedupIndex {
     // shingle rows that a replayed batch re-publishes, and without the
     // distinct a later probe would double-count n_inter for that doc
     // (jaccard > 1).
-    // Cost is bounded — shCand is the capped candidate set, not the corpus.
-    val shCand = Scratch.stage(
-      candidateShingles(store, name, candDocs, idCol, digest, idBuckets)
-        .unionByName(shInc) // LOGICAL form both sides — candidateShingles
-        // emits hex in digest mode, and a stored/binary branch would union-
-        // coerce to garbage strings that never match (empty pairs)
+    // NOT staged: its one reader is the Jaccard self-join, whose two sides
+    // shuffle this same frame on `shingle`, so Spark plans that exchange
+    // once and reuses it for the other side — the stored-shingle scan runs
+    // once per probe either way, and a stage would only add a write and a
+    // read of the candidate shingles. Cost is bounded — shCand is the
+    // capped candidate set, not the corpus.
+    def verified(committed: Boolean): DataFrame = {
+      val stored = candidateShingles(store, name, candDocs, idCol, digest, idBuckets)
+      val shCand = (if (committed) stored
+        else stored.unionByName(shInc)) // LOGICAL form both sides —
+        // candidateShingles emits hex in digest mode, and a stored/binary
+        // branch would union-coerce to garbage strings that never match
         .join(candKeys, Seq(idCol), "left_semi")
-        .distinct(),
-      s"${name}_inc_shcand")
-    // same hygiene as shCand: a doc's size row must count once even if the
-    // stored listing ever includes a committed copy beside the staged one
-    val sizesCand = store.read(sizesT(name)).unionByName(sizesInc)
-      .join(candKeys, Seq(idCol), "left_semi").distinct()
-    val pairs = Dedup.jaccardPairsWithSizes(shCand, sizesCand, idCol)
-      .join(cands, Seq("id_a", "id_b"), "left_semi")
-      .filter(col("jaccard") >= threshold)
-    (pairs, IncrementStage(sizesInc, ebInc, shStage))
+        .distinct()
+      // same hygiene as shCand: a doc's size row must count once even if
+      // the stored listing includes a committed copy beside the staged one
+      val sizesCand = store.read(sizesT(name)).unionByName(sizesInc)
+        .join(candKeys, Seq(idCol), "left_semi").distinct()
+      Dedup.jaccardPairsWithSizes(shCand, sizesCand, idCol)
+        .join(cands, Seq("id_a", "id_b"), "left_semi")
+        .filter(col("jaccard") >= threshold)
+    }
+    (verified, IncrementStage(sizesInc, ebInc, shStage))
   }
 
   /** [[dedupIncrement]]'s commit HALF: add the staged deltas to the three

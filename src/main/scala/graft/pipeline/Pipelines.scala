@@ -166,7 +166,7 @@ object Pipelines {
     * weekday-strip multi-format date parse, business-key dedup
     * (1_full_load_fact.py:98-128).
     */
-  private def cleanOrders(df: DataFrame): DataFrame =
+  private[pipeline] def cleanOrders(df: DataFrame): DataFrame =
     df.filter(col("order_qty").isNotNull)
       .withColumn("customer_id", Normalize.numericIdOrFallback(col("customer_id")))
       .withColumn("order_placement_date", Dates.parseOrderDate(col("order_placement_date")))
@@ -220,33 +220,50 @@ object Pipelines {
     * once and written once, beside `bronze_orders` ([[stageLanded]]). Its
     * rows play the reference's `staging_orders`, their cleaning its
     * `silver_staging_orders`; neither is a named table, so there is no
-    * staging teardown. Tables change in the order silver → sb_fact →
-    * bronze → gold: the bronze stage is published after its last reader
-    * (the touched-month collect) and before the gold merge. A crash before
-    * the bronze publish leaves the day in silver and sb_fact but not in
-    * bronze; a re-run lands it in bronze exactly once, and silver and
-    * sb_fact take [[Upsert.mergeInto]]'s merge path, as any re-run does.
-    * The abandoned stage is swept by the next stage of `bronze_orders`.
+    * staging teardown.
+    *
+    * Each increment is computed once, in Delta's two MERGE phases
+    * ([[Upsert.stageMerge]]):
+    *  1. Stage silver: the bronze stage's rows, cleaned ([[cleanOrders]])
+    *     and deduped per silver key — the one evaluation of the cleaning
+    *     and its window shuffle.
+    *  2. Stage sb_fact from silver's staged rows joined with the products.
+    *     These equal the rows sb_fact would get from the raw cleaned
+    *     increment: `DedupDeterministic` keeps the smallest `order_qty` per
+    *     key, `product_id → product_code` is a function, so each silver key
+    *     group lies inside one sb_fact key group, and the smallest of the
+    *     group minima is the group's minimum.
+    *  3. Collect the touched months from sb_fact's staged rows.
+    *  4. Commit silver, commit sb_fact, publish the bronze stage, merge the
+    *     touched months into gold.
+    *
+    * Tables change in that order, silver → sb_fact → bronze → gold: the
+    * bronze stage is published after its last reader and before the gold
+    * merge. A crash before the bronze publish leaves the day in silver
+    * (and perhaps sb_fact) but not in bronze; a re-run lands it in bronze
+    * exactly once, and the tables that already hold it take the merge path
+    * of [[Upsert.stageMerge]], as any re-run does. The abandoned bronze
+    * stage is swept by a later stage of `bronze_orders`.
     */
   def runFactIncremental(spark: SparkSession, store: TableStore, landingDir: String): Unit = {
     val bronze = stageLanded(spark, store, landingDir)
 
-    val silverInc = cleanOrders(bronze.rows)
-      .select("order_id", "order_placement_date", "customer_id", "product_id", "order_qty")
-    Upsert.mergeInto(store, "silver_orders", silverInc,
+    val silver = Upsert.stageMerge(store, "silver_orders",
+      cleanOrders(bronze.rows)
+        .select("order_id", "order_placement_date", "customer_id", "product_id", "order_qty"),
       Seq("order_placement_date", "order_id", "product_id", "customer_id"),
       onDuplicate = Upsert.DuplicatePolicy.DedupDeterministic)
 
     val products = broadcast(store.read("silver_products").select("product_id", "product_code"))
-    val sbInc = silverInc
-      .join(products, Seq("product_id"), "inner")
-      .select(
-        col("order_placement_date").as("date"),
-        col("order_id"),
-        col("product_code"),
-        col("customer_id").as("customer_code"),
-        col("order_qty").as("sold_quantity"))
-    Upsert.mergeInto(store, "sb_fact_orders", sbInc,
+    val sb = Upsert.stageMerge(store, "sb_fact_orders",
+      silver.rows
+        .join(products, Seq("product_id"), "inner")
+        .select(
+          col("order_placement_date").as("date"),
+          col("order_id"),
+          col("product_code"),
+          col("customer_id").as("customer_code"),
+          col("order_qty").as("sold_quantity")),
       Seq("date", "order_id", "product_code", "customer_code"),
       onDuplicate = Upsert.DuplicatePolicy.DedupDeterministic)
 
@@ -255,12 +272,19 @@ object Pipelines {
     // difference between rewriting 1 month and rewriting 10 years. The
     // months come from the staged increment, so the rollup's own partition
     // values never need a separate pass.
-    val touched = sbInc.filter(col("date").isNotNull)
+    val touched = sb.rows.filter(col("date").isNotNull)
       .select(Dates.monthStart(col("date"))).distinct().collect().map(_.get(0)).toSeq
+    silver.commit()
+    sb.commit()
     store.publish(bronze)
-    val affected = store.read("sb_fact_orders")
-      .filter(Dates.monthStart(col("date")).isin(touched: _*))
-    mergeMonthlyRollup(store, affected, Some(touched))
+    // sb_fact is unpartitioned: a date range per month is what reaches the
+    // parquet scan as a pushed filter, so row groups whose date min/max
+    // miss every touched month are skipped (a monthStart(date) IN (...)
+    // predicate is an expression over the column and pushes nothing)
+    val inTouched = touched
+      .map(m => col("date") >= lit(m) && col("date") < add_months(lit(m), 1))
+      .reduceOption(_ || _).getOrElse(lit(false))
+    mergeMonthlyRollup(store, store.read("sb_fact_orders").filter(inTouched), Some(touched))
   }
 
   /** Daily→monthly rollup of gold-shaped child orders, upserted into the

@@ -1,6 +1,8 @@
 package graft.tables
 
 import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions.{col, lit}
 import org.apache.spark.sql.types.{DataType, StructField, StructType}
@@ -300,9 +302,9 @@ final class TableStore(spark: SparkSession, root: String) {
     * last, as a partitioned table reads).
     *
     * The one stage primitive. Its users:
-    *  - [[Upsert.mergeInto]] stages every inserting MERGE's prepared
-    *    source, then publishes it (no key matched) or reads it into the
-    *    full rewrite and discards it;
+    *  - [[Upsert.stageMerge]] stages every inserting MERGE's prepared
+    *    source, then publishes it (no key matched), reads it into the
+    *    full rewrite, or drops it (no rows), and discards it;
     *  - [[graft.pipeline.Pipelines]]' fact loads stage the landed CSVs
     *    beside `bronze_orders`, clean the stage's rows into silver and
     *    publish it as the bronze append;
@@ -343,7 +345,7 @@ final class TableStore(spark: SparkSession, root: String) {
     * would read them back and write them a second time. No Spark job
     * runs: one existence probe per staged file, the sidecar step, one
     * rename per file, one delete of the emptied stage dir. Its users: the
-    * no-match path of [[Upsert.mergeInto]], the bronze append of the fact
+    * no-match path of [[Upsert.stageMerge]], the bronze append of the fact
     * loads, and [[graft.ext.DedupIndex.commitIncrement]]'s shingle files.
     *
     *   1. Every staged file must still be where it was written. A stage
@@ -510,6 +512,16 @@ object TableStore {
     lazy val files: Seq[String] = {
       val prefix = new Path(dir).toUri.getPath + "/"
       rows.inputFiles.toSeq.map(f => java.net.URI.create(f).getPath.stripPrefix(prefix))
+    }
+
+    /** The stage's row count, summed from the record counts in its files'
+      * parquet footers, read on the driver: no Spark job runs. */
+    lazy val numRows: Long = {
+      val conf = rows.sparkSession.sparkContext.hadoopConfiguration
+      files.map { r =>
+        val in = ParquetFileReader.open(HadoopInputFile.fromPath(new Path(new Path(dir), r), conf))
+        try in.getRecordCount finally in.close()
+      }.sum
     }
   }
 

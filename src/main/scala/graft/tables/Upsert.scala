@@ -23,7 +23,9 @@ import org.apache.spark.sql.functions._
   * equi-join, so both sides shuffle on the keys. [[mergeInto]] avoids that
   * join, and the full target rewrite behind it, whenever the source matches
   * no target row: the staged source's files are then published into the
-  * table as they are.
+  * table as they are. [[stageMerge]] splits an inserting MERGE into its two
+  * phases — stage the source, then `commit()` — so a caller can derive more
+  * from the staged rows before the table changes.
   */
 object Upsert {
 
@@ -148,30 +150,16 @@ object Upsert {
     else joined.filter(tMatched).select(out: _*)
   }
 
-  /** [[merge]] applied to a stored, unpartitioned table, in Delta's two
-    * phases: first find whether any target row matches, then rewrite only
-    * if one does. With `insert = true` the source is evaluated once:
-    * stage → probe → publish, or merge + discard.
+  /** [[merge]] applied to a stored, unpartitioned table.
     *
-    *  - Table absent: create it from `source` as given.
-    *  - Stage: the prepared source (column order and `onDuplicate`
-    *    handling as in [[merge]]) is written once beside the table
-    *    ([[TableStore.stage]]). A failed write, a `DuplicatePolicy.Error`
-    *    raise included, leaves no stage and no new data file.
-    *  - Probe ([[matchProbe]]): the staged keys, broadcast, against the
-    *    target's key columns.
-    *  - No match: every staged row is an insert, so the stage's files are
-    *    added to the table by rename ([[TableStore.publish]]: no Spark job,
-    *    no second write, [[TableStore.append]]'s schema union). The
-    *    existing data files stay as they are.
-    *  - Any match: the full-outer [[merge]] of the target and the staged
-    *    rows rewrites the table through [[TableStore.overwrite]]'s atomic
-    *    swap. The stage is then discarded, as it is when the probe, the
-    *    rewrite or the publish fails.
-    *
-    * `insert = false` never inserts, so it writes no stage: the probe runs
-    * over the raw source keys (duplicate handling never changes the key
-    * set and NULL keys never match), and only a match rewrites the table.
+    *  - `insert = true`: `stageMerge(...).commit()` — the source is
+    *    evaluated once, staged, probed, and published or merged in
+    *    ([[stageMerge]]).
+    *  - `insert = false` never inserts, so it writes no stage: the probe
+    *    runs over the raw source keys (duplicate handling never changes the
+    *    key set and NULL keys never match), and only a match rewrites the
+    *    table through [[TableStore.overwrite]]'s atomic swap.
+    *  - Table absent (either form): create it from `source` as given.
     *
     * An existing table ends up holding exactly the rows of
     * `overwrite(table, merge(read(table), source, ...))` on every path.
@@ -184,24 +172,84 @@ object Upsert {
       keys: Seq[String],
       update: Boolean = true,
       insert: Boolean = true,
-      onDuplicate: DuplicatePolicy = DuplicatePolicy.Error): Unit = {
-    if (!store.exists(table)) {
-      store.overwrite(table, source)
-      return
-    }
-    val target = store.read(table)
-    if (!insert) {
+      onDuplicate: DuplicatePolicy = DuplicatePolicy.Error): Unit =
+    if (insert) stageMerge(store, table, source, keys, update, onDuplicate).commit()
+    else if (!store.exists(table)) store.overwrite(table, source)
+    else {
+      val target = store.read(table)
       if (!matchProbe(target, source, keys).isEmpty)
         store.overwrite(table, merge(target, source, keys, None, update, insert, onDuplicate))
-      return
     }
-    val staged = store.stage(table,
-      prepareSource(source, target.columns.toSeq, keys, onDuplicate))
-    try {
-      if (matchProbe(target, staged.rows, keys).isEmpty) store.publish(staged)
-      else store.overwrite(table, mergePrepared(target, staged.rows, keys, None, update, insert))
-    } finally store.discard(staged) // after a publish: nothing left to delete
+
+  /** An inserting MERGE between its two phases ([[stageMerge]]): `rows`
+    * reads the staged, prepared source, and `commit()` applies it to the
+    * table, once. */
+  final class PendingMerge private[Upsert] (val rows: DataFrame, apply: () => Unit) {
+    private var committed = false
+    def commit(): Unit = {
+      require(!committed, "Upsert: this merge was already committed")
+      committed = true
+      apply()
+    }
   }
+
+  /** The first phase of an inserting [[merge]] into a stored,
+    * unpartitioned table, in Delta's two phases (stage the source once,
+    * find the matches, then commit). Every later consumer of the source —
+    * a downstream table derived from the same increment, a collect of the
+    * values it touches — reads `rows`, the stage that is already written,
+    * instead of evaluating the source again.
+    *
+    *  - Table absent: `rows` is `source` as given, and `commit()` creates
+    *    the table from it ([[TableStore.overwrite]]).
+    *  - Stage: the prepared source (column order and `onDuplicate`
+    *    handling as in [[merge]]) is written once beside the table
+    *    ([[TableStore.stage]]). A failed write, a `DuplicatePolicy.Error`
+    *    raise included, leaves no stage and no new data file.
+    *
+    * `commit()` then, on an existing table:
+    *  - Empty stage: the source matches and inserts nothing, so nothing
+    *    is written. The row count is summed from the staged files' parquet
+    *    footers on the driver ([[TableStore.Staged.numRows]]): no Spark
+    *    job, and no footer-only file lands in the table.
+    *  - Probe ([[matchProbe]]): the staged keys, broadcast, against the
+    *    target's key columns.
+    *  - No match: every staged row is an insert, so the stage's files are
+    *    added to the table by rename ([[TableStore.publish]]: no Spark job,
+    *    no second write, [[TableStore.append]]'s schema union). The
+    *    existing data files stay as they are.
+    *  - Any match: the full-outer [[merge]] of the target and the staged
+    *    rows rewrites the table through [[TableStore.overwrite]]'s atomic
+    *    swap.
+    *  - The stage is discarded at the end of every path, a failed probe,
+    *    rewrite or publish included.
+    *
+    * The target is read when the merge is staged, so no other write to
+    * `table` may come between the two phases (the store's single-writer
+    * contract). A merge that is never committed leaves its stage to the
+    * sweep of the next stage of `table` ([[TableStore.stage]]).
+    */
+  def stageMerge(
+      store: TableStore,
+      table: String,
+      source: DataFrame,
+      keys: Seq[String],
+      update: Boolean = true,
+      onDuplicate: DuplicatePolicy = DuplicatePolicy.Error): PendingMerge =
+    if (!store.exists(table)) new PendingMerge(source, () => store.overwrite(table, source))
+    else {
+      val target = store.read(table)
+      val staged = store.stage(table,
+        prepareSource(source, target.columns.toSeq, keys, onDuplicate))
+      new PendingMerge(staged.rows, () =>
+        try {
+          if (staged.numRows > 0) {
+            if (matchProbe(target, staged.rows, keys).isEmpty) store.publish(staged)
+            else store.overwrite(table,
+              mergePrepared(target, staged.rows, keys, None, update, insert = true))
+          }
+        } finally store.discard(staged)) // after a publish: nothing left to delete
+    }
 
   /** Target key rows that some source row matches: a left-semi join of the
     * target's key columns (the only columns its scan reads) against the

@@ -402,4 +402,97 @@ class PlanSpec extends SparkSpec {
     assert(bloomFilters.exists(_.collect { case j: Join => j }.isEmpty),
       "bloom filter must apply before any join, on the scan-side subtree")
   }
+
+  /** Every node of an executed plan, through AQE's wrappers and query
+    * stages (a reused stage contributes its [[ReusedExchangeExec]] leaf,
+    * not a second copy of the exchange it points at). */
+  private def allNodes(p: org.apache.spark.sql.execution.SparkPlan)
+      : Seq[org.apache.spark.sql.execution.SparkPlan] = {
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    p match {
+      case a: AdaptiveSparkPlanExec => allNodes(a.executedPlan)
+      case q: QueryStageExec => allNodes(q.plan)
+      case other => other +: other.children.flatMap(allNodes)
+    }
+  }
+
+  test("dedup probe verify plan: the stored shingles are scanned once and the self-join shares one exchange") {
+    import org.apache.spark.sql.execution.FileSourceScanExec
+    import org.apache.spark.sql.execution.exchange.{ReusedExchangeExec, ShuffleExchangeExec}
+    import spark.implicits._
+    val store = new graft.tables.TableStore(spark,
+      java.nio.file.Files.createTempDirectory("graft_probe_plan").toString)
+    val words = Vector("alpha", "beta", "gamma", "delta", "eps", "zeta", "eta", "theta")
+    val rnd = new scala.util.Random(5)
+    val base = (0L until 30L).map(i => (i, Seq.fill(14)(words(rnd.nextInt(words.size))).mkString(" ")))
+    graft.ext.DedupIndex.build(store, "pp", base.toDF("doc_id", "text"), "doc_id", "text")
+    // near-copies of base docs, so the probe finds candidates and pairs
+    val inc = base.take(6).map { case (i, t) => (100L + i, t + " omega") }.toDF("doc_id", "text")
+    val (pairs, _) = graft.ext.DedupIndex.probeIncrement(store, "pp", inc, "doc_id", "text",
+      threshold = 0.5)
+    assert(pairs.count() > 0, "fixture: the probe must verify some pair")
+    pairs.collect() // AQE finalizes the plan only on execution
+    val shown = pairs.queryExecution.executedPlan.toString
+    val all = allNodes(pairs.queryExecution.executedPlan)
+    // the stored table, not the increment's stage beside it under .publish/
+    def storedShingles(f: FileSourceScanExec) =
+      f.metadata.get("Location").exists(l => l.contains("pp_shingles") && !l.contains(".publish"))
+    assert(all.collect { case f: FileSourceScanExec if storedShingles(f) => f }.size === 1,
+      s"the stored shingles must be scanned once:\n$shown")
+    // the two sides of the Jaccard self-join read one shuffle of the
+    // candidate shingles: every exchange over the stored-shingle scan is
+    // planned once, and the other side reuses it
+    val overScan = all.collect {
+      case e: ShuffleExchangeExec if allNodes(e).exists {
+        case f: FileSourceScanExec => storedShingles(f)
+        case _ => false
+      } => e
+    }
+    assert(overScan.nonEmpty, s"no exchange over the stored shingles:\n$shown")
+    val reused = all.collect { case r: ReusedExchangeExec => r.child }
+    assert(overScan.exists(e => reused.exists(_.sameResult(e))),
+      s"the self-join's sides do not share an exchange:\n$shown")
+  }
+
+  test("incremental fact: the touched-month read of sb_fact pushes a date range to the scan") {
+    val store = new graft.tables.TableStore(spark,
+      java.nio.file.Files.createTempDirectory("graft_range").toString)
+    val fx = "src/test/resources/fixtures"
+    graft.pipeline.Pipelines.seedParent(spark, store, s"$fx/parent/full_load")
+    graft.pipeline.Pipelines.runDimProducts(spark, store,
+      s"$fx/child/full_load/products/products.csv")
+    graft.pipeline.Pipelines.runFactFull(spark, store, s"$fx/child/orders_landing")
+    // capture every query's plan while the increment runs; the rollup's
+    // read of sb_fact is the one scan of that table with a date filter
+    import org.apache.spark.sql.execution.{CommandResultExec, FileSourceScanExec, SparkPlan}
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[SparkPlan]()
+    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+      override def onSuccess(f: String, qe: org.apache.spark.sql.execution.QueryExecution,
+          ns: Long): Unit = plans.add(qe.executedPlan)
+      override def onFailure(f: String, qe: org.apache.spark.sql.execution.QueryExecution,
+          e: Exception): Unit = ()
+    }
+    org.apache.spark.graft.Bus.drain(spark.sparkContext)
+    spark.listenerManager.register(listener)
+    try {
+      graft.pipeline.Pipelines.runFactIncremental(spark, store, s"$fx/child/orders_incremental")
+      org.apache.spark.graft.Bus.drain(spark.sparkContext)
+    } finally spark.listenerManager.unregister(listener)
+    import scala.jdk.CollectionConverters._
+    def scans(p: SparkPlan): Seq[FileSourceScanExec] = allNodes(p).flatMap {
+      case f: FileSourceScanExec => Seq(f)
+      case c: CommandResultExec => scans(c.commandPhysicalPlan)
+      case _ => Nil
+    }
+    val pushed = plans.asScala.toSeq.flatMap(scans)
+      .filter(_.metadata.get("Location").exists(l =>
+        l.contains("sb_fact_orders") && !l.contains(".publish")))
+      .flatMap(_.metadata.get("PushedFilters"))
+    // the increment touches Dec 2025 and Jan 2026: one [m, m + 1 month)
+    // range each, as parquet-pushable comparisons on the raw column
+    assert(pushed.exists(f =>
+        f.contains("GreaterThanOrEqual(date,2025-12-01)") && f.contains("LessThan(date,2026-01-01)") &&
+          f.contains("GreaterThanOrEqual(date,2026-01-01)") && f.contains("LessThan(date,2026-02-01)")),
+      s"no date range in the sb_fact scans' PushedFilters: $pushed")
+  }
 }

@@ -117,6 +117,48 @@ class DedupIndexSpec extends SparkSpec {
     }
   }
 
+  test("verified pairs and their Jaccard values: the same before and after the commit, in the digest and id-bucketed layouts") {
+    val all = corpus(31, 40).toDF("doc_id", "text")
+    val isInc = col("doc_id") % 3 === 0
+    val tmp = java.nio.file.Files.createTempDirectory("graft_didx_lay").toString
+    val trueJ = Dedup.jaccardPairs(Dedup.shingleIndex(all, "doc_id", "text"), "doc_id")
+      .collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getDouble(2)).toMap
+    def triples(df: org.apache.spark.sql.DataFrame): Set[(Long, Long, Double)] =
+      df.select("id_a", "id_b", "jaccard").collect()
+        .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
+    def built(at: String, digest: Boolean, idBuckets: Int) = {
+      val st = new graft.tables.TableStore(spark, at)
+      DedupIndex.build(st, "idx", all.filter(!isInc), "doc_id", "text",
+        digest = digest, idBuckets = idBuckets)
+      st
+    }
+    val byLayout = (for (digest <- Seq(false, true); idBuckets <- Seq(0, 8)) yield {
+      val at = s"$tmp/digest_${digest}_bkt_$idBuckets"
+      // the probe half: its pairs read the increment's stage, so they are
+      // evaluated before the commit moves the stage's files into the table
+      val store = built(s"$at/probe", digest, idBuckets)
+      val (p, stage) = DedupIndex.probeIncrement(store, "idx", all.filter(isInc),
+        "doc_id", "text", threshold = 0.7, digest = digest)
+      val probed = triples(p)
+      DedupIndex.commitIncrement(store, "idx", stage)
+      // dedupIncrement commits first and verifies against the committed table
+      val committed = triples(DedupIndex.dedupIncrement(built(s"$at/commit", digest, idBuckets),
+        "idx", all.filter(isInc), "doc_id", "text", threshold = 0.7, digest = digest))
+      assert(committed === probed, s"digest=$digest idBuckets=$idBuckets")
+      // every verified Jaccard is the exact value over the raw shingles
+      probed.foreach { case (a, b, j) =>
+        assert(trueJ.get((a, b)) === Some(j), s"digest=$digest idBuckets=$idBuckets ($a, $b)")
+      }
+      (digest, idBuckets) -> probed
+    }).toMap
+    val expectedRaw = pairSet(Dedup.minhashDedupIncremental(
+      all.filter(!isInc), all.filter(isInc), "doc_id", "text", threshold = 0.7))
+    assert(expectedRaw.nonEmpty)
+    assert(byLayout((false, 0)).map(t => (t._1, t._2)) === expectedRaw)
+    assert(byLayout((false, 8)) === byLayout((false, 0)))
+    assert(byLayout((true, 0)).nonEmpty && byLayout((true, 8)) === byLayout((true, 0)))
+  }
+
   test("health: doc/row counts and the hot-bucket fraction that says when bucketCap is needed") {
     val store = new graft.tables.TableStore(spark,
       java.nio.file.Files.createTempDirectory("graft_dihealth").toString)

@@ -2,7 +2,7 @@ package graft.pipeline
 
 import graft.SparkSpec
 import graft.serve.EnrichedView
-import graft.tables.TableStore
+import graft.tables.{TableStore, Upsert}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import java.nio.file.Files
@@ -13,6 +13,13 @@ import java.nio.file.Files
   * Expectations are hand-computed from the fixtures.
   */
 class PipelineSpec extends SparkSpec {
+  import spark.implicits._
+
+  /** Spark jobs of one incremental load of the fixture day over the full
+    * load: its keys are all new, so silver and sb_fact publish; a replay
+    * of the same day matches, and both tables take the merge rewrite. */
+  private val JobsNewKeys = 15
+  private val JobsReplay = 22
 
   private val fx = "src/test/resources/fixtures"
   private lazy val store = {
@@ -173,6 +180,142 @@ class PipelineSpec extends SparkSpec {
       .head().getAs[Double]("sold_quantity") === 135.0)
     val n2 = Pipelines.copyParentIncrement(spark, store, s"$fx/parent/incremental_load")
     assert(n2 === 0)
+  }
+
+  private val orderHeader = "order_id,order_placement_date,customer_id,product_id,order_qty"
+
+  /** A landing dir holding one CSV per `(file name, data lines)`. */
+  private def landing(files: (String, Seq[String])*): String = {
+    val d = Files.createTempDirectory("graft_day")
+    files.foreach { case (n, lines) =>
+      Files.writeString(d.resolve(n), (orderHeader +: lines).mkString("", "\n", "\n"))
+    }
+    d.toString
+  }
+
+  /** A store at `root` holding the parent seed, the products, and the
+    * fact full load. silver_products gains a second id, 25891109, for the
+    * protein bar: two product_ids that share one product_code. */
+  private def factStore(root: String): TableStore = {
+    val st = new TableStore(spark, root)
+    Pipelines.seedParent(spark, st, s"$fx/parent/full_load")
+    Pipelines.runDimProducts(spark, st, s"$fx/child/full_load/products/products.csv")
+    val silver = st.read("silver_products")
+    st.overwrite("silver_products", silver.unionByName(
+      silver.filter(col("product_id") === "25891101").withColumn("product_id", lit("25891109"))))
+    Pipelines.runFactFull(spark, st, s"$fx/child/orders_landing")
+    st
+  }
+
+  private def rowsOf(df: DataFrame): Seq[String] =
+    df.collect().map(_.toSeq.mkString("|")).sorted.toSeq
+
+  private val factTables = Seq("silver_orders", "sb_fact_orders", "gold_fact_orders")
+
+  /** The tables one incremental load of `day` must leave, computed the
+    * direct way, one MERGE per table over the store as it stands: silver
+    * and sb_fact each merge the increment cleaned from the landed rows,
+    * and gold merges the rollup of the touched months of the merged
+    * sb_fact. Collected before the load runs. */
+  private def expectedAfter(store: TableStore, day: String): Map[String, Seq[String]] = {
+    import Upsert.DuplicatePolicy.DedupDeterministic
+    val landed = graft.ingest.CsvIngest.read(spark, s"$day/*.csv",
+      schema = Some(graft.model.Star.rawOrders))
+    val silverInc = Pipelines.cleanOrders(landed)
+      .select("order_id", "order_placement_date", "customer_id", "product_id", "order_qty")
+    val silver = Upsert.merge(store.read("silver_orders"), silverInc,
+      Seq("order_placement_date", "order_id", "product_id", "customer_id"),
+      onDuplicate = DedupDeterministic)
+    val sbInc = silverInc
+      .join(store.read("silver_products").select("product_id", "product_code"), Seq("product_id"))
+      .select(col("order_placement_date").as("date"), col("order_id"), col("product_code"),
+        col("customer_id").as("customer_code"), col("order_qty").as("sold_quantity"))
+    val sb = Upsert.merge(store.read("sb_fact_orders"), sbInc,
+      Seq("date", "order_id", "product_code", "customer_code"), onDuplicate = DedupDeterministic)
+    val months = sbInc.filter(col("date").isNotNull)
+      .select(graft.clean.Dates.monthStart(col("date")).as("m")).distinct()
+    val rollup = sb.filter(col("date").isNotNull)
+      .join(months, graft.clean.Dates.monthStart(col("date")) === col("m"), "left_semi")
+      .groupBy(graft.clean.Dates.monthStart(col("date")).as("date"),
+        col("product_code"), col("customer_code"))
+      .agg(sum(col("sold_quantity")).as("sold_quantity"))
+    val gold = Upsert.merge(store.read("gold_fact_orders"), rollup,
+      Seq("date", "product_code", "customer_code"))
+    Map("silver_orders" -> rowsOf(silver), "sb_fact_orders" -> rowsOf(sb),
+      "gold_fact_orders" -> rowsOf(gold))
+  }
+
+  test("incremental load cleans once: silver, sb_fact and gold equal a MERGE per table over the cleaned increment") {
+    val store = factStore(Files.createTempDirectory("graft_once").toString)
+    // day A: a business key landed twice with different quantities (the
+    // smaller wins), an exact duplicate row across two files, one order on
+    // the two product_ids of one product_code (two silver keys, one
+    // sb_fact key), a late key in November and an unparseable date
+    val dayA = landing(
+      "orders_2025_12_05.csv" -> Seq(
+        "ORD201,05-12-2025,789401,25891101,6",
+        "ORD201,05-12-2025,789401,25891101,4",
+        "ORD202,05-12-2025,789402,25891101,9",
+        "ORD202,05-12-2025,789402,25891101,7",
+        "ORD202,05-12-2025,789402,25891109,3",
+        "ORD203,20-11-2025,789403,25891103,11",
+        "ORD204,\"Friday, December 5, 2025\",789404,25891102,1"),
+      "orders_2025_12_05_resent.csv" -> Seq(
+        "ORD201,05-12-2025,789401,25891101,6"))
+    // day B: late updates of keys the full load and day A recorded
+    val dayB = landing(
+      "orders_2025_12_09.csv" -> Seq(
+        "ORD001,02-11-2025,789401,25891101,1",
+        "ORD202,05-12-2025,789402,25891109,2",
+        "ORD205,09-12-2025,789401,25891109,5"))
+    Seq("day A" -> dayA, "day A replayed" -> dayA, "day B" -> dayB).foreach { case (what, day) =>
+      val expected = expectedAfter(store, day)
+      Pipelines.runFactIncremental(spark, store, day)
+      factTables.foreach(t => assert(rowsOf(store.read(t)) === expected(t), s"$what: $t"))
+    }
+    // the fixture exercises what it claims: one sb_fact key over two
+    // silver keys, each side keeping its smallest quantity
+    val ord202 = store.read("silver_orders").filter(col("order_id") === "ORD202")
+      .select("product_id", "order_qty").as[(String, Double)].collect().toMap
+    assert(ord202 === Map("25891101" -> 7.0, "25891109" -> 2.0))
+    assert(store.read("sb_fact_orders").filter(col("order_id") === "ORD202")
+      .select("sold_quantity").collect().map(_.getDouble(0)).toSeq === Seq(2.0))
+  }
+
+  test("incremental load job count: one increment of new keys, then its replay") {
+    val store = factStore(Files.createTempDirectory("graft_jobs").toString)
+    val day = s"$fx/child/orders_incremental"
+    assert(jobsDuring(Pipelines.runFactIncremental(spark, store, day)) === JobsNewKeys)
+    assert(jobsDuring(Pipelines.runFactIncremental(spark, store, day)) === JobsReplay)
+  }
+
+  test("incremental load: a crash between the silver and sb_fact commits re-runs to a clean run's tables") {
+    graft.FaultFs.install(spark)
+    val crashed = factStore(graft.FaultFs.root(Files.createTempDirectory("graft_crash").toString))
+    val clean = factStore(Files.createTempDirectory("graft_nocrash").toString)
+    val day = landing(
+      "orders_2025_12_07.csv" -> Seq(
+        "ORD301,07-12-2025,789401,25891101,3",
+        "ORD301,07-12-2025,789401,25891101,2",
+        "ORD302,07-12-2025,789402,25891109,8",
+        "ORD303,16-11-2025,789403,25891103,4"))
+    def bronze(st: TableStore) = st.read("bronze_orders").drop("read_timestamp")
+    val bronzeBefore = rowsOf(bronze(crashed))
+    val sbBefore = rowsOf(crashed.read("sb_fact_orders"))
+    // the first rename of sb_fact's stage publish fails: silver's commit
+    // has landed, sb_fact's has not, and bronze and gold are untouched
+    graft.FaultFs.failRename(0,
+      s"/.publish/sb_fact_orders/${spark.sparkContext.applicationId}_g1/part-")
+    intercept[java.io.IOException](Pipelines.runFactIncremental(spark, crashed, day))
+    assert(graft.FaultFs.disarm(), "the injected rename fault never fired")
+    assert(crashed.read("silver_orders").filter(col("order_id").startsWith("ORD30")).count() === 3)
+    assert(rowsOf(crashed.read("sb_fact_orders")) === sbBefore)
+    assert(rowsOf(bronze(crashed)) === bronzeBefore)
+
+    Pipelines.runFactIncremental(spark, crashed, day)
+    Pipelines.runFactIncremental(spark, clean, day)
+    factTables.foreach(t => assert(rowsOf(crashed.read(t)) === rowsOf(clean.read(t)), t))
+    assert(rowsOf(bronze(crashed)) === rowsOf(bronze(clean)), "bronze_orders")
   }
 
   test("enriched view + dashboard KPIs over consolidated gold") {

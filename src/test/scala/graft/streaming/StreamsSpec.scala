@@ -802,15 +802,17 @@ class StreamsSpec extends SparkSpec {
     // the pair (1, 3) is already recorded, so batch 2 takes the merge path
     store.overwrite("ix3_pairs", Seq((1L, 3L, 0.0)).toDF("id_a", "id_b", "jaccard"))
 
-    // the Jaccard join is the one query that reads the batch's staged
-    // candidate shingles: count the query executions scanning them
+    // the Jaccard join is the one query that reads the stored shingle
+    // table (its candidate shingles are derived in-plan, and the batch's own
+    // shingle stage lives under .publish/ix3_shingles/<generation>): count
+    // the query executions scanning the table itself
     val joins = new java.util.concurrent.atomic.AtomicInteger(0)
     val listener = new org.apache.spark.sql.util.QueryExecutionListener {
       override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
         if (qe.analyzed.exists {
           case l: LogicalRelation => l.relation match {
             case r: HadoopFsRelation =>
-              r.location.rootPaths.exists(_.toString.contains("ix3_inc_shcand"))
+              r.location.rootPaths.exists(_.getName == "ix3_shingles")
             case _ => false
           }
           case _ => false
@@ -909,6 +911,7 @@ class StreamsSpec extends SparkSpec {
 
     // redelivery of doc 2 FIXED: clean gains it; the quarantine row stays
     // as audit history (triage owns retraction)
+    val quarFiles = dataFiles(store, "exp_quar")
     Files.writeString(java.nio.file.Paths.get(s"$dir/b2.json"),
       s"""{"doc_id":2,"n":9}
          |""".stripMargin)
@@ -916,6 +919,9 @@ class StreamsSpec extends SparkSpec {
     assert(store.read("exp_clean").collect().map(_.getAs[Long]("doc_id")).sorted.toSeq
       === Seq(1L, 2L))
     assert(store.read("exp_quar").count() === 2)
+    // batch 2 quarantines nothing: its empty stage publishes no file
+    assert(dataFiles(store, "exp_quar") === quarFiles,
+      "an empty quarantine set must add no data file")
   }
 
   test("expectationsSink: a batch that dies inside the quarantine publish replays to a clean delivery's rows") {

@@ -178,4 +178,27 @@ class UpsertSpec extends SparkSpec {
     assert(sorted(store.read("t")) ===
       Seq(("k1", 1, "t"), ("k2", 20, "s"), ("k3", 3, "t"), ("k9", 90, "s")))
   }
+
+  test("stageMerge: the staged rows read before the commit; an empty stage commits in no Spark job and adds no file; a second commit throws") {
+    val store = freshStore()
+    store.overwrite("t", t)
+    val before = dataFiles(store, "t")
+    val pending = Upsert.stageMerge(store, "t",
+      Seq(("k9", 90, "s"), ("k9", 91, "s")).toDF("k", "v", "src"), Seq("k"),
+      onDuplicate = Upsert.DuplicatePolicy.DedupDeterministic)
+    // the prepared source: deduped per key, before the table changes
+    assert(sorted(pending.rows) === Seq(("k9", 90, "s")))
+    assert(sorted(store.read("t")) === sorted(t))
+    pending.commit()
+    assert(sorted(store.read("t")) === sorted(t) :+ (("k9", 90, "s")))
+    intercept[IllegalArgumentException](pending.commit())
+
+    val withK9 = dataFiles(store, "t")
+    val empty = Upsert.stageMerge(store, "t",
+      Seq.empty[(String, Int, String)].toDF("k", "v", "src"), Seq("k"))
+    assert(jobsDuring(empty.commit()) === 0, "an empty stage must not be probed")
+    assert(dataFiles(store, "t") === withK9 && before.keySet.subsetOf(withK9.keySet))
+    assert(Option(new File(store.path(".publish/t")).listFiles()).toSeq.flatten.isEmpty,
+      "the empty stage must be discarded")
+  }
 }
