@@ -266,9 +266,9 @@ object DedupIndex {
     * mode; one row per doc×band / per doc) and rewrite whole; the shingle
     * table — the one that is corpus-scale — rewrites ONLY the id buckets
     * the deleted docs hash to under the bucketed layout (`build(idBuckets
-    * = N)`), including dropping a bucket directory outright when the
-    * delete empties it (DeletesSpec pins untouched buckets byte-identical
-    * by file listing).
+    * = N)`), through [[TableStore.rewritePartitions]], which removes a
+    * bucket directory the delete empties (DeletesSpec pins untouched
+    * buckets byte-identical by file listing).
     *
     * Order is the crash contract, the inverse of [[commitIncrement]]'s:
     * sizes FIRST — sizes is the membership table ([[knownIds]]), so a doc
@@ -288,13 +288,7 @@ object DedupIndex {
       // formula as build/probe) — driver-bounded at ≤ nBkt values
       val affected = keys.select(idBucket(idCol, nBkt).as("_b"))
         .distinct().collect().map(_.getLong(0)).toIndexedSeq
-      val survivors = anti(store.read(shinglesT(name))
-        .filter(col(bktCol(nBkt)).isInCollection(affected)))
-      val alive = survivors.select(col(bktCol(nBkt))).distinct()
-        .collect().map(_.getLong(0)).toSet
-      if (alive.nonEmpty)
-        store.overwritePartitions(shinglesT(name), survivors, Seq(bktCol(nBkt)))
-      store.dropPartitions(shinglesT(name), bktCol(nBkt), affected.filterNot(alive))
+      store.rewritePartitions(shinglesT(name), bktCol(nBkt), affected)(anti)
     } else store.overwrite(shinglesT(name), anti(store.read(shinglesT(name))))
   }
 

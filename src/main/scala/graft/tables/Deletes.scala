@@ -18,11 +18,12 @@ import org.apache.spark.sql.functions._
   *
   * Scale shape, per leg:
   *  - corpus delete: one column-pruned scan to find affected partitions
-  *    (id + partition column only), then partition-scoped rewrite — the
-  *    [[Upsert.mergePartitioned]] idiom; a takedown batch touching 3
-  *    months moves 3 directories, not the 10-year table. Unpartitioned
-  *    tables pay one full anti-join rewrite (their size class by
-  *    definition).
+  *    (id + partition column only), then [[TableStore.rewritePartitions]],
+  *    the partition-scoped rewrite [[Upsert.mergePartitioned]] also runs:
+  *    a takedown batch touching 3 months moves 3 directories, not the
+  *    10-year table; a partition the delete empties is removed, and the
+  *    NULL partition is reached like any other. Unpartitioned tables pay
+  *    one full anti-join rewrite (their size class by definition).
   *  - ids ride a broadcast: takedown batches are small by nature (a legal
   *    request lists documents, not terabytes); every leg anti/semi-joins
   *    against the same broadcast key set, so no leg shuffles its table on
@@ -41,57 +42,30 @@ object Deletes {
       shardCol: String, budget: Long)
 
   /** DELETE FROM `table` WHERE `idCol` IN (ids). With `partitionCol` the
-    * rewrite is partition-scoped: affected partitions are found by a
-    * column-pruned (partition, id) scan semi-joined with the ids —
-    * driver-bounded by construction — and only those directories move,
-    * including dropping a directory outright when the delete empties it
-    * (which [[TableStore.overwritePartitions]] alone cannot express).
+    * rewrite is partition-scoped ([[rewrite]]): affected partitions are
+    * found by a column-pruned (partition, id) scan semi-joined with the
+    * ids — driver-bounded by construction.
     */
   def deleteRows(store: TableStore, table: String, idCol: String, ids: DataFrame,
       partitionCol: Option[String] = None): Unit = {
     val keys = broadcast(ids.select(col(idCol)).distinct())
-    partitionCol match {
-      case None =>
-        store.overwrite(table, store.read(table).join(keys, Seq(idCol), "left_anti"))
-      case Some(pc) =>
-        val affected = store.read(table).select(col(pc), col(idCol))
-          .join(keys, Seq(idCol), "left_semi")
-          .select(col(pc)).distinct().collect().map(_.get(0)).toIndexedSeq
-        if (affected.isEmpty) return
-        val survivors = store.read(table).filter(col(pc).isin(affected: _*))
-          .join(keys, Seq(idCol), "left_anti")
-        val alive = survivors.select(col(pc)).distinct().collect().map(_.get(0)).toSet
-        if (alive.nonEmpty) store.overwritePartitions(table, survivors, Seq(pc))
-        store.dropPartitions(table, pc, affected.filterNot(alive))
-    }
+    rewrite(store, table, partitionCol, store.read(table).join(keys, Seq(idCol), "left_semi"))(
+      _.join(keys, Seq(idCol), "left_anti"))
   }
 
   /** `DELETE FROM table WHERE cond` — the predicate form (Delta's general
     * DELETE; [[deleteRows]] is the id-set special case). With
     * `partitionCol` the rewrite is partition-scoped exactly like
     * deleteRows: affected partitions are found by a column-pruned scan of
-    * the predicate's matching rows, only those directories move, and
-    * emptied ones are dropped outright. The predicate must be
-    * deterministic — it runs once to find affected partitions and once in
-    * the rewrite, and a nondeterministic condition could disagree between
-    * the two passes.
+    * the predicate's matching rows. The predicate must be deterministic —
+    * it runs once to find affected partitions and once in the rewrite,
+    * and a nondeterministic condition could disagree between the two
+    * passes.
     */
   def deleteWhere(store: TableStore, table: String, cond: org.apache.spark.sql.Column,
-      partitionCol: Option[String] = None): Unit = {
-    partitionCol match {
-      case None =>
-        store.overwrite(table, store.read(table).filter(!coalesce(cond, lit(false))))
-      case Some(pc) =>
-        val affected = store.read(table).filter(cond)
-          .select(col(pc)).distinct().collect().map(_.get(0)).toIndexedSeq
-        if (affected.isEmpty) return
-        val survivors = store.read(table).filter(col(pc).isin(affected: _*))
-          .filter(!coalesce(cond, lit(false)))
-        val alive = survivors.select(col(pc)).distinct().collect().map(_.get(0)).toSet
-        if (alive.nonEmpty) store.overwritePartitions(table, survivors, Seq(pc))
-        store.dropPartitions(table, pc, affected.filterNot(alive))
-    }
-  }
+      partitionCol: Option[String] = None): Unit =
+    rewrite(store, table, partitionCol, store.read(table).filter(cond))(
+      _.filter(!coalesce(cond, lit(false))))
 
   /** `UPDATE table SET col = expr, ... WHERE cond` — the in-place edit
     * (Delta UPDATE; [[graft.tables.Upsert.merge]] is the keyed-source
@@ -114,7 +88,7 @@ object Deletes {
       s"assignment may not touch the partition column $pc " +
         "(a matched row could move across partitions)"))
     val hit = coalesce(cond, lit(false))
-    def applyTo(df: DataFrame): DataFrame = {
+    rewrite(store, table, partitionCol, store.read(table).filter(cond)) { df =>
       val cols = df.columns.toIndexedSeq
       val missing = assignments.keySet -- cols
       require(missing.isEmpty,
@@ -125,15 +99,22 @@ object Deletes {
           .getOrElse(col(c))
       }: _*)
     }
-    partitionCol match {
-      case None => store.overwrite(table, applyTo(store.read(table)))
-      case Some(pc) =>
-        val affected = store.read(table).filter(cond)
-          .select(col(pc)).distinct().collect().map(_.get(0)).toIndexedSeq
-        if (affected.isEmpty) return
-        store.overwritePartitions(table,
-          applyTo(store.read(table).filter(col(pc).isin(affected: _*))), Seq(pc))
-    }
+  }
+
+  /** The distinct values of `partitionCol` among `hits`: the partitions a
+    * DML touches, NULL included. */
+  private def partitionsOf(hits: DataFrame, partitionCol: String): Seq[Any] =
+    hits.select(col(partitionCol)).distinct().collect().map(_.get(0)).toSeq
+
+  /** Replace `table` with `f` of its rows: the whole table
+    * ([[TableStore.overwrite]]) when there is no partition column, else
+    * only the partitions holding `hits`, the rows the DML touches
+    * ([[TableStore.rewritePartitions]]; a partition `f` empties is
+    * removed, the NULL partition is reached like any other). */
+  private def rewrite(store: TableStore, table: String, partitionCol: Option[String],
+      hits: => DataFrame)(f: DataFrame => DataFrame): Unit = partitionCol match {
+    case None => store.overwrite(table, f(store.read(table)))
+    case Some(pc) => store.rewritePartitions(table, pc, partitionsOf(hits, pc))(f)
   }
 
   /** Takedown against a [[Versions]]-managed snapshot table: writes a new
@@ -161,21 +142,13 @@ object Deletes {
   def repackShards(store: TableStore, spec: PackSpec, idCol: String,
       ids: DataFrame): Unit = {
     val keys = broadcast(ids.select(col(idCol)).distinct())
-    val affected = store.read(spec.table).select(col(spec.shardCol), col(idCol))
-      .join(keys, Seq(idCol), "left_semi")
-      .select(col(spec.shardCol)).distinct().collect().map(_.get(0)).toIndexedSeq
-    if (affected.isEmpty) return
-    val survivors = store.read(spec.table)
-      .filter(col(spec.shardCol).isin(affected: _*))
-      .join(keys, Seq(idCol), "left_anti")
-      .drop("pack_id", "pack_offset")
-    val repacked = graft.ext.Packing.assign(survivors, spec.orderCol,
-      spec.nTokCol, Seq(spec.shardCol), spec.budget)
-    val alive = repacked.select(col(spec.shardCol)).distinct()
-      .collect().map(_.get(0)).toSet
-    if (alive.nonEmpty)
-      store.overwritePartitions(spec.table, repacked, Seq(spec.shardCol))
-    store.dropPartitions(spec.table, spec.shardCol, affected.filterNot(alive))
+    val affected = partitionsOf(
+      store.read(spec.table).join(keys, Seq(idCol), "left_semi"), spec.shardCol)
+    store.rewritePartitions(spec.table, spec.shardCol, affected) { slice =>
+      graft.ext.Packing.assign(
+        slice.join(keys, Seq(idCol), "left_anti").drop("pack_id", "pack_offset"),
+        spec.orderCol, spec.nTokCol, Seq(spec.shardCol), spec.budget)
+    }
   }
 
   /** The full takedown cascade: delete `ids` from the corpus tables, every
@@ -232,33 +205,33 @@ object Deletes {
     * the log never shrinks below the id set the sink's replay guard
     * anti-joins against: a replayed or re-delivered id still hits the
     * guard and stays a no-op. That invariant is also CHECKED, not just
-    * implied — the compacted set is staged, its distinct-id count
+    * implied — the compacted set is staged beside the log
+    * ([[TableStore.stage]], never a store table), its distinct-id count
     * compared against the live log's, and the atomic swap only happens
     * on equality (a belt-and-braces abort path for future edits, since
     * window-dedup cannot lose ids today). Idempotent: a second run finds
     * one row per id and rewrites the same content.
     *
-    * Returns (rows before, rows after). Scale shape: one id-keyed window
-    * over the log (the a2 dedup shape) plus a narrow distinct count on
-    * each side of the swap; the log is takedown-sized, not corpus-sized.
+    * Returns (rows before, rows after); `after` is summed from the
+    * stage's parquet footers ([[TableStore.Staged.numRows]], no Spark
+    * job). Scale shape: one id-keyed window over the log (the a2 dedup
+    * shape) plus a narrow distinct count on each side of the swap; the log
+    * is takedown-sized, not corpus-sized.
     */
   def compactTakedownLog(store: TableStore, logTable: String,
       idCol: String): (Long, Long) = {
     val log = store.read(logTable)
     val before = log.count()
-    val compacted = graft.clean.Normalize.dedupKeep(log, Seq(idCol),
-      Seq(col("batch_id"), col("processed_at")))
-    val stage = s"${logTable}_compact_stage"
-    store.overwrite(stage, compacted)
+    val staged = store.stage(logTable, graft.clean.Normalize.dedupKeep(log, Seq(idCol),
+      Seq(col("batch_id"), col("processed_at"))))
     try {
       val liveIds = log.select(col(idCol)).distinct().count()
-      val stagedIds = store.read(stage).select(col(idCol)).distinct().count()
+      val stagedIds = staged.rows.select(col(idCol)).distinct().count()
       require(stagedIds == liveIds,
         s"compactTakedownLog: staged log holds $stagedIds distinct ids, live " +
           s"holds $liveIds — refusing to swap below the replay-guard id set")
-      val after = store.read(stage).count()
-      store.overwrite(logTable, store.read(stage))
-      (before, after)
-    } finally store.drop(stage)
+      store.overwrite(logTable, staged.rows)
+      (before, staged.numRows)
+    } finally store.discard(staged)
   }
 }

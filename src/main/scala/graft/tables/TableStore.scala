@@ -4,8 +4,10 @@ import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.parquet.hadoop.ParquetFileReader
 import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
+import org.apache.spark.sql.catalyst.expressions.{Cast, Literal}
 import org.apache.spark.sql.functions.{col, lit}
-import org.apache.spark.sql.types.{DataType, StructField, StructType}
+import org.apache.spark.sql.types.{DataType, StringType, StructField, StructType}
 
 /** Parquet-backed managed tables with atomic overwrite.
   *
@@ -23,12 +25,18 @@ import org.apache.spark.sql.types.{DataType, StructField, StructType}
   * At cluster scale the staging write is fully distributed (executors write
   * parquet parts); only the final rename is a driver-side metadata operation.
   *
+  * Commits: [[overwrite]] swaps the whole table, [[append]] adds files in
+  * place, [[publish]] adds a [[stage]]'s files by rename, and
+  * [[rewritePartitions]] replaces the touched partitions of a partitioned
+  * table with a stage's partition dirs.
+  *
   * Physical format: every data file this store writes is parquet with zstd
   * column chunks at parquet's default level (3), fixed here by one writer
-  * ([[writeParquet]]) that all four write paths share. It is a property of
-  * the store, not of the session: a conf key would let Bench, Verify, a
-  * test session or a notebook each write a different format into the same
-  * table, and the writer's `compression` option takes precedence over
+  * ([[writeParquet]]) that all three write paths (overwrite, append and
+  * stage) share. It is a property of the store, not of the session: a
+  * conf key would let Bench, Verify, a test session or a notebook each
+  * write a different format into the same table, and the writer's
+  * `compression` option takes precedence over
   * `spark.sql.parquet.compression.codec` in every session. zstd is chosen
   * for bytes written and kept: the crawl index's shingle and band files
   * measured ~40% and the order fact tables ~26% smaller than under snappy,
@@ -137,7 +145,7 @@ final class TableStore(spark: SparkSession, root: String) {
   def schemaOf(name: String): Option[StructType] = recorded(name).map(_._1)
 
   /** [[schemaOf]] plus whether it came from the sidecar — the one probe
-    * [[append]], [[publish]] and [[overwritePartitions]] decide their
+    * [[append]], [[publish]] and [[rewritePartitions]] decide their
     * sidecar write from. */
   private def recorded(name: String): Option[(StructType, Boolean)] = {
     if (!exists(name)) None
@@ -310,6 +318,8 @@ final class TableStore(spark: SparkSession, root: String) {
     *    publish it as the bronze append;
     *  - the dedup index stages its shingle increments and publishes them
     *    at commit;
+    *  - [[rewritePartitions]] stages its rewritten partitions and renames
+    *    them into the table;
     *  - [[Scratch.stage]] stages every scratch intermediate here, under
     *    the scratch root, and never publishes it.
     *
@@ -400,84 +410,70 @@ final class TableStore(spark: SparkSession, root: String) {
     * [[publish]] already moved away). */
   def discard(staged: TableStore.Staged): Unit = fs.delete(new Path(staged.dir), true)
 
-  /** Replace ONLY the partitions present in `df`, leaving all other
-    * partition directories untouched (dynamic-partition-overwrite
-    * semantics, catalog-free). This is what makes incremental recompute
-    * partition-local at scale: an increment touching 2 months moves 2
-    * directories, not a 10-year table.
+  /** Rewrite the partitions `values` of table `name`, hive-partitioned on
+    * `partitionCol`, as `f` of their current rows — the one partition-scoped
+    * DML of the store (MERGE, DELETE, UPDATE, shard re-pack and the dedup
+    * index's takedown all run through it). An increment touching 2 months
+    * moves 2 directories, not a 10-year table.
+    *
+    *  1. Only the partitions in `values` are read (a pruned scan), the NULL
+    *     partition included when `values` holds null.
+    *  2. `f`'s output is written once, beside the table, through [[stage]],
+    *     aligned to the union of the table's schema and its own.
+    *  3. `f`'s output must lie inside `values`: a staged partition outside
+    *     them throws here, before anything is renamed, and the stage is
+    *     discarded.
+    *  4. The schema sidecar records the union ([[widen]]) before any
+    *     partition lands, and only when it changed.
+    *  5. Per touched partition, on the driver: the live dir (if any) moves
+    *     into the stage's `_replaced/`, then the staged dir (if `f` left any
+    *     rows there) moves in. A touched partition `f` left empty is thus
+    *     removed; which ones came out empty is read from the stage's file
+    *     listing, so no Spark job counts them. Untouched partitions never
+    *     move.
+    *  6. The stage, the replaced partitions with it, is discarded.
+    *
+    * Crash contract: a crash between one partition's two renames leaves
+    * that partition absent from the table, its old and new files under
+    * `.publish/<name>/`, where a later [[stage]] of `name` sweeps them by
+    * its lifetime rule; partitions already done hold their new rows, the
+    * rest their old ones.
+    * Partitions are matched by the dir name Spark's writer gives a value
+    * (the value cast to string, escaped; NULL as
+    * `__HIVE_DEFAULT_PARTITION__`). The table must exist.
     */
-  def overwritePartitions(name: String, df: DataFrame, partitionBy: Seq[String]): Unit = {
-    require(partitionBy.nonEmpty, "overwritePartitions needs partition columns")
-    // Same sidecar discipline as append: validate the incoming schema
-    // against the recorded one (type drift rejected), align to the union,
-    // and record the union before any file lands, only when it changed —
-    // otherwise a partition rewrite adding a column would write files whose
-    // column every subsequent sidecar-schema'd read silently drops.
-    val (existing, fromSidecar) = recorded(name) match {
-      case Some(r) => r
-      case None => overwrite(name, df, partitionBy); return
-    }
-    val aligned = alignTo(df, widen(name, existing, fromSidecar, df.schema))
-    val stamp = java.util.UUID.randomUUID().toString.take(8)
-    val staging = new Path(s"$root/.staging_${name}_$stamp")
-    val trash = new Path(s"$root/.trash_${name}_$stamp")
-    writeParquet(aligned, SaveMode.Overwrite, staging.toString, partitionBy)
-    val f = fs
-    def leafDirs(base: Path, depth: Int): Seq[Path] =
-      if (depth == 0) Seq(base)
-      else f.listStatus(base).filter(_.isDirectory).toSeq
-        .flatMap(st => leafDirs(st.getPath, depth - 1))
-    val live = new Path(path(name))
-    f.mkdirs(trash)
-    val stagingPath = f.makeQualified(staging).toUri.getPath
-    leafDirs(staging, partitionBy.length).foreach { sp =>
-      val rel = sp.toUri.getPath.stripPrefix(stagingPath).stripPrefix("/")
-      val lp = new Path(live, rel)
-      if (f.exists(lp) && !f.rename(lp, new Path(trash, rel.replace("/", "_"))))
-        throw new IllegalStateException(s"TableStore: could not stage out partition $lp")
-      if (!f.exists(lp.getParent)) f.mkdirs(lp.getParent)
-      if (!f.rename(sp, lp))
-        throw new IllegalStateException(s"TableStore: could not promote partition $sp")
-    }
-    f.delete(staging, true)
-    f.delete(trash, true)
-    spark.catalog.refreshByPath(live.toString)
-  }
-
-  /** Remove the listed partition directories outright — DELETE of whole
-    * partitions. The complement [[overwritePartitions]] cannot express: it
-    * replaces only partitions PRESENT in the incoming frame, so a delete
-    * that empties a partition would leave the old directory — and every
-    * "deleted" row in it — live. Driver-side metadata operation: one
-    * listing plus one rename-to-nothing per dropped directory, independent
-    * of table size. Values match against the hive dir name after undoing
-    * Spark's %-hex path escaping via `valueOf` equality (longs, dates and
-    * plain strings — the partition-key types this store uses); NULL
-    * partitions (`__HIVE_DEFAULT_PARTITION__`) are not addressable here.
-    */
-  def dropPartitions(name: String, partitionCol: String, values: Seq[Any]): Unit = {
-    val base = new Path(path(name))
-    if (values.isEmpty || !fs.exists(base)) return
-    val want = values.map(String.valueOf).toSet
-    def unescape(s: String): String = {
-      val sb = new StringBuilder(s.length)
-      var i = 0
-      while (i < s.length) {
-        val c = s.charAt(i)
-        if (c == '%' && i + 2 < s.length) {
-          try { sb.append(Integer.parseInt(s.substring(i + 1, i + 3), 16).toChar); i += 3 }
-          catch { case _: NumberFormatException => sb.append(c); i += 1 }
-        } else { sb.append(c); i += 1 }
+  def rewritePartitions(name: String, partitionCol: String, values: Seq[Any])(
+      f: DataFrame => DataFrame): Unit = {
+    if (values.isEmpty) return
+    val (existing, fromSidecar) = recorded(name).getOrElse(
+      throw new IllegalArgumentException(s"TableStore: no table $name to rewrite partitions of"))
+    val inValues = col(partitionCol).isin(values.filter(_ != null): _*)
+    val out = f(read(name).filter(
+      if (values.contains(null)) inValues || col(partitionCol).isNull else inValues))
+    val union = unionSchema(name, existing, out.schema)
+    val staged = stage(name, alignTo(out, union), Seq(partitionCol))
+    try {
+      val tz = spark.conf.get("spark.sql.session.timeZone")
+      val touched = values.map(TableStore.partitionDir(partitionCol, _, tz)).distinct
+      val written = staged.files.map(_.takeWhile(_ != '/')).toSet
+      val outside = written -- touched
+      if (outside.nonEmpty)
+        throw new IllegalArgumentException(s"TableStore: rewritePartitions of $name " +
+          s"wrote partitions outside the ones it rewrites: ${outside.mkString(", ")}")
+      widen(name, existing, fromSidecar, union)
+      val dfs = fs
+      val live = new Path(path(name))
+      val replaced = new Path(staged.dir, "_replaced")
+      dfs.mkdirs(replaced)
+      touched.foreach { d =>
+        val lp = new Path(live, d)
+        if (dfs.exists(lp) && !dfs.rename(lp, new Path(replaced, d)))
+          throw new IllegalStateException(s"TableStore: could not stage out partition $lp")
+        if (written(d) && !dfs.rename(new Path(staged.dir, d), lp))
+          throw new IllegalStateException(s"TableStore: could not promote partition $d of $name")
       }
-      sb.toString
-    }
-    fs.listStatus(base).filter(_.isDirectory).foreach { st =>
-      val n = st.getPath.getName
-      val eq = n.indexOf('=')
-      if (eq > 0 && n.substring(0, eq) == partitionCol && want(unescape(n.substring(eq + 1))))
-        fs.delete(st.getPath, true)
-    }
-    spark.catalog.refreshByPath(base.toString)
+      spark.catalog.refreshByPath(live.toString)
+    } finally discard(staged)
   }
 
   /** DROP TABLE (reference S15: staging teardown, 2_incremental:300-306). */
@@ -526,6 +522,13 @@ object TableStore {
   }
 
   private val StageDir = "^(.+)_g([0-9]+)$".r
+
+  /** The hive dir name Spark's writer gives `value` of column `col`: the
+    * value cast to string as the writer casts it (session time zone
+    * `tz`), path-escaped, NULL and "" as `__HIVE_DEFAULT_PARTITION__`. */
+  private def partitionDir(col: String, value: Any, tz: String): String =
+    ExternalCatalogUtils.getPartitionPathString(col,
+      Option(Cast(Literal(value), StringType, Some(tz)).eval()).map(_.toString).orNull)
 
   // per stage-family generation counters, keyed by the family's dir
   private val gens =

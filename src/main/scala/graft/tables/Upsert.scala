@@ -25,7 +25,9 @@ import org.apache.spark.sql.functions._
   * no target row: the staged source's files are then published into the
   * table as they are. [[stageMerge]] splits an inserting MERGE into its two
   * phases — stage the source, then `commit()` — so a caller can derive more
-  * from the staged rows before the table changes.
+  * from the staged rows before the table changes. On a partitioned table,
+  * [[mergePartitioned]] merges into only the partitions the source touches
+  * ([[TableStore.rewritePartitions]]).
   */
 object Upsert {
 
@@ -264,9 +266,8 @@ object Upsert {
       .join(broadcast(source.select(keys.map(col): _*)), keys, "left_semi")
 
   /** Partition-scoped MERGE into a partitioned table: only the partitions
-    * the source touches are read (static partition pruning via a collected
-    * value list — partition counts are small by construction) and only
-    * those directories are rewritten. The 100 TB incremental path: an
+    * the source touches are read and rewritten
+    * ([[TableStore.rewritePartitions]]). The 100 TB incremental path: an
     * increment touching 2 months costs 2 partition scans + 2 directory
     * swaps, independent of table history length.
     *
@@ -282,24 +283,15 @@ object Upsert {
       source: DataFrame,
       keys: Seq[String],
       partitionCol: String,
-      update: Boolean = true,
-      insert: Boolean = true,
-      onDuplicate: DuplicatePolicy = DuplicatePolicy.Error,
       partitions: Option[Seq[Any]] = None): Unit = {
     require(keys.contains(partitionCol),
       s"partition column $partitionCol must be part of the merge keys " +
         "(otherwise a matched row could move across partitions)")
-    if (!store.exists(table)) {
-      store.overwrite(table, source, Seq(partitionCol))
-      return
+    if (!store.exists(table)) store.overwrite(table, source, Seq(partitionCol))
+    else {
+      val touched = partitions.getOrElse(
+        source.select(col(partitionCol)).distinct().collect().map(_.get(0)).toSeq)
+      store.rewritePartitions(table, partitionCol, touched)(merge(_, source, keys))
     }
-    val touched = partitions.getOrElse(
-      source.select(col(partitionCol)).distinct().collect().map(_.get(0)).toSeq)
-    if (touched.isEmpty) return
-    val inTouched = col(partitionCol).isin(touched.filter(_ != null): _*)
-    val slice = store.read(table)
-      .filter(if (touched.contains(null)) inTouched || col(partitionCol).isNull else inTouched)
-    val merged = merge(slice, source, keys, None, update, insert, onDuplicate)
-    store.overwritePartitions(table, merged, Seq(partitionCol))
   }
 }

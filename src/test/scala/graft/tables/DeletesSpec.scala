@@ -169,13 +169,49 @@ class DeletesSpec extends SparkSpec {
     assert(d === Map(1L -> "changed", 2L -> "added"))
   }
 
-  test("dropPartitions undoes hive %-escaping in dir names") {
+  test("rewritePartitions reaches a hive %-escaped partition dir") {
     val store = newStore()
     // ':' is in Spark's escape set → dir is month=a%3Ab on disk
     store.overwrite("t", Seq((1L, "a:b"), (2L, "ok")).toDF("id", "month"),
       partitionBy = Seq("month"))
-    store.dropPartitions("t", "month", Seq("a:b"))
+    store.rewritePartitions("t", "month", Seq("a:b"))(_.withColumn("id", col("id") + 10))
+    assert(rows(store.read("t").select("id", "month")) === Set(Seq(11L, "a:b"), Seq(2L, "ok")))
+    Deletes.deleteRows(store, "t", "id", Seq(11L).toDF("id"), Some("month"))
     assert(rows(store.read("t").select("id", "month")) === Set(Seq(2L, "ok")))
+    assert(!new java.io.File(store.path("t"), "month=a%3Ab").exists())
+  }
+
+  test("partitioned DELETE and UPDATE reach the NULL partition") {
+    val store = newStore()
+    store.overwrite("t", Seq[(Long, Option[String], String)](
+      (1L, Some("m1"), "a"), (2L, None, "b"), (3L, None, "c")).toDF("id", "month", "v"),
+      partitionBy = Seq("month"))
+    val nullDir = new java.io.File(store.path("t"), "month=__HIVE_DEFAULT_PARTITION__")
+    val m1Before = listing(store, "t").filter(_._1.contains("month=m1"))
+    Deletes.deleteRows(store, "t", "id", Seq(2L).toDF("id"), Some("month"))
+    assert(rows(store.read("t").select("id", "v")) === Set(Seq(1L, "a"), Seq(3L, "c")))
+    Deletes.updateWhere(store, "t", col("id") === 3L, Map("v" -> lit("z")), Some("month"))
+    assert(rows(store.read("t").select("id", "v")) === Set(Seq(1L, "a"), Seq(3L, "z")))
+    assert(nullDir.exists())
+    Deletes.deleteWhere(store, "t", col("id") === 3L, Some("month"))
+    assert(rows(store.read("t").select("id", "month", "v")) === Set(Seq(1L, "m1", "a")))
+    assert(!nullDir.exists())
+    assert(listing(store, "t").filter(_._1.contains("month=m1")) === m1Before)
+  }
+
+  test("partitioned delete job count: the emptied partitions come from the stage listing") {
+    val store = newStore()
+    store.overwrite("t", Seq(
+      (1L, "m1", "a"), (2L, "m1", "b"),
+      (3L, "m2", "c"), (4L, "m2", "d"),
+      (5L, "m3", "e")).toDF("id", "month", "v"), partitionBy = Seq("month"))
+    val jobs = jobsDuring(
+      Deletes.deleteRows(store, "t", "id", Seq(3L, 5L).toDF("id"), Some("month")))
+    assert(rows(store.read("t").select("id")) === Set(Seq(1L), Seq(2L), Seq(4L)))
+    assert(!new java.io.File(store.path("t"), "month=m3").exists())
+    // the affected-partition collect and the stage write; a collect of the
+    // surviving partitions (to find the emptied m3) would run 4 jobs more
+    assert(jobs === 7)
   }
 
   test("index delete equals a from-scratch rebuild on survivors; no text read, untouched buckets in place") {
@@ -281,6 +317,7 @@ class DeletesSpec extends SparkSpec {
     assert(rows(store.read("td_log")) === Set(
       Seq(7L, 0L, t(1)), Seq(9L, 1L, t(2)), Seq(3L, 4L, ts)))
     assert(!store.exists("td_log_compact_stage"))
+    assert(storeTables(store) === Set("td_log"))
 
     // idempotent: a second pass rewrites identical content
     val (b2, a2) = Deletes.compactTakedownLog(store, "td_log", "doc_id")

@@ -253,7 +253,7 @@ class TableStoreSpec extends SparkSpec {
       assert(codecs(store.path("ap")) === Set("ZSTD"))
 
       store.overwrite("pt", rows.toDF("id", "v", "p"), Seq("p"))
-      store.overwritePartitions("pt", rows.take(50).toDF("id", "v", "p"), Seq("p"))
+      store.rewritePartitions("pt", "p", Seq(0, 1, 2))(_ => rows.take(50).toDF("id", "v", "p"))
       assert(codecs(store.path("pt")) === Set("ZSTD"))
 
       val st = store.stage("pub", rows.toDF("id", "v", "p"))
@@ -294,26 +294,48 @@ class TableStoreSpec extends SparkSpec {
     assert(store.read("old").as[(Int, String)].collect().sortBy(_._1).toSeq === all)
   }
 
-  test("overwritePartitions writes the schema sidecar only when the schema changes, and before any partition lands") {
+  test("rewritePartitions writes the schema sidecar only when the schema changes, and before any partition lands") {
     val store = faultStore()
     store.overwrite("f", Seq((1, "a", 0), (2, "b", 1)).toDF("id", "v", "p"), Seq("p"))
     def isSidecar(op: FaultFs.Op) =
       op.kind == "create" && op.path.getName == "_graft_schema.json"
+    val tableDir = new Path(store.path("f")).toUri.getPath + "/"
+    def touchesTable(op: FaultFs.Op) = op.kind == "rename" &&
+      (op.path +: op.dst.toSeq).exists(_.toUri.getPath.startsWith(tableDir))
     val same = FaultFs.opsDuring(
-      store.overwritePartitions("f", Seq((3, "c", 1)).toDF("id", "v", "p"), Seq("p")))
+      store.rewritePartitions("f", "p", Seq(1))(_ => Seq((3, "c", 1)).toDF("id", "v", "p")))
     assert(!same.exists(isSidecar), "an unchanged schema must not rewrite the sidecar")
-    assert(same.exists(_.kind == "rename"))
+    assert(same.exists(touchesTable))
 
-    val wider = FaultFs.opsDuring(store.overwritePartitions("f",
-      Seq((4, "d", 2, 9.5)).toDF("id", "v", "p", "w"), Seq("p")))
+    val wider = FaultFs.opsDuring(store.rewritePartitions("f", "p", Seq(2))(_ =>
+      Seq((4, "d", 2, 9.5)).toDF("id", "v", "p", "w")))
     val sidecarAt = wider.indexWhere(isSidecar)
-    val firstRename = wider.indexWhere(_.kind == "rename")
+    val firstRename = wider.indexWhere(touchesTable)
     assert(sidecarAt >= 0 && firstRename >= 0)
     assert(sidecarAt < firstRename, "the union must be recorded before a partition lands")
     assert(wider.count(isSidecar) === 1)
     assert(store.schemaOf("f").get.fieldNames.toSeq === Seq("id", "v", "p", "w"))
     assert(store.read("f").select("id", "w").as[(Int, Option[Double])]
       .collect().sortBy(_._1).toSeq === Seq((1, None), (3, None), (4, Some(9.5))))
+  }
+
+  test("rewritePartitions: output outside the rewritten partitions throws before anything moves") {
+    val store = newStore()
+    store.overwrite("o", Seq((1, "a", 0), (2, "b", 1)).toDF("id", "v", "p"), Seq("p"))
+    def files() = dataFiles(store.path("o")).map { r =>
+      val f = new java.io.File(store.path("o"), r)
+      (r, f.length(), f.lastModified())
+    }
+    val before = files()
+    val e = intercept[IllegalArgumentException] {
+      store.rewritePartitions("o", "p", Seq(0))(slice =>
+        slice.union(Seq((9, "z", 5)).toDF("id", "v", "p")))
+    }
+    assert(e.getMessage.contains("p=5"), e.getMessage)
+    assert(files() === before)
+    assert(store.read("o").select("id", "v", "p").as[(Int, String, Int)].collect().toSet ===
+      Set((1, "a", 0), (2, "b", 1)))
+    assert(Option(new java.io.File(store.path(".publish/o")).list()).toSeq.flatten === Nil)
   }
 
   test("stage lists its dir once: the read-back's listing fills Staged.files") {

@@ -2,9 +2,15 @@
 """Count non-blank, non-comment Scala lines.
 
     python3 tools/loc.py PATH [PATH ...]
+    python3 tools/loc.py --rev REV PATH [PATH ...]
 
 Each PATH is a .scala file or a directory (searched recursively for .scala
 files). Prints one `<count>  <file>` line per file, then `<count>  total`.
+
+With `--rev REV` (any git revision: a commit, `HEAD~`, a branch) it prints,
+per file, its count at REV (read with `git show`, no checkout), its count in
+the working tree and the difference, then the same three totals. A file
+present on only one side counts 0 on the other.
 
 A line counts when it holds at least one character that is neither
 whitespace nor part of a comment. Line comments (`//`), block and doc
@@ -14,6 +20,7 @@ Character literals are not tracked: a `'"'` would open a string, so the
 count is exact for code that writes `'\\"'` or avoids quote char literals.
 """
 import os
+import subprocess
 import sys
 
 
@@ -96,7 +103,40 @@ def scala_files(path):
     return found
 
 
+def git(args, cwd):
+    return subprocess.run(["git"] + args, cwd=cwd, check=True,
+                          capture_output=True).stdout
+
+
+def compare(rev, paths):
+    """Per-file and total counts at `rev` against the working tree."""
+    top = git(["rev-parse", "--show-toplevel"], ".").decode().strip()
+    rels = [os.path.relpath(os.path.abspath(p), top) for p in paths]
+    at_rev = {}
+    for f in git(["ls-tree", "-r", "--name-only", rev, "--"] + rels, top).decode().splitlines():
+        if f.endswith(".scala"):
+            at_rev[f] = code_lines(git(["show", f"{rev}:{f}"], top).decode("utf-8"))
+    now = {}
+    for p in paths:
+        for f in scala_files(p) if os.path.exists(p) else []:
+            with open(f, encoding="utf-8") as fh:
+                now[os.path.relpath(os.path.abspath(f), top)] = code_lines(fh.read())
+    print(f"{'at ' + rev:>10}  {'now':>6}  {'diff':>6}  file")
+    tb = tn = 0
+    for f in sorted(set(at_rev) | set(now)):
+        b, n = at_rev.get(f, 0), now.get(f, 0)
+        tb, tn = tb + b, tn + n
+        print(f"{b:10d}  {n:6d}  {n - b:+6d}  {f}")
+    print(f"{tb:10d}  {tn:6d}  {tn - tb:+6d}  total")
+    return 0
+
+
 def main(argv):
+    if argv[:1] == ["--rev"]:
+        if len(argv) < 3:
+            print(__doc__.strip(), file=sys.stderr)
+            return 2
+        return compare(argv[1], argv[2:])
     if not argv:
         print(__doc__.strip(), file=sys.stderr)
         return 2
